@@ -710,7 +710,11 @@ def _hybrid_rrf_multi_ctes(
     >= 1 of THAT query's terms; leg cuts ride rank windows PARTITIONED BY
     query_id over the per-query candidate aggregations (bounded by
     candidates per query, never corpus-wide).  ``n_body``/``t_body``
-    override the N/T scalar subqueries for the indexed path."""
+    override the N/T scalar subqueries.
+
+    This is the ORACLE's form (``hybrid_rrf_multi_sql``): the formula
+    written leg by leg.  The engine runs ``_hybrid_rrf_fused_ctes``,
+    which returns the same rows in one pass."""
     rrf = X.idiv(d, str(RRF_SCALE), f"{RRF_K} + rn")
     ql_contrib = (
         f"{qln_micro('5 * COALESCE(qtf.tf, 0) * (SELECT t_tok FROM t) + 5 * ctf.ctf * dl.dl')}"
@@ -766,6 +770,116 @@ ORDER BY query_id, rk
 """
 
 
+def _hybrid_rrf_fused_ctes(
+    d: str,
+    tf: str,
+    dl: str,
+    qt: str,
+    table: str | None = None,
+    leg_k: int = HYBRID_LEG_K,
+    k: int = HYBRID_K,
+    n_body: str | None = None,
+    t_body: str | None = None,
+) -> str:
+    """CTE-list + final SELECT (no leading WITH): ``_hybrid_rrf_multi_ctes``
+    in one pass — same arguments, same rows.  The oracle's form scans tf
+    once per leg and per statistic and fuses through UNION ALL plus a
+    regroup; here:
+
+    - ``ts``: one per-token aggregate gives both df and ctf;
+    - ``scored``: one (query_id, doc_id) aggregate over qt ⋈ tf ⋈ dl gives
+      the BM25 score and the QL sum over MATCHED terms,
+      qln(5·tf·T + 5·ctf·dl) − qln(5·ctf·dl);
+    - ``legs``: a broadcast join to the query's term table adds the QL
+      background sum over ALL the query's corpus terms,
+      qln(5·ctf·dl) − qln(10·dl·T).  The two sums add up to the oracle's
+      per-term qln(5·tf·T + 5·ctf·dl) − qln(10·dl·T) with tf = 0 for
+      unmatched terms — exactly, because every qln_micro is a BIGINT;
+    - both leg ranks are ROW_NUMBER windows over that one relation, and
+      rrf_pico/bm25_rank/ql_rank/n_legs are CASE arithmetic on them.
+
+    Repeated query terms count once per occurrence and terms absent from
+    the corpus drop out, as in the oracle's form.  Every window
+    partitions by query_id.  ``ts.df > 0`` in ``legs`` always holds; it
+    makes that reference read df as well as ctf, so both references plan
+    one and the same ts aggregate and Spark reuses its shuffle instead of
+    scanning the postings a third time."""
+    n_body = n_body or f"SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}"
+    t_body = t_body or f"SELECT CAST(SUM(dl) AS BIGINT) AS t_tok FROM {dl}"
+    t_tok = "(SELECT t_tok FROM t)"
+    ql_matched = (
+        f"{qln_micro(f'5 * tf.tf * {t_tok} + 5 * df.ctf * dl.dl')}"
+        f" - {qln_micro('5 * df.ctf * dl.dl')}"
+    )
+    ql_background = (
+        f"{qln_micro('5 * ts.ctf * sc.dl')}"
+        f" - {qln_micro(f'10 * sc.dl * {t_tok}')}"
+    )
+
+    def in_leg(rn: str, then: str) -> str:
+        return f"CASE WHEN {rn} <= {leg_k} THEN {then} ELSE 0 END"
+
+    def rrf(rn: str) -> str:
+        return in_leg(rn, X.idiv(d, str(RRF_SCALE), f"{RRF_K} + {rn}"))
+
+    return f"""
+n AS ({n_body}),
+t AS ({t_body}),
+ts AS (
+  SELECT token, CAST(COUNT(*) AS BIGINT) AS df,
+    CAST(SUM(tf) AS BIGINT) AS ctf
+  FROM {tf} GROUP BY token
+),
+scored AS (
+  SELECT qt.query_id, tf.doc_id, dl.dl,
+    CAST(SUM(CAST(floor({_bm25_contrib_expr()} + 0.5) AS BIGINT)) AS BIGINT)
+      AS score_micro,
+    CAST(SUM({ql_matched}) AS BIGINT) AS ql_matched
+  FROM {qt} qt
+  JOIN {tf} tf ON tf.token = qt.term
+  JOIN ts df ON df.token = tf.token
+  JOIN {dl} dl ON dl.doc_id = tf.doc_id
+  GROUP BY qt.query_id, tf.doc_id, dl.dl
+),
+legs AS (
+  SELECT sc.query_id, sc.doc_id, sc.score_micro,
+    sc.ql_matched + CAST(SUM({ql_background}) AS BIGINT) AS ql_micro
+  FROM scored sc
+  JOIN {qt} qt ON qt.query_id = sc.query_id
+  JOIN ts ON ts.token = qt.term AND ts.df > 0
+  GROUP BY sc.query_id, sc.doc_id, sc.dl, sc.score_micro, sc.ql_matched
+),
+legr AS (
+  SELECT query_id, doc_id,
+    ROW_NUMBER() OVER (
+      PARTITION BY query_id ORDER BY score_micro DESC, doc_id) AS bm25_rn,
+    ROW_NUMBER() OVER (
+      PARTITION BY query_id ORDER BY ql_micro DESC, doc_id) AS ql_rn
+  FROM legs
+),
+fused AS (
+  SELECT query_id, doc_id,
+    CAST({rrf("bm25_rn")} + {rrf("ql_rn")} AS BIGINT) AS rrf_pico,
+    CAST({in_leg("bm25_rn", "bm25_rn")} AS BIGINT) AS bm25_rank,
+    CAST({in_leg("ql_rn", "ql_rn")} AS BIGINT) AS ql_rank,
+    CAST({in_leg("bm25_rn", "1")} + {in_leg("ql_rn", "1")} AS BIGINT)
+      AS n_legs
+  FROM legr
+  WHERE bm25_rn <= {leg_k} OR ql_rn <= {leg_k}
+),
+ranked AS (
+  SELECT fused.*,
+    ROW_NUMBER() OVER (
+      PARTITION BY query_id ORDER BY rrf_pico DESC, doc_id) AS rk
+  FROM fused
+)
+SELECT query_id, doc_id, rrf_pico, bm25_rank, ql_rank, n_legs, rk,
+  {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
+FROM ranked WHERE rk <= {k}
+ORDER BY query_id, rk
+"""
+
+
 def hybrid_rrf_multi_sql(
     d: str,
     table: str = "documents",
@@ -787,15 +901,15 @@ def hybrid_rrf_multi_df(
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
 ):
     """Engine side: same staging as bm25_multi_df (one corpus pass via
-    ``_staged_tf_dl``; tf feeds df/scored/ctf/candq/the QL left join, dl
-    feeds T and both scorers); qt is the constant-folded broadcast
-    relation.  Every rank window partitions by query_id over per-query
-    candidates."""
-    d = X.SPARK
+    ``_staged_tf_dl``; tf feeds the per-token stats and the one scoring
+    aggregate, dl feeds T and that aggregate); qt is the constant-folded
+    broadcast relation.  The one-pass ``_hybrid_rrf_fused_ctes`` returns
+    the oracle fragment's rows; every rank window partitions by
+    query_id over per-query candidates."""
     with _staged_tf_dl(spark, table, bm25_queryset_terms(queries)) as v2:
         return spark.sql(
             f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-            + _hybrid_rrf_multi_ctes(d, v2.tf, v2.dl, "qt", table)
+            + _hybrid_rrf_fused_ctes(X.SPARK, v2.tf, v2.dl, "qt", table)
         )
 
 
@@ -1606,6 +1720,10 @@ def _assert_no_null_text(docs_df, where: str) -> None:
 
 
 _FRESH_PROBE_INLIST = 10_000  # max ids inlined as a pushed-down IN filter
+# contract schemas of the postings and doclen files (tbucket is the
+# postings partition column; the streamed layout adds a batch_id one)
+_POSTINGS_SCHEMA = "doc_id bigint, token string, tf bigint, tbucket int"
+_DOCLEN_SCHEMA = "doc_id bigint, dl bigint"
 
 
 def _text_index_layout(path: str) -> str | None:
@@ -1615,11 +1733,12 @@ def _text_index_layout(path: str) -> str | None:
     ``tbucket=N/batch_id=M``), or ``None`` (no postings yet).  Spark
     cannot read a directory mixing both partition depths
     (CONFLICTING_PARTITION_COLUMN_NAMES), so the flat-append and streamed
-    maintenance paths must refuse each other's layouts."""
-    from pathlib import Path
+    maintenance paths must refuse each other's layouts.  A remote path
+    raises (``local_fs_path``) instead of reading as an empty index."""
+    from .similarity import local_fs_path
 
     kinds = set()
-    for sub in Path(path).glob("tbucket=*"):
+    for sub in local_fs_path(path).glob("tbucket=*"):
         if any(sub.glob("batch_id=*")):
             kinds.add("batched")
         if any(sub.glob("*.parquet")):
@@ -1651,7 +1770,7 @@ def _rebuild_stats(spark, path: str) -> None:
 
     from .similarity import _read_index_or_empty
 
-    dl = _read_index_or_empty(spark, f"{path}.doclen", "doc_id bigint, dl bigint")
+    dl = _read_index_or_empty(spark, f"{path}.doclen", _DOCLEN_SCHEMA)
     stats = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t_tok"),
@@ -1712,10 +1831,8 @@ def _ingest_stats_update(
     (including the compaction fold's ``batch_id=-1`` generation — the
     certificate is a set signature, not a contiguity claim).  The
     slice-set check is a directory listing (O(#batches) metadata, no
-    data I/O); the stored row is read driver-side via pyarrow (the
-    sidecar is one tiny file — no Spark job)."""
-    from pathlib import Path
-
+    data I/O); the stored row is read driver-side (``_stats_row`` — no
+    Spark job)."""
     from pyspark.sql import functions as F
 
     from .similarity import _read_index_or_empty
@@ -1725,29 +1842,19 @@ def _ingest_stats_update(
     if ids is not None and int(batch_id) in ids:
         prior_sig = _slices_sig(ids - {int(batch_id)})
         try:
-            import pyarrow.parquet as pq
-
-            parts = [
-                p
-                for p in Path(f"{path}.stats").glob("*.parquet")
-                if not p.name.startswith((".", "_"))
-            ]
-            if len(parts) == 1:
-                tbl = pq.read_table(parts[0])
-                if "slices_sig" in tbl.column_names and tbl.num_rows == 1:
-                    row = tbl.to_pylist()[0]
-                    if row["slices_sig"] == prior_sig:
-                        fast = (
-                            int(row["n_docs"]) + int(n_b),
-                            int(row["t_tok"]) + int(t_b),
-                        )
+            row = _stats_row(path)
+            if row.get("slices_sig") == prior_sig:
+                fast = (
+                    int(row["n_docs"]) + int(n_b),
+                    int(row["t_tok"]) + int(t_b),
+                )
         except Exception:  # noqa: BLE001 - any anomaly => full rebuild
             fast = None
     if fast is not None:
         n_docs, t_tok = fast
     else:
         dl = _read_index_or_empty(
-            bspark, f"{path}.doclen", "doc_id bigint, dl bigint"
+            bspark, f"{path}.doclen", _DOCLEN_SCHEMA
         )
         srow = dl.agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -1801,6 +1908,7 @@ def _assert_fresh_doc_ids(
     probe), so the per-micro-batch contract costs ONE driver collect
     instead of three jobs."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegralType
 
     ids = new_docs.select("doc_id")
     # one collect serves EVERY probe for bounded batches: the ids come to
@@ -1847,29 +1955,37 @@ def _assert_fresh_doc_ids(
     from .similarity import _read_index_or_empty
 
     existing = _read_index_or_empty(
-        spark, f"{path}.doclen", "doc_id bigint, dl bigint"
+        spark, f"{path}.doclen", _DOCLEN_SCHEMA
     )
     if exclude_batch_id is not None and "batch_id" in existing.columns:
         existing = existing.filter(F.col("batch_id") != int(exclude_batch_id))
+    # a NULL or non-integer id raises the contract error HERE, at any
+    # batch size: a NULL doc_id can never be probed for freshness and
+    # would silently never clash.  bool is an int subclass in Python and
+    # a boolean column is no integer key, so both branches reject it.
     if bounded:
         if not head_ids:
             return 0  # empty batch — nothing to clash
+        bad_id = any(type(i) is not int for i in head_ids)
+    else:
+        bad_id = (
+            not isinstance(new_docs.schema["doc_id"].dataType, IntegralType)
+            or ids.filter(F.isnull("doc_id")).limit(1).count() > 0
+        )
+    if bad_id:
+        raise ValueError(
+            f"{where}: batch carries a NULL or non-integer doc_id — "
+            "doc_id is the index's BIGINT key by contract (a NULL id "
+            "cannot be freshness-probed and would land an unmatchable "
+            "doclen/postings row)"
+        )
+    if bounded:
         # one SQL string, not Column.isin(list): isin builds one py4j
         # literal expression per id (measured 2.2 s vs 0.3 s at 2500 ids
-        # for the IDENTICAL pushed-down In plan); doc_id is BIGINT by
-        # contract, int() keeps the interpolation literal-safe — and a
-        # NULL/non-integer id raises the contract error HERE, not an
-        # opaque TypeError from the interpolation (a NULL doc_id can
-        # never be probed for freshness and would silently never clash)
-        if any(i is None or not isinstance(i, int) for i in head_ids):
-            raise ValueError(
-                f"{where}: batch carries a NULL or non-integer doc_id — "
-                "doc_id is the index's BIGINT key by contract (a NULL id "
-                "cannot be freshness-probed and would land an unmatchable "
-                "doclen/postings row)"
-            )
+        # for the IDENTICAL pushed-down In plan); every id is an int by
+        # now, so the interpolation is literal-safe
         clash = existing.filter(
-            f"doc_id IN ({', '.join(str(int(i)) for i in head_ids)})"
+            f"doc_id IN ({', '.join(str(i) for i in head_ids)})"
         ).limit(1)
     else:
         clash = ids.join(existing.select("doc_id"), "doc_id", "left_semi").limit(1)
@@ -1971,33 +2087,62 @@ def build_text_index(spark, docs_df, path: str) -> None:
     stats.coalesce(1).write.mode("overwrite").parquet(f"{path}.stats")
 
 
+def _stats_row(path: str) -> dict:
+    """The 1-row stats sidecar, read on the driver with pyarrow: the
+    sidecar is one tiny file, so a Spark read would cost a schema-inference
+    job and a collect job for one row."""
+    import pyarrow.parquet as pq
+
+    from .similarity import local_fs_path
+
+    rows = pq.read_table(local_fs_path(f"{path}.stats")).to_pylist()
+    if len(rows) != 1:
+        raise ValueError(
+            f"text index stats sidecar at {path}.stats holds {len(rows)} "
+            "rows, not 1 — run any maintenance verb to rebuild it"
+        )
+    return rows[0]
+
+
 def _indexed_inputs(spark, path: str, terms: tuple[str, ...]):
     """Shared front half of every ``*_indexed`` retrieval form: route the
-    term set to its buckets (partition pruning at the file-listing level —
-    the PartitionFilters pytest pins this), read only those postings, load
-    the doc-length sidecar, and inline the 1-row stats sidecar as N/T
-    literal bodies.  Returns (post_df, dl_df, n_body, t_body)."""
+    term set to its buckets, read only those postings, load the
+    doc-length sidecar, and inline the 1-row stats sidecar as N/T literal
+    bodies.  Returns (post_df, dl_df, n_body, t_body).
+
+    Building the frames runs no Spark job: the stats row is read on the
+    driver (``_stats_row``); postings and doclen are read with their
+    contract schemas, so Spark infers none from file footers; and only
+    the query's ``tbucket=<b>`` dirs are listed (with ``basePath``, so
+    tbucket stays a partition column) — listing all 64 would launch a
+    parallel-listing job.  The ``tbucket IN (...)`` filter stays, so the
+    scan still shows PartitionFilters (pytest-pinned).  A bucket with no
+    dir (an emptied or small index) is skipped; with none left the
+    postings frame is empty and the query returns zero rows."""
     from pyspark.sql import functions as F
 
-    from ..operators.similarity import _read_index_or_empty
+    from .similarity import local_fs_path
 
+    root = local_fs_path(path)
+    srow = _stats_row(path)
     buckets = sorted({_token_bucket(t) for t in terms})
-    srow = spark.read.parquet(f"{path}.stats").collect()[0]
-    # _read_index_or_empty: a compliance delete of every doc removes all
-    # postings/doclen partition dirs — the emptied index must stay
-    # queryable (zero results), not raise on schema inference (the
-    # round-9 lifecycle fuzz's [ingest, delete-all, query] sequence)
-    post = (
-        _read_index_or_empty(
-            spark, path, "doc_id bigint, token string, tf bigint, tbucket int"
+    dirs = [
+        f"{path}/tbucket={b}" for b in buckets if (root / f"tbucket={b}").is_dir()
+    ]
+    if dirs:
+        post = (
+            spark.read.schema(_POSTINGS_SCHEMA)
+            .option("basePath", path)
+            .parquet(*dirs)
         )
-        .filter(F.col("tbucket").isin(buckets))
+    else:
+        post = spark.createDataFrame([], _POSTINGS_SCHEMA)
+    post = (
+        post.filter(F.col("tbucket").isin(buckets))
         .filter(F.col("token").isin(list(terms)))
         .select("doc_id", "token", "tf")
     )
-    dl = _read_index_or_empty(
-        spark, f"{path}.doclen", "doc_id bigint, dl bigint"
-    )
+    dl = spark.read.schema(_DOCLEN_SCHEMA).parquet(f"{path}.doclen")
     n_body = f"SELECT CAST({int(srow['n_docs'])} AS BIGINT) AS n_docs"
     t_body = f"SELECT CAST({int(srow['t_tok'])} AS BIGINT) AS t_tok"
     return post, dl, n_body, t_body
@@ -2106,9 +2251,11 @@ def hybrid_rrf_multi_indexed(
     """Multi-query hybrid RRF against the persisted inverted index — the
     hard-negative-mining shape run the way production runs it: a standing
     index queried per query TABLE, one pruned postings scan serving every
-    query's union of terms.  Same ``_hybrid_rrf_multi_ctes`` fragment as
-    the online form with the stats sidecar inlined; bit-identical to
-    ``hybrid_rrf_multi_df`` by construction (parity-tested)."""
+    query's union of terms.  Same one-pass ``_hybrid_rrf_fused_ctes``
+    fragment as the online form with the stats sidecar inlined;
+    bit-identical to ``hybrid_rrf_multi_df`` by construction
+    (parity-tested).  Building the frame runs no Spark job
+    (``_indexed_inputs``)."""
     from .staging import staged_views
 
     post, dl, n_body, t_body = _indexed_inputs(
@@ -2117,7 +2264,7 @@ def hybrid_rrf_multi_indexed(
     with staged_views(spark, tf=post, dl=dl, checkpoint=False) as v:
         return spark.sql(
             f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-            + _hybrid_rrf_multi_ctes(
+            + _hybrid_rrf_fused_ctes(
                 X.SPARK,
                 v.tf,
                 v.dl,

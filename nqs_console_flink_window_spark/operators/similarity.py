@@ -632,6 +632,26 @@ def _read_index_or_empty(spark, path: str, empty_schema: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def local_fs_path(path: str):
+    """``path`` as a local ``pathlib.Path`` (a ``file:`` URI is accepted).
+    The index listings are pathlib globs, which see nothing on a remote
+    filesystem: a remote index would read as empty and silently return
+    zero results, so any other URI scheme (``hdfs://``, ``s3a://``...)
+    raises instead."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    u = urlparse(path)
+    if u.scheme == "":
+        return Path(path)
+    if u.scheme == "file":
+        return Path(u.path)
+    raise ValueError(
+        f"index path {path!r}: only local filesystem paths are supported "
+        f"(the index listings cannot see a {u.scheme}:// filesystem)"
+    )
+
+
 def index_parquet_files(path: str) -> list:
     """Parquet files Spark's FileIndex would actually list under ``path``:
     underscore/dot-prefixed path segments (``__delete_staging``, fold
@@ -639,9 +659,7 @@ def index_parquet_files(path: str) -> list:
     staged files must not make an otherwise-emptied index look
     non-empty (the read would then fail schema inference at query
     time)."""
-    from pathlib import Path
-
-    root = Path(path)
+    root = local_fs_path(path)
     return [
         p
         for p in root.rglob("*.parquet")

@@ -203,11 +203,17 @@ def bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=RT.hybrid_rrf_multi_sql(X.DUCK),
     headline=True,  # standing-index fusion hot path — benched since round 9
     doc="Extension — hybrid_rrf_multi against the MATERIALIZED inverted "
-    "index: one pruned postings scan serves every query's term union; "
-    "ctf = per-term SUM(tf) over pruned postings, N/T inlined from the "
-    "stats sidecar.  The compute-once-then-query production shape for "
-    "hard-negative mining; results bit-identical to the online form, so "
-    "the oracle IS hybrid_rrf_multi's SQL.  Tier-1 rounds 8-11; rotated "
+    "index: only the query term union's tbucket dirs are listed, and "
+    "postings/doclen are read with their contract schemas; N/T come from "
+    "the stats sidecar, read on the driver with pyarrow and inlined — so "
+    "building the frame runs no Spark job.  The fusion is one pass: one "
+    "per-token df/ctf aggregate, one (query, doc) aggregate for the BM25 "
+    "score and the matched-term QL sum, a broadcast join adding the QL "
+    "background over all query terms, two rank windows and CASE "
+    "arithmetic for the RRF columns.  The compute-once-then-query "
+    "production shape for hard-negative mining; results bit-identical to "
+    "the online form, so the oracle IS hybrid_rrf_multi's SQL (the "
+    "leg-by-leg fragment).  Tier-1 rounds 8-11; rotated "
     "out round 12 for audio_near_dup_spectral; RESTORED tier-1 in round "
     "13 per the round-12 verdict (a driver-verified query must stay "
     "driver-verified) — stream_fact_pipeline rotated out in exchange "

@@ -831,11 +831,33 @@ def test_hybrid_indexed_matches_online_and_prunes_partitions(
     for b in sorted({RT._token_bucket(t) for t in RT.BM25_QUERY}):
         assert str(b) in frag, (b, frag)
 
-    m_indexed = RT.hybrid_rrf_multi_indexed(spark, idx)
+    # building the indexed frame runs no Spark job: the stats row is read
+    # on the driver, postings/doclen carry their contract schemas (no
+    # footer inference), and only the query's bucket dirs are listed
+    sc = spark.sparkContext
+    sc.setJobGroup("hybrid_rrf_multi_indexed_build", "build")
+    try:
+        m_indexed = RT.hybrid_rrf_multi_indexed(spark, idx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(
+        "hybrid_rrf_multi_indexed_build"
+    ) == []
     m_online = REGISTRY["hybrid_rrf_multi"].spark(spark, SMOKE_SF_DIR)
     assert [tuple(r) for r in m_indexed.collect()] == [
         tuple(r) for r in m_online.collect()
     ]
+    # the one-pass fusion scans the pruned postings at most twice (tf, and
+    # the per-token stats, whose second use reuses the first's shuffle)
+    # and doclen once; the final adaptive plan is the part before its
+    # "Initial Plan" section
+    final = (
+        m_indexed._jdf.queryExecution().executedPlan().toString()
+        .split("== Initial Plan ==")[0]
+    )
+    scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
+    assert len([ln for ln in scans if "tbucket#" in ln]) <= 2, final
+    assert len([ln for ln in scans if "dl#" in ln]) == 1, final
     # per-query discipline holds on the indexed plan too: every rank
     # window partitions by query_id (never a corpus-wide empty spec)
     # (WindowGroupLimit lines carry the partition spec in their FIRST
@@ -911,6 +933,61 @@ def test_text_index_rejects_duplicate_doc_ids(spark, tmp_path) -> None:
             spark, docs.filter("doc_id % 2 = 0").limit(1), 1, sidx
         )
     RT.text_index_ingest_batch(spark, docs.filter("doc_id % 2 = 0"), 0, sidx)
+
+
+def test_text_index_rejects_bool_and_null_doc_ids(spark, tmp_path) -> None:
+    """doc_id is the index's BIGINT key at any batch size.  A boolean id
+    (Python's bool is an int subclass) raises the contract error on the
+    bounded branch, where the ids are collected for the IN-list probe.
+    Above ``_FRESH_PROBE_INLIST`` rows a NULL id (isnull probe) and a
+    non-integer id column (schema check) raise the same error instead of
+    passing the left-semi freshness probe silently."""
+    sidx = str(tmp_path / "streamidx_bad_ids")
+    bad = "NULL or non-integer doc_id"
+    bools = spark.createDataFrame(
+        [(True, "alpha beta"), (False, "gamma")], "doc_id boolean, text string"
+    )
+    with pytest.raises(ValueError, match=bad):
+        RT.text_index_ingest_batch(spark, bools, 0, sidx)
+    n = RT._FRESH_PROBE_INLIST + 1
+    big = spark.range(n).selectExpr(
+        f"CASE WHEN id = {n // 2} THEN NULL ELSE id END AS doc_id",
+        "'alpha beta' AS text",
+    )
+    with pytest.raises(ValueError, match=bad):
+        RT.text_index_ingest_batch(spark, big, 0, sidx)
+    big_strings = spark.range(n).selectExpr(
+        "CAST(id AS STRING) AS doc_id", "'alpha beta' AS text"
+    )
+    with pytest.raises(ValueError, match=bad):
+        RT.text_index_ingest_batch(spark, big_strings, 0, sidx)
+    # nothing landed: every rejection came before the write
+    assert not (tmp_path / "streamidx_bad_ids").exists()
+
+
+def test_indexed_reads_reject_remote_paths(spark, tmp_path) -> None:
+    """The index reads list bucket dirs and read the stats row with local
+    filesystem calls, which would see an hdfs:// or s3a:// index as empty
+    and silently return zero results — such a path raises, naming it.  A
+    file: URI is local and serves the same rows as the bare path."""
+    for remote in ("hdfs://namenode:8020/idx/text", "s3a://bucket/idx/text"):
+        for query in (RT.bm25_topk_indexed, RT.hybrid_rrf_multi_indexed):
+            with pytest.raises(ValueError, match=remote):
+                query(spark, remote)
+        with pytest.raises(ValueError, match=remote):
+            RT.text_index_delete(spark, remote, [1])
+    docs = spark.createDataFrame(
+        [(1, "query window"), (2, "window dup filler"), (3, "filler")],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "textidx_uri")
+    RT.build_text_index(spark, docs, idx)
+    want = [tuple(r) for r in RT.hybrid_rrf_multi_indexed(spark, idx).collect()]
+    assert want
+    assert [
+        tuple(r)
+        for r in RT.hybrid_rrf_multi_indexed(spark, "file://" + idx).collect()
+    ] == want
 
 
 def test_query_terms_with_quotes_are_escaped(spark) -> None:

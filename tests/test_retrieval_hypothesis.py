@@ -104,3 +104,63 @@ def test_lm_sql_matches_pure_python(docs: list[list[str]]) -> None:
         )
         assert row.ppl_band == band
         assert bool(row.keep) == (nll < RT.LM_TAIL_MICRO * n_tok)
+
+
+# (query_id, terms) sets over VOCAB plus a term no document holds; every
+# drawn set also carries three fixed queries: one with a term absent from
+# the corpus, one repeating a term, and one matching a single document
+# (SOLO is planted in exactly one doc below)
+SOLO = "solo"
+queryset = st.dictionaries(
+    st.integers(min_value=1, max_value=6),
+    st.lists(st.sampled_from(VOCAB + ["absent"]), min_size=1, max_size=4).map(
+        tuple
+    ),
+    min_size=1,
+    max_size=4,
+).map(
+    lambda qs: {
+        **qs,
+        7: ("absent", "window"),
+        8: ("query", "dup", "query"),
+        9: (SOLO, "absent"),
+    }
+)
+
+
+def _hybrid_multi_sql(fragment, queries, leg_k: int, k: int) -> str:
+    return (
+        f"WITH tok AS ({RT.tok_cte('duck', 'documents')}), "
+        f"qt AS ({RT.bm25_queryset_sql(queries)}), "
+        f"tfq AS ({RT.bm25_tf_sql('tok', RT.bm25_queryset_terms(queries))}), "
+        f"dlt AS ({RT.bm25_dl_sql('tok')}), "
+        + fragment("duck", "tfq", "dlt", "qt", "documents", leg_k=leg_k, k=k)
+    )
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    corpus,
+    queryset,
+    st.integers(min_value=1, max_value=6),
+    st.integers(min_value=1, max_value=8),
+)
+def test_fused_hybrid_fragment_matches_oracle_fragment(
+    docs: list[list[str]], queries, leg_k: int, k: int
+) -> None:
+    """The engine's one-pass RRF fusion (``_hybrid_rrf_fused_ctes``)
+    returns exactly the rows of the oracle's leg-by-leg fragment
+    (``_hybrid_rrf_multi_ctes``), with leg and fused cuts small enough to
+    bind on these corpora."""
+    con = _con(docs[:-1] + [docs[-1] + [SOLO]])
+    want = con.execute(
+        _hybrid_multi_sql(RT._hybrid_rrf_multi_ctes, queries, leg_k, k)
+    ).fetchall()
+    got = con.execute(
+        _hybrid_multi_sql(RT._hybrid_rrf_fused_ctes, queries, leg_k, k)
+    ).fetchall()
+    assert got == want
+    # the fixed single-doc query surfaces its one doc, in both legs
+    assert [r[1:6] for r in want if r[0] == 9] == [
+        (len(docs) - 1, 2 * (RT.RRF_SCALE // (RT.RRF_K + 1)), 1, 1, 2)
+    ]
