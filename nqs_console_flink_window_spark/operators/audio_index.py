@@ -1,20 +1,12 @@
-"""Standing audio-dedup index (round 10) — the audio family riding the
-image index's machinery VERBATIM: the 1-D waveform fingerprint already
+"""Standing audio-dedup index: the image index's verbs and near-dup
+gate with a different band extractor.  The 1-D waveform fingerprint
 packs into the SAME (doc_id, band, bv) shape as the image dHash
-(4 x 16-bit bands, multimodal.audio_fp_from_samples), so every verb,
-the ``bband`` bucketing, the uniqueness contract AND the near-dup gate
-apply unchanged — only the band extractor differs (``audio_bands``:
-stdlib WAV decode -> fingerprint, one Arrow pass).
-
-With this module the modality matrix is complete: text (MinHash index),
-embeddings (SRP/IVF/IVF-PQ indexes), images (dHash index), audio (this)
-and video (frame-augmented dHash index) each have a persisted index, an
-ingest-time incremental dedup gate, and the full lifecycle verbs backed
-by the shared fold/manifest cores.
-
-Scale design: identical to the image index — the fingerprint gate's
-verify rule IS the image rule (plain Hamming <= DHASH_MAX_HAMMING over
-the 4 bands), so the shared gate is reused as-is, not re-derived."""
+(4 x 16-bit bands, multimodal.audio_fp_from_samples), so the ``bband``
+bucketing, the lifecycle (image_index.py over the ``standing_index``
+core) and the gate apply unchanged — only ``audio_bands`` differs
+(stdlib WAV decode -> fingerprint, one Arrow pass).  The gate's verify
+rule IS the image rule (plain Hamming <= DHASH_MAX_HAMMING over the 4
+bands), so it is reused, not re-derived."""
 
 from __future__ import annotations
 
@@ -24,7 +16,6 @@ from pyspark.sql import functions as F
 from .image_index import (
     _bband_col,
     build_image_index,
-    image_index_append,
     image_index_ingest_batch,
     incremental_image_dedup,
     incremental_image_dedup_sql,
@@ -32,10 +23,6 @@ from .image_index import (
 from .multimodal import audio_fp_grid_sql, extract_audio_fp
 
 # layout-only verbs: reused verbatim (they never look at band semantics)
-from .image_index import compact_image_index as compact_audio_index  # noqa: E402,F401
-from .image_index import (  # noqa: E402,F401
-    compact_streamed_image_index as compact_streamed_audio_index,
-)
 from .image_index import image_index_delete as audio_index_delete  # noqa: E402,F401
 from .image_index import read_image_index as read_audio_index  # noqa: E402,F401
 
@@ -62,11 +49,6 @@ def audio_bands(media: DataFrame) -> DataFrame:
 def build_audio_index(spark, media: DataFrame, path: str) -> None:
     """Bulk build — the image verb with the audio band extractor."""
     build_image_index(spark, media, path, bands_fn=audio_bands)
-
-
-def audio_index_append(spark, path: str, media: DataFrame) -> None:
-    """Flat-layout incremental maintenance — the image verb reused."""
-    image_index_append(spark, path, media, bands_fn=audio_bands)
 
 
 def audio_index_ingest_batch(
@@ -134,15 +116,6 @@ def build_audio_spectral_index(spark, media: DataFrame, path: str) -> None:
     build_image_index(spark, media, path, bands_fn=audio_spectral_bands)
 
 
-def audio_spectral_index_ingest_batch(
-    spark, batch_media: DataFrame, batch_id: int, path: str
-) -> None:
-    """Replay-idempotent streamed landing — the image verb reused."""
-    image_index_ingest_batch(
-        spark, batch_media, batch_id, path, bands_fn=audio_spectral_bands
-    )
-
-
 def incremental_audio_spectral_dedup(
     spark, media: DataFrame, index_bands: DataFrame | None
 ) -> tuple[DataFrame, DataFrame]:
@@ -205,20 +178,6 @@ def audio_windowed_bands(media: DataFrame) -> DataFrame:
             "bv",
         )
         .withColumn("bband", _bband_col())
-    )
-
-
-def build_audio_windowed_index(spark, media: DataFrame, path: str) -> None:
-    """Bulk build — the image verb with the windowed extractor."""
-    build_image_index(spark, media, path, bands_fn=audio_windowed_bands)
-
-
-def audio_windowed_index_ingest_batch(
-    spark, batch_media: DataFrame, batch_id: int, path: str
-) -> None:
-    """Replay-idempotent streamed landing — the image verb reused."""
-    image_index_ingest_batch(
-        spark, batch_media, batch_id, path, bands_fn=audio_windowed_bands
     )
 
 

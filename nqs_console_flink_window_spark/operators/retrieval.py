@@ -77,7 +77,9 @@ from collections.abc import Callable
 from contextlib import contextmanager
 
 from ..functions import dialect as X
+from . import standing_index as SI
 from .selection import qln_micro
+from .standing_index import _FRESH_PROBE_INLIST
 
 # LM fit slice: the "clean reference corpus" is the deterministic 1-in-7
 # doc_id slice (same spirit as DSIR's target predicate but disjoint in
@@ -1407,11 +1409,7 @@ def hybrid_dense_sparse_ann_indexed(
 
     from pyspark.sql import functions as F
 
-    from .similarity import (
-        _read_centroids,
-        _read_index_or_empty,
-        ivf_multi_indexed,
-    )
+    from .similarity import _read_centroids, ivf_multi_indexed
     from .staging import staged_views
 
     # the exact dense legs exclude each query's own vector from the
@@ -1425,7 +1423,7 @@ def hybrid_dense_sparse_ann_indexed(
 
     def _clash_count() -> int:
         return (
-            _read_index_or_empty(
+            SI._read_index_or_empty(
                 spark, ivf_path, "vec_id bigint, embedding array<float>, cell int"
             )
             .filter(F.col("vec_id").isin(qids))
@@ -1686,7 +1684,9 @@ def lm_model_score(docs_df, model: tuple[list[tuple[str, int]], int]):
 
 # ---------------------------------------------------------------------------
 # Materialized inverted index (the 100 TB sparse-retrieval shape — the
-# BM25 twin of similarity.build_ivf_index's cell-partitioned parquet)
+# BM25 twin of similarity.build_ivf_index's cell-partitioned parquet).
+# Maintenance is the standing_index core keyed by ``tbucket``, with the
+# doclen sidecar; the stats sidecar and its convergence rule live here.
 # ---------------------------------------------------------------------------
 
 TEXT_INDEX_BUCKETS = 64  # token-hash partition count (raw-token partitionBy
@@ -1719,38 +1719,10 @@ def _assert_no_null_text(docs_df, where: str) -> None:
         )
 
 
-_FRESH_PROBE_INLIST = 10_000  # max ids inlined as a pushed-down IN filter
 # contract schemas of the postings and doclen files (tbucket is the
 # postings partition column; the streamed layout adds a batch_id one)
 _POSTINGS_SCHEMA = "doc_id bigint, token string, tf bigint, tbucket int"
 _DOCLEN_SCHEMA = "doc_id bigint, dl bigint"
-
-
-def _text_index_layout(path: str) -> str | None:
-    """Which physical layout the index at ``path`` carries: ``"flat"``
-    (build_text_index / text_index_append — data files directly under
-    ``tbucket=N/``), ``"batched"`` (streamed ingest —
-    ``tbucket=N/batch_id=M``), or ``None`` (no postings yet).  Spark
-    cannot read a directory mixing both partition depths
-    (CONFLICTING_PARTITION_COLUMN_NAMES), so the flat-append and streamed
-    maintenance paths must refuse each other's layouts.  A remote path
-    raises (``local_fs_path``) instead of reading as an empty index."""
-    from .similarity import local_fs_path
-
-    kinds = set()
-    for sub in local_fs_path(path).glob("tbucket=*"):
-        if any(sub.glob("batch_id=*")):
-            kinds.add("batched")
-        if any(sub.glob("*.parquet")):
-            kinds.add("flat")
-    if len(kinds) > 1:
-        raise ValueError(
-            f"text index at {path} mixes flat and batched bucket layouts — "
-            "unreadable by Spark; rebuild it (build_text_index) or remove "
-            "the foreign-layout files"
-        )
-    return kinds.pop() if kinds else None
-
 
 
 def _rebuild_stats(spark, path: str) -> None:
@@ -1768,31 +1740,12 @@ def _rebuild_stats(spark, path: str) -> None:
     both layouts take one code path."""
     from pyspark.sql import functions as F
 
-    from .similarity import _read_index_or_empty
-
-    dl = _read_index_or_empty(spark, f"{path}.doclen", _DOCLEN_SCHEMA)
+    dl = SI._read_index_or_empty(spark, f"{path}.doclen", _DOCLEN_SCHEMA)
     stats = dl.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("t_tok"),
     )
     stats.coalesce(1).write.mode("overwrite").parquet(f"{path}.stats")
-
-
-def _landed_doclen_batches(path: str) -> set[int] | None:
-    """The batch_id set of the STREAMED doclen sidecar's landed slices —
-    a directory listing, never a data scan.  None when any slice dir is
-    not batch_id-shaped (foreign layout: fall back to the full rebuild)."""
-    from pathlib import Path
-
-    ids: set[int] = set()
-    for d in Path(f"{path}.doclen").glob("batch_id=*"):
-        if not any(d.glob("*.parquet")):
-            continue
-        try:
-            ids.add(int(d.name.split("=", 1)[1]))
-        except ValueError:
-            return None
-    return ids
 
 
 def _slices_sig(ids: set[int]) -> str:
@@ -1835,9 +1788,7 @@ def _ingest_stats_update(
     Spark job)."""
     from pyspark.sql import functions as F
 
-    from .similarity import _read_index_or_empty
-
-    ids = _landed_doclen_batches(path)
+    ids = SI.landed_batches(f"{path}.doclen")
     fast = None
     if ids is not None and int(batch_id) in ids:
         prior_sig = _slices_sig(ids - {int(batch_id)})
@@ -1853,7 +1804,7 @@ def _ingest_stats_update(
     if fast is not None:
         n_docs, t_tok = fast
     else:
-        dl = _read_index_or_empty(
+        dl = SI._read_index_or_empty(
             bspark, f"{path}.doclen", _DOCLEN_SCHEMA
         )
         srow = dl.agg(
@@ -1880,25 +1831,13 @@ def _assert_fresh_doc_ids(
     exclude_batch_id: int | None = None,
     check_null_text: bool = False,
 ) -> int | None:
-    """Enforce the index's doc_id-uniqueness contract on an APPEND/INGEST
-    batch: a re-ingested doc_id would land a SECOND doclen row and a
-    second postings row per term, silently inflating N/T and
-    double-counting tf in every score — the same silent-N-drift class the
-    NULL-text assert closes.  Two probes, both batch-scale cheap (appends
-    are micro-batches):
-
-    - intra-batch: the batch itself must not repeat a doc_id;
-    - cross-batch: probe the batch's doc_ids against the existing doclen
-      sidecar.  For bounded batches (<= ``_FRESH_PROBE_INLIST`` distinct
-      ids) the ids collect into an IN-list predicate — a pushed-down
-      literal filter the parquet scan prunes with row-group min/max
-      stats, so the probe cost tracks the BATCH, not the index (a
-      semi-join would scan the whole index-scale sidecar every
-      micro-batch).  Oversized batches fall back to the semi-join.
-      ``exclude_batch_id`` exempts rows the caller is about to OVERWRITE
-      (the replay-idempotent ingest path re-lands its own (bucket, batch)
-      slices — those rows are replaced, not duplicated, so a replay must
-      pass).
+    """The text index's doc_id contract on an APPEND/INGEST batch: a
+    re-ingested doc_id would land a SECOND doclen row and a second
+    postings row per term, silently inflating N/T and double-counting tf
+    in every score — the same silent-N-drift class the NULL-text assert
+    closes.  The intra-batch rule is here (the batch must not repeat a
+    doc_id); the id-type check and the cross-batch probe against the
+    doclen sidecar are the shared ``standing_index.assert_fresh_ids``.
 
     Returns the batch row count when bounded, else None — a streaming
     caller uses 0 to skip an empty landing without scheduling its own
@@ -1908,9 +1847,7 @@ def _assert_fresh_doc_ids(
     probe), so the per-micro-batch contract costs ONE driver collect
     instead of three jobs."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegralType
 
-    ids = new_docs.select("doc_id")
     # one collect serves EVERY probe for bounded batches: the ids come to
     # the driver anyway for the IN-list freshness filter, so the
     # intra-batch duplicate check is a Python set test and the NULL-text
@@ -1938,7 +1875,7 @@ def _assert_fresh_doc_ids(
     if bounded:
         has_dup = len(set(head_ids)) < len(head_ids)
     else:
-        dup = ids.groupBy("doc_id").count().filter("count > 1").limit(1)
+        dup = new_docs.groupBy("doc_id").count().filter("count > 1").limit(1)
         has_dup = dup.count() > 0
     if has_dup:
         raise ValueError(
@@ -1947,56 +1884,13 @@ def _assert_fresh_doc_ids(
             "rows would inflate N/T and double-count tf in every score); "
             "dedup the batch before indexing"
         )
-    # the shared emptiness-tolerant read: after a delete of EVERY doc the
-    # doclen dir still exists but holds no Spark-visible parquet files —
-    # nothing to collide with, and a raw read would fail schema inference
-    # (round-9 fuzz-found: [ingest, delete-all, ingest]); the empty frame
-    # makes both probes below no-ops
-    from .similarity import _read_index_or_empty
-
-    existing = _read_index_or_empty(
-        spark, f"{path}.doclen", _DOCLEN_SCHEMA
+    # the emptiness-tolerant read: after a delete of EVERY doc the doclen
+    # dir holds no Spark-visible parquet files — nothing to collide with
+    # (the fuzz's [ingest, delete-all, ingest] case)
+    existing = SI._read_index_or_empty(spark, f"{path}.doclen", _DOCLEN_SCHEMA)
+    SI.assert_fresh_ids(
+        new_docs, existing, where, exclude_batch_id, head=head_ids
     )
-    if exclude_batch_id is not None and "batch_id" in existing.columns:
-        existing = existing.filter(F.col("batch_id") != int(exclude_batch_id))
-    # a NULL or non-integer id raises the contract error HERE, at any
-    # batch size: a NULL doc_id can never be probed for freshness and
-    # would silently never clash.  bool is an int subclass in Python and
-    # a boolean column is no integer key, so both branches reject it.
-    if bounded:
-        if not head_ids:
-            return 0  # empty batch — nothing to clash
-        bad_id = any(type(i) is not int for i in head_ids)
-    else:
-        bad_id = (
-            not isinstance(new_docs.schema["doc_id"].dataType, IntegralType)
-            or ids.filter(F.isnull("doc_id")).limit(1).count() > 0
-        )
-    if bad_id:
-        raise ValueError(
-            f"{where}: batch carries a NULL or non-integer doc_id — "
-            "doc_id is the index's BIGINT key by contract (a NULL id "
-            "cannot be freshness-probed and would land an unmatchable "
-            "doclen/postings row)"
-        )
-    if bounded:
-        # one SQL string, not Column.isin(list): isin builds one py4j
-        # literal expression per id (measured 2.2 s vs 0.3 s at 2500 ids
-        # for the IDENTICAL pushed-down In plan); every id is an int by
-        # now, so the interpolation is literal-safe
-        clash = existing.filter(
-            f"doc_id IN ({', '.join(str(i) for i in head_ids)})"
-        ).limit(1)
-    else:
-        clash = ids.join(existing.select("doc_id"), "doc_id", "left_semi").limit(1)
-    if clash.count() > 0:
-        raise ValueError(
-            f"{where}: batch re-ingests an already-indexed doc_id — "
-            "duplicate doc_ids are outside the text-index contract "
-            "(duplicate doclen/postings rows would inflate N/T and "
-            "double-count tf in every score); anti-join the batch "
-            "against the doclen sidecar before indexing"
-        )
     return len(head) if bounded else None
 
 
@@ -2093,9 +1987,7 @@ def _stats_row(path: str) -> dict:
     job and a collect job for one row."""
     import pyarrow.parquet as pq
 
-    from .similarity import local_fs_path
-
-    rows = pq.read_table(local_fs_path(f"{path}.stats")).to_pylist()
+    rows = pq.read_table(SI.local_fs_path(f"{path}.stats")).to_pylist()
     if len(rows) != 1:
         raise ValueError(
             f"text index stats sidecar at {path}.stats holds {len(rows)} "
@@ -2121,9 +2013,7 @@ def _indexed_inputs(spark, path: str, terms: tuple[str, ...]):
     postings frame is empty and the query returns zero rows."""
     from pyspark.sql import functions as F
 
-    from .similarity import local_fs_path
-
-    root = local_fs_path(path)
+    root = SI.local_fs_path(path)
     srow = _stats_row(path)
     buckets = sorted({_token_bucket(t) for t in terms})
     dirs = [
@@ -2279,15 +2169,11 @@ def hybrid_rrf_multi_indexed(
 
 def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     """One micro-batch's index landing — the REPLAY-IDEMPOTENT streaming
-    form of ``text_index_append``: postings land under
-    ``tbucket=<b>/batch_id=<n>`` and doclen under ``batch_id=<n>`` with
-    DYNAMIC partition overwrite, so an at-least-once replay overwrites
-    exactly its own (bucket, batch) slices instead of double-appending
-    (the flat append form is NOT replay-safe — that is the batch-job
-    path).  Term-routed pruning still holds: ``tbucket`` stays the
-    top-level partition, the extra ``batch_id`` level only subdivides
-    files inside a bucket.  The stats sidecar is maintained by
-    ``_ingest_stats_update`` after every landing: an O(batch)
+    form of ``text_index_append`` (which is NOT replay-safe — that is the
+    batch-job path): postings land as the batch's
+    ``tbucket=<b>/batch_id=<n>`` slices and doclen as its ``batch_id=<n>``
+    slice (``standing_index.land_batch``).  The stats sidecar is
+    maintained by ``_ingest_stats_update`` after every landing: an O(batch)
     slice-set-certified increment when this batch is provably a new
     slice over exactly the set the stored row aggregates, a full doclen
     rebuild whenever the certificate does not hold (replay, re-owned
@@ -2299,14 +2185,7 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
 
     from .staging import staged_views
 
-    if _text_index_layout(path) == "flat":
-        raise ValueError(
-            "text_index_ingest_batch into a FLAT (build_text_index/append) "
-            "index would mix partition depths under tbucket=* and break "
-            "every reader — stream into a fresh path (stats/doclen converge "
-            "from the landings), or keep maintaining the flat index via "
-            "text_index_append"
-        )
+    SI.require_layout(path, "tbucket", "batched", "text_index_ingest_batch")
     # one driver collect enforces NULL-text + intra-batch dup + freshness
     # AND reports emptiness (bounded batches) — three contract probes and
     # the caller's would-be emptiness job folded into a single job
@@ -2338,38 +2217,15 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     with staged_views(bspark, p=postings_base) as v:
         postings = bspark.sql(
             f"SELECT doc_id, token, tf, "
-            f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS} AS tbucket, "
-            f"CAST({int(batch_id)} AS BIGINT) AS batch_id "
+            f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS} AS tbucket "
             f"FROM {v.p}"
         )
-        (
-            # bucket-aligned landing (the image index's r11 fix applied
-            # to the text index): without the repartition every shuffle
-            # task writes a sliver into EVERY tbucket dir — up to
-            # tasks x 64 tiny files per batch; aligned, each (bucket,
-            # batch) slice is one file, so every later pruned read,
-            # freshness probe and stats rebuild lists B files per
-            # bucket, not tasks x B
-            postings.repartition("tbucket")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("tbucket", "batch_id")
-            .parquet(path)
-        )
+        SI.land_batch(postings, batch_id, path, "tbucket")
         dl = bspark.sql(
             f"SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl "
             f"FROM {v.p} GROUP BY doc_id"
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        (
-            # one file per batch landing: the doclen sidecar is read back
-            # every micro-batch (stats rebuild + freshness probe) — a
-            # batch-scale coalesce keeps that listing at B files total
-            dl.coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{path}.doclen")
         )
+        SI.land_batch(dl, batch_id, f"{path}.doclen", None)
         # THIS batch's stats contribution from the staged postings — one
         # batch-scale aggregation, so the watermark fast path below never
         # touches the corpus-scale doclen sidecar
@@ -2385,30 +2241,11 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
 def compact_streamed_text_index(
     spark, path: str, upto_batch_id: int
 ) -> dict[str, int]:
-    """Index maintenance for the STREAMED layout: each token bucket's
-    ``batch_id=<n>`` subpaths below the committed watermark fold into the
-    reserved ``batch_id=-1`` generation — literally
-    ``compact_batch_landings`` run per bucket directory (and once on the
-    doclen sidecar), so the watermark-coupling contract, the fold-manifest
-    crash safety, and the replay-ownership rule (a replayed batch
-    overwrites its own subpath; folded history lives at -1, below every
-    real batch id) are inherited verbatim.  Term-routed pruning is
-    untouched (tbucket stays the top-level partition)."""
-    from pathlib import Path
-
-    from ..sinks.writers import compact_batch_landings
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("tbucket=*")):
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        out[sub.name] = compact_batch_landings(spark, str(sub), upto_batch_id)
-    out["doclen"] = compact_batch_landings(
-        spark, f"{path}.doclen", upto_batch_id
+    """Streamed-layout compaction of each token bucket and the doclen
+    sidecar below the committed watermark."""
+    return SI.compact_streamed(
+        spark, path, "tbucket", upto_batch_id, sidecars=("doclen",)
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -2547,20 +2384,12 @@ def text_index_append(spark, path: str, new_docs) -> None:
     the contract is now ENFORCED by ``_assert_no_null_text`` at build and
     append time, so N cannot silently drift.
 
-    Layout contract: append belongs to the FLAT (build_text_index)
-    layout; appending flat files into a streamed ``tbucket/batch_id``
-    index would mix partition depths and break every reader, so it
-    refuses (route through ``text_index_ingest_batch`` instead)."""
+    Flat layout only (``standing_index``)."""
     from pyspark.sql import functions as F
 
     from .staging import staged_views
 
-    if _text_index_layout(path) == "batched":
-        raise ValueError(
-            "text_index_append into a STREAMED (tbucket/batch_id) index "
-            "would mix partition depths — route new docs through "
-            "text_index_ingest_batch instead"
-        )
+    SI.require_layout(path, "tbucket", "flat", "text_index_append")
     # one contract collect: NULL-text + dup + freshness (bounded batches)
     _assert_fresh_doc_ids(
         spark, new_docs, path, "text_index_append", check_null_text=True
@@ -2597,54 +2426,16 @@ def text_index_append(spark, path: str, new_docs) -> None:
     _rebuild_stats(spark, path)
 
 
-def _fold_parquet_dir(spark, dir_path, target_bytes: int) -> int:
-    """Fold every ``*.parquet`` file directly inside ``dir_path`` toward
-    ~``target_bytes`` files — delegates to the ONE shared crash-safe fold
-    core (``sinks.writers.fold_parquet_files``: manifest committed before
-    any rename, crashed passes settled first), so the manifest protocol
-    cannot drift between the landing-table and index call sites."""
-    from pathlib import Path
-
-    from ..sinks.writers import fold_parquet_files
-
-    inputs = sorted(str(p) for p in Path(dir_path).glob("*.parquet"))
-    return fold_parquet_files(spark, inputs, dir_path, target_bytes)
-
-
 def compact_text_index(
     spark, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict[str, int]:
-    """Index maintenance for ``text_index_append``'s small files: fold each
-    token bucket's posting files (and the doclen sidecar's) toward
-    ~``target_bytes`` targets.  Pure layout change — postings/doclen rows
-    are preserved exactly, the ``tbucket=N`` directory encoding (and with
-    it term-routed partition pruning) is untouched, and the stats sidecar
+    """Flat-layout compaction of ``text_index_append``'s small files: each
+    token bucket's postings and the doclen sidecar.  The stats sidecar
     needs no rebuild (it is a pure function of doclen, whose rows do not
-    change).  Replay-convergent by the same argument as the stats rebuild:
-    a crashed fold is settled by the manifest protocol on the next pass,
-    and a ``text_index_append`` replay that re-appends after a compaction
-    still lands ordinary files the next compaction folds.
-
-    At a 100 TB index this is the Lucene segment-merge analogue: without
-    it, every append adds one ~tiny file per touched bucket and query-time
-    file listing degrades linearly with ingest count.
-
-    Returns ``{subdir_name: file_count}`` for every folded directory."""
-    from pathlib import Path
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("tbucket=*")):
-        # integer-suffix guard (same rule as compact_batch_landings'
-        # subdir walk): a crash-leftover `tbucket=N__compact` staging dir
-        # must not be treated as a bucket — the fold core deletes such
-        # leftovers when it next touches bucket N
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        out[sub.name] = _fold_parquet_dir(spark, sub, target_bytes)
-    out["doclen"] = _fold_parquet_dir(spark, f"{path}.doclen", target_bytes)
-    return out
+    change).  Returns ``{subdir_name: file_count}``."""
+    return SI.compact_flat(
+        spark, path, "tbucket", target_bytes, sidecars=("doclen",)
+    )
 
 
 def text_index_delete(spark, path: str, doc_ids) -> None:
@@ -2660,22 +2451,8 @@ def text_index_delete(spark, path: str, doc_ids) -> None:
     - stats sidecar: rebuilt from doclen, the standing convergence rule
       (a torn run is repaired by any later append/ingest/delete).
 
-    Idempotent and crash-convergent like the core it rides; N/T shrink
-    so every post-delete BM25/QL score reflects the smaller corpus —
-    exactly what a rebuild on the filtered corpus would produce
+    N/T shrink so every post-delete BM25/QL score reflects the smaller
+    corpus — exactly what a rebuild on the filtered corpus would produce
     (pytest-pinned bit-parity)."""
-    from ..sinks.writers import delete_rows_partitioned
-
-    layout = _text_index_layout(path)
-    if layout is None:
-        return
-    pcols = ["tbucket"] if layout == "flat" else ["tbucket", "batch_id"]
-    delete_rows_partitioned(spark, path, "doc_id", doc_ids, pcols)
-    from pathlib import Path
-
-    dl_path = f"{path}.doclen"
-    dl_batched = any(Path(dl_path).glob("batch_id=*"))
-    delete_rows_partitioned(
-        spark, dl_path, "doc_id", doc_ids, ["batch_id"] if dl_batched else []
-    )
-    _rebuild_stats(spark, path)
+    if SI.delete(spark, path, "tbucket", "doc_id", doc_ids, sidecars=("doclen",)):
+        _rebuild_stats(spark, path)

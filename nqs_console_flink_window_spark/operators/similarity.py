@@ -24,6 +24,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import standing_index as SI
+from .standing_index import _read_index_or_empty
+
 # Exact decimal dot product of two float arrays, both engines.  Floats are
 # widened to DOUBLE before multiplying (DuckDB's float->decimal cast is
 # lossy — see functions/dialect.py), products rounded into DECIMAL(30,15)
@@ -310,7 +313,9 @@ def ann_topk(df: DataFrame, query_df: DataFrame, k: int = 10) -> DataFrame:
 # ---------------------------------------------------------------------------
 # IVF ANN (coarse k-means quantizer; seeded numpy Lloyd's on a canonically
 # ordered bounded sample — fully reproducible outside Spark, so the ANN
-# family is value-oracled by a Python recompute in tools/check_oracle)
+# family is value-oracled by a Python recompute in tools/check_oracle).
+# The persisted index's maintenance is the standing_index core keyed by
+# ``cell``; the centroids sidecar is never touched by it.
 # ---------------------------------------------------------------------------
 
 IVF_CLUSTERS = 16
@@ -474,31 +479,6 @@ def build_ivf_index(df: DataFrame, path: str, vec_col: str = "embedding") -> Non
     _write_centroids(df.sparkSession, centers, path)
 
 
-def _ivf_layout(path: str) -> str | None:
-    """Which physical layout the index at ``path`` carries: ``"flat"``
-    (build_ivf_index / ivf_index_append — data files directly under
-    ``cell=N/``), ``"batched"`` (streamed ingest — ``cell=N/batch_id=M``),
-    or ``None`` (no data yet, only the centroids sidecar).  Spark cannot
-    read a directory mixing both partition depths
-    (CONFLICTING_PARTITION_COLUMN_NAMES), so the two maintenance paths
-    must refuse each other's layouts instead of corrupting the index."""
-    from pathlib import Path
-
-    kinds = set()
-    for sub in Path(path).glob("cell=*"):
-        if any(sub.glob("batch_id=*")):
-            kinds.add("batched")
-        if any(sub.glob("*.parquet")):
-            kinds.add("flat")
-    if len(kinds) > 1:
-        raise ValueError(
-            f"ivf index at {path} mixes flat and batched cell layouts — "
-            "unreadable by Spark; rebuild it (build_ivf_index) or remove "
-            "the foreign-layout files"
-        )
-    return kinds.pop() if kinds else None
-
-
 def ivf_index_append(
     spark, path: str, new_vecs: DataFrame, vec_col: str = "embedding"
 ) -> None:
@@ -514,17 +494,8 @@ def ivf_index_append(
     Re-clustering (when drift makes cells lopsided) is build_ivf_index
     again — an offline rebuild, exactly like production ANN systems.
     Small-file debt from repeated appends is settled by
-    ``compact_ivf_index`` (the text index's fold treatment).
-
-    Layout contract: append belongs to the FLAT (build_ivf_index) layout;
-    appending flat files into a streamed ``cell/batch_id`` index would mix
-    partition depths and break every subsequent read, so it refuses."""
-    if _ivf_layout(path) == "batched":
-        raise ValueError(
-            "ivf_index_append into a STREAMED (cell/batch_id) index would "
-            "mix partition depths — route new vectors through "
-            "ivf_index_ingest_batch instead"
-        )
+    ``compact_ivf_index``.  Flat layout only (``standing_index``)."""
+    SI.require_layout(path, "cell", "flat", "ivf_index_append")
     centers = _read_centroids(spark, path)
     new_vecs.withColumn(
         "cell", assign_cells_udf(centers)(F.col(vec_col))
@@ -537,137 +508,36 @@ def ivf_index_ingest_batch(
     bspark, batch_df: DataFrame, batch_id: int, path: str,
     vec_col: str = "embedding",
 ) -> None:
-    """One micro-batch's IVF landing — the REPLAY-IDEMPOTENT streaming form
-    of ``ivf_index_append`` (the text index's ``text_index_ingest_batch``
-    treatment applied to the vector index): vectors route through the
-    persisted centroids and land under ``cell=<c>/batch_id=<n>`` with
-    DYNAMIC partition overwrite, so an at-least-once replay overwrites
-    exactly its own (cell, batch) slices instead of double-appending.
-    nprobe partition pruning still holds: ``cell`` stays the top-level
-    partition, the extra ``batch_id`` level only subdivides files inside a
-    cell.  The quantizer must already be persisted — streaming ingest
-    never re-fits, and a pure streaming build bootstraps with
-    ``ivf_fit_centroids`` (quantizer ONLY; a prior ``build_ivf_index``
-    leaves FLAT data files under ``cell=N/`` whose partition depth
-    conflicts with the ``cell/batch_id`` landings, so ingest into a flat
-    layout refuses instead of corrupting the index)."""
-    if _ivf_layout(path) == "flat":
-        raise ValueError(
-            "ivf_index_ingest_batch into a FLAT (build_ivf_index/append) "
-            "index would mix partition depths and break every reader — "
-            "bootstrap a streaming index with ivf_fit_centroids (quantizer "
-            "only), or keep maintaining the flat index via ivf_index_append"
-        )
+    """One micro-batch's replay-idempotent IVF landing (the streamed
+    form of ``ivf_index_append``): vectors route through the persisted
+    centroids and land as the batch's ``cell=<c>/batch_id=<n>`` slices.
+    The quantizer must already be persisted — streaming ingest never
+    re-fits; a pure streaming build bootstraps with ``ivf_fit_centroids``
+    (quantizer ONLY: ``build_ivf_index`` would leave the flat layout,
+    which ingest refuses)."""
+    SI.require_layout(path, "cell", "batched", "ivf_index_ingest_batch")
     centers = _read_centroids(bspark, path)
-    (
-        batch_df.withColumn("cell", assign_cells_udf(centers)(F.col(vec_col)))
-        .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .repartition("cell")  # one file per (cell, batch) slice
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "batch_id")
-        .parquet(path)
+    SI.land_batch(
+        batch_df.withColumn("cell", assign_cells_udf(centers)(F.col(vec_col))),
+        batch_id, path, "cell",
     )
 
 
 def compact_streamed_ivf_index(
     spark, path: str, upto_batch_id: int
 ) -> dict[str, int]:
-    """Index maintenance for the STREAMED IVF layout: each cell's
-    ``batch_id=<n>`` subpaths below the committed watermark fold into the
-    reserved ``batch_id=-1`` generation — ``compact_batch_landings`` run
-    per cell directory, so the watermark-coupling contract, the
-    fold-manifest crash safety, and the replay-ownership rule are
-    inherited verbatim from the ONE shared fold core.  nprobe pruning is
-    untouched (cell stays the top-level partition).  Returns
-    ``{cell_dir: file_count}``."""
-    from pathlib import Path
-
-    from ..sinks.writers import compact_batch_landings
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("cell=*")):
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        out[sub.name] = compact_batch_landings(spark, str(sub), upto_batch_id)
-    return out
+    """Streamed-layout compaction of each cell below the committed
+    watermark; ``{cell_dir: file_count}``."""
+    return SI.compact_streamed(spark, path, "cell", upto_batch_id)
 
 
 def compact_ivf_index(
     spark, path: str, target_bytes: int = 128 * 1024 * 1024
 ) -> dict[str, int]:
-    """Index maintenance for ``ivf_index_append``'s small files: fold each
-    cell's vector files toward ~``target_bytes`` targets via the shared
-    crash-safe fold core.  Pure layout change — rows, the ``cell=N``
-    partition encoding, and nprobe pruning are all preserved; the
-    centroids sidecar needs no touch (appends never change it).  The
-    Lucene segment-merge analogue for the vector index, closing the same
-    operational gap the text index closed in round 7."""
-    from pathlib import Path
-
-    from ..sinks.writers import fold_parquet_files
-
-    out: dict[str, int] = {}
-    for sub in sorted(Path(path).glob("cell=*")):
-        try:
-            int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        inputs = sorted(str(p) for p in sub.glob("*.parquet"))
-        out[sub.name] = fold_parquet_files(spark, inputs, sub, target_bytes)
-    return out
-
-
-def _read_index_or_empty(spark, path: str, empty_schema: str) -> DataFrame:
-    """Read a cell-partitioned index, tolerating the FULLY-EMPTIED state: a
-    compliance delete of every vector removes every cell partition dir, so
-    spark.read cannot infer a schema from the bare index root — an emptied
-    index must stay QUERYABLE (zero results), not raise (the round-9
-    lifecycle fuzz found exactly this: [ingest, delete-all, query]).  Only
-    the columns the query paths consume need to exist on the empty frame."""
-    if not index_parquet_files(path):
-        return spark.createDataFrame([], empty_schema)
-    return spark.read.parquet(path)
-
-
-def local_fs_path(path: str):
-    """``path`` as a local ``pathlib.Path`` (a ``file:`` URI is accepted).
-    The index listings are pathlib globs, which see nothing on a remote
-    filesystem: a remote index would read as empty and silently return
-    zero results, so any other URI scheme (``hdfs://``, ``s3a://``...)
-    raises instead."""
-    from pathlib import Path
-    from urllib.parse import urlparse
-
-    u = urlparse(path)
-    if u.scheme == "":
-        return Path(path)
-    if u.scheme == "file":
-        return Path(u.path)
-    raise ValueError(
-        f"index path {path!r}: only local filesystem paths are supported "
-        f"(the index listings cannot see a {u.scheme}:// filesystem)"
-    )
-
-
-def index_parquet_files(path: str) -> list:
-    """Parquet files Spark's FileIndex would actually list under ``path``:
-    underscore/dot-prefixed path segments (``__delete_staging``, fold
-    staging, metadata dirs) are invisible to Spark, so a crashed delete's
-    staged files must not make an otherwise-emptied index look
-    non-empty (the read would then fail schema inference at query
-    time)."""
-    root = local_fs_path(path)
-    return [
-        p
-        for p in root.rglob("*.parquet")
-        if not any(
-            seg.startswith(("_", "."))
-            for seg in p.relative_to(root).parts
-        )
-    ]
+    """Flat-layout compaction of ``ivf_index_append``'s small files per
+    cell.  The centroids sidecar needs no touch (appends never change
+    it)."""
+    return SI.compact_flat(spark, path, "cell", target_bytes)
 
 
 def ivf_topk_indexed(
@@ -1423,10 +1293,8 @@ def ivfpq_topk(
 # codes index never stores floats; the row-store lookup is how production
 # IVF-PQ serves exact re-rank).
 #
-# Maintenance verbs are SHARED with the IVF index — the layout is the same
-# cell[/batch_id] partitioned parquet, so compact_streamed_ivf_index /
-# compact_ivf_index / ivf_index_delete operate on the codes index verbatim
-# (they fold/rewrite per cell directory and never interpret row columns).
+# Maintenance verbs are SHARED with the IVF index: the layout is the same
+# cell[/batch_id] partitioned parquet (``standing_index``).
 # ---------------------------------------------------------------------------
 
 
@@ -1513,14 +1381,8 @@ def ivfpq_index_ingest_batch(
     (vec_id, pq_code) rows land under ``cell=<c>/batch_id=<n>`` with
     dynamic partition overwrite, so an at-least-once replay overwrites
     exactly its own slices.  Bootstrap a pure streaming index with
-    ``ivfpq_fit``; a flat (build_ivfpq_index) layout refuses ingest for
-    the same mixed-partition-depth reason as the IVF/text indexes."""
-    if _ivf_layout(path) == "flat":
-        raise ValueError(
-            "ivfpq_index_ingest_batch into a FLAT (build_ivfpq_index) "
-            "index would mix partition depths and break every reader — "
-            "bootstrap a streaming index with ivfpq_fit (quantizers only)"
-        )
+    ``ivfpq_fit``; a flat (build_ivfpq_index) layout refuses ingest."""
+    SI.require_layout(path, "cell", "batched", "ivfpq_index_ingest_batch")
     centers = _read_centroids(bspark, path)
     books = _read_codebooks(bspark, path)
     coded = pq_encode_residual(
@@ -1529,14 +1391,7 @@ def ivfpq_index_ingest_batch(
         centers,
         vec_col,
     ).select("vec_id", "pq_code", "cell")
-    (
-        coded.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        .repartition("cell")  # one file per (cell, batch) slice
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "batch_id")
-        .parquet(path)
-    )
+    SI.land_batch(coded, batch_id, path, "cell")
 
 
 def ivfpq_topk_indexed(
@@ -1906,12 +1761,5 @@ def ivf_index_delete(spark, path: str, vec_ids) -> None:
     simply never lists it again).  The centroids sidecar is deliberately
     untouched: deletion never re-fits, exactly like the append contract —
     re-clustering after heavy drift is an offline build_ivf_index, as in
-    production ANN systems.  Idempotent and crash-convergent
-    (delete_rows_partitioned's re-run rule)."""
-    from ..sinks.writers import delete_rows_partitioned
-
-    layout = _ivf_layout(path)
-    if layout is None:
-        return
-    pcols = ["cell"] if layout == "flat" else ["cell", "batch_id"]
-    delete_rows_partitioned(spark, path, "vec_id", vec_ids, pcols)
+    production ANN systems."""
+    SI.delete(spark, path, "cell", "vec_id", vec_ids)

@@ -53,22 +53,10 @@ def lang_guess_from(en: str, de: str, es: str) -> str:
     )
 
 
-def lang_guess_expr(d: str, text: str = "text") -> str:
-    return lang_guess_from(
-        stopword_hits_expr(d, "en", text),
-        stopword_hits_expr(d, "de", text),
-        stopword_hits_expr(d, "es", text),
-    )
-
-
 def avg_token_len_from(d: str, arr: str) -> str:
     total = X.arr_sum_bigint(d, X.arr_transform(d, arr, "x -> CAST(length(x) AS BIGINT)"))
     n = X.arr_size(d, arr)
     return f"(CASE WHEN {n} = 0 THEN 0.0 ELSE CAST({total} AS DOUBLE) / {n} END)"
-
-
-def avg_token_len_expr(d: str, text: str = "text") -> str:
-    return avg_token_len_from(d, tokens_expr(d, text))
 
 
 def quality_score_from(hits_en: str, n_tokens: str, n_chars: str = "n_chars") -> str:

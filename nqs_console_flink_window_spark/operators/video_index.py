@@ -1,19 +1,11 @@
-"""Standing video-dedup index (round 10) — the video family riding the
-image index's machinery VERBATIM by folding the frame axis into the band
-key: a per-frame band row (doc_id, frame_idx, band, bv) stores as
-(doc_id, band = frame_idx * DHASH_BANDS + band, bv), which makes a video
-index literally an image index over the frame-augmented band space —
-
-- same ``bband`` partition bucketing, so probes prune at the file
-  listing;
-- same lifecycle verbs (``build_image_index`` / ``image_index_append`` /
-  ``image_index_ingest_batch`` with the ``bands_fn`` hook;
-  ``compact_image_index`` / ``compact_streamed_image_index`` /
-  ``image_index_delete`` reused unchanged — they never look at band
-  semantics);
-- same uniqueness contract (the per-(doc_id, band) multiplicity check
-  is exact even though video docs carry a VARIABLE number of rows —
-  content frames only).
+"""Standing video-dedup index: an image index over the frame-augmented
+band space.  A per-frame band row (doc_id, frame_idx, band, bv) stores
+as (doc_id, band = frame_idx * DHASH_BANDS + band, bv), so the ``bband``
+bucketing, the lifecycle verbs (image_index.py over the
+``standing_index`` core, with ``video_bands`` on the ``bands_fn`` hook)
+and the per-(doc_id, band) uniqueness rule apply unchanged — the rule is
+exact even though video docs carry a VARIABLE number of rows (content
+frames only).
 
 Only the ingest GATE differs: near-dup is the ALIGNED-FRAME rule (two
 clips match when enough frame indices agree within DHASH_MAX_HAMMING —
@@ -37,7 +29,6 @@ from ..functions import dialect as X
 from .image_index import (
     _bband_col,
     build_image_index,
-    image_index_append,
     image_index_ingest_batch,
 )
 from .multimodal import DHASH_BANDS, DHASH_MAX_HAMMING, extract_video_fp
@@ -68,11 +59,6 @@ def build_video_index(spark, media: DataFrame, path: str) -> None:
     build_image_index(spark, media, path, bands_fn=video_bands)
 
 
-def video_index_append(spark, path: str, media: DataFrame) -> None:
-    """Flat-layout incremental maintenance — the image verb reused."""
-    image_index_append(spark, path, media, bands_fn=video_bands)
-
-
 def video_index_ingest_batch(
     spark, batch_media: DataFrame, batch_id: int, path: str
 ) -> None:
@@ -84,7 +70,6 @@ def video_index_ingest_batch(
 
 # compaction and compliance deletion operate purely on the parquet layout
 # (fold core / staged-commit manifest) — the image verbs apply verbatim:
-from .image_index import compact_image_index as compact_video_index  # noqa: E402,F401
 from .image_index import (  # noqa: E402,F401
     compact_streamed_image_index as compact_streamed_video_index,
 )

@@ -79,14 +79,6 @@ def latest_per_key(df: DataFrame, keys: list[str], order: list[Column]) -> DataF
     )
 
 
-def dedup_last_write_wins(
-    df: DataFrame, keys: list[str], version_desc: list[Column]
-) -> DataFrame:
-    """A5 — ReplacingMergeTree(create_time) last-write-wins dedup on the fact
-    ORDER BY key (DDL :202-205): keep the newest version per composite key."""
-    return latest_per_key(df, keys, version_desc)
-
-
 def latest_per_key_agg(
     df: DataFrame, keys: list[str], version_cols: list[str]
 ) -> DataFrame:
