@@ -11,7 +11,6 @@ bands), so it is reused, not re-derived."""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .image_index import (
     _bband_col,
@@ -20,7 +19,7 @@ from .image_index import (
     incremental_image_dedup,
     incremental_image_dedup_sql,
 )
-from .multimodal import audio_fp_grid_sql, extract_audio_fp
+from .multimodal import audio_fp_grid_sql, decoded_bands, extract_audio_fp
 
 # layout-only verbs: reused verbatim (they never look at band semantics)
 from .image_index import image_index_delete as audio_index_delete  # noqa: E402,F401
@@ -29,21 +28,11 @@ from .image_index import read_image_index as read_audio_index  # noqa: E402,F401
 
 def audio_bands(media: DataFrame) -> DataFrame:
     """(doc_id, band, bv, bband) for a batch of audio clips — the
-    decode+fingerprint pass, run ONCE per batch.  Undecodable payloads
-    are excluded (the image_bands rule); silent/constant clips keep their
-    all-zero bands — they are TRUE near-dups of each other and the gate's
-    batch-sized probe keeps the zero bucket benign (the image index's
-    documented argument)."""
-    return (
-        extract_audio_fp(media)
-        .filter(F.col("decode_ok"))
-        .select(
-            F.col("media_id").alias("doc_id"),
-            "band",
-            "bv",
-        )
-        .withColumn("bband", _bband_col())
-    )
+    decode+fingerprint pass (``decoded_bands``), run ONCE per batch.
+    Silent/constant clips keep their all-zero bands — they are TRUE
+    near-dups of each other and the gate's batch-sized probe keeps the
+    zero bucket benign (the image index's documented argument)."""
+    return decoded_bands(media, extract_audio_fp).withColumn("bband", _bband_col())
 
 
 def build_audio_index(spark, media: DataFrame, path: str) -> None:
@@ -98,16 +87,9 @@ from .multimodal import audio_spectral_grid_sql, extract_audio_spectral  # noqa:
 
 def audio_spectral_bands(media: DataFrame) -> DataFrame:
     """(doc_id, band, bv, bband) for a batch of clips — the spectral
-    decode+fingerprint pass (one Arrow stage), the audio_bands rule."""
-    return (
-        extract_audio_spectral(media)
-        .filter(F.col("decode_ok"))
-        .select(
-            F.col("media_id").alias("doc_id"),
-            "band",
-            "bv",
-        )
-        .withColumn("bband", _bband_col())
+    decode+fingerprint pass, the audio_bands rule."""
+    return decoded_bands(media, extract_audio_spectral).withColumn(
+        "bband", _bband_col()
     )
 
 
@@ -156,7 +138,6 @@ def incremental_audio_spectral_dedup_sql(
 
 from .multimodal import (  # noqa: E402
     AUDIO_MAX_SHIFT,
-    DHASH_BANDS,
     audio_windowed_grid_sql,
     extract_audio_windowed,
 )
@@ -164,21 +145,11 @@ from .multimodal import (  # noqa: E402
 
 def audio_windowed_bands(media: DataFrame) -> DataFrame:
     """(doc_id, band, bv, bband) for a batch of clips — per-window
-    fingerprints with the window axis folded into the band key (the
-    video_bands fold), content windows only (hash-zero windows are
-    uninformative and would pile into the bv=0 bucket)."""
-    return (
-        extract_audio_windowed(media)
-        .filter(F.col("decode_ok") & F.col("content"))
-        .select(
-            F.col("media_id").alias("doc_id"),
-            (
-                F.col("frame_idx") * DHASH_BANDS + F.col("band")
-            ).cast("int").alias("band"),
-            "bv",
-        )
-        .withColumn("bband", _bband_col())
-    )
+    fingerprints, content windows only, the window axis folded into the
+    band key (the video_bands fold)."""
+    from .video_index import fold_frames
+
+    return fold_frames(decoded_bands(media, extract_audio_windowed))
 
 
 def incremental_audio_shifted_dedup(

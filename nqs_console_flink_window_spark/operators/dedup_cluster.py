@@ -178,18 +178,25 @@ def dedup_clusters_oracle_sql(table: str = "documents") -> str:
     """DuckDB oracle: the same components via a recursive min-label CTE
     (UNION-distinct recursion terminates on cycles)."""
     pairs = DD.minhash_lsh_pairs_sql(X.DUCK, table)
+    return component_oracle_sql(f"pairs AS ({pairs})", "pairs", table)
+
+
+def component_oracle_sql(ctes: str, pairs: str, table: str) -> str:
+    """THE component-oracle tail of every cluster form: ``WITH RECURSIVE
+    <ctes>`` (which must define the (doc_a, doc_b) relation ``pairs``),
+    then the bidirectional edges, the recursive min-label ``reach`` over
+    every document of ``table`` (``graph.cr_reach_cte``), and one row per
+    document with its component id, size and canonical flag."""
+    from .graph import cr_reach_cte
+
     return f"""
-WITH RECURSIVE pairs AS ({pairs}),
+WITH RECURSIVE {ctes},
 edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
+  SELECT doc_a AS src, doc_b AS dst FROM {pairs}
   UNION ALL
-  SELECT doc_b, doc_a FROM pairs
+  SELECT doc_b, doc_a FROM {pairs}
 ),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM {table}
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-),
+{cr_reach_cte("edges", table)},
 comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node)
 SELECT doc_id, cluster_id,
        COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,

@@ -39,6 +39,7 @@ from . import standing_index as SI
 from .multimodal import (
     DHASH_BANDS,
     DHASH_MAX_HAMMING,
+    decoded_bands,
     extract_dhash,
 )
 
@@ -60,19 +61,9 @@ def _bband_col():
 
 def image_bands(media: DataFrame) -> DataFrame:
     """(doc_id, band, bv, bband) for a batch of images (media_id, payload,
-    meta) — the decode+hash pass, run ONCE per batch.  Undecodable
-    payloads are excluded: their bands are meaningless zeros, and indexing
-    them would dump every broken payload into the bv=0 hot group."""
-    return (
-        extract_dhash(media)
-        .filter(F.col("decode_ok"))
-        .select(
-            F.col("media_id").alias("doc_id"),
-            "band",
-            "bv",
-            _bband_col().alias("bband"),
-        )
-    )
+    meta) — the decode+hash pass (``decoded_bands``), run ONCE per
+    batch."""
+    return decoded_bands(media, extract_dhash).withColumn("bband", _bband_col())
 
 
 def read_image_index(spark, path: str) -> DataFrame:

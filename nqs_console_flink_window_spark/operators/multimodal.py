@@ -28,6 +28,20 @@ metadata struct; decode / feature-extraction run as Arrow-batched
 The Spark-side plumbing (schemas, batch iteration, partition sizing,
 column pruning before the Python stage) is identical for all three paths.
 
+The near-dup families (image dHash, waveform / spectral / windowed audio,
+video) differ only in their decoder and fixture, so each pipeline step
+exists once and the per-modality public names are short callers:
+
+- ``_documents_as_payloads`` — the fixture-payload kernel (document text
+  -> real media payload + typed meta);
+- ``_extract_bands`` — the one band-extraction kernel (payload ->
+  ``VDHASH_SCHEMA`` rows; flat families go through ``_extract_flat``);
+- ``_decoded_bands`` -> ``_staged_pairs`` -> ``_clusters_from_pairs`` —
+  the engine-side pair and cluster forms (decode filter, staged pairs
+  fragment, staged edges into the connected-components core);
+- ``dedup_cluster.component_oracle_sql`` — the oracle's recursive
+  component tail, shared with the text ``dedup_clusters`` oracle.
+
 Scale notes (100 TB of media): binary payloads dominate partition size —
 ``spark.sql.files.maxPartitionBytes`` should be sized so one Arrow batch of
 payloads fits executor memory; metadata-only predicates (width/height/
@@ -1273,60 +1287,81 @@ def decode_dhash(payload: bytes, mime: str | None = None) -> list[int]:
     raise ValueError("unsupported image format for dhash")
 
 
-DHASH_SCHEMA = T.StructType(
+VDHASH_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
+        T.StructField("frame_idx", T.IntegerType()),
         T.StructField("band", T.IntegerType()),
         T.StructField("bv", T.LongType()),
+        T.StructField("content", T.BooleanType()),
         T.StructField("decode_ok", T.BooleanType()),
     ]
 )
 
 
-def extract_dhash(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """Arrow-batched mapInPandas dHash extraction: (media_id, payload,
-    meta.mime) -> DHASH_BANDS rows per image (media_id, band, bv) —
-    band-exploded because the band value IS the downstream join key (the
-    Hamming-band candidate join consumes this shape directly; no array
-    column to re-explode).  Undecodable payloads emit DHASH_BANDS
-    zero-band rows flagged decode_ok=False so corpus accounting stays
-    row-exact."""
+def _extract_bands(media: DataFrame, decode) -> DataFrame:
+    """THE band-extraction kernel of every media family: one Arrow
+    mapInPandas pass over (media_id, payload, meta.mime), ``decode(payload,
+    mime)`` -> [(frame_idx, bands, content)], DHASH_BANDS rows per frame
+    (media_id, frame_idx, band, bv, content, decode_ok) — band-exploded
+    because the band value IS the downstream join key (the Hamming-band
+    candidate join consumes this shape directly; no array column to
+    re-explode).  An undecodable payload emits ONE zero frame of
+    DHASH_BANDS rows (frame_idx 0, content and decode_ok False) so corpus
+    accounting stays row-exact and a corrupt payload never kills the
+    stage.  Flat (one-fingerprint-per-clip) families decode to a single
+    frame 0 and project frame_idx/content away."""
     cols = _spread_for_decode(
         media.select("media_id", "payload", F.col("meta.mime").alias("mime")),
         parent=media,
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            band_ix: list[int] = []
-            bvs: list[int] = []
-            oks: list[bool] = []
+        for b in batches:
+            ids, fidx, bandix, bvs, cts, oks = [], [], [], [], [], []
             for mid, payload, mime in zip(
-                pdf["media_id"], pdf["payload"], pdf["mime"]
+                b["media_id"], b["payload"], b["mime"]
             ):
                 try:
-                    bands = decode_dhash(
+                    fps = decode(
                         bytes(payload) if payload is not None else b"", mime
                     )
                     ok = True
-                except Exception:
-                    bands, ok = [0] * DHASH_BANDS, False
-                for b, bv in enumerate(bands):
-                    ids.append(mid)
-                    band_ix.append(b)
-                    bvs.append(bv)
-                    oks.append(ok)
+                except Exception:  # noqa: BLE001 - flagged, not fatal
+                    fps, ok = [(0, [0] * DHASH_BANDS, False)], False
+                for idx, bands, content in fps:
+                    for j, bv in enumerate(bands):
+                        ids.append(int(mid))
+                        fidx.append(int(idx))
+                        bandix.append(j)
+                        bvs.append(int(bv))
+                        cts.append(bool(content))
+                        oks.append(ok)
             yield pd.DataFrame(
                 {
                     "media_id": pd.Series(ids, dtype="int64"),
-                    "band": pd.Series(band_ix, dtype="int32"),
+                    "frame_idx": pd.Series(fidx, dtype="int32"),
+                    "band": pd.Series(bandix, dtype="int32"),
                     "bv": pd.Series(bvs, dtype="int64"),
+                    "content": pd.Series(cts, dtype="bool"),
                     "decode_ok": pd.Series(oks, dtype="bool"),
                 }
             )
 
-    return cols.mapInPandas(kernel, DHASH_SCHEMA)
+    return cols.mapInPandas(kernel, VDHASH_SCHEMA)
+
+
+def _extract_flat(media: DataFrame, decode) -> DataFrame:
+    """(media_id, band, bv, decode_ok): the kernel over a one-frame
+    ``decode(payload, mime) -> bands``."""
+    return _extract_bands(
+        media, lambda p, m: [(0, decode(p, m), True)]
+    ).select("media_id", "band", "bv", "decode_ok")
+
+
+def extract_dhash(media: DataFrame) -> DataFrame:
+    """DHASH_BANDS dHash rows per image (``_extract_flat``)."""
+    return _extract_flat(media, decode_dhash)
 
 
 def _dhash_text_sql(d: str) -> str:
@@ -1709,6 +1744,36 @@ _FIXTURE_IMAGE_FORMATS = (
 )
 
 
+def _documents_as_payloads(docs: DataFrame, encode, *meta) -> DataFrame:
+    """THE fixture-payload kernel: one Arrow mapInPandas pass turns each
+    document into (media_id, payload = ``encode(doc_id, text)``), and the
+    caller's ``meta`` fields plus n_bytes form the metadata struct.
+    NULL-text docs are excluded: no clip on either side, the contract
+    every text-recomputed grid SQL shares."""
+    cols = _spread_for_decode(
+        docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
+    )
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            ids = [int(did) for did in b["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "media_id": pd.Series(ids, dtype="int64"),
+                    "payload": [encode(i, t) for i, t in zip(ids, b["text"])],
+                }
+            )
+
+    flat = cols.mapInPandas(kernel, "media_id long, payload binary")
+    return _mark_spread(flat.select(
+        "media_id",
+        "payload",
+        F.struct(
+            *meta, F.octet_length("payload").cast("long").alias("n_bytes")
+        ).alias("meta"),
+    ))
+
+
 def documents_as_images(docs: DataFrame) -> DataFrame:
     """Fixture adapter, MIXED-FORMAT edition: each document's fixture
     grid (``_fixture_grid`` — the Python twin of the SQL projection)
@@ -1720,51 +1785,21 @@ def documents_as_images(docs: DataFrame) -> DataFrame:
     lossy in general, so its fixture is the block-constant expansion
     (``encode_jpeg_gray_blocks``) whose round-trip is exact — the
     decoded thumbnail still equals the text grid, which is what keeps
-    every format under the SAME cross-engine text oracle.  One Arrow
-    mapInPandas pass; NULL-text docs are excluded (no image on either
-    side, the dhash_grid_sql contract)."""
-    cols = _spread_for_decode(
-        docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
+    every format under the SAME cross-engine text oracle."""
+    n = len(_FIXTURE_IMAGE_FORMATS)
+    mime = F.element_at(
+        F.array(*(F.lit(m) for m, _ in _FIXTURE_IMAGE_FORMATS)),
+        F.pmod(F.col("media_id"), F.lit(n)).cast("int") + 1,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads, mimes, ws, hs = [], [], [], [], []
-            for did, text in zip(b["doc_id"], b["text"]):
-                mime, enc = _FIXTURE_IMAGE_FORMATS[
-                    int(did) % len(_FIXTURE_IMAGE_FORMATS)
-                ]
-                grid = _fixture_grid(text)
-                scale = 8 if mime == "image/jpeg" else 1
-                ids.append(int(did))
-                payloads.append(enc(grid))
-                mimes.append(mime)
-                ws.append(len(grid[0]) * scale)
-                hs.append(len(grid) * scale)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "payload": payloads,
-                    "mime": mimes,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                }
-            )
-
-    flat = cols.mapInPandas(
-        kernel,
-        "media_id long, payload binary, mime string, width int, height int",
+    # the JPEG writer expands each grid cell to an 8x8 block
+    scale = F.when(mime == "image/jpeg", 8).otherwise(1)
+    return _documents_as_payloads(
+        docs,
+        lambda i, t: _FIXTURE_IMAGE_FORMATS[i % n][1](_fixture_grid(t)),
+        mime.alias("mime"),
+        (scale * DHASH_GRID_W).cast("int").alias("width"),
+        (scale * DHASH_GRID_H).cast("int").alias("height"),
     )
-    return _mark_spread(flat.select(
-        "media_id",
-        "payload",
-        F.struct(
-            F.col("mime").alias("mime"),
-            F.col("width").alias("width"),
-            F.col("height").alias("height"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    ))
 
 
 # ---------------------------------------------------------------------------
@@ -1824,6 +1859,12 @@ def decode_audio_fp(payload: bytes, mime: str | None = None) -> list[int]:
     """Typed dispatch to samples -> fingerprint bands.  Audio only (the
     waveform hash of an image is meaningless) — mirrors decode_dhash's
     gating; raises on non-audio payloads (the kernel flags, never dies)."""
+    return audio_fp_from_samples(_gated_wav_samples(payload, mime))
+
+
+def _gated_wav_samples(payload: bytes, mime: str | None) -> list[int]:
+    """The gate of every audio decoder: an audio (or untyped) mime AND
+    RIFF/WAVE magic, else raise; then the channel-0 samples."""
     audio_ok = mime is None or mime.startswith("audio/")
     if not (
         audio_ok
@@ -1832,7 +1873,7 @@ def decode_audio_fp(payload: bytes, mime: str | None = None) -> list[int]:
         and payload[8:12] == b"WAVE"
     ):
         raise ValueError("not a wav payload")
-    return audio_fp_from_samples(_wav_samples(payload))
+    return _wav_samples(payload)
 
 
 def _audio_codes(text: str | None, n: int = AFP_WINDOWS) -> list[int]:
@@ -1869,79 +1910,21 @@ def encode_wav_codes(codes: list[int]) -> bytes:
 
 def documents_as_audio(docs: DataFrame) -> DataFrame:
     """Fixture adapter for the audio family: each document's first
-    AFP_WINDOWS printable-ASCII codes synthesize a REAL mono PCM16 WAV
-    (one Arrow mapInPandas pass; NULL-text docs excluded — no clip on
-    either side, the image fixture's contract)."""
-    cols = _spread_for_decode(
-        docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
+    AFP_WINDOWS printable-ASCII codes synthesize a REAL mono PCM16 WAV."""
+    return _documents_as_payloads(
+        docs,
+        lambda _i, t: encode_wav_codes(_audio_codes(t)),
+        F.lit("audio/wav").alias("mime"),
+        F.lit(AFP_RATE).cast("int").alias("sample_rate"),
+        F.lit(AFP_WINDOWS * AFP_SAMPLES_PER_CODE)
+        .cast("long")
+        .alias("n_frames"),
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads = [], []
-            for did, text in zip(b["doc_id"], b["text"]):
-                ids.append(int(did))
-                payloads.append(encode_wav_codes(_audio_codes(text)))
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "payload": payloads,
-                }
-            )
 
-    flat = cols.mapInPandas(kernel, "media_id long, payload binary")
-    return _mark_spread(flat.select(
-        "media_id",
-        "payload",
-        F.struct(
-            F.lit("audio/wav").alias("mime"),
-            F.lit(AFP_RATE).cast("int").alias("sample_rate"),
-            F.lit(AFP_WINDOWS * AFP_SAMPLES_PER_CODE)
-            .cast("long")
-            .alias("n_frames"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    ))
-
-
-def extract_audio_fp(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """(media_id, payload, meta.mime) -> DHASH_BANDS rows per clip
-    (media_id, band, bv, decode_ok) — the extract_dhash kernel shape on
-    the audio dispatch; undecodable payloads flag, never kill the stage."""
-
-    cols = _spread_for_decode(
-        media.select("media_id", "payload", F.col("meta.mime").alias("mime")),
-        parent=media,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, bandix, bvs, oks = [], [], [], []
-            for mid, payload, mime in zip(
-                b["media_id"], b["payload"], b["mime"]
-            ):
-                try:
-                    bands = decode_audio_fp(
-                        bytes(payload) if payload is not None else b"", mime
-                    )
-                    ok = True
-                except Exception:  # noqa: BLE001 - flagged, not fatal
-                    bands, ok = [0] * DHASH_BANDS, False
-                for j, bv in enumerate(bands):
-                    ids.append(int(mid))
-                    bandix.append(j)
-                    bvs.append(int(bv))
-                    oks.append(ok)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "band": pd.Series(bandix, dtype="int32"),
-                    "bv": pd.Series(bvs, dtype="int64"),
-                    "decode_ok": pd.Series(oks, dtype="bool"),
-                }
-            )
-
-    return cols.mapInPandas(kernel, DHASH_SCHEMA)
+def extract_audio_fp(media: DataFrame) -> DataFrame:
+    """DHASH_BANDS waveform-fingerprint rows per clip (``_extract_flat``)."""
+    return _extract_flat(media, decode_audio_fp)
 
 
 def _audio_text_sql(d: str) -> str:
@@ -1987,18 +1970,13 @@ bands AS (
 
 
 def audio_near_dup_df(spark, table: str = "documents") -> DataFrame:
-    """Engine side of audio_near_dup: documents -> REAL mono PCM16 WAVs
-    -> decode + 1-D fingerprint through the Arrow mapInPandas stage ->
-    the SHARED banded pairs core (zero-variance split included — silent
-    or constant-tone clips are the audio hot group, same as near-constant
+    """Engine side of audio_near_dup: the SHARED banded pairs core over
+    the waveform fingerprint (zero-variance split included — silent or
+    constant-tone clips are the audio hot group, same as near-constant
     thumbnails)."""
-    media = documents_as_audio(spark.table(table))
-    bands = (
-        extract_audio_fp(media)
-        .filter(F.col("decode_ok"))
-        .select(F.col("media_id").alias("doc_id"), "band", "bv")
+    return dhash_pairs_from_bands(
+        spark, decoded_bands(documents_as_audio(spark.table(table)), extract_audio_fp)
     )
-    return dhash_pairs_from_bands(spark, bands)
 
 
 def audio_near_dup_sql(d: str, table: str = "documents") -> str:
@@ -2071,53 +2049,12 @@ def audio_spectral_bands_from_samples(xs: list[int]) -> list[int]:
 def decode_audio_spectral(payload: bytes, mime: str | None = None) -> list[int]:
     """Typed dispatch to samples -> spectral bands — decode_audio_fp's
     gating with the spectral extractor."""
-    audio_ok = mime is None or mime.startswith("audio/")
-    if not (
-        audio_ok
-        and len(payload) >= 12
-        and payload[:4] == b"RIFF"
-        and payload[8:12] == b"WAVE"
-    ):
-        raise ValueError("not a wav payload")
-    return audio_spectral_bands_from_samples(_wav_samples(payload))
+    return audio_spectral_bands_from_samples(_gated_wav_samples(payload, mime))
 
 
-def extract_audio_spectral(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """(media_id, payload, meta.mime) -> DHASH_BANDS spectral rows per
-    clip — extract_audio_fp's kernel shape on the spectral dispatch."""
-    cols = _spread_for_decode(
-        media.select("media_id", "payload", F.col("meta.mime").alias("mime")),
-        parent=media,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, bandix, bvs, oks = [], [], [], []
-            for mid, payload, mime in zip(
-                b["media_id"], b["payload"], b["mime"]
-            ):
-                try:
-                    bands = decode_audio_spectral(
-                        bytes(payload) if payload is not None else b"", mime
-                    )
-                    ok = True
-                except Exception:  # noqa: BLE001 - flagged, not fatal
-                    bands, ok = [0] * DHASH_BANDS, False
-                for j, bv in enumerate(bands):
-                    ids.append(int(mid))
-                    bandix.append(j)
-                    bvs.append(int(bv))
-                    oks.append(ok)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "band": pd.Series(bandix, dtype="int32"),
-                    "bv": pd.Series(bvs, dtype="int64"),
-                    "decode_ok": pd.Series(oks, dtype="bool"),
-                }
-            )
-
-    return cols.mapInPandas(kernel, DHASH_SCHEMA)
+def extract_audio_spectral(media: DataFrame) -> DataFrame:
+    """DHASH_BANDS spectral-fingerprint rows per clip (``_extract_flat``)."""
+    return _extract_flat(media, decode_audio_spectral)
 
 
 def audio_spectral_grid_sql(
@@ -2181,16 +2118,12 @@ sbits AS (SELECT doc_id, t, e1, e2, e3, e4, {lb} FROM se),
 
 
 def audio_near_dup_spectral_df(spark, table: str = "documents") -> DataFrame:
-    """Engine side of audio_near_dup_spectral: the same REAL WAV fixture
-    and Arrow stage as the waveform form, the spectral extractor, the
-    SHARED banded pairs core."""
-    media = documents_as_audio(spark.table(table))
-    bands = (
-        extract_audio_spectral(media)
-        .filter(F.col("decode_ok"))
-        .select(F.col("media_id").alias("doc_id"), "band", "bv")
+    """Engine side of audio_near_dup_spectral: the waveform form's WAV
+    fixture, the spectral extractor, the SHARED banded pairs core."""
+    return dhash_pairs_from_bands(
+        spark,
+        decoded_bands(documents_as_audio(spark.table(table)), extract_audio_spectral),
     )
-    return dhash_pairs_from_bands(spark, bands)
 
 
 def audio_near_dup_spectral_sql(d: str, table: str = "documents") -> str:
@@ -2203,36 +2136,61 @@ def audio_near_dup_spectral_sql(d: str, table: str = "documents") -> str:
 
 
 def image_near_dup_df(spark, table: str = "documents") -> DataFrame:
-    """Engine side of image_near_dup: documents -> REAL mixed-format
-    images (PPM / bottom-up BMP / grayscale PNG / LZW GIF / baseline
-    JPEG rotating by doc_id % 5)
-    -> decode + dHash through the Arrow mapInPandas stage -> staged
-    bands -> the shared Hamming-band pairs fragment.  The bands relation is
-    referenced four times by the fragment (two candidate sides, two
-    verify sides) — staged once (localCheckpoint) so Spark's CTE inlining
-    cannot re-run the decode per reference."""
+    """Engine side of image_near_dup: the mixed-format image fixture ->
+    dHash bands -> the shared Hamming-band pairs core."""
+    return dhash_pairs_from_bands(
+        spark, decoded_bands(documents_as_images(spark.table(table)), extract_dhash)
+    )
+
+
+def decoded_bands(media: DataFrame, extract) -> DataFrame:
+    """The decode step of every engine form and index ingest, once:
+    ``extract`` over ``media`` -> the decoded (doc_id, [frame_idx,] band,
+    bv) rows.  Failed decodes are dropped (their zero bands would pile
+    into the bv=0 hot group); framed extractors also drop hash-zero
+    frames (the uninformative-frame rule, see the video section)."""
+    rows = extract(media)
+    framed = "frame_idx" in rows.columns
+    ok = F.col("decode_ok") & F.col("content") if framed else F.col("decode_ok")
+    return rows.filter(ok).select(
+        F.col("media_id").alias("doc_id"),
+        *(["frame_idx"] if framed else []),
+        "band",
+        "bv",
+    )
+
+
+def _staged_pairs(spark, bands: DataFrame, pairs_sql) -> DataFrame:
+    """``pairs_sql(d, rel)`` (a CTE-list + final SELECT, no leading WITH)
+    over ``bands``, staged once (localCheckpoint): every pairs fragment
+    references its bands relation several times, and Spark's CTE
+    inlining would otherwise re-run the decode per reference."""
     from .staging import staged_views
 
-    media = documents_as_images(spark.table(table))
-    bands = (
-        extract_dhash(media)
-        .filter(F.col("decode_ok"))
-        .select(F.col("media_id").alias("doc_id"), "band", "bv")
-    )
-    return dhash_pairs_from_bands(spark, bands)
+    with staged_views(spark, bands=bands) as v:
+        return spark.sql("WITH " + pairs_sql(X.SPARK, v.bands).lstrip())
+
+
+def _clusters_from_pairs(spark, pairs: DataFrame, table: str) -> DataFrame:
+    """(doc_a, doc_b) edges -> the shared connected-components core over
+    ALL documents of ``table`` as nodes (clean documents = singleton
+    clusters).  The core iterates over the edges, so they are
+    materialized once and no CC step re-runs the decode stage."""
+    from .dedup_cluster import dedup_clusters_df
+    from .staging import staged_views
+
+    with staged_views(spark, edges=pairs.select("doc_a", "doc_b")) as ev:
+        return dedup_clusters_df(
+            spark.table(ev.edges), spark.table(table).select("doc_id")
+        )
 
 
 def dhash_pairs_from_bands(spark, bands: DataFrame) -> DataFrame:
     """The pairs core over ANY (doc_id, band, bv) relation — shared by the
-    decode-on-the-fly query form and the standing-index form (which reads
+    decode-on-the-fly query forms and the standing-index form (which reads
     bands straight off the persisted image index, zero decode at query
     time)."""
-    from .staging import staged_views
-
-    with staged_views(spark, bands=bands) as v:
-        return spark.sql(
-            "WITH " + dhash_pairs_split_sql(X.SPARK, v.bands).lstrip()
-        )
+    return _staged_pairs(spark, bands, dhash_pairs_split_sql)
 
 
 def image_near_dup_sql(d: str, table: str = "documents") -> str:
@@ -2250,38 +2208,37 @@ def image_dup_clusters_df(spark, table: str = "documents") -> DataFrame:
     quadratic in duplicate multiplicity (measured 637x pairs at 10x data
     on the replica-heavy fixture), while the cluster form emits exactly
     one row per IMAGE with its component id — linear in corpus size
-    regardless of how duplicate-dense it is.  Composition of two finished
-    families: the dHash Hamming-band pairs feed the shared
-    connected-components core (bounded min-label propagation with pointer
-    doubling, dedup_cluster.py) over ALL documents as nodes (clean images
-    = singleton clusters).
+    regardless of how duplicate-dense it is.
 
     Round-10 scale upgrade: the zero-variance group's CLIQUE edges are
-    star-reduced here (``z_star`` — each zero-hash image to the group's
-    min doc_id), which is component-equivalent but LINEAR in the group
-    size, so the cluster form stays linear even on a corpus that is
-    mostly near-constant thumbnails (the documented bv=0 hot bucket)."""
-    media = documents_as_images(spark.table(table))
-    bands = (
-        extract_dhash(media)
-        .filter(F.col("decode_ok"))
-        .select(F.col("media_id").alias("doc_id"), "band", "bv")
+    star-reduced (``z_star`` — each zero-hash image to the group's min
+    doc_id), which is component-equivalent but LINEAR in the group size,
+    so the cluster form stays linear even on a corpus that is mostly
+    near-constant thumbnails (the documented bv=0 hot bucket)."""
+    return dup_clusters_from_bands(
+        spark,
+        decoded_bands(documents_as_images(spark.table(table)), extract_dhash),
+        table,
     )
-    return dup_clusters_from_bands(spark, bands, table)
 
 
 def dup_clusters_from_bands(spark, bands, table: str) -> DataFrame:
     """The cluster composition over ANY (doc_id, band, bv) relation —
     split-routed Hamming pairs (zero clique star-reduced) feeding the
-    shared connected-components core over all documents as nodes.
-    Shared by the image and audio cluster forms (the audio fingerprint
-    has the same band shape AND the same zero hot group: silent clips)."""
-    from .dedup_cluster import dedup_clusters_df
-    from .staging import staged_views
+    shared connected-components core.  Shared by the image and both
+    audio cluster forms (the audio fingerprints have the same band shape
+    AND the same zero hot group: silent clips)."""
+    return _clusters_from_pairs(
+        spark, _staged_pairs(spark, bands, _dhash_edges_sql), table
+    )
 
-    with staged_views(spark, bands=bands) as v:
-        edges = spark.sql(f"""
-WITH {_dhash_split_ctes(X.SPARK, v.bands).strip()},
+
+def _dhash_edges_sql(d: str, bands: str) -> str:
+    """CTE-list + final SELECT (no leading WITH): the cluster edges of a
+    band relation — the split pairs with the zero group's clique
+    replaced by its ``z_star``."""
+    return f"""
+{_dhash_split_ctes(d, bands).strip()},
 zroot AS (SELECT hsum, MIN(doc_id) AS doc_a FROM zd GROUP BY hsum),
 z_star AS (
   SELECT r.doc_a, z.doc_id AS doc_b
@@ -2291,54 +2248,22 @@ z_star AS (
 SELECT doc_a, doc_b FROM ham WHERE hamming <= {DHASH_MAX_HAMMING}
 UNION ALL SELECT doc_a, doc_b FROM z_star
 UNION ALL SELECT doc_a, doc_b FROM cross_pairs
-""")
-        # the components core iterates over the edges — materialize them
-        # once (staged_views' localCheckpoint discipline) so each CC step
-        # does not re-run the decode stage
-        with staged_views(spark, edges=edges) as ev:
-            return dedup_clusters_df(
-                spark.table(ev.edges), spark.table(table).select("doc_id")
-            )
+"""
 
 
 def audio_dup_clusters_df(spark, table: str = "documents") -> DataFrame:
-    """The CLUSTER form of audio near-dup — the shared cluster
-    composition over the waveform fingerprint's bands (silent clips are
-    the zero group the star reduction absorbs)."""
-    media = documents_as_audio(spark.table(table))
-    bands = (
-        extract_audio_fp(media)
-        .filter(F.col("decode_ok"))
-        .select(F.col("media_id").alias("doc_id"), "band", "bv")
+    """The CLUSTER form of audio near-dup over the waveform fingerprint
+    (silent clips are the zero group the star reduction absorbs)."""
+    return dup_clusters_from_bands(
+        spark,
+        decoded_bands(documents_as_audio(spark.table(table)), extract_audio_fp),
+        table,
     )
-    return dup_clusters_from_bands(spark, bands, table)
 
 
 def audio_dup_clusters_sql(d: str, table: str = "documents") -> str:
-    """Oracle form: the image cluster oracle's recursive min-label body
-    over the audio grid."""
-    return f"""
-WITH RECURSIVE {audio_fp_grid_sql(d, table).strip()},
-{_dhash_cand_ham_ctes(d, "bands").strip()},
-pairs AS (
-  SELECT doc_a, doc_b FROM ham WHERE hamming <= {DHASH_MAX_HAMMING}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM {table}
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       doc_id = cluster_id AS is_canonical
-FROM comp
-"""
+    """Oracle form: the recursive min-label body over the audio grid."""
+    return _band_clusters_sql(d, audio_fp_grid_sql(d, table), "bands", table)
 
 
 def audio_dup_clusters_spectral_df(spark, table: str = "documents") -> DataFrame:
@@ -2348,66 +2273,42 @@ def audio_dup_clusters_spectral_df(spark, table: str = "documents") -> DataFrame
     output growth on the replica-dense fixture (wall sub-linear in
     work), so a corpus audit should read clusters, not pairs — the same
     pairs-vs-clusters trade every other modality documents."""
-    media = documents_as_audio(spark.table(table))
-    bands = (
-        extract_audio_spectral(media)
-        .filter(F.col("decode_ok"))
-        .select(F.col("media_id").alias("doc_id"), "band", "bv")
+    return dup_clusters_from_bands(
+        spark,
+        decoded_bands(documents_as_audio(spark.table(table)), extract_audio_spectral),
+        table,
     )
-    return dup_clusters_from_bands(spark, bands, table)
 
 
 def audio_dup_clusters_spectral_sql(d: str, table: str = "documents") -> str:
     """Oracle form: the recursive min-label body over the spectral grid."""
-    return f"""
-WITH RECURSIVE {audio_spectral_grid_sql(d, table).strip()},
-{_dhash_cand_ham_ctes(d, "sbands").strip()},
-pairs AS (
-  SELECT doc_a, doc_b FROM ham WHERE hamming <= {DHASH_MAX_HAMMING}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM {table}
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       doc_id = cluster_id AS is_canonical
-FROM comp
-"""
+    return _band_clusters_sql(
+        d, audio_spectral_grid_sql(d, table), "sbands", table
+    )
 
 
 def image_dup_clusters_sql(d: str, table: str = "documents") -> str:
     """Oracle form: the fixture-grid dHash pairs + the same recursive
     min-label component CTE the text dedup_clusters oracle uses."""
-    return f"""
-WITH RECURSIVE {dhash_grid_sql(d, table).strip()},
-{_dhash_cand_ham_ctes(d, "bands").strip()},
+    return _band_clusters_sql(d, dhash_grid_sql(d, table), "bands", table)
+
+
+def _band_clusters_sql(d: str, grid_ctes: str, rel: str, table: str) -> str:
+    """Cluster oracle of a 4 x 16-bit band family: the text-recomputed
+    ``grid_ctes`` exposing ``rel``, the candidate + verify core, and the
+    shared component tail.  The ORACLE keeps the unsplit candidate join;
+    the engine's split/star form must match it."""
+    from .dedup_cluster import component_oracle_sql
+
+    return component_oracle_sql(
+        f"""{grid_ctes.strip()},
+{_dhash_cand_ham_ctes(d, rel).strip()},
 pairs AS (
   SELECT doc_a, doc_b FROM ham WHERE hamming <= {DHASH_MAX_HAMMING}
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM pairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM {table}
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       doc_id = cluster_id AS is_canonical
-FROM comp
-"""
+)""",
+        "pairs",
+        table,
+    )
 
 
 def decode_features(payload: bytes, mime: str | None = None) -> list[float]:
@@ -2478,7 +2379,7 @@ def _decode_stub(payload: bytes) -> list[float]:
     return [v / n for v in acc]
 
 
-def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over the payload column.
 
     Column pruning: only (media_id, payload, meta.mime) cross the Arrow
@@ -2729,114 +2630,34 @@ def decode_video_fp(
     return out
 
 
-def documents_as_videos(docs: DataFrame) -> DataFrame:
-    """Fixture adapter for the video family: each document becomes a REAL
-    MJPEG AVI of VIDEO_FRAMES frames, frame f's grid drawn from the text
-    at offset f*VIDEO_FRAME_STRIDE (the overlapping-slice 'slow pan'),
-    each frame the exact-round-trip block-constant JPEG.  One Arrow
-    mapInPandas pass; NULL-text docs excluded (no clip on either side,
-    the image fixture's contract)."""
-    cols = _spread_for_decode(
-        docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads = [], []
-            for did, text in zip(b["doc_id"], b["text"]):
-                frames = [
-                    encode_jpeg_gray_blocks(
-                        _fixture_grid_at(text, f * VIDEO_FRAME_STRIDE)
-                    )
-                    for f in range(VIDEO_FRAMES)
-                ]
-                ids.append(int(did))
-                payloads.append(
-                    encode_avi_mjpeg(
-                        frames, DHASH_GRID_W * 8, DHASH_GRID_H * 8
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "payload": payloads,
-                }
-            )
-
-    flat = cols.mapInPandas(kernel, "media_id long, payload binary")
-    return _mark_spread(flat.select(
-        "media_id",
-        "payload",
-        F.struct(
-            F.lit("video/x-msvideo").alias("mime"),
-            F.lit(DHASH_GRID_W * 8).cast("int").alias("width"),
-            F.lit(DHASH_GRID_H * 8).cast("int").alias("height"),
-            F.lit(VIDEO_FRAMES).cast("long").alias("n_frames"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    ))
-
-
-VDHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.IntegerType()),
-        T.StructField("band", T.IntegerType()),
-        T.StructField("bv", T.LongType()),
-        T.StructField("content", T.BooleanType()),
-        T.StructField("decode_ok", T.BooleanType()),
+def _encode_fixture_video(text: str) -> bytes:
+    """One document -> its REAL MJPEG AVI: VIDEO_FRAMES frames, frame f's
+    grid drawn from the text at offset f*VIDEO_FRAME_STRIDE (the
+    overlapping-slice 'slow pan'), each frame the exact-round-trip
+    block-constant JPEG."""
+    frames = [
+        encode_jpeg_gray_blocks(_fixture_grid_at(text, f * VIDEO_FRAME_STRIDE))
+        for f in range(VIDEO_FRAMES)
     ]
-)
+    return encode_avi_mjpeg(frames, DHASH_GRID_W * 8, DHASH_GRID_H * 8)
 
 
-def extract_video_fp(
-    media: DataFrame, every_n: int = 1, batch_hint: int = 1024
-) -> DataFrame:
-    """(media_id, payload, meta.mime) -> DHASH_BANDS rows per SAMPLED
-    frame (media_id, frame_idx, band, bv, content, decode_ok) — the
-    extract_dhash kernel shape with the frame axis added; undecodable
-    payloads emit one zero-frame's worth of flagged rows so corpus
-    accounting stays row-exact."""
-    cols = _spread_for_decode(
-        media.select("media_id", "payload", F.col("meta.mime").alias("mime")),
-        parent=media,
+def documents_as_videos(docs: DataFrame) -> DataFrame:
+    """Fixture adapter for the video family (``_encode_fixture_video``)."""
+    return _documents_as_payloads(
+        docs,
+        lambda _i, t: _encode_fixture_video(t),
+        F.lit("video/x-msvideo").alias("mime"),
+        F.lit(DHASH_GRID_W * 8).cast("int").alias("width"),
+        F.lit(DHASH_GRID_H * 8).cast("int").alias("height"),
+        F.lit(VIDEO_FRAMES).cast("long").alias("n_frames"),
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, fidx, bandix, bvs, cts, oks = [], [], [], [], [], []
-            for mid, payload, mime in zip(
-                b["media_id"], b["payload"], b["mime"]
-            ):
-                try:
-                    fps = decode_video_fp(
-                        bytes(payload) if payload is not None else b"",
-                        mime,
-                        every_n,
-                    )
-                    ok = True
-                except Exception:  # noqa: BLE001 - flagged, not fatal
-                    fps, ok = [(0, [0] * DHASH_BANDS, False)], False
-                for idx, bands, content in fps:
-                    for j, bv in enumerate(bands):
-                        ids.append(int(mid))
-                        fidx.append(int(idx))
-                        bandix.append(j)
-                        bvs.append(int(bv))
-                        cts.append(bool(content))
-                        oks.append(ok)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(fidx, dtype="int32"),
-                    "band": pd.Series(bandix, dtype="int32"),
-                    "bv": pd.Series(bvs, dtype="int64"),
-                    "content": pd.Series(cts, dtype="bool"),
-                    "decode_ok": pd.Series(oks, dtype="bool"),
-                }
-            )
 
-    return cols.mapInPandas(kernel, VDHASH_SCHEMA)
+def extract_video_fp(media: DataFrame) -> DataFrame:
+    """DHASH_BANDS rows per frame (``_extract_bands`` over
+    ``decode_video_fp``, every frame sampled)."""
+    return _extract_bands(media, decode_video_fp)
 
 
 def video_fp_grid_sql(d: str, table: str = "documents") -> str:
@@ -2984,26 +2805,14 @@ ORDER BY doc_a, doc_b
 
 
 def video_near_dup_df(spark, table: str = "documents") -> DataFrame:
-    """Engine side of video_near_dup: documents -> REAL MJPEG AVIs ->
-    RIFF walk + per-frame JPEG decode + per-frame dHash through the Arrow
-    mapInPandas stage -> staged content-frame bands -> the per-frame
-    banded pairs fragment.  Staged once (the image family's discipline):
-    the fragment references the bands relation four times and Spark's CTE
-    inlining must not re-run the decode per reference."""
-    from .staging import staged_views
+    """Engine side of video_near_dup: REAL MJPEG AVIs -> RIFF walk +
+    per-frame JPEG decode + per-frame dHash -> content-frame bands -> the
+    per-frame banded pairs fragment."""
+    return _staged_pairs(spark, _video_bands(spark, table), video_pairs_sql)
 
-    media = documents_as_videos(spark.table(table))
-    vb = (
-        extract_video_fp(media)
-        .filter(F.col("decode_ok") & F.col("content"))
-        .select(
-            F.col("media_id").alias("doc_id"), "frame_idx", "band", "bv"
-        )
-    )
-    with staged_views(spark, vbands=vb) as v:
-        return spark.sql(
-            "WITH " + video_pairs_sql(X.SPARK, v.vbands).lstrip()
-        )
+
+def _video_bands(spark, table: str) -> DataFrame:
+    return decoded_bands(documents_as_videos(spark.table(table)), extract_video_fp)
 
 
 def video_near_dup_sql(d: str, table: str = "documents") -> str:
@@ -3018,59 +2827,31 @@ def video_near_dup_sql(d: str, table: str = "documents") -> str:
 def video_dup_clusters_df(spark, table: str = "documents") -> DataFrame:
     """The CLUSTER form of video near-dup — one row per document with its
     component id (linear output regardless of duplicate density, the
-    image family's pairs-vs-clusters trade): aligned-frame match pairs
-    feed the shared connected-components core over ALL documents as nodes
-    (clips with no content frames — every frame hash-zero — are
-    singletons by the uninformative-frame rule, so no zero-group star is
-    needed here; the exclusion happens before the join)."""
-    from .dedup_cluster import dedup_clusters_df
-    from .staging import staged_views
-
-    media = documents_as_videos(spark.table(table))
-    vb = (
-        extract_video_fp(media)
-        .filter(F.col("decode_ok") & F.col("content"))
-        .select(
-            F.col("media_id").alias("doc_id"), "frame_idx", "band", "bv"
-        )
+    image family's pairs-vs-clusters trade).  Clips with no content
+    frames — every frame hash-zero — are singletons by the
+    uninformative-frame rule, so no zero-group star is needed here; the
+    exclusion happens before the join."""
+    return _clusters_from_pairs(
+        spark,
+        _staged_pairs(spark, _video_bands(spark, table), video_pairs_sql),
+        table,
     )
-    with staged_views(spark, vbands=vb) as v:
-        pairs = spark.sql(
-            "WITH " + video_pairs_sql(X.SPARK, v.vbands).lstrip()
-        ).select("doc_a", "doc_b")
-        # the components core iterates over the edges — materialize once
-        # so each CC step does not re-run the decode stage
-        with staged_views(spark, edges=pairs) as ev:
-            return dedup_clusters_df(
-                spark.table(ev.edges), spark.table(table).select("doc_id")
-            )
 
 
 def video_dup_clusters_sql(d: str, table: str = "documents") -> str:
     """Oracle form: the per-frame fingerprint + match CTEs + the same
     recursive min-label component CTE the image cluster oracle uses."""
-    return f"""
-WITH RECURSIVE {video_fp_grid_sql(d, table).strip()},
+    from .dedup_cluster import component_oracle_sql
+
+    return component_oracle_sql(
+        f"""{video_fp_grid_sql(d, table).strip()},
 {_video_match_ctes(d, "vbands").strip()},
 vpairs AS (
   SELECT doc_a, doc_b FROM vmatched WHERE matched_frames >= thr
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM vpairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM vpairs
-),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM {table}
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       doc_id = cluster_id AS is_canonical
-FROM comp
-"""
+)""",
+        "vpairs",
+        table,
+    )
 
 
 def decode_video_features(payload: bytes) -> list[float]:
@@ -3221,20 +3002,9 @@ def video_pairs_shifted_sql(d: str, vb: str) -> str:
 def video_near_dup_shifted_df(spark, table: str = "documents") -> DataFrame:
     """Engine side of video_near_dup_shifted: the same decode + per-frame
     banding stage, the shift-tolerant pairs fragment."""
-    from .staging import staged_views
-
-    media = documents_as_videos(spark.table(table))
-    vb = (
-        extract_video_fp(media)
-        .filter(F.col("decode_ok") & F.col("content"))
-        .select(
-            F.col("media_id").alias("doc_id"), "frame_idx", "band", "bv"
-        )
+    return _staged_pairs(
+        spark, _video_bands(spark, table), video_pairs_shifted_sql
     )
-    with staged_views(spark, vbands=vb) as v:
-        return spark.sql(
-            "WITH " + video_pairs_shifted_sql(X.SPARK, v.vbands).lstrip()
-        )
 
 
 def video_near_dup_shifted_sql(d: str, table: str = "documents") -> str:
@@ -3251,64 +3021,48 @@ def video_dup_clusters_shifted_df(spark, table: str = "documents") -> DataFrame:
     linear-output escape the round-11 verdict named): a corpus-scale
     trimmed-intro audit previously had only the quadratic-output pair
     forms (``video_near_dup_shifted{,_indexed}``, soaked output-bound at
-    49x on the dup-dense fixture); here the shifted match pairs feed the
-    shared connected-components core, so the output stays one row per
-    document regardless of duplicate density.  Same edge semantics as
-    the pair form: a pair is an edge iff its best-delta aligned match
-    count passes least(2, min content frames)."""
-    from .dedup_cluster import dedup_clusters_df
-    from .staging import staged_views
-
-    media = documents_as_videos(spark.table(table))
-    vb = (
-        extract_video_fp(media)
-        .filter(F.col("decode_ok") & F.col("content"))
-        .select(
-            F.col("media_id").alias("doc_id"), "frame_idx", "band", "bv"
-        )
+    49x on the dup-dense fixture).  Same edge semantics as the pair
+    form: a pair is an edge iff its best-delta aligned match count
+    passes least(2, min content frames)."""
+    return _clusters_from_pairs(
+        spark,
+        _staged_pairs(
+            spark, _video_bands(spark, table), video_pairs_shifted_sql
+        ),
+        table,
     )
-    with staged_views(spark, vbands=vb) as v:
-        pairs = spark.sql(
-            "WITH "
-            + shifted_pairs_sql(X.SPARK, v.vbands, VIDEO_MAX_SHIFT).lstrip()
-        ).select("doc_a", "doc_b")
-        # the components core iterates over the edges — materialize once
-        # so each CC step does not re-run the decode stage
-        with staged_views(spark, edges=pairs) as ev:
-            return dedup_clusters_df(
-                spark.table(ev.edges), spark.table(table).select("doc_id")
-            )
 
 
 def video_dup_clusters_shifted_sql(d: str, table: str = "documents") -> str:
     """Oracle form: the per-frame grid + the shared shifted match CTEs +
     the recursive min-label component CTE."""
-    return f"""
-WITH RECURSIVE {video_fp_grid_sql(d, table).strip()},
-{_shifted_match_ctes(d, "vbands", VIDEO_MAX_SHIFT).strip()},
+    return _shifted_clusters_sql(
+        d, video_fp_grid_sql(d, table), "vbands", VIDEO_MAX_SHIFT, table
+    )
+
+
+def _shifted_clusters_sql(
+    d: str, grid_ctes: str, rel: str, max_shift: int, table: str
+) -> str:
+    """Cluster oracle of a shift-tolerant family: the text-recomputed
+    ``grid_ctes`` exposing ``rel``, the shifted match core, the
+    least(2, min content frames) edge rule and the shared component
+    tail."""
+    from .dedup_cluster import component_oracle_sql
+
+    return component_oracle_sql(
+        f"""{grid_ctes.strip()},
+{_shifted_match_ctes(d, rel, max_shift).strip()},
 spairs AS (
   SELECT m.doc_a, m.doc_b
   FROM sbest m
   JOIN snc na ON na.doc_id = m.doc_a
   JOIN snc nb ON nb.doc_id = m.doc_b
   WHERE m.matched_frames >= least(2, least(na.n, nb.n))
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM spairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM spairs
-),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM {table}
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       doc_id = cluster_id AS is_canonical
-FROM comp
-"""
+)""",
+        "spairs",
+        table,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3371,18 +3125,11 @@ def decode_audio_windowed(
     payload: bytes, mime: str | None = None
 ) -> list[tuple[int, list[int], bool]]:
     """Typed dispatch to per-window fingerprints — the decode_video_fp
-    return shape [(win_idx, bands, content)] so the video kernel/verb
-    surface consumes it unchanged; content = any band bit set (hash-zero
-    windows are uninformative and double as the hot-bucket exclusion)."""
-    audio_ok = mime is None or mime.startswith("audio/")
-    if not (
-        audio_ok
-        and len(payload) >= 12
-        and payload[:4] == b"RIFF"
-        and payload[8:12] == b"WAVE"
-    ):
-        raise ValueError("not a wav payload")
-    wins = audio_windowed_bands_from_samples(_wav_samples(payload))
+    return shape [(win_idx, bands, content)], so the band kernel and the
+    video verbs consume it unchanged; content = any band bit set
+    (hash-zero windows are uninformative and double as the hot-bucket
+    exclusion)."""
+    wins = audio_windowed_bands_from_samples(_gated_wav_samples(payload, mime))
     if not wins:
         raise ValueError("clip shorter than one fingerprint window")
     return [(w, bands, any(bands)) for w, bands in wins]
@@ -3393,84 +3140,23 @@ def documents_as_audio_windowed(docs: DataFrame) -> DataFrame:
     first AFW_CODES printable-ASCII codes synthesize a REAL mono PCM16
     WAV (the documents_as_audio writer with a longer slice — long enough
     for AFW_WINDOWS overlapping windows, so trim/shift behavior is
-    exercisable).  NULL-text docs excluded, the fixture contract."""
-    cols = _spread_for_decode(
-        docs.filter(F.col("text").isNotNull()).select("doc_id", "text")
+    exercisable)."""
+    return _documents_as_payloads(
+        docs,
+        lambda _i, t: encode_wav_codes(_audio_codes(t, AFW_CODES)),
+        F.lit("audio/wav").alias("mime"),
+        F.lit(AFP_RATE).cast("int").alias("sample_rate"),
+        F.lit(AFW_CODES * AFP_SAMPLES_PER_CODE)
+        .cast("long")
+        .alias("n_frames"),
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, payloads = [], []
-            for did, text in zip(b["doc_id"], b["text"]):
-                ids.append(int(did))
-                payloads.append(
-                    encode_wav_codes(_audio_codes(text, AFW_CODES))
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "payload": payloads,
-                }
-            )
 
-    flat = cols.mapInPandas(kernel, "media_id long, payload binary")
-    return _mark_spread(flat.select(
-        "media_id",
-        "payload",
-        F.struct(
-            F.lit("audio/wav").alias("mime"),
-            F.lit(AFP_RATE).cast("int").alias("sample_rate"),
-            F.lit(AFW_CODES * AFP_SAMPLES_PER_CODE)
-            .cast("long")
-            .alias("n_frames"),
-            F.octet_length("payload").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    ))
-
-
-def extract_audio_windowed(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
-    """(media_id, payload, meta.mime) -> DHASH_BANDS rows per WINDOW
-    (media_id, frame_idx, band, bv, content, decode_ok) — the
-    extract_video_fp kernel shape on the windowed-audio dispatch, so the
-    video index fold, gate and pair fragments consume it verbatim."""
-    cols = _spread_for_decode(
-        media.select("media_id", "payload", F.col("meta.mime").alias("mime")),
-        parent=media,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, fidx, bandix, bvs, cts, oks = [], [], [], [], [], []
-            for mid, payload, mime in zip(
-                b["media_id"], b["payload"], b["mime"]
-            ):
-                try:
-                    fps = decode_audio_windowed(
-                        bytes(payload) if payload is not None else b"", mime
-                    )
-                    ok = True
-                except Exception:  # noqa: BLE001 - flagged, not fatal
-                    fps, ok = [(0, [0] * DHASH_BANDS, False)], False
-                for idx, bands, content in fps:
-                    for j, bv in enumerate(bands):
-                        ids.append(int(mid))
-                        fidx.append(int(idx))
-                        bandix.append(j)
-                        bvs.append(int(bv))
-                        cts.append(bool(content))
-                        oks.append(ok)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(fidx, dtype="int32"),
-                    "band": pd.Series(bandix, dtype="int32"),
-                    "bv": pd.Series(bvs, dtype="int64"),
-                    "content": pd.Series(cts, dtype="bool"),
-                    "decode_ok": pd.Series(oks, dtype="bool"),
-                }
-            )
-
-    return cols.mapInPandas(kernel, VDHASH_SCHEMA)
+def extract_audio_windowed(media: DataFrame) -> DataFrame:
+    """DHASH_BANDS rows per WINDOW (``_extract_bands`` over
+    ``decode_audio_windowed``) — the video row shape, so the video index
+    fold, gate and pair fragments consume it verbatim."""
+    return _extract_bands(media, decode_audio_windowed)
 
 
 def audio_windowed_grid_sql(d: str, table: str = "documents") -> str:
@@ -3540,25 +3226,22 @@ awbands AS (
 
 
 def audio_near_dup_shifted_df(spark, table: str = "documents") -> DataFrame:
-    """Engine side of audio_near_dup_shifted: documents -> REAL WAVs ->
-    per-window fingerprints through the Arrow stage -> staged content
-    windows -> the shared shift-tolerant pairs fragment at
+    """Engine side of audio_near_dup_shifted: per-window fingerprints ->
+    content windows -> the shared shift-tolerant pairs fragment at
     AUDIO_MAX_SHIFT."""
-    from .staging import staged_views
-
-    media = documents_as_audio_windowed(spark.table(table))
-    ab = (
-        extract_audio_windowed(media)
-        .filter(F.col("decode_ok") & F.col("content"))
-        .select(
-            F.col("media_id").alias("doc_id"), "frame_idx", "band", "bv"
-        )
+    return _staged_pairs(
+        spark, _windowed_bands(spark, table), _audio_shifted_pairs_sql
     )
-    with staged_views(spark, awbands=ab) as v:
-        return spark.sql(
-            "WITH "
-            + shifted_pairs_sql(X.SPARK, v.awbands, AUDIO_MAX_SHIFT).lstrip()
-        )
+
+
+def _windowed_bands(spark, table: str) -> DataFrame:
+    return decoded_bands(
+        documents_as_audio_windowed(spark.table(table)), extract_audio_windowed
+    )
+
+
+def _audio_shifted_pairs_sql(d: str, vb: str) -> str:
+    return shifted_pairs_sql(d, vb, AUDIO_MAX_SHIFT)
 
 
 def audio_near_dup_shifted_sql(d: str, table: str = "documents") -> str:
@@ -3573,63 +3256,21 @@ def audio_near_dup_shifted_sql(d: str, table: str = "documents") -> str:
 def audio_dup_clusters_shifted_df(spark, table: str = "documents") -> DataFrame:
     """The CLUSTER form of SHIFT-TOLERANT audio near-dup (round 12 —
     the video_dup_clusters_shifted escape applied to the windowed audio
-    family, completing the symmetry): a corpus-scale trimmed-clip audit
-    over audio otherwise has only the quadratic-output shifted pair
-    form; here the best-delta match pairs feed the shared
+    family): the best-delta window match pairs feed the shared
     connected-components core, so output stays one row per clip
-    regardless of duplicate density.  Same edge semantics as the pair
-    form: a pair is an edge iff its best-delta aligned window match
-    count passes least(2, min content windows)."""
-    from .dedup_cluster import dedup_clusters_df
-    from .staging import staged_views
-
-    media = documents_as_audio_windowed(spark.table(table))
-    ab = (
-        extract_audio_windowed(media)
-        .filter(F.col("decode_ok") & F.col("content"))
-        .select(
-            F.col("media_id").alias("doc_id"), "frame_idx", "band", "bv"
-        )
+    regardless of duplicate density."""
+    return _clusters_from_pairs(
+        spark,
+        _staged_pairs(
+            spark, _windowed_bands(spark, table), _audio_shifted_pairs_sql
+        ),
+        table,
     )
-    with staged_views(spark, awbands=ab) as v:
-        pairs = spark.sql(
-            "WITH "
-            + shifted_pairs_sql(X.SPARK, v.awbands, AUDIO_MAX_SHIFT).lstrip()
-        ).select("doc_a", "doc_b")
-        # the components core iterates over the edges — materialize once
-        # so each CC step does not re-run the decode stage
-        with staged_views(spark, edges=pairs) as ev:
-            return dedup_clusters_df(
-                spark.table(ev.edges), spark.table(table).select("doc_id")
-            )
 
 
 def audio_dup_clusters_shifted_sql(d: str, table: str = "documents") -> str:
     """Oracle form: the per-window grid + the shared shifted match CTEs +
     the recursive min-label component CTE."""
-    return f"""
-WITH RECURSIVE {audio_windowed_grid_sql(d, table).strip()},
-{_shifted_match_ctes(d, "awbands", AUDIO_MAX_SHIFT).strip()},
-spairs AS (
-  SELECT m.doc_a, m.doc_b
-  FROM sbest m
-  JOIN snc na ON na.doc_id = m.doc_a
-  JOIN snc nb ON nb.doc_id = m.doc_b
-  WHERE m.matched_frames >= least(2, least(na.n, nb.n))
-),
-edges AS (
-  SELECT doc_a AS src, doc_b AS dst FROM spairs
-  UNION ALL
-  SELECT doc_b, doc_a FROM spairs
-),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM {table}
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, MIN(lbl) AS cluster_id FROM reach GROUP BY node)
-SELECT doc_id, cluster_id,
-       COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size,
-       doc_id = cluster_id AS is_canonical
-FROM comp
-"""
+    return _shifted_clusters_sql(
+        d, audio_windowed_grid_sql(d, table), "awbands", AUDIO_MAX_SHIFT, table
+    )

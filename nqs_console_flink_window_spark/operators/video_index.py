@@ -31,27 +31,29 @@ from .image_index import (
     build_image_index,
     image_index_ingest_batch,
 )
-from .multimodal import DHASH_BANDS, DHASH_MAX_HAMMING, extract_video_fp
+from .multimodal import (
+    DHASH_BANDS,
+    DHASH_MAX_HAMMING,
+    decoded_bands,
+    extract_video_fp,
+)
 
 
 def video_bands(media: DataFrame) -> DataFrame:
     """(doc_id, band, bv, bband) for a batch of video clips — the
-    decode+hash pass (one Arrow stage), content frames only, the frame
-    axis folded into the band key (band = frame_idx * DHASH_BANDS +
-    band).  Undecodable payloads and hash-zero frames are excluded: both
-    would land meaningless rows in the bv=0 bucket."""
-    return (
-        extract_video_fp(media)
-        .filter(F.col("decode_ok") & F.col("content"))
-        .select(
-            F.col("media_id").alias("doc_id"),
-            (
-                F.col("frame_idx") * DHASH_BANDS + F.col("band")
-            ).cast("int").alias("band"),
-            "bv",
-        )
-        .withColumn("bband", _bband_col())
-    )
+    decode+hash pass (one Arrow stage, ``decoded_bands``: content frames
+    only), the frame axis folded into the band key."""
+    return fold_frames(decoded_bands(media, extract_video_fp))
+
+
+def fold_frames(rows: DataFrame) -> DataFrame:
+    """(doc_id, frame_idx, band, bv) -> the index rows (doc_id, band =
+    frame_idx * DHASH_BANDS + band, bv, bband)."""
+    return rows.select(
+        "doc_id",
+        (F.col("frame_idx") * DHASH_BANDS + F.col("band")).cast("int").alias("band"),
+        "bv",
+    ).withColumn("bband", _bband_col())
 
 
 def build_video_index(spark, media: DataFrame, path: str) -> None:

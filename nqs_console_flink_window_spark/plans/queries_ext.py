@@ -12,12 +12,14 @@ from pyspark.sql import functions as F
 from ..functions import dialect as X
 from ..operators import dedup_cluster as DC
 from ..operators import dedup_text as DD
+from ..operators import multimodal as MM
 from ..operators import packing as PK
 from ..operators import sampling as SMP
 from ..operators import similarity as SIM
 from ..operators import text as TX
 from . import oracles_py as ORC
 from ..sources.batch import load_table, register_temp_views
+from .index_cache import cached_index
 from .registry import register
 
 # --------------------------------------------------------------------------
@@ -551,8 +553,6 @@ from ..operators.multimodal import image_near_dup_sql as _ind_sql  # noqa: E402
     tier=2,
 )
 def image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.image_near_dup_df(spark)
 
@@ -579,8 +579,6 @@ from ..operators.multimodal import audio_near_dup_sql as _and_sql  # noqa: E402
     tier=2,
 )
 def audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.audio_near_dup_df(spark)
 
@@ -615,8 +613,6 @@ from ..operators.multimodal import (  # noqa: E402
     "through bm25_indexed + hybrid_dense_sparse_indexed)",
 )
 def audio_near_dup_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.audio_near_dup_spectral_df(spark)
 
@@ -642,8 +638,6 @@ from ..operators.multimodal import (  # noqa: E402
     tier=2,
 )
 def audio_dup_clusters_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.audio_dup_clusters_spectral_df(spark)
 
@@ -667,8 +661,6 @@ from ..operators.multimodal import audio_dup_clusters_sql as _adc_sql  # noqa: E
     "factored dup_clusters_from_bands core directly",
 )
 def audio_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.audio_dup_clusters_df(spark)
 
@@ -698,8 +690,6 @@ from ..operators.multimodal import video_near_dup_sql as _vnd_sql  # noqa: E402
     headline=True,  # the media-decode chain's perf row: 3 JPEG decodes/doc
 )
 def video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.video_near_dup_df(spark)
 
@@ -723,37 +713,25 @@ from ..operators.multimodal import video_dup_clusters_sql as _vdc_sql  # noqa: E
     tier=2,
 )
 def video_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.video_dup_clusters_df(spark)
 
 
-_VIDEO_INDEX_CACHE: dict[str, str] = {}
-
-
 def _ensure_video_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process per corpus dir) the persisted
-    frame-augmented band index over the documents-as-videos fixture —
-    the ``_ensure_image_index`` discipline applied to the video family."""
-    path = _VIDEO_INDEX_CACHE.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
+    """The persisted frame-augmented band index over the
+    documents-as-videos fixture (``index_cache``)."""
+    return cached_index(
+        "video",
+        sf_dir,
+        lambda path: VI.build_video_index(
+            spark, MM.documents_as_videos(_documents(spark, sf_dir)), path
+        ),
+    )
 
-        from ..operators import multimodal as MM
-        from ..operators import video_index as VIX
 
-        base = tempfile.mkdtemp(prefix="nqs_video_index_std_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        path = base + "/index"
-        register_temp_views(spark, sf_dir, ("documents",))
-        VIX.build_video_index(
-            spark, MM.documents_as_videos(spark.table("documents")), path
-        )
-        _VIDEO_INDEX_CACHE[sf_dir] = path
-    return path
+def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    register_temp_views(spark, sf_dir, ("documents",))
+    return spark.table("documents")
 
 
 @register(
@@ -808,8 +786,6 @@ from ..operators.multimodal import (  # noqa: E402
     tier=2,
 )
 def video_near_dup_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.video_near_dup_shifted_df(spark)
 
@@ -860,36 +836,20 @@ from ..operators.multimodal import (  # noqa: E402
     tier=2,
 )
 def video_dup_clusters_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.video_dup_clusters_shifted_df(spark)
 
 
-_IMAGE_INDEX_CACHE: dict[str, str] = {}
-
-
 def _ensure_image_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process per corpus dir) the persisted dHash band
-    index over the documents-as-images fixture — the ``_ensure_text_index``
-    discipline applied to the image family."""
-    path = _IMAGE_INDEX_CACHE.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        from ..operators import multimodal as MM
-
-        base = tempfile.mkdtemp(prefix="nqs_image_index_std_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        path = base + "/index"
-        register_temp_views(spark, sf_dir, ("documents",))
-        II.build_image_index(
-            spark, MM.documents_as_images(spark.table("documents")), path
-        )
-        _IMAGE_INDEX_CACHE[sf_dir] = path
-    return path
+    """The persisted dHash band index over the documents-as-images
+    fixture (``index_cache``)."""
+    return cached_index(
+        "image",
+        sf_dir,
+        lambda path: II.build_image_index(
+            spark, MM.documents_as_images(_documents(spark, sf_dir)), path
+        ),
+    )
 
 
 @register(
@@ -908,8 +868,6 @@ def _ensure_image_index(spark: SparkSession, sf_dir: str) -> str:
     tier=2,
 )
 def image_near_dup_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     idx = _ensure_image_index(spark, sf_dir)
     bands = II.read_image_index(spark, idx).select("doc_id", "band", "bv")
     return MM.dhash_pairs_from_bands(spark, bands)
@@ -936,8 +894,6 @@ from ..operators.multimodal import image_dup_clusters_sql as _idc_sql  # noqa: E
     tier=2,
 )
 def image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.image_dup_clusters_df(spark)
 
@@ -961,8 +917,6 @@ FROM {X.positions_from(X.DUCK, "(SELECT doc_id AS media_id, hex(encode(text)) AS
     tier=2,
 )
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     docs = load_table(spark, sf_dir, "documents")
     media = MM.documents_as_media(docs)
     frames = MM.frame_sample(media, every_n_bytes=64)
@@ -1022,27 +976,19 @@ def ann_ivf_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.ivf_multi(corpus, queries, k=COSINE_MULTI_K)
 
 
-_IVF_INDEX_CACHE: dict[str, str] = {}
-
-
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process per corpus dir) the persisted cell-
-    partitioned IVF index for the vec_id >= COSINE_MULTI_Q corpus slice
-    into a fresh temp dir, removed at interpreter exit — the
-    ``_ensure_text_index`` discipline applied to the vector index."""
-    path = _IVF_INDEX_CACHE.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix="nqs_ivf_index_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        path = base + "/index"
-        emb = load_table(spark, sf_dir, "embeddings")
-        SIM.build_ivf_index(emb.filter(F.col("vec_id") >= COSINE_MULTI_Q), path)
-        _IVF_INDEX_CACHE[sf_dir] = path
-    return path
+    """The persisted cell-partitioned IVF index for the vec_id >=
+    COSINE_MULTI_Q corpus slice (``index_cache``)."""
+    return cached_index(
+        "ivf",
+        sf_dir,
+        lambda path: SIM.build_ivf_index(
+            load_table(spark, sf_dir, "embeddings").filter(
+                F.col("vec_id") >= COSINE_MULTI_Q
+            ),
+            path,
+        ),
+    )
 
 
 @register(
@@ -1191,8 +1137,6 @@ LEFT JOIN c ON c.doc_id = d.doc_id AND c.dim = dims.dim
     "pairs and the driver row de-normalizes features to exact bucket counts",
 )
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     docs = load_table(spark, sf_dir, "documents")
     media = MM.documents_as_media(docs)
     feats = MM.extract_features(media)
@@ -1754,6 +1698,46 @@ def incremental_dedup_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..operators import image_index as II  # noqa: E402
 
 
+def _incremental_media_batches(
+    spark: SparkSession, sf_dir: str, documents_as, gate, read_index
+) -> DataFrame:
+    """The two-batch incremental flow every media family registers:
+    the documents split at the id midpoint, each half through the
+    ``documents_as`` fixture; batch 1 passes the ``gate`` alone and its
+    survivors' bands land in a temp bband/batch_id index; batch 2 passes
+    the gate against the index read back from disk (``read_index``) and
+    lands too.  Survivors come back FROM the landed index, so the whole
+    persisted path sits inside the value hash (the web_curate_pipeline
+    rule)."""
+    import shutil
+    import tempfile
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    split = _inc_split_id(docs)
+    media1 = documents_as(docs.filter(F.col("doc_id") < split))
+    media2 = documents_as(docs.filter(F.col("doc_id") >= split))
+    base = tempfile.mkdtemp(prefix="nqs_media_index_")
+    try:
+        idx = f"{base}/index"
+        _kept1, bands1 = gate(spark, media1, None)
+        II._ingest_bands(spark, bands1, 0, idx)
+        _kept2, bands2 = gate(spark, media2, read_index(spark, idx))
+        II._ingest_bands(spark, bands2, 1, idx)
+        out = (
+            read_index(spark, idx)
+            .select(
+                "doc_id", (F.col("batch_id") + 1).cast("int").alias("batch")
+            )
+            .distinct()
+            .orderBy("doc_id")
+        )
+        # localCheckpoint: the temp index is removed on return — the
+        # result must not re-scan it
+        return out.localCheckpoint()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 @register(
     "incremental_image_dedup_batches",
     sql=II.incremental_image_dedup_sql(X.DUCK, _INC_SPLIT_SQL),
@@ -1775,39 +1759,10 @@ from ..operators import image_index as II  # noqa: E402
     tier=2,
 )
 def incremental_image_dedup_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..operators import multimodal as MM
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    split = _inc_split_id(docs)
-    media1 = MM.documents_as_images(docs.filter(F.col("doc_id") < split))
-    media2 = MM.documents_as_images(docs.filter(F.col("doc_id") >= split))
-    base = tempfile.mkdtemp(prefix="nqs_image_index_")
-    try:
-        idx = f"{base}/index"
-        _kept1, bands1 = II.incremental_image_dedup(spark, media1, None)
-        II._ingest_bands(spark, bands1, 0, idx)
-        _kept2, bands2 = II.incremental_image_dedup(
-            spark, media2, II.read_image_index(spark, idx)
-        )
-        II._ingest_bands(spark, bands2, 1, idx)
-        # survivors come back FROM the landed index — the whole persisted
-        # path sits inside the value hash (the web_curate_pipeline rule)
-        out = (
-            II.read_image_index(spark, idx)
-            .select(
-                "doc_id", (F.col("batch_id") + 1).cast("int").alias("batch")
-            )
-            .distinct()
-            .orderBy("doc_id")
-        )
-        # localCheckpoint: the temp index is removed on return — the
-        # result must not re-scan it
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return _incremental_media_batches(
+        spark, sf_dir, MM.documents_as_images,
+        II.incremental_image_dedup, II.read_image_index,
+    )
 
 
 from ..operators import video_index as VI  # noqa: E402
@@ -1834,38 +1789,11 @@ from ..operators import video_index as VI  # noqa: E402
     "through) the image index family",
     tier=2,
 )
-def incremental_video_dedup_batches(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..operators import multimodal as MM
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    split = _inc_split_id(docs)
-    media1 = MM.documents_as_videos(docs.filter(F.col("doc_id") < split))
-    media2 = MM.documents_as_videos(docs.filter(F.col("doc_id") >= split))
-    base = tempfile.mkdtemp(prefix="nqs_video_index_")
-    try:
-        idx = f"{base}/index"
-        _kept1, bands1 = VI.incremental_video_dedup(spark, media1, None)
-        II._ingest_bands(spark, bands1, 0, idx)
-        _kept2, bands2 = VI.incremental_video_dedup(
-            spark, media2, VI.read_video_index(spark, idx)
-        )
-        II._ingest_bands(spark, bands2, 1, idx)
-        out = (
-            VI.read_video_index(spark, idx)
-            .select(
-                "doc_id", (F.col("batch_id") + 1).cast("int").alias("batch")
-            )
-            .distinct()
-            .orderBy("doc_id")
-        )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+def incremental_video_dedup_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _incremental_media_batches(
+        spark, sf_dir, MM.documents_as_videos,
+        VI.incremental_video_dedup, VI.read_video_index,
+    )
 
 
 from ..operators import audio_index as AI  # noqa: E402
@@ -1887,38 +1815,11 @@ from ..operators import audio_index as AI  # noqa: E402
     "(and fuzz-pinned through) the image index family",
     tier=2,
 )
-def incremental_audio_dedup_batches(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..operators import multimodal as MM
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    split = _inc_split_id(docs)
-    media1 = MM.documents_as_audio(docs.filter(F.col("doc_id") < split))
-    media2 = MM.documents_as_audio(docs.filter(F.col("doc_id") >= split))
-    base = tempfile.mkdtemp(prefix="nqs_audio_index_")
-    try:
-        idx = f"{base}/index"
-        _kept1, bands1 = AI.incremental_audio_dedup(spark, media1, None)
-        II._ingest_bands(spark, bands1, 0, idx)
-        _kept2, bands2 = AI.incremental_audio_dedup(
-            spark, media2, AI.read_audio_index(spark, idx)
-        )
-        II._ingest_bands(spark, bands2, 1, idx)
-        out = (
-            AI.read_audio_index(spark, idx)
-            .select(
-                "doc_id", (F.col("batch_id") + 1).cast("int").alias("batch")
-            )
-            .distinct()
-            .orderBy("doc_id")
-        )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+def incremental_audio_dedup_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _incremental_media_batches(
+        spark, sf_dir, MM.documents_as_audio,
+        AI.incremental_audio_dedup, AI.read_audio_index,
+    )
 
 
 @register(
@@ -1941,37 +1842,10 @@ def incremental_audio_dedup_batches(
 def incremental_audio_spectral_dedup_batches(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..operators import multimodal as MM
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    split = _inc_split_id(docs)
-    media1 = MM.documents_as_audio(docs.filter(F.col("doc_id") < split))
-    media2 = MM.documents_as_audio(docs.filter(F.col("doc_id") >= split))
-    base = tempfile.mkdtemp(prefix="nqs_audio_sidx_")
-    try:
-        idx = f"{base}/index"
-        _kept1, bands1 = AI.incremental_audio_spectral_dedup(
-            spark, media1, None
-        )
-        II._ingest_bands(spark, bands1, 0, idx)
-        _kept2, bands2 = AI.incremental_audio_spectral_dedup(
-            spark, media2, AI.read_audio_index(spark, idx)
-        )
-        II._ingest_bands(spark, bands2, 1, idx)
-        out = (
-            AI.read_audio_index(spark, idx)
-            .select(
-                "doc_id", (F.col("batch_id") + 1).cast("int").alias("batch")
-            )
-            .distinct()
-            .orderBy("doc_id")
-        )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return _incremental_media_batches(
+        spark, sf_dir, MM.documents_as_audio,
+        AI.incremental_audio_spectral_dedup, AI.read_audio_index,
+    )
 
 
 from ..operators.multimodal import (  # noqa: E402
@@ -2003,8 +1877,6 @@ from ..operators.multimodal import (  # noqa: E402
     tier=2,
 )
 def audio_near_dup_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.audio_near_dup_shifted_df(spark)
 
@@ -2032,37 +1904,10 @@ def audio_near_dup_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_audio_shifted_dedup_batches(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..operators import multimodal as MM
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    split = _inc_split_id(docs)
-    media1 = MM.documents_as_audio_windowed(docs.filter(F.col("doc_id") < split))
-    media2 = MM.documents_as_audio_windowed(docs.filter(F.col("doc_id") >= split))
-    base = tempfile.mkdtemp(prefix="nqs_audio_widx_")
-    try:
-        idx = f"{base}/index"
-        _kept1, bands1 = AI.incremental_audio_shifted_dedup(
-            spark, media1, None
-        )
-        II._ingest_bands(spark, bands1, 0, idx)
-        _kept2, bands2 = AI.incremental_audio_shifted_dedup(
-            spark, media2, AI.read_audio_index(spark, idx)
-        )
-        II._ingest_bands(spark, bands2, 1, idx)
-        out = (
-            AI.read_audio_index(spark, idx)
-            .select(
-                "doc_id", (F.col("batch_id") + 1).cast("int").alias("batch")
-            )
-            .distinct()
-            .orderBy("doc_id")
-        )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    return _incremental_media_batches(
+        spark, sf_dir, MM.documents_as_audio_windowed,
+        AI.incremental_audio_shifted_dedup, AI.read_audio_index,
+    )
 
 
 from ..operators.multimodal import (  # noqa: E402
@@ -2088,8 +1933,6 @@ from ..operators.multimodal import (  # noqa: E402
     tier=2,
 )
 def audio_dup_clusters_shifted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import multimodal as MM
-
     register_temp_views(spark, sf_dir, ("documents",))
     return MM.audio_dup_clusters_shifted_df(spark)
 
@@ -2868,26 +2711,19 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.ivfpq_topk(emb.filter(F.col("vec_id") != 0), qvec, k=10)
 
 
-_IVFPQ_INDEX_CACHE: dict[str, str] = {}
-
-
 def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process per corpus dir) the persisted codes-only
-    IVF-PQ index for the vec_id != 0 corpus slice — the
-    ``_ensure_ivf_index`` discipline applied to the compressed index."""
-    path = _IVFPQ_INDEX_CACHE.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix="nqs_ivfpq_index_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        path = base + "/index"
-        emb = load_table(spark, sf_dir, "embeddings")
-        SIM.build_ivfpq_index(emb.filter(F.col("vec_id") != 0), path)
-        _IVFPQ_INDEX_CACHE[sf_dir] = path
-    return path
+    """The persisted codes-only IVF-PQ index for the vec_id != 0 corpus
+    slice (``index_cache``)."""
+    return cached_index(
+        "ivfpq",
+        sf_dir,
+        lambda path: SIM.build_ivfpq_index(
+            load_table(spark, sf_dir, "embeddings").filter(
+                F.col("vec_id") != 0
+            ),
+            path,
+        ),
+    )
 
 
 @register(

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions import dialect as X
 from ..operators import retrieval as RT
 from ..sources.batch import load_table, register_temp_views
+from .index_cache import cached_index
 from .registry import register
 
 
@@ -151,34 +152,20 @@ def lm_ppl_terciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Indexed retrieval forms as registry queries: the persisted-index path
 # value-oracled cross-engine, not just pytest-parity-pinned.  The index is
-# built ONCE per process per sf_dir (a real user queries a standing index
-# thousands of times — rebuilding per call would measure the wrong thing),
-# and the oracle is the SAME SQL as the online form because the indexed
-# plans are bit-identical to the online plans by construction.
+# built ONCE per process per sf_dir (``index_cache``), and the oracle is
+# the SAME SQL as the online form because the indexed plans are
+# bit-identical to the online plans by construction.
 # ---------------------------------------------------------------------------
-
-_TEXT_INDEX_CACHE: dict[str, str] = {}
 
 
 def _ensure_text_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process per corpus dir) the persisted inverted
-    index for ``sf_dir``'s documents table into a fresh temp dir — always
-    current-layout, never a stale on-disk artifact from an older build,
-    and never shared with a concurrent process (no overwrite races).  The
-    dir is removed at interpreter exit so repeated gate/bench/soak runs
-    don't accumulate corpus-scale dead indexes on disk."""
-    path = _TEXT_INDEX_CACHE.get(sf_dir)
-    if path is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        base = tempfile.mkdtemp(prefix="nqs_text_index_")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        path = base + "/index"
-        RT.build_text_index(spark, load_table(spark, sf_dir, "documents"), path)
-        _TEXT_INDEX_CACHE[sf_dir] = path
-    return path
+    return cached_index(
+        "text",
+        sf_dir,
+        lambda path: RT.build_text_index(
+            spark, load_table(spark, sf_dir, "documents"), path
+        ),
+    )
 
 
 @register(
