@@ -14,7 +14,7 @@ Scale design (100 TB):
   N's plan does not replay rounds 1..N-1.  Measured at sf0.1 the LSH
   near-dup graph is chain-shaped (diameter ~18), not clique-shaped —
   doubling cuts it to 10 rounds; the ``max_rounds`` cap is a safety valve.
-- The convergence probe is ``limit(1).count()`` on the changed-rows filter —
+- The convergence probe is ``isEmpty()`` on the changed-rows filter —
   an O(1)-output action against the already-checkpointed round result, not a
   collect of data.
 - Spark 4.1's ``WITH RECURSIVE`` cannot express this fixpoint at all: it
@@ -131,14 +131,12 @@ def connected_components(
             else:
                 propagated = _checkpoint_with_real_stats(propagated)
         doubled = propagated
-        changed = (
+        if (
             doubled.alias("n")
             .join(labels.alias("p"), F.col("n.id") == F.col("p.id"))
             .where("n.lbl != p.lbl")
-            .limit(1)
-            .count()
-        )
-        if changed == 0:
+            .isEmpty()
+        ):
             return doubled.select("id", "lbl")
         labels = doubled
     raise RuntimeError(f"connected_components: no fixpoint in {max_rounds} rounds")

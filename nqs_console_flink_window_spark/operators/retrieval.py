@@ -1705,13 +1705,13 @@ def _assert_no_null_text(docs_df, where: str) -> None:
     """Enforce the index contract on an APPEND batch: NULL-text docs would
     land no doclen row, so the append's stats rebuild (N = doclen row
     count) would silently shift N away from build-time's docs-table count
-    — changing every idf.  A limit(1) IsNull probe is batch-scale cheap
+    — changing every idf.  An isEmpty() IsNull probe is batch-scale cheap
     here (appends are micro-batches; parquet sources additionally prune
     via row-group null counts).  The BUILD path enforces the same
     contract for free instead — it compares the docs count it already
     takes against the doclen row count it just wrote (one footer-metadata
     read, no second corpus scan)."""
-    if docs_df.filter("text IS NULL").limit(1).count() > 0:
+    if not docs_df.filter("text IS NULL").isEmpty():
         raise ValueError(
             f"{where}: NULL-text docs are outside the text-index contract "
             "(they produce no tokens and no doclen row, so the append-time "

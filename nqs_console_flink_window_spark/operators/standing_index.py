@@ -283,7 +283,7 @@ def assert_fresh_ids(
     bounded = len(head) <= _FRESH_PROBE_INLIST
     if (
         None in head if bounded
-        else ids.filter(F.isnull("doc_id")).limit(1).count() > 0
+        else not ids.filter(F.isnull("doc_id")).isEmpty()
     ):
         raise _bad_id(where)
     if exclude_batch_id is not None and "batch_id" in existing.columns:

@@ -132,33 +132,29 @@ def compact_partition(
     scheduled instead of implicit.
 
     Safe next to a live streaming writer: the input file list is snapshotted
-    FIRST and the compaction reads exactly that snapshot (``spark.read.parquet``
-    on the explicit file list), compacted files are moved in alongside, and
-    only the snapshotted inputs are deleted — a file appended concurrently is
-    never read, never deleted, and the partition directory never disappears.
-    Crash window: dying between the move-in and the input-delete leaves
-    duplicates (at-least-once), repaired by the next compaction pass or the
-    A5 dedup-on-read — never data loss.
+    before the rewrite and the fold reads exactly that snapshot, so a file appended
+    concurrently is never read, never deleted, and the partition directory
+    never disappears.  Crash-safe: the swap is ``fold_parquet_files``'s
+    manifest protocol, so a pass that dies mid-swap is settled by the next
+    one without duplicating or losing rows.
 
     Returns the number of files after compaction.
     """
     import glob as _glob
-    import uuid as _uuid
 
     part_path = f"{out_dir}/{date_col}={part_value}"
-    inputs = sorted(_glob.glob(f"{part_path}/*.parquet"))
+    # settle a crashed fold BEFORE the snapshot (compact_batch_landings'
+    # rule): its roll-forward deletes files the listing would include
+    _repair_crashed_compaction(Path(part_path))
+    inputs = _glob.glob(f"{part_path}/*.parquet")
     if not inputs:
         return 0
-    df = spark.read.parquet(*inputs)  # snapshot only — concurrent appends unseen
-    tmp_path = f"{part_path}__compact"
-    df.coalesce(target_files).write.mode("overwrite").parquet(tmp_path)
-    stamp = _uuid.uuid4().hex[:8]
-    for i, f in enumerate(sorted(Path(tmp_path).glob("*.parquet"))):
-        f.rename(Path(part_path) / f"compact-{stamp}-{i:05d}.parquet")
-    shutil.rmtree(tmp_path)
-    for f in inputs:
-        Path(f).unlink(missing_ok=True)
-    return len(_glob.glob(f"{part_path}/*.parquet"))
+    # a byte target the fold's ceil(total / target) turns into exactly
+    # target_files output files
+    total_bytes = sum(os.path.getsize(f) for f in inputs)
+    return fold_parquet_files(
+        spark, inputs, part_path, target_bytes=total_bytes / (target_files - 0.5)
+    )
 
 
 COMPACTED_GEN = -1  # reserved batch_id for compacted history
@@ -552,7 +548,7 @@ def delete_rows_partitioned(
             )
         # a no-op delete must be an actual no-op (the idempotent re-run
         # case): probe before rewriting the whole side table
-        if _hits(df).limit(1).count() == 0:
+        if _hits(df).isEmpty():
             return (0, 0)
         keep = _keep(df)
         # snapshot the exact files this rewrite read BEFORE staging: the

@@ -12,6 +12,12 @@ replacement for the reference's hand-built window/sink graph:
 - RocksDB state   -> ``checkpointLocation``
 - Redis dim cache -> dimension DataFrame broadcast per micro-batch
 
+Every foreachBatch runner here (the three topologies and the 13 ingest,
+index and monitoring runners after them) starts through one driver,
+``_run_foreach_batch``: it owns the writeStream -> foreachBatch ->
+checkpoint -> trigger -> start -> await sequence and the one empty-batch
+probe, so a runner only names its stream, checkpoint and per-batch body.
+
 Topologies (reference entry points):
 1. task-data  (startup/ConsoleTaskDataMain.java:50-86)  — validate, enrich,
    score, window-aggregate, land facts.
@@ -32,6 +38,44 @@ from ..operators.windows import qsum_col, tumbling_agg
 from ..sources.batch import load_table
 from ..sources.streams import read_events_stream
 from ..sinks import writers as W
+
+
+def _run_foreach_batch(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    body,
+    *args,
+    skip_empty: bool = True,
+    available_now: bool = True,
+) -> None:
+    """Run ``body(bspark, batch_df, batch_id, *args)`` on every micro-batch
+    of ``stream`` and block until the query stops.
+
+    ``bspark`` is ``batch_df.sparkSession``: foreachBatch hands over a
+    DataFrame bound to the micro-batch's CLONED session; temp views
+    registered on it (band_table) resolve only there, so every op in a body
+    must use that session, never the runner's ``spark``.
+
+    ``skip_empty`` drops a zero-row micro-batch before ``body`` sees it, with
+    one ``isEmpty()`` probe: a single Spark job, where a limit-1 count runs
+    two.  ``available_now`` drains what the source holds and stops (tests,
+    backfills); otherwise the 10 s processing-time trigger runs forever.
+    """
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        if skip_empty and batch_df.isEmpty():
+            return
+        body(batch_df.sparkSession, batch_df, batch_id, *args)
+
+    trigger = {"availableNow": True} if available_now else {"processingTime": "10 seconds"}
+    (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**trigger)
+        .start()
+        .awaitTermination()
+    )
+
 
 # ---------------------------------------------------------------------------
 # Topology 1 — task data (the flagship §3.1 lifecycle)
@@ -85,7 +129,7 @@ def run_fact_stream(
     events = read_events_stream(spark, sf_dir)
     customer = load_table(spark, sf_dir, "customer")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(_bspark, batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()  # one scan feeds facts + dead letter
         try:
             out = fact_transform(batch_df, customer, dispatch_sql)
@@ -109,17 +153,9 @@ def run_fact_stream(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    _run_foreach_batch(
+        events, checkpoint_dir, process, skip_empty=False, available_now=available_now
     )
-    trigger = (
-        writer.trigger(availableNow=True)
-        if available_now
-        else writer.trigger(processingTime="10 seconds")
-    )
-    q = trigger.start()
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -180,7 +216,7 @@ def run_heartbeat_stream(
     customer = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(_bspark, batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
             register, heartbeat = split_register_heartbeat(batch_df, customer)
@@ -189,13 +225,7 @@ def run_heartbeat_stream(
         finally:
             batch_df.unpersist()
 
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(events, checkpoint_dir, process, skip_empty=False)
 
 
 # ---------------------------------------------------------------------------
@@ -224,7 +254,7 @@ def run_probe_info_stream(
 ) -> None:
     events = read_events_stream(spark, sf_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(_bspark, batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()  # one scan, five sinks
         try:
             for name, df in fanout(batch_df).items():
@@ -232,13 +262,7 @@ def run_probe_info_stream(
         finally:
             batch_df.unpersist()
 
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(events, checkpoint_dir, process, skip_empty=False)
 
 
 # ---------------------------------------------------------------------------
@@ -331,16 +355,10 @@ def run_rollup_stream(events: DataFrame, out_dir: str, checkpoint_dir: str) -> N
     minute — the landed rows are partials keyed by (bucket, batch_id),
     merged at read time; replays overwrite their own batch_id subpath."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(_bspark, batch_df: DataFrame, batch_id: int) -> None:
         W.idempotent_batch_write(minute_rollup_transform(batch_df), out_dir, batch_id)
 
-    q = (
-        events.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(events, checkpoint_dir, process, skip_empty=False)
 
 
 def hour_rollup_from_minute(spark: SparkSession, rollup_dir: str) -> DataFrame:
@@ -385,9 +403,7 @@ def run_cdc_stream(
 
     from ..sinks import versioned as V
 
-    def apply_batch(batch_df: DataFrame, _bid: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
+    def apply_batch(bspark, batch_df: DataFrame, _bid: int) -> None:
         wo = W_.partitionBy(key_col).orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
@@ -403,20 +419,16 @@ def run_cdc_stream(
                 F.col("ts").alias("chg_ts"),
             )
         )
-        try:
-            base = V.read_version(spark, table_dir).select(
-                key_col, "value", "updated_at"
-            )
-        except FileNotFoundError:
-            base = None
-        if base is None:
+        if V.latest_version(table_dir) is None:  # first batch: no snapshot yet
             merged = chg.filter(F.col("op") != "D").select(
                 key_col,
                 F.col("chg_value").alias("value"),
                 F.col("chg_ts").alias("updated_at"),
             )
         else:
-            b = base.withColumnRenamed(key_col, "bk")
+            b = V.read_version(bspark, table_dir).select(
+                F.col(key_col).alias("bk"), "value", "updated_at"
+            )
             merged = (
                 b.join(chg, b["bk"] == chg[key_col], "full_outer")
                 # drop tombstoned keys; base-only rows have op NULL and
@@ -433,14 +445,7 @@ def run_cdc_stream(
             )
         V.commit_version(merged, table_dir, mode="overwrite")
 
-    q = (
-        stream_df.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(stream_df, checkpoint_dir, apply_batch)
 
 
 # ---------------------------------------------------------------------------
@@ -459,25 +464,23 @@ def _read_prior_batches(bspark: SparkSession, base_dir: str, batch_id: int):
     """Read a batch_id-partitioned landing table restricted to batches
     BEFORE ``batch_id``; None if nothing is landed yet.
 
-    - Only [PATH_NOT_FOUND] means "first batch": any other read failure
-      (transient store error, corrupt footer) must propagate — swallowing
-      it would silently reset the derived state (dedup index / token carry)
-      and corrupt everything downstream, with the checkpoint then
-      committing the corruption.
+    - Only a missing ``base_dir`` means "first batch", checked through the
+      Hadoop FileSystem of the session's Hadoop conf (any scheme the read
+      itself supports): every read failure (transient store error, corrupt
+      footer) must propagate — swallowing it would silently reset the
+      derived state (dedup index / token carry) and corrupt everything
+      downstream, with the checkpoint then committing the corruption.
     - ``<`` not ``!=``: a replay of the latest uncommitted batch must not
       see its own first-attempt output (self-duplicate wipeout), and a
       restart against an existing table with a FRESH checkpoint (batch ids
       restarting at 0) must re-own, not double-count, the higher-id
       subpaths it replays into.
     """
-    from pyspark.errors import AnalysisException
-
-    try:
-        landed = bspark.read.parquet(base_dir)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e):
-            return None
-        raise
+    path = bspark._jvm.org.apache.hadoop.fs.Path(base_dir)
+    hconf = bspark._jsparkSession.sessionState().newHadoopConf()
+    if not path.getFileSystem(hconf).exists(path):
+        return None
+    landed = bspark.read.parquet(base_dir)
     return landed.filter(F.col("batch_id") < batch_id).drop("batch_id")
 
 
@@ -507,6 +510,32 @@ def ingest_dedup_batch(
     return kept
 
 
+def _ingest_media_batch(
+    bspark: SparkSession,
+    batch_docs: DataFrame,
+    batch_id: int,
+    kept_dir: str,
+    index_dir: str,
+    documents_as,
+    read_index,
+    gate,
+) -> None:
+    """The one media ingest body behind the image, video and audio
+    callers below, which differ only in the fixture encoder
+    (``documents_as``), the index reader and the near-dup ``gate``."""
+    from ..operators.image_index import _ingest_bands
+
+    media = documents_as(batch_docs)
+    index = read_index(bspark, index_dir)
+    if "batch_id" in index.columns:
+        index = index.filter(F.col("batch_id") < int(batch_id))
+    else:
+        index = None  # nothing landed yet (empty frame lacks batch_id)
+    kept, kept_bands = gate(bspark, media, index)
+    W.idempotent_batch_write(kept, kept_dir, batch_id)
+    _ingest_bands(bspark, kept_bands, batch_id, index_dir)
+
+
 def ingest_image_dedup_batch(
     bspark: SparkSession,
     batch_docs: DataFrame,
@@ -524,22 +553,50 @@ def ingest_image_dedup_batch(
     ``<`` rule — a replay must not see its first attempt's bands and drop
     every survivor as a self-duplicate), and the band landing overwrites
     exactly its own slices."""
-    from ..operators.image_index import (
-        _ingest_bands,
-        incremental_image_dedup,
-        read_image_index,
-    )
-    from ..operators.multimodal import documents_as_images
+    from ..operators import image_index as II
+    from ..operators import multimodal as MM
 
-    media = documents_as_images(batch_docs)
-    index = read_image_index(bspark, index_dir)
-    if "batch_id" in index.columns:
-        index = index.filter(F.col("batch_id") < int(batch_id))
-    else:
-        index = None  # nothing landed yet (empty frame lacks batch_id)
-    kept, kept_bands = incremental_image_dedup(bspark, media, index)
-    W.idempotent_batch_write(kept, kept_dir, batch_id)
-    _ingest_bands(bspark, kept_bands, batch_id, index_dir)
+    _ingest_media_batch(
+        bspark, batch_docs, batch_id, kept_dir, index_dir,
+        MM.documents_as_images, II.read_image_index, II.incremental_image_dedup,
+    )
+
+
+def ingest_video_dedup_batch(
+    bspark: SparkSession,
+    batch_docs: DataFrame,
+    batch_id: int,
+    kept_dir: str,
+    index_dir: str,
+) -> None:
+    """One micro-batch's VIDEO ingest — ``ingest_image_dedup_batch`` with
+    the frame-augmented band space and the aligned-frame gate
+    (operators/video_index.py)."""
+    from ..operators import multimodal as MM
+    from ..operators import video_index as VI
+
+    _ingest_media_batch(
+        bspark, batch_docs, batch_id, kept_dir, index_dir,
+        MM.documents_as_videos, VI.read_video_index, VI.incremental_video_dedup,
+    )
+
+
+def ingest_audio_dedup_batch(
+    bspark: SparkSession,
+    batch_docs: DataFrame,
+    batch_id: int,
+    kept_dir: str,
+    index_dir: str,
+) -> None:
+    """One micro-batch's AUDIO ingest — ``ingest_image_dedup_batch`` with
+    the waveform-fingerprint extractor (operators/audio_index.py)."""
+    from ..operators import audio_index as AI
+    from ..operators import multimodal as MM
+
+    _ingest_media_batch(
+        bspark, batch_docs, batch_id, kept_dir, index_dir,
+        MM.documents_as_audio, AI.read_audio_index, AI.incremental_audio_dedup,
+    )
 
 
 def run_image_dedup_stream(
@@ -554,51 +611,9 @@ def run_image_dedup_stream(
     land survivors + their bands (``ingest_image_dedup_batch``).  The
     run_incremental_dedup_stream shape applied to the multimodal column —
     the third index family's streaming front door."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ingest_image_dedup_batch(
-            batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        docs_stream, checkpoint_dir, ingest_image_dedup_batch, kept_dir, index_dir
     )
-    q.awaitTermination()
-
-
-def ingest_video_dedup_batch(
-    bspark: SparkSession,
-    batch_docs: DataFrame,
-    batch_id: int,
-    kept_dir: str,
-    index_dir: str,
-) -> None:
-    """One micro-batch's VIDEO ingest — ``ingest_image_dedup_batch`` with
-    the frame-augmented band space and the aligned-frame gate
-    (operators/video_index.py); same replay-convergence rule (the index
-    read excludes batch_id >= current, the band landing overwrites
-    exactly its own slices)."""
-    from ..operators.image_index import _ingest_bands
-    from ..operators.multimodal import documents_as_videos
-    from ..operators.video_index import (
-        incremental_video_dedup,
-        read_video_index,
-    )
-
-    media = documents_as_videos(batch_docs)
-    index = read_video_index(bspark, index_dir)
-    if "batch_id" in index.columns:
-        index = index.filter(F.col("batch_id") < int(batch_id))
-    else:
-        index = None  # nothing landed yet (empty frame lacks batch_id)
-    kept, kept_bands = incremental_video_dedup(bspark, media, index)
-    W.idempotent_batch_write(kept, kept_dir, batch_id)
-    _ingest_bands(bspark, kept_bands, batch_id, index_dir)
 
 
 def run_video_dedup_stream(
@@ -611,49 +626,9 @@ def run_video_dedup_stream(
     """Streaming video-corpus ingest gate — the fourth index family's
     front door, the run_image_dedup_stream shape over the aligned-frame
     semantics."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ingest_video_dedup_batch(
-            batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        docs_stream, checkpoint_dir, ingest_video_dedup_batch, kept_dir, index_dir
     )
-    q.awaitTermination()
-
-
-def ingest_audio_dedup_batch(
-    bspark: SparkSession,
-    batch_docs: DataFrame,
-    batch_id: int,
-    kept_dir: str,
-    index_dir: str,
-) -> None:
-    """One micro-batch's AUDIO ingest — ``ingest_image_dedup_batch`` with
-    the waveform-fingerprint extractor (operators/audio_index.py); same
-    gate, same replay-convergence rule."""
-    from ..operators.audio_index import (
-        incremental_audio_dedup,
-        read_audio_index,
-    )
-    from ..operators.image_index import _ingest_bands
-    from ..operators.multimodal import documents_as_audio
-
-    media = documents_as_audio(batch_docs)
-    index = read_audio_index(bspark, index_dir)
-    if "batch_id" in index.columns:
-        index = index.filter(F.col("batch_id") < int(batch_id))
-    else:
-        index = None  # nothing landed yet (empty frame lacks batch_id)
-    kept, kept_bands = incremental_audio_dedup(bspark, media, index)
-    W.idempotent_batch_write(kept, kept_dir, batch_id)
-    _ingest_bands(bspark, kept_bands, batch_id, index_dir)
 
 
 def run_audio_dedup_stream(
@@ -665,21 +640,9 @@ def run_audio_dedup_stream(
 ) -> None:
     """Streaming audio-corpus ingest gate — the perceptual-hash family's
     front door over the waveform fingerprint."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ingest_audio_dedup_batch(
-            batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        docs_stream, checkpoint_dir, ingest_audio_dedup_batch, kept_dir, index_dir
     )
-    q.awaitTermination()
 
 
 def run_incremental_dedup_stream(
@@ -693,21 +656,9 @@ def run_incremental_dedup_stream(
     batch against it, land survivors + their bands under idempotent
     batch_id subpaths (an at-least-once replay overwrites its own subpath,
     so the index cannot double-grow)."""
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        # foreachBatch hands over a DataFrame bound to the micro-batch's
-        # CLONED session; temp views registered on it (band_table) resolve
-        # only there, so every op in this body must use that session.
-        ingest_dedup_batch(batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        docs_stream, checkpoint_dir, ingest_dedup_batch, kept_dir, index_dir
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -759,18 +710,7 @@ def run_packing_stream(
     checkpoint_dir: str,
     length: int = 256,
 ) -> None:
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        pack_batch(batch_df.sparkSession, batch_df, batch_id, out_dir, length)
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(docs_stream, checkpoint_dir, pack_batch, out_dir, length)
 
 
 # ---------------------------------------------------------------------------
@@ -790,24 +730,10 @@ def run_indexing_stream(
     index_path: str,
     checkpoint_dir: str,
 ) -> None:
-    """Streaming runner for incremental text indexing (availableNow in
-    tests; a production job would run a processing-time trigger)."""
+    """Streaming runner for incremental text indexing."""
     from ..operators.retrieval import text_index_ingest_batch
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        text_index_ingest_batch(
-            batch_df.sparkSession, batch_df, batch_id, index_path
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_foreach_batch(docs_stream, checkpoint_dir, text_index_ingest_batch, index_path)
 
 
 def run_ivf_indexing_stream(
@@ -823,25 +749,12 @@ def run_ivf_indexing_stream(
     (quantizer ONLY — a ``build_ivf_index`` bootstrap leaves flat
     ``cell=N`` data files whose partition depth conflicts with the
     streamed ``cell/batch_id`` landings; the ingest refuses that layout):
-    streaming ingest only ROUTES into the frozen centroids, never re-fits
-    (availableNow in tests; production would run a processing-time
-    trigger)."""
+    streaming ingest only ROUTES into the frozen centroids, never re-fits."""
     from ..operators.similarity import ivf_index_ingest_batch
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        ivf_index_ingest_batch(
-            batch_df.sparkSession, batch_df, batch_id, index_path, vec_col
-        )
-
-    q = (
-        vec_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        vec_stream, checkpoint_dir, ivf_index_ingest_batch, index_path, vec_col
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -992,32 +905,11 @@ def run_web_curation_stream(
     min_logw: float = -10.0,
     lm_model: tuple[list[tuple[str, int]], int] | None = None,
 ) -> None:
-    """Streaming runner for the curate-and-index composition
-    (availableNow in tests; production runs a processing-time trigger)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        curate_index_batch(
-            batch_df.sparkSession,
-            batch_df,
-            batch_id,
-            model,
-            kept_dir,
-            dedup_index_dir,
-            text_index_dir,
-            min_quality,
-            min_logw,
-            lm_model,
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming runner for the curate-and-index composition."""
+    _run_foreach_batch(
+        docs_stream, checkpoint_dir, curate_index_batch, model, kept_dir,
+        dedup_index_dir, text_index_dir, min_quality, min_logw, lm_model,
     )
-    q.awaitTermination()
 
 
 def run_curation_stream(
@@ -1032,31 +924,11 @@ def run_curation_stream(
     lm_model: tuple[list[tuple[str, int]], int] | None = None,
     max_nll_micro_per_tok: int | None = None,
 ) -> None:
-    """Streaming runner for the curation gate (availableNow in tests;
-    a production job would run a processing-time trigger)."""
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.limit(1).count() == 0:
-            return
-        curate_batch(
-            batch_df.sparkSession,
-            batch_df,
-            batch_id,
-            model,
-            kept_dir,
-            index_dir,
-            min_quality,
-            min_logw,
-            lm_model,
-            max_nll_micro_per_tok,
-        )
-
-    q = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Streaming runner for the curation gate."""
+    _run_foreach_batch(
+        docs_stream, checkpoint_dir, curate_batch, model, kept_dir, index_dir,
+        min_quality, min_logw, lm_model, max_nll_micro_per_tok,
     )
-    q.awaitTermination()
 
 
 # ---------------------------------------------------------------------------
@@ -1084,7 +956,6 @@ def hist_batch(
     hi: float,
 ) -> None:
     from ..operators import sketches as SK
-    from ..sinks import writers as W
 
     hist = SK.fixed_domain_hist(batch_df, key, val, lo, hi)
     W.idempotent_batch_write(hist, hist_dir, batch_id)
@@ -1100,18 +971,11 @@ def run_quantile_stream(
     lo: float = 0.0,
     hi: float = 1000.0,
 ) -> None:
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        hist_batch(batch_df, batch_id, hist_dir, key, val, lo, hi)
-
-    q = (
-        events_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        events_stream,
+        checkpoint_dir,
+        lambda _bspark, b, bid: hist_batch(b, bid, hist_dir, key, val, lo, hi),
     )
-    q.awaitTermination()
 
 
 def merged_quantiles(
@@ -1170,17 +1034,6 @@ def run_embedding_dedup_stream(
     index_dir: str,
     checkpoint_dir: str,
 ) -> None:
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        ingest_embedding_dedup_batch(
-            batch_df.sparkSession, batch_df, batch_id, kept_dir, index_dir
-        )
-
-    q = (
-        vecs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_foreach_batch(
+        vecs_stream, checkpoint_dir, ingest_embedding_dedup_batch, kept_dir, index_dir
     )
-    q.awaitTermination()

@@ -1,6 +1,7 @@
 """Streaming observability (the reference's println timing instrumentation,
 done properly): a StreamingQueryListener collecting per-batch progress —
-rows, duration, sink description — queryable after (or during) a run.
+rows, the full ``durationMs`` phase breakdown, query name — queryable
+after (or during) a run.
 """
 
 from __future__ import annotations
@@ -14,7 +15,9 @@ from pyspark.sql.streaming import StreamingQueryListener
 class BatchStats:
     batch_id: int
     num_input_rows: int
-    duration_ms: int | None
+    # the progress's whole durationMs map: triggerExecution, addBatch,
+    # queryPlanning, latestOffset, walCommit, ... (empty if it carries none)
+    duration_ms: dict[str, int]
     query_name: str
 
 
@@ -36,9 +39,7 @@ class ProgressCollector(StreamingQueryListener):
             BatchStats(
                 batch_id=p.batchId,
                 num_input_rows=p.numInputRows,
-                duration_ms=p.durationMs.get("triggerExecution")
-                if p.durationMs
-                else None,
+                duration_ms=dict(p.durationMs or {}),
                 query_name=p.name or "",
             )
         )

@@ -272,6 +272,7 @@ def test_progress_collector_counts_rows(spark, tmp_path) -> None:
             time.sleep(0.5)
         total = load_table(spark, SMOKE_SF_DIR, "events").count()
         assert collector.total_rows == total
+        assert all("addBatch" in b.duration_ms for b in collector.batches)
     finally:
         spark.streams.removeListener(collector)
 
