@@ -21,9 +21,9 @@ SPARK = "spark"
 DUCK = "duck"
 
 
-def split_tokens(d: str, text: str, sep: str = " ") -> str:
+def split_tokens(d: str, text: str) -> str:
     fn = "split" if d == SPARK else "string_split"
-    return f"{fn}({text}, '{sep}')"
+    return f"{fn}({text}, ' ')"
 
 
 def arr_size(d: str, arr: str) -> str:

@@ -42,7 +42,6 @@ def asof_join(
     ts: str,
     value_cols: list[str],
     state_tiebreak: Column | None = None,
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Left as-of join: every ``facts`` row, plus ``<value>_asof`` columns
     carrying the latest ``states`` values at-or-before the fact's ``ts``
@@ -88,18 +87,18 @@ def asof_join(
         F.col(_TAG),
         *[F.col(f"__f_{c}").alias(c) for c in fact_cols if c != key],
         *[
-            F.last(f"__v_{c}", ignorenulls=True).over(w).alias(f"{c}{suffix}")
+            F.last(f"__v_{c}", ignorenulls=True).over(w).alias(f"{c}_asof")
             for c in value_cols
         ],
         F.last(
             F.when(F.col(_TAG) == 0, F.col(_ATS)), ignorenulls=True
         )
         .over(w)
-        .alias(f"{ts}{suffix}"),
+        .alias(f"{ts}_asof"),
     )
     out_cols = (
         fact_cols
-        + [f"{c}{suffix}" for c in value_cols]
-        + [f"{ts}{suffix}"]
+        + [f"{c}_asof" for c in value_cols]
+        + [f"{ts}_asof"]
     )
     return carried.filter(F.col(_TAG) == 1).select(*out_cols)

@@ -396,19 +396,21 @@ SPAN_MIN_DF = 3
 def span_dedup_sql(
     d: str,
     table: str = "documents",
-    k: int = SPAN_WORDS,
-    min_df: int = SPAN_MIN_DF,
 ) -> str:
-    """Per-doc rewrite removing every k-word segment whose corpus document
-    frequency >= min_df.  Output: doc_id, n_segs, n_removed, cleaned_text
+    """Per-doc rewrite removing every SPAN_WORDS-word segment whose corpus
+    document frequency >= SPAN_MIN_DF.  Output: doc_id, n_segs, n_removed, cleaned_text
     (original text when nothing was removed; '' when everything was)."""
     toks = X.split_tokens(d, "text")
-    n_segs = X.idiv(d, f"{X.arr_size(d, 'toks')} + {k - 1}", str(k))
-    seg = X.arr_join(d, X.arr_slice(d, "toks", f"(i - 1) * {k} + 1", k))
+    n_segs = X.idiv(
+        d, f"{X.arr_size(d, 'toks')} + {SPAN_WORDS - 1}", str(SPAN_WORDS)
+    )
+    seg = X.arr_join(
+        d, X.arr_slice(d, "toks", f"(i - 1) * {SPAN_WORDS} + 1", SPAN_WORDS)
+    )
     src = X.positions_from(
         d, f"(SELECT doc_id, {toks} AS toks FROM {table})", "doc_id, toks", n_segs
     )
-    kept = X.ordered_join(d, f"CASE WHEN f.df < {min_df} THEN s.seg END", "s.i")
+    kept = X.ordered_join(d, f"CASE WHEN f.df < {SPAN_MIN_DF} THEN s.seg END", "s.i")
     return f"""
 WITH segs AS (
   SELECT doc_id, i, {seg} AS seg FROM {src} p
@@ -418,7 +420,7 @@ df AS (
 )
 SELECT s.doc_id,
   COUNT(*) AS n_segs,
-  CAST(SUM(CASE WHEN f.df >= {min_df} THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
+  CAST(SUM(CASE WHEN f.df >= {SPAN_MIN_DF} THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
   COALESCE({kept}, '') AS cleaned_text
 FROM segs s JOIN df f ON s.seg = f.seg
 GROUP BY s.doc_id
@@ -661,7 +663,7 @@ def simhash_hamming_hist_df(spark, max_dist: int, table: str = "documents"):
     )
 
 
-def span_dedup_df(spark, table: str = "documents", k: int = SPAN_WORDS, min_df: int = SPAN_MIN_DF):
+def span_dedup_df(spark, table: str = "documents"):
     """Staged engine form of ``span_dedup_sql``: the segs CTE feeds both the
     df aggregate and the rebuild join — checkpoint it so the document scan
     and the split/slice segmenting run once."""
@@ -669,8 +671,12 @@ def span_dedup_df(spark, table: str = "documents", k: int = SPAN_WORDS, min_df: 
 
     d = X.SPARK
     toks = X.split_tokens(d, "text")
-    n_segs = X.idiv(d, f"{X.arr_size(d, 'toks')} + {k - 1}", str(k))
-    seg = X.arr_join(d, X.arr_slice(d, "toks", f"(i - 1) * {k} + 1", k))
+    n_segs = X.idiv(
+        d, f"{X.arr_size(d, 'toks')} + {SPAN_WORDS - 1}", str(SPAN_WORDS)
+    )
+    seg = X.arr_join(
+        d, X.arr_slice(d, "toks", f"(i - 1) * {SPAN_WORDS} + 1", SPAN_WORDS)
+    )
     src = X.positions_from(
         d, f"(SELECT doc_id, {toks} AS toks FROM {table})", "doc_id, toks", n_segs
     )
@@ -679,10 +685,12 @@ def span_dedup_df(spark, table: str = "documents", k: int = SPAN_WORDS, min_df: 
     ).localCheckpoint()
     df_tab = segs.groupBy("seg").agg(F.count_distinct("doc_id").alias("df"))
     joined = segs.join(df_tab, "seg")
-    kept = X.ordered_join(d, f"CASE WHEN df < {min_df} THEN seg END", "i")
+    kept = X.ordered_join(d, f"CASE WHEN df < {SPAN_MIN_DF} THEN seg END", "i")
     return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_segs"),
-        F.sum(F.when(F.col("df") >= min_df, 1).otherwise(0)).cast("long").alias("n_removed"),
+        F.sum(F.when(F.col("df") >= SPAN_MIN_DF, 1).otherwise(0))
+        .cast("long")
+        .alias("n_removed"),
         F.expr(f"COALESCE({kept}, '')").alias("cleaned_text"),
     )
 
@@ -699,11 +707,11 @@ CONTAIN_THRESHOLD = 0.5
 
 
 def containment_on_lsh_sql(
-    d: str, threshold: float = CONTAIN_THRESHOLD, table: str = "documents"
+    d: str, table: str = "documents"
 ) -> str:
     """Directional containment on MinHash-LSH candidate pairs: both
     directions plus the dominant one, kept when max(C_ab, C_ba) >=
-    threshold.  Same CTE skeleton as ``ngram_jaccard_on_lsh_sql``; DuckDB
+    CONTAIN_THRESHOLD.  Same CTE skeleton as ``ngram_jaccard_on_lsh_sql``; DuckDB
     auto-materializes the shared CTEs, the Spark engine side uses the
     staged form.
 
@@ -737,7 +745,7 @@ SELECT doc_a, doc_b,
 FROM inter
 JOIN sizes na ON doc_a = na.doc_id
 JOIN sizes nb ON doc_b = nb.doc_id
-WHERE CAST(both_n AS DOUBLE) / LEAST(na.n, nb.n) >= {threshold!r}
+WHERE CAST(both_n AS DOUBLE) / LEAST(na.n, nb.n) >= {CONTAIN_THRESHOLD!r}
 """
 
 
@@ -851,7 +859,6 @@ def cap_candidate_degree(cand, max_deg: int = CAND_MAX_DEGREE):
 
 def containment_on_lsh_capped_df(
     spark,
-    threshold: float = CONTAIN_THRESHOLD,
     max_deg: int = CAND_MAX_DEGREE,
     table: str = "documents",
 ):
@@ -870,7 +877,7 @@ def containment_on_lsh_capped_df(
     return (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
-        .filter(F.expr(f"CAST(both_n AS DOUBLE) / LEAST(na_n, nb_n) >= {threshold!r}"))
+        .filter(F.expr(f"CAST(both_n AS DOUBLE) / LEAST(na_n, nb_n) >= {CONTAIN_THRESHOLD!r}"))
         .select(
             "doc_a",
             "doc_b",
@@ -969,7 +976,7 @@ def containment_estimate_df(spark, table: str = "documents"):
     )
 
 
-def capped_cand_sql(d: str, cand: str, max_deg: int = CAND_MAX_DEGREE) -> str:
+def capped_cand_sql(d: str, cand: str) -> str:
     """SQL twin of ``cap_candidate_degree`` over a candidate relation
     ``cand`` (columns doc_a, doc_b): pair-hash rank windows on both ends +
     the min-neighbor exemption, as plain window SQL both engines run
@@ -991,14 +998,12 @@ capped AS (
   SELECT r.doc_a, r.doc_b
   FROM ranked r
   LEFT JOIN min_nbr m ON m.n = r.doc_b
-  WHERE (r.ra <= {max_deg} AND r.rb <= {max_deg}) OR r.doc_a = m.mn
+  WHERE (r.ra <= {CAND_MAX_DEGREE} AND r.rb <= {CAND_MAX_DEGREE}) OR r.doc_a = m.mn
 )"""
 
 
 def containment_capped_sql(
     d: str,
-    threshold: float = CONTAIN_THRESHOLD,
-    max_deg: int = CAND_MAX_DEGREE,
     table: str = "documents",
 ) -> str:
     """Oracle form of the degree-capped containment verifier: LSH
@@ -1007,7 +1012,7 @@ def containment_capped_sql(
     cand = minhash_lsh_pairs_sql(d, table)
     return f"""
 WITH cand AS ({cand}),
-{capped_cand_sql(d, "cand", max_deg).lstrip()},
+{capped_cand_sql(d, "cand").lstrip()},
 sh AS ({shingles_cte(d, table)}),
 sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
 inter AS (
@@ -1024,7 +1029,7 @@ SELECT doc_a, doc_b,
 FROM inter
 JOIN sizes na ON doc_a = na.doc_id
 JOIN sizes nb ON doc_b = nb.doc_id
-WHERE CAST(both_n AS DOUBLE) / LEAST(na.n, nb.n) >= {threshold!r}
+WHERE CAST(both_n AS DOUBLE) / LEAST(na.n, nb.n) >= {CONTAIN_THRESHOLD!r}
 """
 
 
@@ -1103,8 +1108,9 @@ DUP_SPAN_MIN_TOKENS = 16  # a duplicated span this long flags the doc
 assert DUP_SPAN_MIN_TOKENS > DUP_SPAN_WORDS - 1  # keeps the flag NULL-safe
 
 
-def dup_span_grams_sql(d: str, table: str = "documents", k: int = DUP_SPAN_WORDS) -> str:
-    """(doc_id, i, gram_h): every stride-1 word k-gram position.  Unlike
+def dup_span_grams_sql(d: str, table: str = "documents") -> str:
+    """(doc_id, i, gram_h): every stride-1 word DUP_SPAN_WORDS-gram
+    position.  Unlike
     ``span_dedup``'s disjoint segments (the C4 line-level rewrite), the
     sliding window is what lets consecutive duplicated positions reconstruct
     SPAN length — the Lee-et-al substring granularity."""
@@ -1114,11 +1120,12 @@ def dup_span_grams_sql(d: str, table: str = "documents", k: int = DUP_SPAN_WORDS
     sub = f"(SELECT doc_id, {toks} AS toks FROM {table})"
     sized = (
         f"(SELECT doc_id, toks, {X.arr_size(d, 'toks')} AS nt FROM {sub} t "
-        f"WHERE {X.arr_size(d, 'toks')} >= {k})"
+        f"WHERE {X.arr_size(d, 'toks')} >= {DUP_SPAN_WORDS})"
     )
-    pos = X.positions_from(d, sized, "doc_id, toks", f"nt - {k - 1}")
+    pos = X.positions_from(d, sized, "doc_id, toks", f"nt - {DUP_SPAN_WORDS - 1}")
     return (
-        f"SELECT doc_id, i, {X.md5_int(d, gram_at(d, 'toks', 'i', k))} AS gram_h "
+        f"SELECT doc_id, i, "
+        f"{X.md5_int(d, gram_at(d, 'toks', 'i', DUP_SPAN_WORDS))} AS gram_h "
         f"FROM {pos} p"
     )
 
@@ -1135,10 +1142,10 @@ def dup_span_flag_sql(g: str) -> str:
     )
 
 
-def _dup_span_score_ctes(flag: str, k: int = DUP_SPAN_WORDS) -> str:
+def _dup_span_score_ctes(flag: str) -> str:
     """CTE-list + final SELECT (no leading WITH): gaps-and-islands over the
     duplicated positions — island id = i - row_number() per doc, longest
-    island + k-1 = the longest duplicated SPAN in tokens.  Window functions
+    island + DUP_SPAN_WORDS-1 = the longest duplicated SPAN in tokens.  Window functions
     partition by doc_id only (per-doc bounded state, never a corpus sort)."""
     return f"""
 isl AS (
@@ -1155,10 +1162,10 @@ perdoc AS (
 )
 SELECT p.doc_id, p.n_grams, p.n_dup,
   CAST(COALESCE(l.max_run, 0) AS BIGINT) AS max_run,
-  CAST(CASE WHEN l.max_run IS NULL THEN 0 ELSE l.max_run + {k - 1} END AS BIGINT)
+  CAST(CASE WHEN l.max_run IS NULL THEN 0 ELSE l.max_run + {DUP_SPAN_WORDS - 1} END AS BIGINT)
     AS dup_span_tokens,
   {X.fround("CAST(p.n_dup AS DOUBLE) / p.n_grams", 6)} AS dup_frac,
-  (CAST(COALESCE(l.max_run, 0) AS BIGINT) + {k - 1} >= {DUP_SPAN_MIN_TOKENS})
+  (CAST(COALESCE(l.max_run, 0) AS BIGINT) + {DUP_SPAN_WORDS - 1} >= {DUP_SPAN_MIN_TOKENS})
     AS has_long_dup
 FROM perdoc p LEFT JOIN longest l ON p.doc_id = l.doc_id
 """

@@ -18,19 +18,22 @@ from pyspark.sql import functions as F
 
 from ..functions.dialect import fround
 
+FIRST_SCREEN_K = 0.6  # gw-console.data.http.firstscreencost
+MAGIC_MODEL = "DT741-csf"  # the product code a mojibake 'ÿÿÿÿ' is repaired to
+
 # ---------------------------------------------------------------------------
 # T2 — HTTP page metrics (handler/parser/HttpDataParser.java:21-66)
 # ---------------------------------------------------------------------------
 
 
-def http_page_metrics_sql(m: dict[str, str], first_screen_k: float = 0.6) -> dict[str, str]:
+def http_page_metrics_sql(m: dict[str, str]) -> dict[str, str]:
     """Returns {out_col: sql_expr} for the HTTP page-metric chain.
 
     Inputs (keys of ``m``): page_size, trans_body_cost, dns_cost, tcp_cost,
     ssl_cost, element_load_cost, element_total_size.
     Semantics (HttpDataParser.java:21-66): KB/s speeds rounded to 4 decimals
     with divide-by-zero guarded to 0; conn = dns+tcp+ssl; text = conn +
-    trans_body; first_screen = text + element_load * k (config
+    trans_body; first_screen = text + element_load * FIRST_SCREEN_K (config
     ``gw-console.data.http.firstscreencost``); page_total = text +
     element_load; page_avg_speed over page_size + element_total_size.
     """
@@ -41,7 +44,7 @@ def http_page_metrics_sql(m: dict[str, str], first_screen_k: float = 0.6) -> dic
         f"(CASE WHEN ({m['trans_body_cost']}) = 0.0 THEN 0.0 "
         f"ELSE {fround(speed_raw, 4)} END)"
     )
-    first_screen = f"({text} + ({m['element_load_cost']}) * {first_screen_k!r})"
+    first_screen = f"({text} + ({m['element_load_cost']}) * {FIRST_SCREEN_K!r})"
     page_total = f"({text} + ({m['element_load_cost']}))"
     page_speed_raw = (
         f"(({m['page_size']}) + ({m['element_total_size']})) / ({page_total} / 1000.0)"
@@ -89,20 +92,20 @@ def game_metrics_sql(m: dict[str, str]) -> dict[str, str]:
 # ---------------------------------------------------------------------------
 
 
-def repair_model_sql(model: str, magic_model: str = "DT741-csf") -> str:
+def repair_model_sql(model: str) -> str:
     """Vendor mojibake repair (handler/thread/ProbeInfoThread.java:76-78):
     some probes report their product code as the four-0xFF string 'ÿÿÿÿ'
     (an uninitialized EEPROM field decoded as Latin-1); the reference
     rewrites it to the known model before any model-conditional logic."""
-    return f"(CASE WHEN ({model}) = 'ÿÿÿÿ' THEN '{magic_model}' ELSE ({model}) END)"
+    return f"(CASE WHEN ({model}) = 'ÿÿÿÿ' THEN '{MAGIC_MODEL}' ELSE ({model}) END)"
 
 
-def pon_rescale_sql(rx_power: str, model: str, magic_model: str = "DT741-csf") -> str:
+def pon_rescale_sql(rx_power: str, model: str) -> str:
     # The model conditional sees the REPAIRED product code, so mojibake
     # probes rescale exactly like explicitly-tagged DT741-csf units.
-    repaired = repair_model_sql(model, magic_model)
+    repaired = repair_model_sql(model)
     return (
-        f"(CASE WHEN {repaired} = '{magic_model}' THEN ({rx_power}) / 10000.0 "
+        f"(CASE WHEN {repaired} = '{MAGIC_MODEL}' THEN ({rx_power}) / 10000.0 "
         f"ELSE ({rx_power}) END)"
     )
 

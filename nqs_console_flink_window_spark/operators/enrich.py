@@ -21,7 +21,6 @@ def dim_join(
     dim: DataFrame,
     on: list[tuple[str, str]],
     select: dict[str, str] | None = None,
-    how: str = "left",
 ) -> DataFrame:
     """J1-J3/J5 — broadcast left equi-join of a fact stream to a dimension.
 
@@ -39,7 +38,7 @@ def dim_join(
     for f_col, d_col in on:
         this = fact[f_col] == d[d_col]
         cond = this if cond is None else (cond & this)
-    joined = fact.join(F.broadcast(d), cond, how)
+    joined = fact.join(F.broadcast(d), cond, "left")
     return joined.drop(*[d[c] for _, c in on])
 
 
@@ -59,7 +58,6 @@ def bucketed_range_join(
     lo_col: str,
     hi_col: str,
     width: float,
-    how: str = "left",
 ) -> DataFrame:
     """J4 at scale — point-in-range lookup as an EQUI join, not a BNLJ.
 
@@ -77,7 +75,7 @@ def bucketed_range_join(
     proportional to the handful of ranges sharing a bucket.
 
     Half-open ``[lo, hi)`` semantics; overlapping ranges emit one row per
-    match.  With ``how='left'`` unmatched facts survive with NULL range
+    match.  It is a left join: unmatched facts survive with NULL range
     columns (the engine-default geo-miss behavior).
     """
     lob = F.floor(F.col(lo_col) / width).cast("long")
@@ -94,7 +92,7 @@ def bucketed_range_join(
         & (f[point_col] >= r[lo_col])
         & (f[point_col] < r[hi_col])
     )
-    return f.join(r, cond, how).drop("__fbucket", "__bucket")
+    return f.join(r, cond, "left").drop("__fbucket", "__bucket")
 
 
 def municipality_norm_sql(code: str, district: str) -> str:

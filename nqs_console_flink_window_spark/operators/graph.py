@@ -87,7 +87,7 @@ def pr_final_sql(r: str) -> str:
     )
 
 
-def pagerank_sql(d: str, table: str = "documents", iters: int = PR_ITERS) -> str:
+def pagerank_sql(d: str, table: str = "documents") -> str:
     """Oracle form: the five iterations unrolled as CTEs over the same
     fragments the engine loop runs."""
     nodes = f"(SELECT doc_id FROM {table})"
@@ -97,59 +97,30 @@ def pagerank_sql(d: str, table: str = "documents", iters: int = PR_ITERS) -> str
         f"deg AS ({pr_deg_sql('edges')})",
         f"r0 AS ({pr_init_sql(d, nodes)})",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, PR_ITERS + 1):
         parts.append(
             f"r{i} AS ({pr_iter_sql(d, nodes, 'edges', 'deg', f'r{i - 1}')})"
         )
-    return f"WITH {', '.join(parts)} {pr_final_sql(f'r{iters}')}"
+    return f"WITH {', '.join(parts)} {pr_final_sql(f'r{PR_ITERS}')}"
 
 
-def pagerank_df(
-    spark,
-    table: str = "documents",
-    iters: int = PR_ITERS,
-    edges=None,
-    edges_staged: bool = False,
-):
+def pagerank_df(spark, table: str = "documents", edges=None):
     """Engine side — round-12 active-set restructure (guide §2: iterate
-    over the GRAPH, project to the corpus once).  The rank vector the
-    loop carries covers only graph-ACTIVE nodes (nodes with edges): in
-    the symmetrized graph a node is active iff it has both in- and
-    out-edges, every inactive node's rank is exactly the teleport
-    constant from iteration 1 on (it receives no contributions and sends
-    none), and every active node receives >= 1 contribution row each
-    step — so the per-step plan is ONE join (rank onto the
-    outdeg-carrying edge relation) + ONE groupBy(dst), with no
-    corpus-wide node pass inside the loop; the full node list enters
-    once, in the final LEFT JOIN + COALESCE(teleport) projection.
-    Output-identical to the unrolled oracle (requires iters >= 1 — at
-    iters = 0 inactive nodes would still hold the r0 value).
+    over the GRAPH, project to the corpus once); the loop itself is
+    ``_pagerank_active`` with unit edge weights.
 
-    The edge relation is checkpointed ONCE with outdeg attached
-    (src, dst, outdeg — folds the old separate deg stage and drops the
-    per-iteration deg join), and N rides as a literal from one bounded
-    1-row count (the indexed-path stats-inlining convention).  ``edges``
-    lets a composed caller (cluster_representatives) pass the symmetrized
-    edge set it already built; ``edges_staged=True`` marks it as
-    checkpointed so it is re-read, not re-materialized.
+    ``edges`` lets a composed caller (cluster_representatives) pass the
+    symmetrized edge set it already built and checkpointed; it is read as
+    is, not re-materialized.
 
     CONTRACT: a caller-supplied ``edges`` relation must be SYMMETRIZED
     (every (a, b) paired with (b, a) — the shape ``pr_edges_sql`` emits).
-    The active-set equivalence argument above relies on it: in an
-    asymmetric digraph a pure-source node leaves the carried rank vector
-    after one step and its outgoing contributions are lost from step 2
-    on.  ``iters=0`` returns the init-vector projection over the full
-    node list (the unrolled oracle's r0 — the pre-restructure API)."""
+    The active-set equivalence argument (``_pagerank_active``) relies on
+    it: in an asymmetric digraph a pure-source node leaves the carried
+    rank vector after one step and its outgoing contributions are lost
+    from step 2 on."""
     from .staging import staged_views
 
-    d = X.SPARK
-    if iters < 0:
-        raise ValueError("pagerank_df: iters must be >= 0")
-    if iters == 0:
-        nodes = f"(SELECT doc_id FROM {table})"
-        return spark.sql(
-            f"WITH r0 AS ({pr_init_sql(d, nodes)}) {pr_final_sql('r0')}"
-        )
     if edges is None:
         # staged candidate pairs, not the plain SQL: under Spark's CTE
         # inlining the bands self-join re-ran the signature pipeline 8x
@@ -162,22 +133,43 @@ def pagerank_df(
         )
         with staged_views(spark, cand=cand, checkpoint=False) as v0:
             edges = spark.sql(pr_edges_sql(v0.cand))
-    elif not edges_staged:
-        # caller-supplied lazy edges: e2 below references the relation
-        # twice (base + outdeg subquery) — materialize once so the
-        # caller's upstream plan does not run twice (the internal path
-        # reads the already-checkpointed cand, so it skips this)
-        edges = edges.localCheckpoint()
+    return _pagerank_active(spark, table, edges, "1")
+
+
+def _pagerank_active(spark, table: str, edges, w: str):
+    """THE PageRank loop of both engine forms, over a symmetrized edge
+    relation ``edges`` (src, dst[, w]) whose weight expression is ``w``
+    (``"1"`` for the unweighted form: ``17·r·1 DIV 20·Σ1`` equals
+    ``17·r DIV 20·outdeg``, so one loop serves both oracles).
+
+    The rank vector the loop carries covers only graph-ACTIVE nodes
+    (nodes with edges): in the symmetrized graph a node is active iff it
+    has both in- and out-edges, every inactive node's rank is exactly the
+    teleport constant from iteration 1 on (it receives no contributions
+    and sends none), and every active node receives >= 1 contribution row
+    each step — so the per-step plan is ONE join (rank onto the
+    wout-carrying edge relation) + ONE groupBy(dst), with no corpus-wide
+    node pass inside the loop; the full node list enters once, in the
+    final LEFT JOIN + COALESCE(teleport) projection.  Output-identical to
+    the unrolled oracles.
+
+    The edge relation is checkpointed ONCE with the out-weight total
+    attached (src, dst, w, wout — no per-iteration degree join), and N
+    rides as a literal from one bounded 1-row count (the indexed-path
+    stats-inlining convention)."""
+    from .staging import staged_views
+
+    d = X.SPARK
     n_docs = spark.sql(
         f"SELECT CAST(COUNT(*) AS BIGINT) AS n FROM {table}"
     ).collect()[0]["n"]
     r0_val = PR_SCALE // n_docs if n_docs else 0
     tel = PR_TELEPORT // n_docs if n_docs else 0
-    share = X.idiv(d, "17 * r.r", "20 * e.outdeg")
+    share = X.idiv(d, "17 * r.r * e.w", "20 * e.wout")
     with staged_views(spark, e=edges, checkpoint=False) as ve:
         e2 = spark.sql(
-            f"SELECT e.src, e.dst, g.outdeg FROM {ve.e} e JOIN "
-            f"(SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg "
+            f"SELECT e.src, e.dst, {w} AS w, g.wout FROM {ve.e} e JOIN "
+            f"(SELECT src, CAST(SUM({w}) AS BIGINT) AS wout "
             f"FROM {ve.e} GROUP BY src) g ON g.src = e.src"
         )
         with staged_views(spark, e2=e2) as v1:
@@ -185,7 +177,7 @@ def pagerank_df(
                 f"SELECT DISTINCT src AS doc_id, "
                 f"CAST({r0_val} AS BIGINT) AS r FROM {v1.e2}"
             )
-            for _ in range(iters):
+            for _ in range(PR_ITERS):
                 with staged_views(spark, r=r) as v3:
                     r = spark.sql(f"""
 SELECT e.dst AS doc_id,
@@ -271,9 +263,7 @@ LEFT JOIN (
 """
 
 
-def pagerank_weighted_sql(
-    d: str, table: str = "documents", iters: int = PR_ITERS
-) -> str:
+def pagerank_weighted_sql(d: str, table: str = "documents") -> str:
     """Oracle form: signatures, band candidates, weights, and the five
     weighted steps unrolled as one WITH list (DuckDB materializes the
     multiply-referenced CTEs)."""
@@ -295,69 +285,28 @@ def pagerank_weighted_sql(
         f"wout AS ({prw_wout_sql('edges')})",
         f"r0 AS ({pr_init_sql(d, nodes)})",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, PR_ITERS + 1):
         parts.append(
             f"r{i} AS ({prw_iter_sql(d, nodes, 'edges', 'wout', f'r{i - 1}')})"
         )
-    return f"WITH {', '.join(parts)} {pr_final_sql(f'r{iters}')}"
+    return f"WITH {', '.join(parts)} {pr_final_sql(f'r{PR_ITERS}')}"
 
 
-def pagerank_weighted_df(spark, table: str = "documents", iters: int = PR_ITERS):
+def pagerank_weighted_df(spark, table: str = "documents"):
     """Engine side: the staged MinHash parts already carry signatures AND
     candidates (checkpointed once — the same shared-stage discipline as
-    cluster_representatives); the round-12 active-set loop (see
-    ``pagerank_df``) with the out-weight total folded into the ONE
-    checkpointed edge relation (src, dst, w, wout) — each step is one
-    join + one groupBy over graph-active nodes only."""
+    cluster_representatives); the weighted pairs are checkpointed once and
+    symmetrized into the edge relation ``_pagerank_active`` runs on, with
+    the matching-slot weight ``w``."""
     from .dedup_text import _staged_minhash_parts
     from .staging import staged_views
 
-    d = X.SPARK
-    if iters < 0:
-        raise ValueError("pagerank_weighted_df: iters must be >= 0")
-    if iters == 0:
-        # the unrolled oracle's r0 projection (pre-restructure API)
-        nodes = f"(SELECT doc_id FROM {table})"
-        return spark.sql(
-            f"WITH r0 AS ({pr_init_sql(d, nodes)}) {pr_final_sql('r0')}"
-        )
     _sh, sig, cand, _sizes = _staged_minhash_parts(spark, table, light=True)
     with staged_views(spark, sig=sig, cand=cand, checkpoint=False) as v0:
         wp = spark.sql(prw_weights_sql(v0.cand, v0.sig))
         with staged_views(spark, wp=wp) as vw:
             edges = spark.sql(prw_edges_sql(vw.wp))
-            n_docs = spark.sql(
-                f"SELECT CAST(COUNT(*) AS BIGINT) AS n FROM {table}"
-            ).collect()[0]["n"]
-            r0_val = PR_SCALE // n_docs if n_docs else 0
-            tel = PR_TELEPORT // n_docs if n_docs else 0
-            share = X.idiv(d, "17 * r.r * e.w", "20 * e.wout")
-            with staged_views(spark, e=edges, checkpoint=False) as ve:
-                e2 = spark.sql(
-                    f"SELECT e.src, e.dst, e.w, g.wout FROM {ve.e} e JOIN "
-                    f"(SELECT src, CAST(SUM(w) AS BIGINT) AS wout "
-                    f"FROM {ve.e} GROUP BY src) g ON g.src = e.src"
-                )
-                with staged_views(spark, e2=e2) as v1:
-                    r = spark.sql(
-                        f"SELECT DISTINCT src AS doc_id, "
-                        f"CAST({r0_val} AS BIGINT) AS r FROM {v1.e2}"
-                    )
-                    for _ in range(iters):
-                        with staged_views(spark, r=r) as v3:
-                            r = spark.sql(f"""
-SELECT e.dst AS doc_id,
-  CAST({tel} AS BIGINT) + CAST(SUM({share}) AS BIGINT) AS r
-FROM {v1.e2} e JOIN {v3.r} r ON r.doc_id = e.src
-GROUP BY e.dst
-""")
-                    with staged_views(spark, r=r, checkpoint=False) as v4:
-                        return spark.sql(pr_final_sql(
-                            f"(SELECT n.doc_id, "
-                            f"COALESCE(r.r, CAST({tel} AS BIGINT)) AS r "
-                            f"FROM (SELECT doc_id FROM {table}) n "
-                            f"LEFT JOIN {v4.r} r ON r.doc_id = n.doc_id) t"
-                        ))
+            return _pagerank_active(spark, table, edges, "w")
 
 
 def cr_reach_cte(edges: str, table: str = "documents") -> str:
@@ -421,7 +370,8 @@ def cluster_representatives_df(spark, table: str = "documents"):
     feeds both the min-label-propagation components and the PageRank loop
     (the policy upgrade pagerank's docstring promises — keep the
     most-connected copy, not the arbitrary min id); the per-cluster
-    window is bounded by duplicate-group size."""
+    window is bounded by duplicate-group size; the selection is the
+    oracle's own ``cr_final_sql``."""
     from . import dedup_cluster as DC
     from . import dedup_text as DD
     from .staging import staged_views
@@ -439,19 +389,8 @@ def cluster_representatives_df(spark, table: str = "documents"):
     clusters = DC.dedup_clusters_df(pairs, docs, edges=edges).select(
         "doc_id", "cluster_id"
     )
-    ranks = pagerank_df(spark, table, edges=edges, edges_staged=True).select(
-        "doc_id", "rank_pico"
+    ranks = pagerank_df(spark, table, edges=edges).selectExpr(
+        "doc_id", "rank_pico AS r"
     )
     with staged_views(spark, clusters=clusters, ranks=ranks) as v:
-        return spark.sql(f"""
-WITH ranked AS (
-  SELECT c.cluster_id, c.doc_id, r.rank_pico,
-         ROW_NUMBER() OVER (PARTITION BY c.cluster_id
-                            ORDER BY r.rank_pico DESC, c.doc_id) AS rn,
-         COUNT(*) OVER (PARTITION BY c.cluster_id) AS n_members
-  FROM {v.clusters} c JOIN {v.ranks} r ON r.doc_id = c.doc_id
-)
-SELECT cluster_id, doc_id AS rep_doc_id, rank_pico AS rep_rank_pico,
-       CAST(n_members AS BIGINT) AS n_members
-FROM ranked WHERE rn = 1
-""")
+        return spark.sql(cr_final_sql(v.clusters, v.ranks))

@@ -83,13 +83,8 @@ def _assert_fresh_image_ids(
     rule stays exact for the video family, whose frame-augmented band
     tables carry a variable number of rows per doc (content frames
     only).  The id-type and cross-batch probes are the shared core's."""
-    dup = (
-        bands.groupBy("doc_id", "band")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-    )
-    if dup.count() > 0:
+    dup = bands.groupBy("doc_id", "band").count().filter(F.col("count") > 1)
+    if not dup.isEmpty():
         raise ValueError(
             f"{where}: batch repeats a doc_id — duplicate band rows would "
             "double-count collisions in every probe; dedup the batch "
@@ -128,15 +123,13 @@ def build_image_index(
     ).partitionBy("bband").parquet(path)
 
 
-def image_index_append(
-    spark, path: str, media: DataFrame, bands_fn=None
-) -> None:
+def image_index_append(spark, path: str, media: DataFrame) -> None:
     """Flat-layout maintenance: hash NEW images and append their bands
     into the bband partitions (small-file debt settled by
     ``compact_image_index``)."""
     where = "image_index_append"
     SI.require_layout(path, "bband", "flat", where)
-    bands = _batch_bands(media, bands_fn, where)
+    bands = _batch_bands(media, image_bands, where)
     _assert_fresh_image_ids(bands, path, where)
     bands.repartition("bband").write.mode("append").partitionBy(
         "bband"

@@ -61,12 +61,12 @@ def normalize_minmax(df: DataFrame, cols: list[str], bits: int = 16) -> list[Col
 
 
 def zorder_layout(
-    df: DataFrame, cols: list[str], n_files: int, bits: int = 16
+    df: DataFrame, cols: list[str], n_files: int
 ) -> DataFrame:
     """Cluster ``df`` into ``n_files`` range partitions of the Z-curve,
     sorted within each — write the result with a plain parquet save and
     every output file carries tight min-max bounds on ALL ``cols``."""
-    key = morton_key(normalize_minmax(df, cols, bits), bits)
+    key = morton_key(normalize_minmax(df, cols))
     return (
         df.withColumn("__z", key)
         .repartitionByRange(n_files, "__z")

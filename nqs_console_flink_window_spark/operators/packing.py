@@ -64,24 +64,24 @@ FROM {src} s
 """
 
 
-def pack_sequences_sql(d: str, table: str = "documents", length: int = WINDOW_TOKENS) -> str:
+def pack_sequences_sql(d: str, table: str = "documents") -> str:
     """Packing over a raw document table (token count = whitespace split)."""
     n_toks = X.arr_size(d, X.split_tokens(d, "text"))
     sized = f"(SELECT doc_id, CAST({n_toks} AS BIGINT) AS n_toks FROM {table})"
-    return pack_assignment_sql(d, sized, length)
+    return pack_assignment_sql(d, sized)
 
 
 def pack_sequences_scalable(
-    docs: DataFrame, length: int = WINDOW_TOKENS, partitions: int = 8
+    docs: DataFrame, partitions: int = 8
 ) -> DataFrame:
     """Distributed prefix-sum packing over a raw document table — identical
     output to ``pack_sequences_sql``, no global-order single-partition window
     on the data-proportional stream."""
-    return pack_sized_scalable(sized_docs(docs), length, partitions)
+    return pack_sized_scalable(sized_docs(docs), partitions=partitions)
 
 
 def pack_sized_scalable(
-    sized_in: DataFrame, length: int = WINDOW_TOKENS, partitions: int = 8
+    sized_in: DataFrame, partitions: int = 8
 ) -> DataFrame:
     """Distributed prefix-sum form of ``pack_assignment_sql`` over any
     ``(doc_id, n_toks)`` provider (n_toks > 0 rows only) — identical output,
@@ -126,7 +126,7 @@ def pack_sized_scalable(
     with_off = local.join(F.broadcast(prefixes), "pid").withColumn(
         "off", F.col("prefix") + F.col("local_off")
     )
-    return assign_windows(with_off, length)
+    return assign_windows(with_off)
 
 
 def sized_docs(docs: DataFrame) -> DataFrame:

@@ -54,28 +54,25 @@ def invalid(df: DataFrame, required: list[str]) -> DataFrame:
 
 def clock_repair_expr(
     ts_epoch: Column,
-    now_epoch: int = FIXED_NOW_EPOCH,
-    max_skew: int = CLOCK_SKEW_MAX_SECONDS,
 ) -> Column:
     """P5 — replace a reported epoch-seconds timestamp with "now" when it
-    deviates more than ``max_skew`` from "now".
+    deviates more than CLOCK_SKEW_MAX_SECONDS from "now".
 
     Reference: DataMessage.java:16-19 / GwInfoMessage.java:11-15 (offset
-    108000 s).  ``now`` is injectable (FIXED_NOW_EPOCH) so tests and oracle
-    runs are reproducible — the streaming jobs pass the batch wall-clock.
+    108000 s).  "now" is the fixed FIXED_NOW_EPOCH, so tests and oracle runs
+    are reproducible.
     """
-    skew = F.abs(F.lit(now_epoch) - ts_epoch)
-    return F.when(skew > F.lit(max_skew), F.lit(now_epoch).cast("long")).otherwise(
-        ts_epoch.cast("long")
-    )
+    skew = F.abs(F.lit(FIXED_NOW_EPOCH) - ts_epoch)
+    return F.when(
+        skew > F.lit(CLOCK_SKEW_MAX_SECONDS), F.lit(FIXED_NOW_EPOCH).cast("long")
+    ).otherwise(ts_epoch.cast("long"))
 
 
-def clock_repair_sql(ts_epoch_expr: str, now_epoch: int = FIXED_NOW_EPOCH,
-                     max_skew: int = CLOCK_SKEW_MAX_SECONDS) -> str:
+def clock_repair_sql(ts_epoch_expr: str) -> str:
     """ANSI-SQL twin of :func:`clock_repair_expr` for the DuckDB oracle."""
     return (
-        f"CASE WHEN ABS({now_epoch} - ({ts_epoch_expr})) > {max_skew} "
-        f"THEN {now_epoch} ELSE CAST({ts_epoch_expr} AS BIGINT) END"
+        f"CASE WHEN ABS({FIXED_NOW_EPOCH} - ({ts_epoch_expr})) > {CLOCK_SKEW_MAX_SECONDS} "
+        f"THEN {FIXED_NOW_EPOCH} ELSE CAST({ts_epoch_expr} AS BIGINT) END"
     )
 
 

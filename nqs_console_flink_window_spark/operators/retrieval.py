@@ -454,24 +454,22 @@ def _hybrid_rrf_ctes(
     tf: str,
     dl: str,
     table: str | None = None,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
     n_body: str | None = None,
     t_body: str | None = None,
 ) -> str:
     """CTE-list + final SELECT (no leading WITH) fusing the BM25 and QL
     legs over shared ``tf``/``dl`` relations.  Leg ranks ride ROW_NUMBER
-    over the TakeOrdered top lists (<= leg_k rows each); the fused cut is
+    over the TakeOrdered top lists (<= HYBRID_LEG_K rows each); the fused cut is
     another TakeOrdered.  ``n_body``/``t_body`` override the N/T scalar
     subqueries (the indexed path inlines the stats sidecar as literals,
     same convention as ``_bm25_score_ctes``)."""
     rrf = X.idiv(d, str(RRF_SCALE), f"{RRF_K} + rn")
     return f"""
-{_bm25_leg_ctes(tf, dl, table, leg_k, n_body, t_body).strip()},
+{_bm25_leg_ctes(tf, dl, table, n_body=n_body, t_body=t_body).strip()},
 {_ql_scores_ctes(tf, dl).lstrip()},
 qltop AS (
   SELECT doc_id, ql_micro FROM qlp
-  ORDER BY ql_micro DESC, doc_id LIMIT {leg_k}
+  ORDER BY ql_micro DESC, doc_id LIMIT {HYBRID_LEG_K}
 ),
 qlr AS (
   SELECT doc_id,
@@ -495,7 +493,7 @@ SELECT doc_id, rrf_pico, bm25_rank, ql_rank, n_legs,
   {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
 FROM fused
 ORDER BY rrf_pico DESC, doc_id
-LIMIT {k}
+LIMIT {HYBRID_K}
 """
 
 
@@ -574,7 +572,6 @@ def _bm25_multi_ctes(
     dl: str,
     qt: str,
     table: str | None = None,
-    k: int = BM25_MULTI_K,
     n_body: str | None = None,
     t_body: str | None = None,
 ) -> str:
@@ -613,7 +610,7 @@ ranked AS (
 )
 SELECT query_id, doc_id, n_terms, score_micro, rk,
   {X.fround("CAST(score_micro AS DOUBLE) / 1.0E6", 6)} AS score_bm25
-FROM ranked WHERE rk <= {k}
+FROM ranked WHERE rk <= {BM25_MULTI_K}
 ORDER BY query_id, rk
 """
 
@@ -622,7 +619,6 @@ def bm25_multi_sql(
     d: str,
     table: str = "documents",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
-    k: int = BM25_MULTI_K,
 ) -> str:
     """Oracle form: plain CTEs."""
     return (
@@ -630,7 +626,7 @@ def bm25_multi_sql(
         f"qt AS ({bm25_queryset_sql(queries)}), "
         f"tfq AS ({bm25_tf_sql('tok', bm25_queryset_terms(queries))}), "
         f"dlt AS ({bm25_dl_sql('tok')}), "
-        + _bm25_multi_ctes("tfq", "dlt", "qt", table, k)
+        + _bm25_multi_ctes("tfq", "dlt", "qt", table)
     )
 
 
@@ -638,7 +634,6 @@ def bm25_multi_df(
     spark,
     table: str = "documents",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
-    k: int = BM25_MULTI_K,
 ):
     """Engine side: one corpus pass stages the per-doc (dl, term-tf)
     table (``_staged_tf_dl``); tf/dl ride as projections of that leaf; qt
@@ -648,7 +643,7 @@ def bm25_multi_df(
     with _staged_tf_dl(spark, table, bm25_queryset_terms(queries)) as v2:
         return spark.sql(
             f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-            + _bm25_multi_ctes(v2.tf, v2.dl, "qt", table, k)
+            + _bm25_multi_ctes(v2.tf, v2.dl, "qt", table)
         )
 
 
@@ -982,18 +977,15 @@ def _dense_sparse_ctes(
     table: str | None = None,
     leg_k: int = HYBRID_LEG_K,
     k: int = HYBRID_K,
-    n_body: str | None = None,
-    t_body: str | None = None,
 ) -> str:
     """CTE-list + final SELECT (no leading WITH) fusing the shared BM25
     leg (``_bm25_leg_ctes`` — the same fragment as the lexical fusion)
     with a dense leg read from relation ``dcos`` (vec_id, cosine).  Leg
     cuts are TakeOrdered; rank windows run over <= leg_k already-cut
-    rows.  ``n_body``/``t_body`` override the N/T scalar subqueries for
-    the indexed path."""
+    rows."""
     rrf = X.idiv(d, str(RRF_SCALE), f"{RRF_K} + rn")
     return f"""
-{_bm25_leg_ctes(tf, dl, table, leg_k, n_body, t_body).strip()},
+{_bm25_leg_ctes(tf, dl, table, leg_k).strip()},
 dtop AS (
   SELECT vec_id, cosine FROM {dcos}
   ORDER BY cosine DESC, vec_id LIMIT {leg_k}
@@ -1030,8 +1022,6 @@ def hybrid_dense_sparse_sql(
     vec_table: str = "embeddings",
     query: tuple[str, ...] = BM25_QUERY,
     query_vec: int = DENSE_QUERY_VEC,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
 ) -> str:
     """Oracle form: plain CTEs."""
     return (
@@ -1039,7 +1029,7 @@ def hybrid_dense_sparse_sql(
         f"tfq AS ({bm25_tf_sql('tok', query)}), "
         f"dlt AS ({bm25_dl_sql('tok')}), "
         f"dcos AS ({_dense_scored_sql(d, vec_table, query_vec)}), "
-        + _dense_sparse_ctes(d, "tfq", "dlt", "dcos", table, leg_k, k)
+        + _dense_sparse_ctes(d, "tfq", "dlt", "dcos", table)
     )
 
 
@@ -1143,8 +1133,6 @@ def hybrid_dense_sparse_multi_sql(
     table: str = "documents",
     vec_table: str = "embeddings",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
 ) -> str:
     """Oracle form: plain CTEs.  Each query_id's dense vector is the
     embedding of vec_id == query_id (the fixture's doc/vec pairing), so
@@ -1158,7 +1146,7 @@ def hybrid_dense_sparse_multi_sql(
         f"drm AS (SELECT query_id, vec_id AS doc_id, "
         f"ROW_NUMBER() OVER (PARTITION BY query_id "
         f"ORDER BY cosine DESC, vec_id) AS rn FROM dcosm), "
-        + _dense_sparse_multi_ctes(d, "tfq", "dlt", "qt", "drm", table, leg_k, k)
+        + _dense_sparse_multi_ctes(d, "tfq", "dlt", "qt", "drm", table)
     )
 
 
@@ -1235,8 +1223,6 @@ def hybrid_dense_sparse_multi_indexed(
     path: str,
     vec_table: str = "embeddings",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
 ):
     """Dense+sparse hybrid against the PERSISTED inverted index: the
     sparse leg reads |Q| pruned postings buckets + the doclen/stats
@@ -1246,7 +1232,7 @@ def hybrid_dense_sparse_multi_indexed(
     by construction (parity-tested)."""
     from .staging import staged_views
 
-    dr = _dense_multi_leg_df(spark, vec_table, sorted(queries), leg_k)
+    dr = _dense_multi_leg_df(spark, vec_table, sorted(queries), HYBRID_LEG_K)
     post, dl, n_body, t_body = _indexed_inputs(
         spark, path, bm25_queryset_terms(queries)
     )
@@ -1259,8 +1245,6 @@ def hybrid_dense_sparse_multi_indexed(
                 v.dl,
                 "qt",
                 v.drm,
-                leg_k=leg_k,
-                k=k,
                 n_body=n_body,
                 t_body=t_body,
             )
@@ -1282,12 +1266,6 @@ def _dense_sparse_weighted_ctes(
     qt: str,
     drm: str,
     table: str | None = None,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
-    w_sparse: int = HYBRID_W_SPARSE,
-    w_dense: int = HYBRID_W_DENSE,
-    n_body: str | None = None,
-    t_body: str | None = None,
 ) -> str:
     """CTE-list + final SELECT (no leading WITH): WEIGHTED reciprocal rank
     fusion — the leg-weighted generalization of the multi dense+sparse
@@ -1297,13 +1275,13 @@ def _dense_sparse_weighted_ctes(
     throughout: each leg's contribution is w * RRF_SCALE DIV (K + rn)."""
     rrf = X.idiv(d, f"w * {RRF_SCALE}", f"{RRF_K} + rn")
     return f"""
-{_bm25_multi_leg_ctes(tf, dl, qt, table, n_body, t_body).strip()},
+{_bm25_multi_leg_ctes(tf, dl, qt, table).strip()},
 legs AS (
-  SELECT query_id, doc_id, rn, {w_sparse} AS w, 1 AS is_sparse, 0 AS is_dense
-  FROM bm25r WHERE rn <= {leg_k}
+  SELECT query_id, doc_id, rn, {HYBRID_W_SPARSE} AS w, 1 AS is_sparse, 0 AS is_dense
+  FROM bm25r WHERE rn <= {HYBRID_LEG_K}
   UNION ALL
-  SELECT query_id, doc_id, rn, {w_dense} AS w, 0 AS is_sparse, 1 AS is_dense
-  FROM {drm} WHERE rn <= {leg_k}
+  SELECT query_id, doc_id, rn, {HYBRID_W_DENSE} AS w, 0 AS is_sparse, 1 AS is_dense
+  FROM {drm} WHERE rn <= {HYBRID_LEG_K}
 ),
 fused AS (
   SELECT query_id, doc_id,
@@ -1321,7 +1299,7 @@ ranked AS (
 )
 SELECT query_id, doc_id, rrf_pico, bm25_rank, dense_rank, n_legs, rk,
   {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
-FROM ranked WHERE rk <= {k}
+FROM ranked WHERE rk <= {HYBRID_K}
 ORDER BY query_id, rk
 """
 
@@ -1331,8 +1309,6 @@ def hybrid_weighted_sql(
     table: str = "documents",
     vec_table: str = "embeddings",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
 ) -> str:
     """Oracle form: plain CTEs (the multi dense+sparse oracle with the
     weighted fusion tail)."""
@@ -1346,7 +1322,7 @@ def hybrid_weighted_sql(
         f"ROW_NUMBER() OVER (PARTITION BY query_id "
         f"ORDER BY cosine DESC, vec_id) AS rn FROM dcosm), "
         + _dense_sparse_weighted_ctes(
-            d, "tfq", "dlt", "qt", "drm", table, leg_k, k
+            d, "tfq", "dlt", "qt", "drm", table
         )
     )
 
@@ -1356,21 +1332,19 @@ def hybrid_weighted_df(
     table: str = "documents",
     vec_table: str = "embeddings",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
 ):
     """Engine side: identical staging to hybrid_dense_sparse_multi_df,
     the weighted fusion fragment on top."""
     from .staging import staged_views
 
     d = X.SPARK
-    dr = _dense_multi_leg_df(spark, vec_table, sorted(queries), leg_k)
+    dr = _dense_multi_leg_df(spark, vec_table, sorted(queries), HYBRID_LEG_K)
     with _staged_tf_dl(spark, table, bm25_queryset_terms(queries)) as v2:
         with staged_views(spark, drm=dr) as v3:
             return spark.sql(
                 f"WITH qt AS ({bm25_queryset_sql(queries)}), "
                 + _dense_sparse_weighted_ctes(
-                    d, v2.tf, v2.dl, "qt", v3.drm, table, leg_k, k
+                    d, v2.tf, v2.dl, "qt", v3.drm, table
                 )
             )
 
@@ -1381,8 +1355,6 @@ def hybrid_dense_sparse_ann_indexed(
     ivf_path: str,
     query_vecs: dict[int, list[float]] | Callable[[], dict[int, list[float]]],
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
 ):
     """The FULLY-indexed hybrid — both legs on standing indexes, nothing
     scans the corpus at query time: the dense leg is IVF-probed ANN ranks
@@ -1393,7 +1365,7 @@ def hybrid_dense_sparse_ann_indexed(
     leg is APPROXIMATE by design (nprobe cells, not the whole corpus) —
     standard RRF semantics absorb that: a doc outside the probed cells
     simply contributes no dense-leg term, exactly like a doc outside a
-    leg's top-leg_k.  This is the production query path at 100 TB: per
+    leg's top-HYBRID_LEG_K.  This is the production query path at 100 TB: per
     query set, |Q| postings buckets + nprobe cell partitions, zero
     corpus passes.
 
@@ -1416,24 +1388,23 @@ def hybrid_dense_sparse_ann_indexed(
     # corpus; the ANN leg's ranks come from the standing index, so the
     # same semantics require the index to NOT contain the query vectors.
     # Make that dependency loud with a bounded pushed-down probe (vec_id
-    # IN-list + limit 1 — row-group min/max pruned).  qids come from the
+    # IN-list + isEmpty — row-group min/max pruned).  qids come from the
     # sparse queryset; the dense/sparse id-set equality is re-checked
     # below once the (possibly lazily collected) query_vecs resolve.
     qids = [int(i) for i in queries]
 
-    def _clash_count() -> int:
-        return (
+    def _clashes() -> bool:
+        return not (
             SI._read_index_or_empty(
                 spark, ivf_path, "vec_id bigint, embedding array<float>, cell int"
             )
             .filter(F.col("vec_id").isin(qids))
-            .limit(1)
-            .count()
+            .isEmpty()
         )
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_qv = pool.submit(query_vecs) if callable(query_vecs) else None
-        f_clash = pool.submit(_clash_count)
+        f_clash = pool.submit(_clashes)
         f_cent = pool.submit(_read_centroids, spark, ivf_path)
         f_inputs = pool.submit(
             _indexed_inputs, spark, text_path, bm25_queryset_terms(queries)
@@ -1450,7 +1421,7 @@ def hybrid_dense_sparse_ann_indexed(
                 "emit single-leg fusions"
             )
         # likewise the clash contract outranks the other reads' failures
-        if f_clash.result() > 0:
+        if f_clash.result():
             raise ValueError(
                 "hybrid_dense_sparse_ann_indexed: the dense index contains "
                 "a query vector — build it on the corpus slice excluding "
@@ -1461,7 +1432,7 @@ def hybrid_dense_sparse_ann_indexed(
         centers = f_cent.result()
         post, dl, n_body, t_body = f_inputs.result()
     dr = ivf_multi_indexed(
-        spark, ivf_path, qvecs, k=leg_k, centers=centers
+        spark, ivf_path, qvecs, k=HYBRID_LEG_K, centers=centers
     ).select(
         "query_id",
         F.col("vec_id").alias("doc_id"),
@@ -1476,8 +1447,6 @@ def hybrid_dense_sparse_ann_indexed(
                 v.dl,
                 "qt",
                 v.drm,
-                leg_k=leg_k,
-                k=k,
                 n_body=n_body,
                 t_body=t_body,
             )
@@ -1512,8 +1481,6 @@ def _pmi_score_ctes(
     d: str,
     base: str,
     uni: str,
-    min_pair: int = PMI_MIN_PAIR,
-    k: int = PMI_TOP_K,
 ) -> str:
     """CTE-list + final SELECT (no leading WITH) over relations ``base``
     (doc_id, toks, n) and ``uni`` (token, c)."""
@@ -1539,12 +1506,12 @@ joined AS (
   SELECT bi.w_a, bi.w_b, bi.c_ab, ua.c AS c_a, ub.c AS c_b
   FROM bi JOIN {uni} ua ON bi.w_a = ua.token
   JOIN {uni} ub ON bi.w_b = ub.token
-  WHERE bi.c_ab >= {min_pair}
+  WHERE bi.c_ab >= {PMI_MIN_PAIR}
 )
 SELECT w_a, w_b, c_ab, c_a, c_b, {pmi} AS pmi_micro
 FROM joined
 ORDER BY pmi_micro DESC, w_a, w_b
-LIMIT {k}
+LIMIT {PMI_TOP_K}
 """
 
 
@@ -1829,7 +1796,6 @@ def _assert_fresh_doc_ids(
     path: str,
     where: str,
     exclude_batch_id: int | None = None,
-    check_null_text: bool = False,
 ) -> int | None:
     """The text index's doc_id contract on an APPEND/INGEST batch: a
     re-ingested doc_id would land a SECOND doclen row and a second
@@ -1841,11 +1807,10 @@ def _assert_fresh_doc_ids(
 
     Returns the batch row count when bounded, else None — a streaming
     caller uses 0 to skip an empty landing without scheduling its own
-    emptiness-probe job.  With ``check_null_text=True`` the SAME collected
-    head also enforces the NULL-text contract for bounded batches
-    (oversized batches run the distributed ``_assert_no_null_text``
-    probe), so the per-micro-batch contract costs ONE driver collect
-    instead of three jobs."""
+    emptiness-probe job.  The SAME collected head also enforces the
+    NULL-text contract for bounded batches (oversized batches run the
+    distributed ``_assert_no_null_text`` probe), so the per-micro-batch
+    contract costs ONE driver collect instead of three jobs."""
     from pyspark.sql import functions as F
 
     # one collect serves EVERY probe for bounded batches: the ids come to
@@ -1854,29 +1819,28 @@ def _assert_fresh_doc_ids(
     # check a flag scan (saves the distributed groupBy+count and IsNull
     # jobs — measured ~0.3-0.4 s each of the per-micro-batch assert
     # cost); oversized batches keep the distributed probes
-    cols = ["doc_id"] + (
-        [F.isnull("text").alias("_tnull")] if check_null_text else []
+    head = (
+        new_docs.select("doc_id", F.isnull("text").alias("_tnull"))
+        .limit(_FRESH_PROBE_INLIST + 1)
+        .collect()
     )
-    head = new_docs.select(*cols).limit(_FRESH_PROBE_INLIST + 1).collect()
     head_ids = [r["doc_id"] for r in head]
     bounded = len(head) <= _FRESH_PROBE_INLIST
-    if check_null_text:
-        # same raise order as the standalone probe: NULL-text before dup
-        if bounded:
-            if any(r["_tnull"] for r in head):
-                raise ValueError(
-                    f"{where}: NULL-text docs are outside the text-index "
-                    "contract (they produce no tokens and no doclen row, "
-                    "so the append-time stats rebuild would drift N) — "
-                    "filter them out before indexing"
-                )
-        else:
-            _assert_no_null_text(new_docs, where)
+    # same raise order as the standalone probe: NULL-text before dup
     if bounded:
+        if any(r["_tnull"] for r in head):
+            raise ValueError(
+                f"{where}: NULL-text docs are outside the text-index "
+                "contract (they produce no tokens and no doclen row, "
+                "so the append-time stats rebuild would drift N) — "
+                "filter them out before indexing"
+            )
         has_dup = len(set(head_ids)) < len(head_ids)
     else:
-        dup = new_docs.groupBy("doc_id").count().filter("count > 1").limit(1)
-        has_dup = dup.count() > 0
+        _assert_no_null_text(new_docs, where)
+        has_dup = not (
+            new_docs.groupBy("doc_id").count().filter("count > 1").isEmpty()
+        )
     if has_dup:
         raise ValueError(
             f"{where}: batch repeats a doc_id — duplicate doc_ids are "
@@ -2069,7 +2033,6 @@ def bm25_multi_indexed(
     spark,
     path: str,
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
-    k: int = BM25_MULTI_K,
 ):
     """Multi-query BM25 against the persisted inverted index: route the
     UNION of all queries' terms to their buckets (one pruned postings scan
@@ -2086,7 +2049,7 @@ def bm25_multi_indexed(
         return spark.sql(
             f"WITH qt AS ({bm25_queryset_sql(queries)}), "
             + _bm25_multi_ctes(
-                v.tf, v.dl, "qt", k=k, n_body=n_body, t_body=t_body
+                v.tf, v.dl, "qt", n_body=n_body, t_body=t_body
             )
         )
 
@@ -2095,8 +2058,6 @@ def hybrid_rrf_topk_indexed(
     spark,
     path: str,
     query: tuple[str, ...] = BM25_QUERY,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
 ):
     """Hybrid RRF retrieval against the persisted inverted index — the
     compute-once-then-query production shape (the reference's whole design:
@@ -2123,8 +2084,6 @@ def hybrid_rrf_topk_indexed(
                 X.SPARK,
                 v.tf,
                 v.dl,
-                leg_k=leg_k,
-                k=k,
                 n_body=n_body,
                 t_body=t_body,
             )
@@ -2195,7 +2154,6 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
         path,
         "text_index_ingest_batch",
         exclude_batch_id=batch_id,
-        check_null_text=True,
     )
     if n_batch == 0:
         return  # empty batch: nothing to land, stats unchanged
@@ -2391,9 +2349,7 @@ def text_index_append(spark, path: str, new_docs) -> None:
 
     SI.require_layout(path, "tbucket", "flat", "text_index_append")
     # one contract collect: NULL-text + dup + freshness (bounded batches)
-    _assert_fresh_doc_ids(
-        spark, new_docs, path, "text_index_append", check_null_text=True
-    )
+    _assert_fresh_doc_ids(spark, new_docs, path, "text_index_append")
     view = "__text_index_append_docs"
     new_docs.createOrReplaceTempView(view)
     try:
@@ -2426,15 +2382,13 @@ def text_index_append(spark, path: str, new_docs) -> None:
     _rebuild_stats(spark, path)
 
 
-def compact_text_index(
-    spark, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict[str, int]:
+def compact_text_index(spark, path: str) -> dict[str, int]:
     """Flat-layout compaction of ``text_index_append``'s small files: each
     token bucket's postings and the doclen sidecar.  The stats sidecar
     needs no rebuild (it is a pure function of doclen, whose rows do not
-    change).  Returns ``{subdir_name: file_count}``."""
+    change).  Files are folded toward 128 MiB.  Returns ``{subdir_name: file_count}``."""
     return SI.compact_flat(
-        spark, path, "tbucket", target_bytes, sidecars=("doclen",)
+        spark, path, "tbucket", 128 * 1024 * 1024, sidecars=("doclen",)
     )
 
 

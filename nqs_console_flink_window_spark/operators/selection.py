@@ -126,13 +126,12 @@ def dsir_stats_sql(feats: str) -> str:
 def dsir_from_feats_sql(
     d: str,
     feats: str,
-    n_buckets: int = DSIR_BUCKETS,
-    top_k: int = DSIR_TOP_K,
 ) -> str:
     """DSIR scoring over a prepared feature stream ``feats`` (a CTE/view
     name with columns doc_id, b, is_target).
 
-    Laplace-smoothed bucket distributions:  p_t(b) = (ct_b + 1)/(Tt + B),
+    Laplace-smoothed bucket distributions (B = DSIR_BUCKETS):
+    p_t(b) = (ct_b + 1)/(Tt + B),
     p_r(b) = (cr_b + 1)/(Tr + B).  Per-doc importance log-weight in exact
     micro-nats:
 
@@ -141,7 +140,7 @@ def dsir_from_feats_sql(
     Resampling key adds deterministic Gumbel noise g = -ln(-ln(u)) with
     u = (md5(doc_id) mod 2^20 + 0.5) / 2^20 (Gumbel-top-k sampling without
     replacement == DSIR's importance resampling); ``sampled`` marks the
-    top-k keys via ORDER BY + LIMIT (TakeOrdered in Spark: no global
+    top-DSIR_TOP_K keys via ORDER BY + LIMIT (TakeOrdered in Spark: no global
     sort)."""
     seed = "'dsir:' || CAST(doc_id AS STRING)"
     u = f"(CAST({X.md5_int(d, seed)} % 1048576 AS DOUBLE) + 0.5) / 1048576.0"
@@ -156,7 +155,7 @@ lr AS (
   SELECT b, {qln_micro("ct + 1")} - {qln_micro("cr + 1")} AS qlr FROM stats
 ),
 norm AS (
-  SELECT {qln_micro(f"tr + {n_buckets}")} - {qln_micro(f"tt + {n_buckets}")} AS qnorm
+  SELECT {qln_micro(f"tr + {DSIR_BUCKETS}")} - {qln_micro(f"tt + {DSIR_BUCKETS}")} AS qnorm
   FROM tot
 ),
 docw AS (
@@ -175,7 +174,7 @@ keyed AS (
   FROM docw
 ),
 topk AS (
-  SELECT doc_id FROM keyed ORDER BY sel_key_micro DESC, doc_id LIMIT {top_k}
+  SELECT doc_id FROM keyed ORDER BY sel_key_micro DESC, doc_id LIMIT {DSIR_TOP_K}
 )
 SELECT k.doc_id, k.n_feats,
   CAST(k.lw_micro AS DOUBLE) / 1.0E6 AS log_weight,
@@ -257,9 +256,9 @@ FROM agg
 BPE_TOP_PAIRS = 20
 
 
-def bpe_merge_pairs_sql(d: str, table: str = "documents", top: int = BPE_TOP_PAIRS) -> str:
+def bpe_merge_pairs_sql(d: str, table: str = "documents") -> str:
     """First BPE iteration's pair statistics: adjacent character-pair
-    counts weighted by corpus word frequency, top ``top`` merge candidates
+    counts weighted by corpus word frequency, top BPE_TOP_PAIRS merge candidates
     (count desc, pair asc — the deterministic tiebreak ``bpe_train`` uses).
 
     The explode runs over the DISTINCT-word vocabulary (sublinear in corpus
@@ -279,7 +278,7 @@ SELECT substr(tok, i, 1) AS left_sym,
 FROM {pos} p
 GROUP BY substr(tok, i, 1), substr(tok, i + 1, 1)
 ORDER BY pair_count DESC, left_sym, right_sym
-LIMIT {top}
+LIMIT {BPE_TOP_PAIRS}
 """
 
 
@@ -288,60 +287,10 @@ def bpe_train(spark, docs_df, n_merges: int = 8) -> list[tuple[str, str, int]]:
     pairs over the vocab, merge the argmax pair everywhere).  Returns the
     learned merge list [(left, right, count), ...] in merge order.
 
-    Iterative Spark algorithm in the ``dedup_clusters`` mold: state is a
-    vocab DataFrame (word -> symbol array + freq), each round is one
-    aggregation (pair counts, combinable map-side) and one projection (the
-    merge rewrite as a pure ``aggregate`` HOF fold — no Python in the
-    executor path).  The argmax is a 1-row TakeOrdered; vocab is
-    localCheckpoint-ed per round so lineage stays flat.  At 100 TB the
-    vocab table is sublinear in corpus size and the per-round cost is
-    O(vocab); the corpus-size token stream is touched exactly once, up
-    front."""
-    from pyspark.sql import functions as F
-
-    vocab = (
-        docs_df.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
-        .where(F.length("tok") >= 2)
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select(F.expr("transform(split(tok, ''), x -> x)").alias("syms"), "freq")
-        .localCheckpoint()
-    )
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        pairs = (
-            # size >= 2 guard: a fully-merged word is a 1-symbol array, and
-            # Spark's sequence(1, 0) DESCENDS ([1, 0]) instead of emitting
-            # nothing — element_at(syms, 2) would then throw
-            vocab.where(F.size("syms") >= 2)
-            .select(
-                F.expr(
-                    "explode(transform(sequence(1, size(syms) - 1), "
-                    "i -> struct(element_at(syms, i) AS a, element_at(syms, i + 1) AS b)))"
-                ).alias("p"),
-                "freq",
-            )
-            .where(F.col("p.a").isNotNull() & F.col("p.b").isNotNull())
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("freq").alias("cnt"))
-            .orderBy(F.desc("cnt"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not pairs or pairs[0]["cnt"] < 2:
-            break
-        a, b, cnt = pairs[0]["a"], pairs[0]["b"], int(pairs[0]["cnt"])
-        merges.append((a, b, cnt))
-        # Left-to-right single-pass merge as an aggregate-HOF fold: append
-        # each symbol, but when the accumulator ends in `a` and the next
-        # symbol is `b`, replace that tail element with the merged symbol —
-        # exactly the reference Python merge below (test-verified).  The
-        # fold is the SAME expression bpe_encode chains, so training-time
-        # and encode-time segmentation cannot drift.
-        vocab = vocab.select(
-            F.expr(_merge_fold_expr("syms", a, b)).alias("syms"), "freq"
-        ).localCheckpoint()
-    return merges
+    The batched trainer at ``batch=1``: each round keeps only the top
+    pair, which is exactly the greedy schedule (``bpe_train_reference``
+    pins it independently)."""
+    return bpe_train_batched(spark, docs_df, n_merges, batch=1)
 
 
 def _pick_nonconflicting(
@@ -373,15 +322,16 @@ def bpe_train_batched(
     ``batch`` non-conflicting top pairs (no shared symbols, so every
     accepted count was exact at round start) in a single chained rewrite.
 
-    Job-count knob for production merge budgets: ``bpe_train`` launches
-    ~2 Spark jobs per merge (pair-count argmax + checkpoint), so 32k merges
+    Job-count knob for production merge budgets: greedy (``bpe_train``,
+    batch=1) launches ~2 Spark jobs per merge (pair-count argmax +
+    checkpoint), so 32k merges
     is ~64k jobs; the batched schedule is ~2 jobs per ROUND — measured on
     the sf0.001 fixture: 8 merges = 16 jobs greedy vs 4 jobs at batch=4
     (2 rounds, `last_rounds` attribute).  At batch=256 a 32k-merge build is
     ~250 rounds.  The schedule can differ from strict greedy when a merge
     would have created a new pair outranking a batch-mate (standard
     batched-BPE trade; parity is pinned against the batched Python
-    reference, and batch=1 degenerates to ``bpe_train``'s schedule)."""
+    reference; batch=1 IS the greedy schedule, ``bpe_train``)."""
     from pyspark.sql import functions as F
 
     vocab = (

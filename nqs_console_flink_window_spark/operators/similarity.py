@@ -171,6 +171,7 @@ FROM sums
 LSH_TABLES = 8
 LSH_PLANES = 4
 SRP_SCALE = 1 << 20  # quantization: q[d] = floor(x[d] * 2^20 + 0.5), exact in IEEE
+VEC_DIM = 64  # embedding width the SRP planes and JL signs are drawn for
 
 
 def _srp_sign(t: int, p: int, d: int) -> int:
@@ -194,7 +195,7 @@ def _srp_signs(dim: int) -> np.ndarray:
     )
 
 
-def srp_buckets_duck_sql(vec_table: str = "embeddings", dim: int = 64) -> str:
+def srp_buckets_duck_sql(vec_table: str = "embeddings") -> str:
     """DuckDB oracle twin of ``with_lsh_buckets``: (vec_id, tbl, bucket) via
     the same quantization + md5-sign rule, all integer-exact."""
     from ..functions import dialect as X
@@ -213,34 +214,34 @@ FROM (
     SELECT vec_id, d,
            CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {float(SRP_SCALE)} + 0.5)
                 AS BIGINT) AS q
-    FROM (SELECT vec_id, embedding, unnest(range({dim})) AS d FROM {vec_table})
+    FROM (SELECT vec_id, embedding, unnest(range({VEC_DIM})) AS d FROM {vec_table})
   ) qv
   JOIN (
     SELECT t, p, d,
            (CASE WHEN {sign} % 2 = 1 THEN 1 ELSE -1 END) AS s
     FROM (SELECT unnest(range({LSH_TABLES})) AS t)
     CROSS JOIN (SELECT unnest(range({LSH_PLANES})) AS p)
-    CROSS JOIN (SELECT unnest(range({dim})) AS d)
+    CROSS JOIN (SELECT unnest(range({VEC_DIM})) AS d)
   ) pl ON qv.d = pl.d
   GROUP BY 1, 2, 3
 ) GROUP BY vec_id, t
 """
 
 
-def with_lsh_buckets(df: DataFrame, vec_col: str = "embedding", dim: int = 64) -> DataFrame:
+def with_lsh_buckets(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Adds an array<int> of LSH_TABLES bucket ids (SRP signatures).
 
-    Vectorized: each Arrow batch becomes one integer numpy (n, dim) @
-    (dim, T*P) matmul — the idiomatic Pandas-UDF fast path.  float32 ->
+    Vectorized: each Arrow batch becomes one integer numpy (n, VEC_DIM) @
+    (VEC_DIM, T*P) matmul — the idiomatic Pandas-UDF fast path.  float32 ->
     float64 widening, *2^20, floor(+0.5) and the int64 dot are all exact,
     so the buckets match ``srp_buckets_duck_sql`` bit-for-bit.
     """
-    signs = _srp_signs(dim).T  # (dim, T*P)
+    signs = _srp_signs(VEC_DIM).T  # (VEC_DIM, T*P)
     weights = np.power(2, np.arange(LSH_PLANES))
 
     @F.pandas_udf("array<int>")
     def buckets(v: pd.Series) -> pd.Series:
-        mat = np.asarray([np.asarray(x, dtype=np.float64) for x in v])  # (n, dim)
+        mat = np.asarray([np.asarray(x, dtype=np.float64) for x in v])  # (n, VEC_DIM)
         q = np.floor(mat * float(SRP_SCALE) + 0.5).astype(np.int64)
         bits = (q @ signs >= 0).reshape(len(v), LSH_TABLES, LSH_PLANES)
         ids = (bits * weights).sum(axis=2).astype(np.int32)  # (n, T)
@@ -546,18 +547,18 @@ def ivf_topk_indexed(
     """IVF search against a persisted index: rank stored centroids, read only
     the nprobe nearest cell partitions (partition pruning — check
     ``df.inputFiles()``), exact cosine re-rank inside them."""
-    cent = {
-        r["cell"]: np.asarray(r["centroid"])
-        for r in spark.read.parquet(f"{path}.centroids").collect()
-    }
-    q = np.asarray(query_vec, dtype=np.float64)
-    d2 = {c: ((v - q) ** 2).sum() for c, v in cent.items()}
-    probe_cells = sorted(d2, key=d2.get)[:IVF_NPROBE]
-
-    q_lit = "array(" + ", ".join(f"CAST({float(x)!r} AS FLOAT)" for x in query_vec) + ")"
+    probe_cells = _route_cells(_read_centroids(spark, path), query_vec)
     cand = _read_index_or_empty(
         spark, path, "vec_id bigint, embedding array<float>, cell int"
     ).filter(F.col("cell").isin(probe_cells))
+    return _cosine_topk(cand, query_vec, k)
+
+
+def _cosine_topk(cand: DataFrame, query_vec: list[float], k: int) -> DataFrame:
+    """THE single-query IVF tail shared by ``ivf_topk`` and
+    ``ivf_topk_indexed``: exact cosine of the probed cells' vectors against
+    the query (FLOAT literal), top ``k`` by (cosine DESC, vec_id)."""
+    q_lit = "array(" + ", ".join(f"CAST({float(x)!r} AS FLOAT)" for x in query_vec) + ")"
     scored = cand.withColumn("cosine", F.expr(cosine_spark("embedding", q_lit)))
     return (
         scored.orderBy(F.col("cosine").desc(), F.col("vec_id"))
@@ -635,12 +636,19 @@ def _probe_table(spark, centers: np.ndarray, queries: dict[int, list[float]]):
     return spark.createDataFrame(rows, "query_id int, cell int, qe array<float>")
 
 
-def _route_cells(centers: np.ndarray, query_vec: list[float]) -> list[int]:
-    """A query's IVF_NPROBE nearest cells — THE routing rule, shared by the
-    probe table and the pruned-scan cell union so they cannot drift."""
+def _ranked_cells(centers: np.ndarray, query_vec: list[float]) -> list[int]:
+    """Every cell id, nearest centroid (squared L2) to ``query_vec`` first —
+    THE routing order; a search probes a prefix of it."""
     q = np.asarray(query_vec, dtype=np.float64)
     d2 = ((centers - q) ** 2).sum(axis=1)
-    return [int(c) for c in np.argsort(d2)[:IVF_NPROBE]]
+    return [int(c) for c in np.argsort(d2)]
+
+
+def _route_cells(centers: np.ndarray, query_vec: list[float]) -> list[int]:
+    """A query's IVF_NPROBE nearest cells — THE routing rule, shared by the
+    probe table, the pruned-scan cell union and the single-query searches
+    so they cannot drift."""
+    return _ranked_cells(centers, query_vec)[:IVF_NPROBE]
 
 
 def ivf_multi_indexed(
@@ -689,17 +697,9 @@ def ivf_topk(
     ``nprobe`` is THE recall/cost knob (more cells = more recall, more
     scan) — the audit sweeps it to pin the knob's monotonicity."""
     assigned, centers = ivf_assignments(df)
-    q = np.asarray(query_vec, dtype=np.float64)
-    d2 = ((centers - q) ** 2).sum(axis=1)
-    probe_cells = [int(c) for c in np.argsort(d2)[:nprobe]]
-
-    q_lit = "array(" + ", ".join(f"CAST({float(x)!r} AS FLOAT)" for x in query_vec) + ")"
-    cand = assigned.filter(F.col("cell").isin(probe_cells))
-    scored = cand.withColumn("cosine", F.expr(cosine_spark("embedding", q_lit)))
-    return (
-        scored.orderBy(F.col("cosine").desc(), F.col("vec_id"))
-        .select("vec_id", "cell", "cosine")
-        .limit(k)
+    probe_cells = _ranked_cells(centers, query_vec)[:nprobe]
+    return _cosine_topk(
+        assigned.filter(F.col("cell").isin(probe_cells)), query_vec, k
     )
 
 
@@ -790,9 +790,9 @@ def _qnorm_spark(qvec: str) -> str:
     )
 
 
-def semdedup_prune(df: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
+def semdedup_prune(df: DataFrame) -> DataFrame:
     """(vec_id, cluster, is_kept) — is_kept=false iff a lower-id vector in
-    the same SRP cluster has quantized cosine >= tau."""
+    the same SRP cluster has quantized cosine >= SEMDEDUP_TAU."""
     # _clustered_quantized checkpoints: the prepared table feeds three
     # consumers (both join sides + the final keep-flag join), so the Arrow
     # bucket UDF and the quantization run once, not three times (same
@@ -814,7 +814,7 @@ def semdedup_prune(df: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
         (F.col("a_cluster") == F.col("b_cluster")) & (F.col("a_id") < F.col("b_id")),
     )
     pruned = (
-        pairs.filter(F.expr(_qcos_expr()) >= tau)
+        pairs.filter(F.expr(_qcos_expr()) >= SEMDEDUP_TAU)
         .select(F.col("b_id").alias("vec_id"))
         .distinct()
     )
@@ -829,7 +829,7 @@ def semdedup_prune(df: DataFrame, tau: float = SEMDEDUP_TAU) -> DataFrame:
     )
 
 
-def semdedup_duck_sql(tau: float = SEMDEDUP_TAU, vec_table: str = "embeddings") -> str:
+def semdedup_duck_sql(vec_table: str = "embeddings") -> str:
     """DuckDB oracle twin: same multi-table SRP cluster key, same quantized
     vectors/precomputed norms, same BIGINT pairwise dot + lower-id prune."""
     return f"""
@@ -849,7 +849,7 @@ pruned AS (
   JOIN n nlb ON nlb.vec_id = p.b_id
   WHERE CASE WHEN nla.nq = 0 OR nlb.nq = 0 THEN 0.0
              ELSE (floor((CAST(p.dot AS DOUBLE) / (SQRT(CAST(nla.nq AS DOUBLE)) * SQRT(CAST(nlb.nq AS DOUBLE)))) * 1.0E8 + 0.5) / 1.0E8)
-        END >= {tau}
+        END >= {SEMDEDUP_TAU}
 )
 SELECT c.vec_id, c.cluster, (p.vec_id IS NULL) AS is_kept
 FROM c LEFT JOIN pruned p ON c.vec_id = p.vec_id
@@ -1030,6 +1030,7 @@ FROM (
 PQ_M = 8       # subspaces
 PQ_K = 16      # centroids per subspace codebook
 PQ_SEED = 77
+PQ_RERANK = 4  # ADC short list = PQ_RERANK * k ids, exact-cosine re-ranked
 _PQ_BOOKS: dict = {}
 
 
@@ -1209,25 +1210,22 @@ def pq_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    rerank: int = 4,
-    books: np.ndarray | None = None,
 ) -> DataFrame:
     """ADC top-k: build the query's M x K dot-product lookup table once,
     estimate every candidate's dot as M gathers over its code array (pure
     SQL element_at arithmetic — JVM-side, no Python per candidate), take
-    the top ``rerank * k`` by estimate, exact-cosine re-rank that short
+    the top ``PQ_RERANK * k`` by estimate, exact-cosine re-rank that short
     list, return k.  Codes are computed here for the demo; at scale the
     codes table is precomputed and the float column never scanned."""
-    if books is None:
-        books = _pq_codebooks(df)
+    books = _pq_codebooks(df)
     q = np.asarray(query_vec, dtype=np.float64)
     est = _adc_expr(_adc_lut(books, q))
     coded = pq_encode(df, books=books)
-    return _shortlist_rerank(coded, est, query_vec, k, rerank)
+    return _shortlist_rerank(coded, est, query_vec, k)
 
 
 def _shortlist_rerank(
-    coded: DataFrame, est: str, query_vec: list[float], k: int, rerank: int
+    coded: DataFrame, est: str, query_vec: list[float], k: int
 ) -> DataFrame:
     """THE ADC shortlist + exact re-rank tail shared by pq_topk and
     ivfpq_topk (one home for the (est_dot DESC, vec_id) cut, the FLOAT
@@ -1236,7 +1234,7 @@ def _shortlist_rerank(
     short = (
         coded.withColumn("est_dot", F.expr(est))
         .orderBy(F.col("est_dot").desc(), F.col("vec_id"))
-        .limit(rerank * k)
+        .limit(PQ_RERANK * k)
     )
     q_lit = "array(" + ", ".join(
         f"CAST({float(x)!r} AS FLOAT)" for x in query_vec
@@ -1250,7 +1248,7 @@ def _shortlist_rerank(
 
 
 def ivfpq_topk(
-    df: DataFrame, query_vec: list[float], k: int = 10, rerank: int = 4,
+    df: DataFrame, query_vec: list[float], k: int = 10,
     nprobe: int | None = None,
 ) -> DataFrame:
     """IVF-PQ composition — the canonical production ANN index shape
@@ -1268,15 +1266,12 @@ def ivfpq_topk(
     assigned, centers = ivf_assignments(df)
     books = _ivfpq_books(df, centers)
     q = np.asarray(query_vec, dtype=np.float64)
-    d2 = ((centers - q) ** 2).sum(1)
-    probe_cells = [
-        int(c) for c in d2.argsort()[: (nprobe or IVF_NPROBE)]
-    ]
+    probe_cells = _ranked_cells(centers, query_vec)[: (nprobe or IVF_NPROBE)]
     coded = pq_encode_residual(
         assigned.filter(F.col("cell").isin(probe_cells)), books, centers
     )
     est = _adc_cell_expr(_adc_lut(books, q), centers @ q)
-    return _shortlist_rerank(coded, est, query_vec, k, rerank)
+    return _shortlist_rerank(coded, est, query_vec, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1400,13 +1395,12 @@ def ivfpq_topk_indexed(
     vectors_df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    rerank: int = 4,
 ) -> DataFrame:
     """IVF-PQ search against the PERSISTED codes index: rank the stored
     centroids, scan only the nprobe nearest cells' code partitions
     (file-listing pruning — the scan never opens other cells' files),
     ADC-score via the SAME shared gather expression as the online form,
-    cut to rerank*k by (est_dot DESC, vec_id), then fetch exactly those
+    cut to PQ_RERANK*k by (est_dot DESC, vec_id), then fetch exactly those
     ids' float vectors from ``vectors_df`` (the row store) for the exact
     cosine re-rank.  Bit-identical to ``ivfpq_topk`` by construction —
     same Lloyd artifacts (persisted == in-memory through the exact
@@ -1415,8 +1409,7 @@ def ivfpq_topk_indexed(
     centers = _read_centroids(spark, path)
     books = _read_codebooks(spark, path)
     q = np.asarray(query_vec, dtype=np.float64)
-    d2 = ((centers - q) ** 2).sum(1)
-    probe_cells = [int(c) for c in d2.argsort()[:IVF_NPROBE]]
+    probe_cells = _route_cells(centers, query_vec)
     est = _adc_cell_expr(_adc_lut(books, q), centers @ q)
     short = (
         _read_index_or_empty(
@@ -1425,10 +1418,10 @@ def ivfpq_topk_indexed(
         .filter(F.col("cell").isin(probe_cells))
         .withColumn("est_dot", F.expr(est))
         .orderBy(F.col("est_dot").desc(), F.col("vec_id"))
-        .limit(rerank * k)
+        .limit(PQ_RERANK * k)
         .select("vec_id", "est_dot")
     )
-    # rerank*k ids cross the driver — bounded by construction; the literal
+    # PQ_RERANK*k ids cross the driver — bounded by construction; the literal
     # IN-list pushes into the row-store scan (row-group min/max pruning)
     # instead of shuffling the whole vector table for a k-row join
     short_rows = short.collect()
@@ -1501,12 +1494,11 @@ def incremental_embedding_dedup(
     new_vecs: DataFrame,
     index_buckets: DataFrame | None,
     index_vecs: DataFrame | None,
-    tau: float = SEMDEDUP_TAU,
 ):
     """Dedup ``new_vecs`` against the persisted index (None for the first
     batch) and within the batch (greedy keep-min: a vector drops iff an
     index vector or a LOWER-id batch-mate shares an SRP bucket with
-    quantized cosine >= tau).  Returns ``(kept, kept_buckets, kept_qvecs)``
+    quantized cosine >= SEMDEDUP_TAU).  Returns ``(kept, kept_buckets, kept_qvecs)``
     — append the latter two to the index to ingest the batch."""
     prep = embedding_dedup_prep(new_vecs)
     buckets = prep.select(
@@ -1544,7 +1536,7 @@ def incremental_embedding_dedup(
         dup = (
             cand.join(iq, "a_id")
             .join(qb, "b_id")
-            .filter(F.expr(_qcos_expr()) >= tau)
+            .filter(F.expr(_qcos_expr()) >= SEMDEDUP_TAU)
             .select(F.col("b_id").alias("vec_id"))
             .distinct()
         )
@@ -1571,7 +1563,7 @@ def incremental_embedding_dedup(
     in_batch = (
         cand_pairs.join(qa, "a_id")
         .join(qb, "b_id")
-        .filter(F.expr(_qcos_expr()) >= tau)
+        .filter(F.expr(_qcos_expr()) >= SEMDEDUP_TAU)
         .select(F.col("b_id").alias("vec_id"))
         .distinct()
     )
@@ -1588,7 +1580,7 @@ def incremental_embedding_dedup(
 
 
 def incremental_embedding_dedup_duck_sql(
-    split: int | str, tau: float = SEMDEDUP_TAU, vec_table: str = "embeddings"
+    split: int | str, vec_table: str = "embeddings"
 ) -> str:
     """DuckDB twin of the 2-batch composition (batch 1 = vec_id < split):
     same SRP buckets, same bounded LAG candidates within each batch, same
@@ -1652,7 +1644,7 @@ qn AS (
   JOIN n nla ON nla.vec_id = d.a_id
   JOIN n nlb ON nlb.vec_id = d.b_id
 ),
-sim AS (SELECT a_id, b_id FROM qn WHERE {qcos} >= {tau}),
+sim AS (SELECT a_id, b_id FROM qn WHERE {qcos} >= {SEMDEDUP_TAU}),
 dup1 AS (
   SELECT DISTINCT b_id AS vec_id FROM sim
   WHERE a_id < {split} AND b_id < {split}
@@ -1701,12 +1693,12 @@ def _jl_signs(dim: int) -> np.ndarray:
     )
 
 
-def jl_project(df: DataFrame, vec_col: str = "embedding", dim: int = 64) -> DataFrame:
+def jl_project(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     """Deterministic JL sign projection (Achlioptas 2003 ±1 variant):
     y_j = sum_d s(j,d) * v_d / sqrt(JL_K), quantized-integer-exact.
 
     The kernel is the with_lsh_buckets shape — one Arrow batch = one
-    (n, dim) @ (dim, JL_K) int64 matmul over broadcast signs; float32 ->
+    (n, VEC_DIM) @ (VEC_DIM, JL_K) int64 matmul over broadcast signs; float32 ->
     float64 widening, *2^20 quantization and the integer dot are exact,
     and the one division is by SRP_SCALE * sqrt(16) = 2^22 (exact), so
     components reproduce bit-for-bit in any engine.  Adds ``jl`` as
@@ -1714,7 +1706,7 @@ def jl_project(df: DataFrame, vec_col: str = "embedding", dim: int = 64) -> Data
     at distortion ~sqrt(2/k) (pytest-bounded).  At 100 TB this is the
     embedding-compression map stage: 64 float32 -> 16 float64 (or cast
     back to float32 for 8x), no shuffle anywhere."""
-    signs = _jl_signs(dim).T  # (dim, JL_K)
+    signs = _jl_signs(VEC_DIM).T  # (VEC_DIM, JL_K)
 
     @F.pandas_udf("array<double>")
     def project(v: pd.Series) -> pd.Series:
@@ -1726,7 +1718,7 @@ def jl_project(df: DataFrame, vec_col: str = "embedding", dim: int = 64) -> Data
     return df.withColumn("jl", project(F.col(vec_col)))
 
 
-def jl_project_duck_sql(vec_table: str = "embeddings", dim: int = 64) -> str:
+def jl_project_duck_sql(vec_table: str = "embeddings") -> str:
     """DuckDB twin in long form (vec_id, j, comp) — the value-hash gate
     canonicalizes scalars only, so the array is exploded for comparison."""
     from ..functions import dialect as X
@@ -1742,12 +1734,12 @@ FROM (
   SELECT vec_id, d,
          CAST(floor(CAST(embedding[d + 1] AS DOUBLE) * {float(SRP_SCALE)} + 0.5)
               AS BIGINT) AS q
-  FROM (SELECT vec_id, embedding, unnest(range({dim})) AS d FROM {vec_table})
+  FROM (SELECT vec_id, embedding, unnest(range({VEC_DIM})) AS d FROM {vec_table})
 ) qv
 JOIN (
   SELECT j, d, (CASE WHEN {sign} % 2 = 1 THEN 1 ELSE -1 END) AS s
   FROM (SELECT unnest(range({JL_K})) AS j)
-  CROSS JOIN (SELECT unnest(range({dim})) AS d)
+  CROSS JOIN (SELECT unnest(range({VEC_DIM})) AS d)
 ) pl USING (d)
 GROUP BY vec_id, j
 """

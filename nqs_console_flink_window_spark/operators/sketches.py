@@ -27,6 +27,7 @@ from ..operators.text import tokens_expr
 
 CMS_DEPTH = 4
 CMS_WIDTH = 256
+CMS_TOPK = 20  # cms_sql probes the exact global top-CMS_TOPK tokens
 
 
 def bucket_expr(d: str, row: str, token: str) -> str:
@@ -55,8 +56,8 @@ def _rows_src(d: str) -> str:
     )
 
 
-def cms_sql(d: str, table: str = "documents", topk: int = 20) -> str:
-    """Build the sketch, then estimate the exact global top-``topk`` tokens
+def cms_sql(d: str, table: str = "documents") -> str:
+    """Build the sketch, then estimate the exact global top-CMS_TOPK tokens
     against it.  Output: token, exact count, CMS estimate, and the
     invariant flag ``est_ge_exact`` (must be all-1)."""
     build_bucket = bucket_expr(d, "r", "token")
@@ -84,7 +85,7 @@ cms AS (
 exact AS (
   SELECT token, CAST(COUNT(*) AS BIGINT) AS exact_cnt
   FROM toks GROUP BY token
-  ORDER BY exact_cnt DESC, token LIMIT {topk}
+  ORDER BY exact_cnt DESC, token LIMIT {CMS_TOPK}
 ),
 probes AS (
   SELECT token, exact_cnt, r, {probe_bucket} AS b FROM {probe_fan} pf
@@ -359,7 +360,7 @@ FROM sel
 
 
 def fixed_domain_hist(
-    df, key: str, val: str, lo: float, hi: float, bins: int = HQ_BINS
+    df, key: str, val: str, lo: float, hi: float
 ):
     """Per-key fixed-domain histogram (k, b, c) — the MERGEABLE form: with
     the domain fixed up front (no data-dependent min/max pass), per-batch
@@ -371,14 +372,14 @@ def fixed_domain_hist(
     (:func:`hq_finite`)."""
     from pyspark.sql import functions as F
 
-    w = (hi - lo) / float(bins)
+    w = (hi - lo) / float(HQ_BINS)
     # Clamp in LONG space BEFORE the int cast: a far-out-of-domain value
     # (or +inf) yields a floor() beyond int32 — casting first would wrap
     # (or throw under ANSI) and land the value in the BOTTOM bin instead of
     # the promised edge bin.  floor() of a double column is LONG already.
     b = (
         F.least(
-            F.lit(bins - 1).cast("long"),
+            F.lit(HQ_BINS - 1).cast("long"),
             F.greatest(
                 F.lit(0).cast("long"),
                 F.floor((F.col(val) - F.lit(lo)) / F.lit(w)),
@@ -393,13 +394,13 @@ def fixed_domain_hist(
     )
 
 
-def quantiles_from_hist(hist, lo: float, hi: float, bins: int = HQ_BINS):
+def quantiles_from_hist(hist, lo: float, hi: float):
     """Read p50/p90/p99 off a (k, b, c) histogram (merged or single-pass)
     with the same mid-bin rank rule as histogram_quantiles_sql."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    w = (hi - lo) / float(bins)
+    w = (hi - lo) / float(HQ_BINS)
     cum = hist.groupBy("k", "b").agg(F.sum("c").alias("c")).withColumn(
         "cum",
         F.sum("c").over(
@@ -425,7 +426,6 @@ def robust_outlier_bounds_sql(
     table: str = "events",
     key: str = "event_type",
     val: str = "value",
-    k: float = 3.0,
     med_src: str | None = None,
     dev_src: str | None = None,
 ) -> str:
@@ -433,7 +433,7 @@ def robust_outlier_bounds_sql(
     corpus statistics: center = histogram median, spread = histogram p90 of
     absolute deviations (the quantile analogue of MAD — mean/stddev would
     let the outliers define their own trim threshold).  Emits per key the
-    bounds [med - k*spread, med + k*spread] and kept/trimmed counts.
+    bounds [med - 3*spread, med + 3*spread] and kept/trimmed counts.
 
     Everything rides histogram_quantiles_sql, so the whole thing is
     sort-free, bounded-state, and deterministic IEEE on both engines
@@ -450,7 +450,7 @@ def robust_outlier_bounds_sql(
         f"(SELECT {key} AS dk, p90 AS spread "
         f"FROM ({histogram_quantiles_sql(d, devs, key, val)}) dq)"
     )
-    kf = f"{k!r}E0" if "e" not in repr(float(k)) else repr(float(k))
+    kf = "3.0E0"  # a DOUBLE literal on both engines
     return f"""
 SELECT e.{key},
   m.med - {kf} * s.spread AS lo_bound,
@@ -518,6 +518,7 @@ def histogram_quantiles_df(df, key: str = "event_type", val: str = "value"):
 
 
 PSI_BINS = 64  # coarse on purpose: Laplace +1 smoothing stays mild
+PSI_LO, PSI_HI = 0.0, 1000.0  # the fixed [lo, hi) PSI value domain
 
 
 def _dlit(v: float) -> str:
@@ -561,8 +562,6 @@ def psi_drift_df(
     key: str = "event_type",
     val: str = "value",
     cohort: str = "user_id % 2",
-    lo: float = 0.0,
-    hi: float = 1000.0,
 ):
     """DataFrame twin of :func:`psi_drift_sql` for the Spark engine side:
     the bounded histogram (<= keys x 2 x PSI_BINS rows) is checkpointed
@@ -576,7 +575,7 @@ def psi_drift_df(
         .select(
             F.col(key).alias("k"),
             F.expr(f"CAST({cohort} AS INT)").alias("cohort"),
-            F.expr(psi_bin_expr(val, lo, hi)).alias("b"),
+            F.expr(psi_bin_expr(val, PSI_LO, PSI_HI)).alias("b"),
         )
         .groupBy("k", "cohort", "b")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -618,8 +617,6 @@ def psi_drift_sql(
     key: str = "event_type",
     val: str = "value",
     cohort: str = "user_id % 2",
-    lo: float = 0.0,
-    hi: float = 1000.0,
     hist_src: str | None = None,
 ) -> str:
     """Population Stability Index between two cohorts per key — the
@@ -630,7 +627,7 @@ def psi_drift_sql(
 
     PSI = sum_bins (p_i - q_i) * (ln p_i - ln q_i), with +1 Laplace
     smoothing on every bin count (PSI is undefined on empty bins) over a
-    FIXED [lo, hi) domain.  Cross-engine exactness: ln runs ONLY at integer
+    FIXED [PSI_LO, PSI_HI) domain.  Cross-engine exactness: ln runs ONLY at integer
     arguments and is quantized to micro-nats (selection.qln_micro absorbs
     the engines' 1-ulp ln drift), and ln p_i - ln q_i decomposes to
     (qln(c_p) - qln(n_p)) - (qln(c_q) - qln(n_q)); the remaining arithmetic
@@ -638,7 +635,7 @@ def psi_drift_sql(
     0.1-0.25 moderate shift, > 0.25 drifted."""
     from .selection import qln_micro
 
-    bin_ix = psi_bin_expr(f"e.{val}", lo, hi)
+    bin_ix = psi_bin_expr(f"e.{val}", PSI_LO, PSI_HI)
     # smoothed counts per (key, cohort, bin); the bins spine guarantees all
     # PSI_BINS rows per key/cohort so the +1 smoothing covers empty bins
     qsum_term = psi_term_sql()

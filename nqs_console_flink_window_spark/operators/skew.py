@@ -21,19 +21,20 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+SALTS = 16  # salted_sum_count's subkeys per hot key
+
 
 def salted_sum_count(
     df: DataFrame,
     keys: list[str],
     value_col: str,
-    n_salts: int = 16,
     exact: str = "quantized",
 ) -> DataFrame:
     """Two-phase skew-safe sum/count of ``value_col`` per ``keys``.
 
-    Phase 1 shuffles on (keys, salt) — at most 1/n_salts of the hot key's
-    rows land in any one task; phase 2 merges the n_salts partials, a
-    shuffle of only |keys| * n_salts rows.  Result columns: ``sum_value``,
+    Phase 1 shuffles on (keys, salt) — at most 1/SALTS of the hot key's
+    rows land in any one task; phase 2 merges the SALTS partials, a
+    shuffle of only |keys| * SALTS rows.  Result columns: ``sum_value``,
     ``cnt``.
 
     ``exact='quantized'`` (default): the salted shape rides the two-level
@@ -41,15 +42,15 @@ def salted_sum_count(
     partials on the codegen-primitive path, overflow-proof decimal merge —
     value-identical to a single-level ``qsum`` by associativity.  DOMAIN
     BOUND: each (key, salt) partial must keep SUM(|value|) < 9.2e12, and
-    the salt is ``spark_partition_id() % n_salts`` so the EFFECTIVE salt
-    count is min(#partitions, n_salts) — a hot key summing beyond
-    ~9e12 * n_salts of value needs ``exact='decimal'``, which computes the
+    the salt is ``spark_partition_id() % SALTS`` so the EFFECTIVE salt
+    count is min(#partitions, SALTS) — a hot key summing beyond
+    ~9e12 * SALTS of value needs ``exact='decimal'``, which computes the
     phase-1 partials in overflow-proof DECIMAL(25,6) (exact to 1e29, at
     BigDecimal-accumulator speed).
     """
     from .windows import qsum_merge_col, qsum_partial_col
 
-    salt = (F.spark_partition_id() % n_salts).alias("__salt")
+    salt = (F.spark_partition_id() % SALTS).alias("__salt")
     grouped = df.withColumn("__salt", salt).groupBy(*keys, "__salt")
     if exact == "decimal":
         partial = grouped.agg(

@@ -296,10 +296,10 @@ def assert_fresh_ids(
         # identical pushed-down In plan); every id is an int by now
         clash = existing.filter(
             f"doc_id IN ({', '.join(str(i) for i in head)})"
-        ).limit(1)
+        )
     else:
-        clash = ids.join(existing.select("doc_id"), "doc_id", "left_semi").limit(1)
-    if clash.count() > 0:
+        clash = ids.join(existing.select("doc_id"), "doc_id", "left_semi")
+    if not clash.isEmpty():
         raise ValueError(
             f"{where}: batch re-ingests an already-indexed doc_id — the "
             "index would hold its rows twice and double-count it in every "

@@ -157,10 +157,10 @@ def winnow_fingerprint_expr(d: str, text: str = "text") -> str:
 EMB_DIM = 16
 
 
-def text_embed_sql(d: str, table: str = "documents", dim: int = EMB_DIM) -> str:
+def text_embed_sql(d: str, table: str = "documents") -> str:
     """Per-doc dense embedding (array<double>, L2-normalized) from signed
     hashed token projections.  One token explode + one GROUP BY doc_id with
-    ``dim`` integer SUMs; normalization is a single sqrt over exact integer
+    EMB_DIM integer SUMs; normalization is a single sqrt over exact integer
     sums, identically rounded on both engines."""
     tok_hash = X.md5_int(d, f"tok || ':' || CAST(j.j AS STRING)")
     if d == X.SPARK:
@@ -168,20 +168,20 @@ def text_embed_sql(d: str, table: str = "documents", dim: int = EMB_DIM) -> str:
             f"SELECT doc_id, tok FROM {table} "
             "LATERAL VIEW explode(split(lower(text), ' ')) t AS tok"
         )
-        dims = f"LATERAL VIEW explode(sequence(0, {dim - 1})) j AS j"
+        dims = f"LATERAL VIEW explode(sequence(0, {EMB_DIM - 1})) j AS j"
         src = f"(SELECT doc_id, tok FROM ({toks}) b) s {dims}"
     else:
         toks = (
             f"SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok "
             f"FROM {table}"
         )
-        src = f"({toks}) s, (SELECT unnest(range({dim})) AS j) j"
+        src = f"({toks}) s, (SELECT unnest(range({EMB_DIM})) AS j) j"
     sums = ",\n    ".join(
         f"CAST(SUM(CASE WHEN j = {k} THEN sgn ELSE 0 END) AS BIGINT) AS s{k}"
-        for k in range(dim)
+        for k in range(EMB_DIM)
     )
-    comps = ", ".join(f"s{k}" for k in range(dim))
-    sq = " + ".join(f"CAST(s{k} * s{k} AS DOUBLE)" for k in range(dim))
+    comps = ", ".join(f"s{k}" for k in range(EMB_DIM))
+    sq = " + ".join(f"CAST(s{k} * s{k} AS DOUBLE)" for k in range(EMB_DIM))
     # long form (doc_id, j, comp): the value-hash gate canonicalizes scalar
     # cells only (array cells are unhashable — the multimodal lesson), and
     # the long form is also the join-ready shape for SQL-side cosines
@@ -198,26 +198,26 @@ agg AS (
 normed AS (
   SELECT doc_id, {comps}, sqrt({sq}) AS nrm FROM agg
 )
-{text_embed_union("normed", dim)}
+{text_embed_union("normed")}
 """
 
 
-def text_embed_normed_sql(d: str, table: str = "documents", dim: int = EMB_DIM) -> str:
-    """The pipeline up to the ``normed`` stage (doc_id, s0..s{{dim-1}}, nrm)
+def text_embed_normed_sql(d: str, table: str = "documents") -> str:
+    """The pipeline up to the ``normed`` stage (doc_id, s0..s{{EMB_DIM-1}}, nrm)
     as a standalone statement — the Spark engine side stages THIS once
-    (the union tail references normed ``dim`` times; Spark's CTE inlining
+    (the union tail references normed EMB_DIM times; Spark's CTE inlining
     would recompute the whole explode+aggregate per branch; DuckDB
     auto-materializes, so the oracle keeps the single statement)."""
-    full = text_embed_sql(d, table, dim)
-    head, _, _tail = full.partition(")\n" + text_embed_union("normed", dim))
+    full = text_embed_sql(d, table)
+    head, _, _tail = full.partition(")\n" + text_embed_union("normed"))
     return head + ")\nSELECT * FROM normed"
 
 
-def text_embed_union(normed: str, dim: int = EMB_DIM) -> str:
+def text_embed_union(normed: str) -> str:
     """The long-form projection tail over a prepared ``normed`` relation."""
     return "\nUNION ALL\n".join(
         f"SELECT doc_id, {k} AS j, "
         f"(CASE WHEN nrm = 0.0 THEN 0.0 ELSE CAST(s{k} AS DOUBLE) / nrm END) AS comp "
         f"FROM {normed}"
-        for k in range(dim)
+        for k in range(EMB_DIM)
     )

@@ -283,7 +283,7 @@ def build_warc_files(html_df, file_col: str = "wfile"):
     file (a crawl file is the natural work unit)."""
     import pandas as pd
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key, pdf):
         pdf = pdf.sort_values("doc_id")
         out = []
         for did, html in zip(pdf["doc_id"], pdf["html"]):

@@ -50,13 +50,12 @@ def tumbling_agg(
     ts_col: str,
     keys: list[str],
     aggs: list[Column],
-    seconds: int = WINDOW_SECONDS,
 ) -> DataFrame:
     """W1 — tumbling event-time window aggregation keyed like the reference's
     ``keyBy(taskTypeName)`` + 10 s window (R3+W1).  Emits ``w_start``/``w_end``
     timestamp columns.  Works identically on batch and streaming inputs
     (unified Structured Streaming API)."""
-    w = F.window(F.col(ts_col), f"{seconds} seconds")
+    w = F.window(F.col(ts_col), f"{WINDOW_SECONDS} seconds")
     return (
         df.groupBy(w.alias("w"), *[F.col(k) for k in keys])
         .agg(*aggs)

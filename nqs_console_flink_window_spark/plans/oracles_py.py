@@ -189,9 +189,10 @@ def _pq_books(ids, mat):
     return books, dsub
 
 
-def _pq_rows(ids, mat, q, books, dsub, k=10, rerank=4):
-    """Twin of similarity.pq_topk over (ids, mat): codes -> left-assoc ADC
-    estimate -> top rerank*k by (est desc, vec_id) -> exact-cosine top k."""
+def _pq_rows(ids, mat, q, books, dsub):
+    """Twin of similarity.pq_topk (k=10) over (ids, mat): codes ->
+    left-assoc ADC estimate -> top PQ_RERANK*10 by (est desc, vec_id) ->
+    exact-cosine top 10."""
     n = len(ids)
     codes = np.empty((n, SIM.PQ_M), dtype=np.int64)
     for m in range(SIM.PQ_M):
@@ -207,10 +208,10 @@ def _pq_rows(ids, mat, q, books, dsub, k=10, rerank=4):
         for m in range(1, SIM.PQ_M):
             acc = acc + float(lut[m][codes[i, m]])
         est.append(acc)
-    short = sorted(range(n), key=lambda i: (-est[i], ids[i]))[: rerank * k]
+    short = sorted(range(n), key=lambda i: (-est[i], ids[i]))[: SIM.PQ_RERANK * 10]
     rows = [(int(ids[i]), est[i], _cosine(mat[i], q)) for i in short]
     rows.sort(key=lambda r: (-r[2], r[0]))
-    return rows[:k]
+    return rows[:10]
 
 
 def ann_pq_topk_oracle(con, sf_dir: str) -> pd.DataFrame:

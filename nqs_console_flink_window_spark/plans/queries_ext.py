@@ -1356,7 +1356,7 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(DX.repetition_sql(X.SPARK))
 
 
-def _tfidf_sql(d: str, k: int = 3) -> str:
+def _tfidf_sql(d: str) -> str:
     # tf/df rational score instead of tf*ln(N/df): the ordering signal is the
     # same shape, but ln() is libm-dependent (JVM Math.log vs C libm can
     # differ in the last ulp), while CAST(tf AS DOUBLE)/df is a single
@@ -1381,7 +1381,7 @@ scored AS (
 )
 SELECT s.doc_id, s.rnk, s.token, s.tf, s.df,
   {X.fround("s.score * n.n_docs", 6)} AS tfidf_score
-FROM scored s CROSS JOIN n WHERE s.rnk <= {k}
+FROM scored s CROSS JOIN n WHERE s.rnk <= 3
 """
 
 
@@ -1577,8 +1577,8 @@ def bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(SK.bloom_sql(X.SPARK))
 
 
-def _bottomk_sql(d: str, k: int = 50) -> str:
-    # Bottom-k by a content hash = a uniform sample that is (a) deterministic
+def _bottomk_sql(d: str) -> str:
+    # Bottom-k (k = 50) by a content hash = a uniform sample that is (a) deterministic
     # and reproducible across engines/runs, (b) mergeable: bottom-k of a
     # union is the bottom-k of the per-partition bottom-k's, so each
     # executor ships k candidates, never its whole partition (Spark's
@@ -1589,7 +1589,7 @@ SELECT doc_id, sample_rank FROM (
   SELECT doc_id,
     row_number() OVER (ORDER BY {h}, doc_id) AS sample_rank
   FROM documents
-) r WHERE sample_rank <= {k}
+) r WHERE sample_rank <= 50
 """
 
 
@@ -2130,8 +2130,8 @@ def corpus_to_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return PK.pack_sized_scalable(sized)
 
 
-def _vocab_topk_sql(d: str, k: int = 50) -> str:
-    """Corpus vocabulary: top-k tokens by frequency with rank and cumulative
+def _vocab_topk_sql(d: str) -> str:
+    """Corpus vocabulary: top-50 tokens by frequency with rank and cumulative
     coverage share — the vocab-builder / coverage-report step ahead of
     tokenizer training.  One explode + one groupBy(token) with map-side
     combine; the top-k cut is ORDER BY + LIMIT (Spark plans
@@ -2145,7 +2145,7 @@ def _vocab_topk_sql(d: str, k: int = 50) -> str:
 WITH toks AS (SELECT {tok} AS token FROM documents),
 counts AS (SELECT token, COUNT(*) AS cnt FROM toks GROUP BY token),
 total AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM counts),
-topk AS (SELECT token, cnt FROM counts ORDER BY cnt DESC, token LIMIT {k}),
+topk AS (SELECT token, cnt FROM counts ORDER BY cnt DESC, token LIMIT 50),
 ranked AS (
   SELECT token, cnt,
          ROW_NUMBER() OVER (ORDER BY cnt DESC, token) AS rank,
@@ -2200,10 +2200,11 @@ FROM ranked
 """)
 
 
-def _score_drift_sql(d: str, n_buckets: int = 10) -> str:
+def _score_drift_sql(d: str) -> str:
     """Distribution drift between the first and second time-half of the
-    events stream, per value bucket: counts, shares, and the per-bucket
-    total-variation and chi-square contributions.  The monitoring query a
+    events stream, per value bucket (10 equal-width buckets): counts,
+    shares, and the per-bucket total-variation and chi-square
+    contributions.  The monitoring query a
     pipeline runs to detect input drift between deploys/windows.
 
     Deliberately ln-free (no PSI): ln is not correctly-rounded-guaranteed
@@ -2224,8 +2225,8 @@ bounds AS (
 ),
 tagged AS (
   SELECT CASE WHEN e.ep < {mid} THEN 0 ELSE 1 END AS half,
-    CAST(LEAST({n_buckets - 1}, GREATEST(0,
-      CAST(floor((e.v - b.vmin) / ((b.vmax - b.vmin) / {n_buckets}.0)) AS BIGINT)
+    CAST(LEAST(9, GREATEST(0,
+      CAST(floor((e.v - b.vmin) / ((b.vmax - b.vmin) / 10.0)) AS BIGINT)
     )) AS BIGINT) AS bucket
   FROM e CROSS JOIN bounds b
 ),
@@ -2298,14 +2299,14 @@ def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SIM.hard_negatives(emb)
 
 
-def _quality_upsample_sql(d: str, target_copies: int = 600) -> str:
+def _quality_upsample_sql(d: str) -> str:
     """Quality-weighted upsampling with repetition — the data-mixing step
     that REPEATS high-quality documents (the complement of the downsampling
-    in training_sample): each doc's copy weight w = target * q^2 / sum(q^2)
+    in training_sample): each doc's copy weight w = 600 * q^2 / sum(q^2)
     (temperature-2 quality weighting; an integer power, so no libm pow and
     the weight is pure IEEE arithmetic), materialized as floor(w) copies
     plus one more with probability frac(w) decided by a deterministic
-    content-hash coin — E[total copies] = target, no RNG, reproducible.
+    content-hash coin — E[total copies] = 600, no RNG, reproducible.
     Two passes: one scalar aggregate for Z, one projection + explode."""
     q = TX.quality_score_expr(d)
     frac_coin = X.md5_int(d, "'upsample:' || CAST(doc_id AS STRING)")
@@ -2319,7 +2320,7 @@ weighted AS (
   -- BroadcastNestedLoopJoin (flagged by the fleet-wide plan guard), but a
   -- scalar subquery becomes a precomputed literal — no join operator at all
   SELECT s.doc_id, s.quality,
-    {target_copies}.0 * s.quality * s.quality / (SELECT zz FROM z) AS w
+    600.0 * s.quality * s.quality / (SELECT zz FROM z) AS w
   FROM scored s
 ),
 counted AS (

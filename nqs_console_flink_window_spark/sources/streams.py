@@ -28,15 +28,22 @@ def read_events_stream(
     footer (one driver-side metadata fetch) so the stream adapts to either
     ts encoding the fixture has shipped (int64 nanos vs TIMESTAMP micros) —
     see ``sources.batch.normalize_event_ts``.
+
+    Whether ``<sf_dir>/events.parquet`` exists is asked of the Hadoop
+    FileSystem of the session's Hadoop conf (any scheme the read itself
+    supports), so a missing file is never read: reading it would log a
+    "no metadata directory" trace at every stream start, and catching the
+    read's error would also swallow unrelated read failures.
     """
     from .batch import normalize_event_ts
 
-    from pyspark.errors.exceptions.captured import AnalysisException
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src_dir = sf_dir
-    try:
-        probe = spark.read.parquet(f"{sf_dir}/events.parquet")
+    events = f"{sf_dir}/events.parquet"
+    path = spark._jvm.org.apache.hadoop.fs.Path(events)
+    hconf = spark._jsparkSession.sessionState().newHadoopConf()
+    if path.getFileSystem(hconf).exists(path):
+        probe = spark.read.parquet(events)
         raw_schema = probe.schema
         files = probe.inputFiles()
         if files and not files[0].rstrip("/").endswith("/events.parquet"):
@@ -48,10 +55,10 @@ def read_events_stream(
             # fallback below).  Layout detection uses the probe's own
             # inputFiles(), not os.path, so file:/ hdfs:/ s3a:/ URIs all
             # classify correctly.
-            src_dir, glob = f"{sf_dir}/events.parquet", "*.parquet"
+            src_dir, glob = events, "*.parquet"
         else:
             glob = "events.parquet"
-    except AnalysisException:
+    else:
         # sf_dir may hold bare part files (tests chunk the fixture); any
         # footer in the directory carries the same events schema.  The
         # events.parquet glob would match ZERO of those files and yield a

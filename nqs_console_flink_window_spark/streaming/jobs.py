@@ -271,9 +271,9 @@ def run_probe_info_stream(
 # ---------------------------------------------------------------------------
 
 
-def windowed_counts_stream(events: DataFrame, watermark: str = "30 seconds") -> DataFrame:
+def windowed_counts_stream(events: DataFrame) -> DataFrame:
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "30 seconds")
         .groupBy(F.window("ts", "10 seconds").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("w.start").alias("w_start"), "event_type", "cnt")
@@ -319,17 +319,15 @@ def interval_join_stream(
     )
 
 
-def dedup_stream(
-    events: DataFrame, keys: list[str], watermark: str = "2 minutes"
-) -> DataFrame:
-    """Streaming A5: drop duplicate keys arriving within the watermark
-    horizon (``dropDuplicatesWithinWatermark``) — the ingest-side repair
+def dedup_stream(events: DataFrame, keys: list[str]) -> DataFrame:
+    """Streaming A5: drop duplicate keys arriving within the 2-minute
+    watermark horizon (``dropDuplicatesWithinWatermark``) — the ingest-side repair
     for an at-least-once Kafka producer, complementing batch last-write-wins
     dedup on read.  State holds one entry per key seen in the horizon and
     is evicted by watermark, unlike plain ``dropDuplicates`` whose state
     grows forever on a stream.
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
+    return events.withWatermark("ts", "2 minutes").dropDuplicatesWithinWatermark(keys)
 
 
 # ---------------------------------------------------------------------------
@@ -379,7 +377,6 @@ def run_cdc_stream(
     table_dir: str,
     checkpoint_dir: str,
     key_col: str = "user_id",
-    delete_when: str = "event_type = 'error'",
 ) -> None:
     """Streaming MERGE: apply each micro-batch as a CDC changelog onto the
     manifest-versioned table (``sinks/versioned.py``) — the streaming form
@@ -388,7 +385,7 @@ def run_cdc_stream(
 
     Per batch: compact the changelog to last-write-wins per key (ts +
     event_id tiebreak), full-outer-merge it with the current snapshot
-    (upserts overwrite, ``delete_when`` rows tombstone), and commit the
+    (upserts overwrite, ``event_type = 'error'`` rows tombstone), and commit the
     merged state as a new *overwrite* version.  Re-applying the same batch
     to the already-merged state is a no-op by construction (LWW on
     identical ops), so an at-least-once foreachBatch replay converges to
@@ -412,7 +409,7 @@ def run_cdc_stream(
             .filter(F.col("rn") == 1)
             .select(
                 key_col,
-                F.when(F.expr(delete_when), F.lit("D"))
+                F.when(F.expr("event_type = 'error'"), F.lit("D"))
                 .otherwise(F.lit("U"))
                 .alias("op"),
                 F.col("value").alias("chg_value"),
