@@ -72,18 +72,19 @@ FROM hashed GROUP BY doc_id
 """
 
 
+def _band_key_sql(b: int) -> str:
+    """LSH band ``b``'s key: md5 of its BAND_ROWS signature slots."""
+    return "md5({})".format(" || '_' || ".join(
+        f"CAST(m{b * BAND_ROWS + r} AS STRING)" for r in range(BAND_ROWS)
+    ))
+
+
 def minhash_band_selects(d: str) -> list[str]:
     """One SELECT per LSH band: (doc_id, band_id, band_key)."""
-    out = []
-    n_bands = NUM_PERM // BAND_ROWS
-    for b in range(n_bands):
-        cols = " || '_' || ".join(
-            f"CAST(m{b * BAND_ROWS + r} AS STRING)" for r in range(BAND_ROWS)
-        )
-        out.append(
-            f"SELECT doc_id, {b} AS band_id, md5({cols}) AS band_key FROM sig"
-        )
-    return out
+    return [
+        f"SELECT doc_id, {b} AS band_id, {_band_key_sql(b)} AS band_key FROM sig"
+        for b in range(NUM_PERM // BAND_ROWS)
+    ]
 
 
 def minhash_bands_from_sig_spark(sig: str = "sig") -> str:
@@ -99,16 +100,9 @@ def minhash_bands_from_sig_spark(sig: str = "sig") -> str:
     literals, same md5 key expression); the ORACLES keep the UNION ALL —
     DuckDB materializes multiply-referenced CTEs, so it never had the
     problem."""
-    n_bands = NUM_PERM // BAND_ROWS
     structs = ", ".join(
-        "named_struct('band_id', {b}, 'band_key', md5({cols}))".format(
-            b=b,
-            cols=" || '_' || ".join(
-                f"CAST(m{b * BAND_ROWS + r} AS STRING)"
-                for r in range(BAND_ROWS)
-            ),
-        )
-        for b in range(n_bands)
+        f"named_struct('band_id', {b}, 'band_key', {_band_key_sql(b)})"
+        for b in range(NUM_PERM // BAND_ROWS)
     )
     return (
         f"SELECT doc_id, band_id, band_key FROM {sig} "
@@ -176,6 +170,26 @@ FROM agg
 """
 
 
+def _simhash_bands_sql(d: str, max_dist: int) -> str:
+    """(doc_id, simhash, i, bv) over relation ``sig``: each fingerprint
+    split into ``max_dist + 1`` bands of equal width, ``bv`` band i's
+    value — the pigeonhole split both simhash_hamming_hist forms join
+    on."""
+    bands = max_dist + 1
+    width = (SIMHASH_BITS + bands - 1) // bands
+    if d == X.SPARK:
+        return (
+            "SELECT doc_id, simhash, i, "
+            f"(simhash >> (i * {width})) % {1 << width} AS bv "
+            f"FROM sig LATERAL VIEW explode(sequence(0, {bands - 1})) g AS i"
+        )
+    return (
+        f"SELECT doc_id, simhash, g.i, "
+        f"(simhash >> (g.i * {width})) % {1 << width} AS bv "
+        f"FROM sig, generate_series(0, {bands - 1}) g(i)"
+    )
+
+
 def simhash_hamming_hist_sql(d: str, max_dist: int, table: str = "documents") -> str:
     """Histogram of pairwise Hamming distances <= max_dist via banded
     candidate generation — NOT an all-pairs self-join.
@@ -188,24 +202,10 @@ def simhash_hamming_hist_sql(d: str, max_dist: int, table: str = "documents") ->
     provably identical to the all-pairs form for distances <= max_dist —
     tests/test_extensions.py asserts that equivalence.
     """
-    bands = max_dist + 1
-    width = (SIMHASH_BITS + bands - 1) // bands
     ham = X.xor(d, "CAST(simhash AS BIGINT)", "CAST(simhash_b AS BIGINT)")
-    if d == X.SPARK:
-        band_src = (
-            "SELECT doc_id, simhash, i, "
-            f"(simhash >> (i * {width})) % {1 << width} AS bv "
-            f"FROM sig LATERAL VIEW explode(sequence(0, {bands - 1})) g AS i"
-        )
-    else:
-        band_src = (
-            f"SELECT doc_id, simhash, g.i, "
-            f"(simhash >> (g.i * {width})) % {1 << width} AS bv "
-            f"FROM sig, generate_series(0, {bands - 1}) g(i)"
-        )
     return f"""
 WITH sig AS ({simhash_sql(d, table)}),
-bands AS ({band_src}),
+bands AS ({_simhash_bands_sql(d, max_dist)}),
 cand AS (
   SELECT DISTINCT a.doc_id AS da, a.simhash, b.doc_id AS db, b.simhash AS simhash_b
   FROM bands a JOIN bands b ON a.i = b.i AND a.bv = b.bv AND a.doc_id < b.doc_id
@@ -231,12 +231,75 @@ inter AS (
   FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )
-SELECT doc_a, doc_b,
-  {X.fround("CAST(both_n AS DOUBLE) / (na.n + nb.n - both_n)", 6)} AS jaccard
+{_jaccard_select(threshold)}"""
+
+
+def _jaccard_select(threshold: float) -> str:
+    """The Jaccard verifiers' SELECT over ``inter`` and ``sizes``: pairs
+    whose exact shingle Jaccard reaches ``threshold``."""
+    jac = "CAST(both_n AS DOUBLE) / (na.n + nb.n - both_n)"
+    return f"""SELECT doc_a, doc_b, {X.fround(jac, 6)} AS jaccard
 FROM inter
 JOIN sizes na ON doc_a = na.doc_id
 JOIN sizes nb ON doc_b = nb.doc_id
-WHERE CAST(both_n AS DOUBLE) / (na.n + nb.n - both_n) >= {threshold!r}
+WHERE {jac} >= {threshold!r}
+"""
+
+
+def _lsh_verify_with(
+    d: str,
+    table: str,
+    est: bool = False,
+    inter: bool = True,
+    capped: bool = False,
+) -> str:
+    """THE WITH clause of the LSH-scoped verifiers' oracles: ``cand`` (the
+    MinHash-LSH candidate pairs); with ``capped``, the degree cap over it
+    (``capped_cand_sql``); with ``est``, the signature-match Jaccard
+    estimate ``est`` (doc_a, doc_b, ej = matching slots / NUM_PERM); the
+    shingle sets ``sh`` and their ``sizes`` (doc_id, n); and with
+    ``inter``, the exact intersection counts ``inter`` (doc_a, doc_b,
+    both_n) over the capped or the plain candidates.  DuckDB
+    auto-materializes the shared CTEs; the Spark engine side uses the
+    staged parts instead."""
+    ctes = [f"cand AS ({minhash_lsh_pairs_sql(d, table)})"]
+    if capped:
+        ctes.append(capped_cand_sql(d, "cand").strip())
+    if est:
+        matches = " + ".join(
+            f"(CASE WHEN sa.m{k} = sb.m{k} THEN 1 ELSE 0 END)"
+            for k in range(NUM_PERM)
+        )
+        ctes += [
+            f"sig AS ({minhash_signatures_sql(d, table)})",
+            f"""est AS (
+  SELECT c.doc_a, c.doc_b, CAST(({matches}) AS DOUBLE) / {NUM_PERM}.0 AS ej
+  FROM cand c
+  JOIN sig sa ON sa.doc_id = c.doc_a
+  JOIN sig sb ON sb.doc_id = c.doc_b
+)""",
+        ]
+    ctes += [
+        f"sh AS ({shingles_cte(d, table)})",
+        "sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)",
+    ]
+    if inter:
+        ctes.append(f"""inter AS (
+  SELECT c.doc_a, c.doc_b, COUNT(*) AS both_n
+  FROM {"capped" if capped else "cand"} c
+  JOIN sh a ON a.doc_id = c.doc_a
+  JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh
+  GROUP BY 1, 2
+)""")
+    return "\nWITH " + ",\n".join(ctes) + "\n"
+
+
+# the audited estimators' FROM: every estimated pair, its exact
+# intersection count when the shingle sets meet at all, and both sizes
+_EST_FROM = """FROM est e
+LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
+JOIN sizes na ON e.doc_a = na.doc_id
+JOIN sizes nb ON e.doc_b = nb.doc_id
 """
 
 
@@ -245,25 +308,7 @@ def ngram_jaccard_on_lsh_sql(d: str, threshold: float, table: str = "documents")
     the 100 TB composition: the shingle self-join runs only on pairs that
     already collided in an LSH band (shuffle proportional to candidates),
     never on all shingle collisions corpus-wide."""
-    cand = minhash_lsh_pairs_sql(d, table)
-    return f"""
-WITH cand AS ({cand}),
-sh AS ({shingles_cte(d, table)}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS both_n
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-  {X.fround("CAST(both_n AS DOUBLE) / (na.n + nb.n - both_n)", 6)} AS jaccard
-FROM inter
-JOIN sizes na ON doc_a = na.doc_id
-JOIN sizes nb ON doc_b = nb.doc_id
-WHERE CAST(both_n AS DOUBLE) / (na.n + nb.n - both_n) >= {threshold!r}
-"""
+    return _lsh_verify_with(d, table) + _jaccard_select(threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -393,13 +438,9 @@ SPAN_WORDS = 5
 SPAN_MIN_DF = 3
 
 
-def span_dedup_sql(
-    d: str,
-    table: str = "documents",
-) -> str:
-    """Per-doc rewrite removing every SPAN_WORDS-word segment whose corpus
-    document frequency >= SPAN_MIN_DF.  Output: doc_id, n_segs, n_removed, cleaned_text
-    (original text when nothing was removed; '' when everything was)."""
+def _span_segs_sql(d: str, table: str) -> str:
+    """(doc_id, i, seg): each document's i-th non-overlapping
+    SPAN_WORDS-word segment — the segmenting both span_dedup forms run."""
     toks = X.split_tokens(d, "text")
     n_segs = X.idiv(
         d, f"{X.arr_size(d, 'toks')} + {SPAN_WORDS - 1}", str(SPAN_WORDS)
@@ -410,10 +451,20 @@ def span_dedup_sql(
     src = X.positions_from(
         d, f"(SELECT doc_id, {toks} AS toks FROM {table})", "doc_id, toks", n_segs
     )
+    return f"SELECT doc_id, i, {seg} AS seg FROM {src} p"
+
+
+def span_dedup_sql(
+    d: str,
+    table: str = "documents",
+) -> str:
+    """Per-doc rewrite removing every SPAN_WORDS-word segment whose corpus
+    document frequency >= SPAN_MIN_DF.  Output: doc_id, n_segs, n_removed, cleaned_text
+    (original text when nothing was removed; '' when everything was)."""
     kept = X.ordered_join(d, f"CASE WHEN f.df < {SPAN_MIN_DF} THEN s.seg END", "s.i")
     return f"""
 WITH segs AS (
-  SELECT doc_id, i, {seg} AS seg FROM {src} p
+  {_span_segs_sql(d, table)}
 ),
 df AS (
   SELECT seg, COUNT(DISTINCT doc_id) AS df FROM segs GROUP BY seg
@@ -438,37 +489,14 @@ def minhash_jaccard_estimate_sql(d: str, table: str = "documents") -> str:
     both documents' full shingle sets.  The est/exact/error triple makes
     the standard MinHash unbiased-estimator property an observable query
     output rather than a belief."""
-    cand = minhash_lsh_pairs_sql(d, table)
-    matches = " + ".join(
-        f"(CASE WHEN sa.m{k} = sb.m{k} THEN 1 ELSE 0 END)" for k in range(NUM_PERM)
+    jac = (
+        "CAST(COALESCE(i.both_n, 0) AS DOUBLE) "
+        "/ (na.n + nb.n - COALESCE(i.both_n, 0))"
     )
-    return f"""
-WITH cand AS ({cand}),
-sig AS ({minhash_signatures_sql(d, table)}),
-sh AS ({shingles_cte(d, table)}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS both_n
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh
-  GROUP BY 1, 2
-),
-est AS (
-  SELECT c.doc_a, c.doc_b,
-    CAST(({matches}) AS DOUBLE) / {NUM_PERM}.0 AS est_jaccard
-  FROM cand c
-  JOIN sig sa ON sa.doc_id = c.doc_a
-  JOIN sig sb ON sb.doc_id = c.doc_b
-)
-SELECT e.doc_a, e.doc_b, e.est_jaccard,
-  {X.fround("CAST(COALESCE(i.both_n, 0) AS DOUBLE) / (na.n + nb.n - COALESCE(i.both_n, 0))", 6)} AS jaccard,
-  {X.fround("ABS(e.est_jaccard - CAST(COALESCE(i.both_n, 0) AS DOUBLE) / (na.n + nb.n - COALESCE(i.both_n, 0)))", 6)} AS abs_err
-FROM est e
-LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
-JOIN sizes na ON e.doc_a = na.doc_id
-JOIN sizes nb ON e.doc_b = nb.doc_id
-"""
+    return _lsh_verify_with(d, table, est=True) + f"""SELECT e.doc_a, e.doc_b, e.ej AS est_jaccard,
+  {X.fround(jac, 6)} AS jaccard,
+  {X.fround(f"ABS(e.ej - {jac})", 6)} AS abs_err
+{_EST_FROM}"""
 
 
 def _staged_minhash_parts(
@@ -564,6 +592,49 @@ def _staged_intersections(cand, sh):
     )
 
 
+def _with_sizes(pairs, sizes):
+    """``pairs`` (doc_a, doc_b, ...) joined to both documents' shingle-set
+    sizes, as ``na_n`` and ``nb_n``."""
+    from pyspark.sql import functions as F
+
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na_n"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb_n"))
+    return pairs.join(na, "doc_a").join(nb, "doc_b")
+
+
+def _staged_estimate(cand, sig, name: str):
+    """(doc_a, doc_b, ``name``): each candidate pair's signature-match
+    Jaccard estimate, matching signature slots / NUM_PERM."""
+    from pyspark.sql import functions as F
+
+    matches = sum(
+        F.when(F.col(f"sa.m{k}") == F.col(f"sb.m{k}"), 1).otherwise(0)
+        for k in range(NUM_PERM)
+    )
+    return (
+        cand.join(sig.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
+        .join(sig.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
+        .select(
+            "doc_a", "doc_b",
+            (matches.cast("double") / float(NUM_PERM)).alias(name),
+        )
+    )
+
+
+def _audited_estimate(spark, table: str, name: str):
+    """The audited estimators' frame: every candidate pair's estimate
+    (column ``name``), its exact intersection count ``both0`` (0 when the
+    shingle sets never meet) and both sizes."""
+    from pyspark.sql import functions as F
+
+    sh, sig, cand, sizes = _staged_minhash_parts(spark, table)
+    est = _staged_estimate(cand, sig, name)
+    inter = _staged_intersections(cand, sh)
+    return _with_sizes(
+        est.join(inter, ["doc_a", "doc_b"], "left"), sizes
+    ).withColumn("both0", F.coalesce(F.col("both_n"), F.lit(0)))
+
+
 def ngram_jaccard_on_lsh_df(spark, threshold: float, table: str = "documents"):
     """Staged engine form of ``ngram_jaccard_on_lsh_sql`` (the tier-1
     ngram_jaccard_pairs implementation) — same output, pipeline runs once."""
@@ -572,13 +643,9 @@ def ngram_jaccard_on_lsh_df(spark, threshold: float, table: str = "documents"):
     from ..functions.dialect import fround
 
     sh, _sig, cand, sizes = _staged_minhash_parts(spark, table)
-    inter = _staged_intersections(cand, sh)
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na_n"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb_n"))
     jac = "CAST(both_n AS DOUBLE) / (na_n + nb_n - both_n)"
     return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
+        _with_sizes(_staged_intersections(cand, sh), sizes)
         .filter(F.expr(f"{jac} >= {threshold!r}"))
         .select("doc_a", "doc_b", F.expr(fround(jac, 6)).alias("jaccard"))
     )
@@ -589,32 +656,10 @@ def minhash_jaccard_estimate_df(spark, table: str = "documents"):
     output, pipeline runs once (see ``_staged_minhash_parts``)."""
     from pyspark.sql import functions as F
 
-    sh, sig, cand, sizes = _staged_minhash_parts(spark, table)
-    inter = _staged_intersections(cand, sh)
-    matches = sum(
-        F.when(F.col(f"sa.m{k}") == F.col(f"sb.m{k}"), 1).otherwise(0)
-        for k in range(NUM_PERM)
-    )
-    est = (
-        cand.join(sig.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sig.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .select(
-            "doc_a", "doc_b",
-            (matches.cast("double") / float(NUM_PERM)).alias("est_jaccard"),
-        )
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na_n"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb_n"))
-    j = (
-        est.join(inter, ["doc_a", "doc_b"], "left")
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn("both0", F.coalesce(F.col("both_n"), F.lit(0)))
-    )
-    jac = "CAST(both0 AS DOUBLE) / (na_n + nb_n - both0)"
     from ..functions.dialect import fround
 
-    return j.select(
+    jac = "CAST(both0 AS DOUBLE) / (na_n + nb_n - both0)"
+    return _audited_estimate(spark, table, "est_jaccard").select(
         "doc_a",
         "doc_b",
         "est_jaccard",
@@ -630,13 +675,9 @@ def simhash_hamming_hist_df(spark, max_dist: int, table: str = "documents"):
     from pyspark.sql import functions as F
 
     d = X.SPARK
-    bands = max_dist + 1
-    width = (SIMHASH_BITS + bands - 1) // bands
     banded = spark.sql(
         f"WITH sig AS ({simhash_sql(d, table)}) "
-        "SELECT doc_id, simhash, i, "
-        f"(simhash >> (i * {width})) % {1 << width} AS bv "
-        f"FROM sig LATERAL VIEW explode(sequence(0, {bands - 1})) g AS i"
+        + _simhash_bands_sql(d, max_dist)
     ).localCheckpoint()
     cand = (
         banded.alias("a")
@@ -669,23 +710,10 @@ def span_dedup_df(spark, table: str = "documents"):
     and the split/slice segmenting run once."""
     from pyspark.sql import functions as F
 
-    d = X.SPARK
-    toks = X.split_tokens(d, "text")
-    n_segs = X.idiv(
-        d, f"{X.arr_size(d, 'toks')} + {SPAN_WORDS - 1}", str(SPAN_WORDS)
-    )
-    seg = X.arr_join(
-        d, X.arr_slice(d, "toks", f"(i - 1) * {SPAN_WORDS} + 1", SPAN_WORDS)
-    )
-    src = X.positions_from(
-        d, f"(SELECT doc_id, {toks} AS toks FROM {table})", "doc_id, toks", n_segs
-    )
-    segs = spark.sql(
-        f"SELECT doc_id, i, {seg} AS seg FROM {src} p"
-    ).localCheckpoint()
+    segs = spark.sql(_span_segs_sql(X.SPARK, table)).localCheckpoint()
     df_tab = segs.groupBy("seg").agg(F.count_distinct("doc_id").alias("df"))
     joined = segs.join(df_tab, "seg")
-    kept = X.ordered_join(d, f"CASE WHEN df < {SPAN_MIN_DF} THEN seg END", "i")
+    kept = X.ordered_join(X.SPARK, f"CASE WHEN df < {SPAN_MIN_DF} THEN seg END", "i")
     return joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_segs"),
         F.sum(F.when(F.col("df") >= SPAN_MIN_DF, 1).otherwise(0))
@@ -704,6 +732,19 @@ def span_dedup_df(spark, table: str = "documents"):
 # ---------------------------------------------------------------------------
 
 CONTAIN_THRESHOLD = 0.5
+
+# THE directional-containment SELECT of the oracles (over ``inter`` and
+# ``sizes``): both directions plus the dominant one, kept when the pair's
+# larger containment reaches CONTAIN_THRESHOLD
+_CONTAIN_SELECT = f"""SELECT doc_a, doc_b,
+  {X.fround("CAST(both_n AS DOUBLE) / na.n", 6)} AS contain_ab,
+  {X.fround("CAST(both_n AS DOUBLE) / nb.n", 6)} AS contain_ba,
+  CASE WHEN na.n <= nb.n THEN doc_a ELSE doc_b END AS contained_doc
+FROM inter
+JOIN sizes na ON doc_a = na.doc_id
+JOIN sizes nb ON doc_b = nb.doc_id
+WHERE CAST(both_n AS DOUBLE) / LEAST(na.n, nb.n) >= {CONTAIN_THRESHOLD!r}
+"""
 
 
 def containment_on_lsh_sql(
@@ -724,47 +765,20 @@ def containment_on_lsh_sql(
     extreme-ratio containment needs a dedicated candidate generator
     (per-shingle inverted index or suffix-based bands) — out of scope;
     span_dedup covers the corpus-frequent-substring half of that case."""
-    cand = minhash_lsh_pairs_sql(d, table)
-    c_ab = "CAST(both_n AS DOUBLE) / na.n"
-    c_ba = "CAST(both_n AS DOUBLE) / nb.n"
-    return f"""
-WITH cand AS ({cand}),
-sh AS ({shingles_cte(d, table)}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS both_n
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-  {X.fround(c_ab, 6)} AS contain_ab,
-  {X.fround(c_ba, 6)} AS contain_ba,
-  CASE WHEN na.n <= nb.n THEN doc_a ELSE doc_b END AS contained_doc
-FROM inter
-JOIN sizes na ON doc_a = na.doc_id
-JOIN sizes nb ON doc_b = nb.doc_id
-WHERE CAST(both_n AS DOUBLE) / LEAST(na.n, nb.n) >= {CONTAIN_THRESHOLD!r}
-"""
+    return _lsh_verify_with(d, table) + _CONTAIN_SELECT
 
 
-def containment_on_lsh_df(
-    spark, threshold: float = CONTAIN_THRESHOLD, table: str = "documents"
-):
-    """Staged engine form of ``containment_on_lsh_sql`` — rides the shared
-    checkpointed MinHash parts so the shingle/band pipeline runs once."""
+def _containment_tail(pairs, sh, sizes, threshold: float):
+    """THE engine containment verification over candidate ``pairs``: exact
+    shingle intersections, both sizes, the directional containments and
+    the contained doc, kept when the larger containment reaches
+    ``threshold``."""
     from pyspark.sql import functions as F
 
     from ..functions.dialect import fround
 
-    sh, _sig, cand, sizes = _staged_minhash_parts(spark, table)
-    inter = _staged_intersections(cand, sh)
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na_n"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb_n"))
     return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
+        _with_sizes(_staged_intersections(pairs, sh), sizes)
         .filter(F.expr(f"CAST(both_n AS DOUBLE) / LEAST(na_n, nb_n) >= {threshold!r}"))
         .select(
             "doc_a",
@@ -776,6 +790,15 @@ def containment_on_lsh_df(
             ),
         )
     )
+
+
+def containment_on_lsh_df(
+    spark, threshold: float = CONTAIN_THRESHOLD, table: str = "documents"
+):
+    """Staged engine form of ``containment_on_lsh_sql`` — rides the shared
+    checkpointed MinHash parts so the shingle/band pipeline runs once."""
+    sh, _sig, cand, sizes = _staged_minhash_parts(spark, table)
+    return _containment_tail(cand, sh, sizes, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -864,30 +887,11 @@ def containment_on_lsh_capped_df(
 ):
     """Degree-capped containment verification: identical per-edge math to
     ``containment_on_lsh_df``, but over the bounded-degree candidate set —
-    the form you run when the corpus is flood-shaped."""
-    from pyspark.sql import functions as F
-
-    from ..functions.dialect import fround
-
+    the form you run when the corpus is flood-shaped.  The registered
+    ``containment_capped`` query runs this form."""
     sh, _sig, cand, sizes = _staged_minhash_parts(spark, table)
     capped = cap_candidate_degree(cand, max_deg).localCheckpoint()
-    inter = _staged_intersections(capped, sh)
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na_n"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb_n"))
-    return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .filter(F.expr(f"CAST(both_n AS DOUBLE) / LEAST(na_n, nb_n) >= {CONTAIN_THRESHOLD!r}"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr(fround("CAST(both_n AS DOUBLE) / na_n", 6)).alias("contain_ab"),
-            F.expr(fround("CAST(both_n AS DOUBLE) / nb_n", 6)).alias("contain_ba"),
-            F.expr("CASE WHEN na_n <= nb_n THEN doc_a ELSE doc_b END").alias(
-                "contained_doc"
-            ),
-        )
-    )
+    return _containment_tail(capped, sh, sizes, CONTAIN_THRESHOLD)
 
 
 def containment_estimate_sql(d: str, table: str = "documents") -> str:
@@ -904,38 +908,13 @@ def containment_estimate_sql(d: str, table: str = "documents") -> str:
     becomes signature-table work).  Exact containment and the absolute
     error ride beside it, same observable-estimator convention as
     minhash_jaccard_estimate."""
-    cand = minhash_lsh_pairs_sql(d, table)
-    matches = " + ".join(
-        f"(CASE WHEN sa.m{k} = sb.m{k} THEN 1 ELSE 0 END)" for k in range(NUM_PERM)
-    )
-    est_j = f"CAST(({matches}) AS DOUBLE) / {NUM_PERM}.0"
-    return f"""
-WITH cand AS ({cand}),
-sig AS ({minhash_signatures_sql(d, table)}),
-sh AS ({shingles_cte(d, table)}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-est AS (
-  SELECT c.doc_a, c.doc_b, {est_j} AS ej
-  FROM cand c
-  JOIN sig sa ON sa.doc_id = c.doc_a
-  JOIN sig sb ON sb.doc_id = c.doc_b
-),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS both_n
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh
-  GROUP BY 1, 2
-)
-SELECT e.doc_a, e.doc_b,
-  {X.fround("e.ej * (na.n + nb.n) / (1.0 + e.ej) / na.n", 6)} AS est_contain_ab,
-  {X.fround("CAST(COALESCE(i.both_n, 0) AS DOUBLE) / na.n", 6)} AS contain_ab,
-  {X.fround("ABS(e.ej * (na.n + nb.n) / (1.0 + e.ej) / na.n - CAST(COALESCE(i.both_n, 0) AS DOUBLE) / na.n)", 6)} AS abs_err
-FROM est e
-LEFT JOIN inter i ON i.doc_a = e.doc_a AND i.doc_b = e.doc_b
-JOIN sizes na ON e.doc_a = na.doc_id
-JOIN sizes nb ON e.doc_b = nb.doc_id
-"""
+    est_c = "e.ej * (na.n + nb.n) / (1.0 + e.ej) / na.n"
+    contain = "CAST(COALESCE(i.both_n, 0) AS DOUBLE) / na.n"
+    return _lsh_verify_with(d, table, est=True) + f"""SELECT e.doc_a, e.doc_b,
+  {X.fround(est_c, 6)} AS est_contain_ab,
+  {X.fround(contain, 6)} AS contain_ab,
+  {X.fround(f"ABS({est_c} - {contain})", 6)} AS abs_err
+{_EST_FROM}"""
 
 
 def containment_estimate_df(spark, table: str = "documents"):
@@ -947,27 +926,8 @@ def containment_estimate_df(spark, table: str = "documents"):
 
     from ..functions.dialect import fround
 
-    sh, sig, cand, sizes = _staged_minhash_parts(spark, table)
-    matches = sum(
-        F.when(F.col(f"sa.m{k}") == F.col(f"sb.m{k}"), 1).otherwise(0)
-        for k in range(NUM_PERM)
-    )
-    est = (
-        cand.join(sig.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sig.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", (matches.cast("double") / float(NUM_PERM)).alias("ej"))
-    )
-    inter = _staged_intersections(cand, sh)
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na_n"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb_n"))
-    j = (
-        est.join(inter, ["doc_a", "doc_b"], "left")
-        .join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn("both0", F.coalesce(F.col("both_n"), F.lit(0)))
-    )
     est_c = "ej * (na_n + nb_n) / (1.0 + ej) / na_n"
-    return j.select(
+    return _audited_estimate(spark, table, "ej").select(
         "doc_a",
         "doc_b",
         F.expr(fround(est_c, 6)).alias("est_contain_ab"),
@@ -1009,28 +969,7 @@ def containment_capped_sql(
     """Oracle form of the degree-capped containment verifier: LSH
     candidates -> SQL degree cap (``capped_cand_sql``) -> the same
     directional-containment math as ``containment_on_lsh_sql``."""
-    cand = minhash_lsh_pairs_sql(d, table)
-    return f"""
-WITH cand AS ({cand}),
-{capped_cand_sql(d, "cand").lstrip()},
-sh AS ({shingles_cte(d, table)}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS both_n
-  FROM capped c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-  {X.fround("CAST(both_n AS DOUBLE) / na.n", 6)} AS contain_ab,
-  {X.fround("CAST(both_n AS DOUBLE) / nb.n", 6)} AS contain_ba,
-  CASE WHEN na.n <= nb.n THEN doc_a ELSE doc_b END AS contained_doc
-FROM inter
-JOIN sizes na ON doc_a = na.doc_id
-JOIN sizes nb ON doc_b = nb.doc_id
-WHERE CAST(both_n AS DOUBLE) / LEAST(na.n, nb.n) >= {CONTAIN_THRESHOLD!r}
-"""
+    return _lsh_verify_with(d, table, capped=True) + _CONTAIN_SELECT
 
 
 def containment_estimate_fast_sql(d: str, table: str = "documents") -> str:
@@ -1039,25 +978,10 @@ def containment_estimate_fast_sql(d: str, table: str = "documents") -> str:
     8-slot signatures and the sizes table.  This is the form whose cost is
     signature-table work at any duplicate density (the audit form's 10x
     soak ratio is entirely its exact shingle join)."""
-    cand = minhash_lsh_pairs_sql(d, table)
-    matches = " + ".join(
-        f"(CASE WHEN sa.m{k} = sb.m{k} THEN 1 ELSE 0 END)" for k in range(NUM_PERM)
-    )
-    est_j = f"CAST(({matches}) AS DOUBLE) / {NUM_PERM}.0"
-    return f"""
-WITH cand AS ({cand}),
-sig AS ({minhash_signatures_sql(d, table)}),
-sh AS ({shingles_cte(d, table)}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-est AS (
-  SELECT c.doc_a, c.doc_b, {est_j} AS ej
-  FROM cand c
-  JOIN sig sa ON sa.doc_id = c.doc_a
-  JOIN sig sb ON sb.doc_id = c.doc_b
-)
-SELECT e.doc_a, e.doc_b,
-  {X.fround("e.ej * (na.n + nb.n) / (1.0 + e.ej) / na.n", 6)} AS est_contain_ab,
-  {X.fround("e.ej * (na.n + nb.n) / (1.0 + e.ej) / nb.n", 6)} AS est_contain_ba
+    est = "e.ej * (na.n + nb.n) / (1.0 + e.ej)"
+    return _lsh_verify_with(d, table, est=True, inter=False) + f"""SELECT e.doc_a, e.doc_b,
+  {X.fround(f"{est} / na.n", 6)} AS est_contain_ab,
+  {X.fround(f"{est} / nb.n", 6)} AS est_contain_ba
 FROM est e
 JOIN sizes na ON e.doc_a = na.doc_id
 JOIN sizes nb ON e.doc_b = nb.doc_id
@@ -1074,27 +998,12 @@ def containment_estimate_fast_df(spark, table: str = "documents"):
     from ..functions.dialect import fround
 
     _sh, sig, cand, sizes = _staged_minhash_parts(spark, table, light="sizes")
-    matches = sum(
-        F.when(F.col(f"sa.m{k}") == F.col(f"sb.m{k}"), 1).otherwise(0)
-        for k in range(NUM_PERM)
-    )
-    est = (
-        cand.join(sig.alias("sa"), F.col("sa.doc_id") == F.col("doc_a"))
-        .join(sig.alias("sb"), F.col("sb.doc_id") == F.col("doc_b"))
-        .select("doc_a", "doc_b", (matches.cast("double") / float(NUM_PERM)).alias("ej"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na_n"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb_n"))
     e = "ej * (na_n + nb_n) / (1.0 + ej)"
-    return (
-        est.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.expr(fround(f"{e} / na_n", 6)).alias("est_contain_ab"),
-            F.expr(fround(f"{e} / nb_n", 6)).alias("est_contain_ba"),
-        )
+    return _with_sizes(_staged_estimate(cand, sig, "ej"), sizes).select(
+        "doc_a",
+        "doc_b",
+        F.expr(fround(f"{e} / na_n", 6)).alias("est_contain_ab"),
+        F.expr(fround(f"{e} / nb_n", 6)).alias("est_contain_ba"),
     )
 
 

@@ -106,6 +106,16 @@ def tok_cte(d: str, table: str = "documents") -> str:
     return f"SELECT doc_id, {X.explode_tokens(d, toks)} AS token FROM {table}"
 
 
+def _doc_tokens(spark, docs, view: str):
+    """(doc_id, token) of frame ``docs`` through ``tok_cte``; the temp view
+    ``view`` lives only while the statement is analysed."""
+    docs.createOrReplaceTempView(view)
+    try:
+        return spark.sql(tok_cte(X.SPARK, view))
+    finally:
+        spark.catalog.dropTempView(view)
+
+
 # ---------------------------------------------------------------------------
 # LM perplexity filter
 # ---------------------------------------------------------------------------
@@ -286,6 +296,57 @@ def _bm25_contrib_expr() -> str:
     )
 
 
+def _nt_ctes(
+    table: str | None, dl: str, n_body: str | None, t_body: str | None
+) -> str:
+    """The 1-row CTEs ``n`` (n_docs) and ``t`` (t_tok) every BM25 scorer
+    reads through scalar subqueries: N counts ``table`` and T sums ``dl``,
+    unless ``n_body``/``t_body`` override them (the indexed path inlines
+    the stats sidecar as literals)."""
+    n_body = n_body or f"SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}"
+    t_body = t_body or f"SELECT CAST(SUM(dl) AS BIGINT) AS t_tok FROM {dl}"
+    return f"n AS ({n_body}),\nt AS ({t_body})"
+
+
+def _bm25_ctes(
+    tf: str,
+    dl: str,
+    table: str | None = None,
+    n_body: str | None = None,
+    t_body: str | None = None,
+    qt: str | None = None,
+) -> str:
+    """THE BM25 block (no leading WITH, no trailing comma): n/t/df/scored/
+    bm25agg over relations ``tf`` (doc_id, token, tf) and ``dl`` (doc_id,
+    dl); ``bm25agg`` holds each doc's score_micro and n_terms.  With
+    ``qt`` naming a (query_id, term) relation it is the multi-query shape:
+    every stage carries query_id and bm25agg is per (query_id, doc_id).
+    df is per TOKEN (docs containing it — independent of which queries
+    reference it), so a query scores the same in either shape.  The top-k
+    cuts (``_bm25_score_ctes``, ``_bm25_multi_ctes``) and the fusion legs
+    (``_rrf_ctes``, ``_rrf_multi_ctes``) are tails over it.
+    Dialect-free ANSI."""
+    qid = "" if qt is None else "query_id, "
+    src = f"{tf} tf" if qt is None else f"{qt} qt\n  JOIN {tf} tf ON tf.token = qt.term"
+    return f"""
+{_nt_ctes(table, dl, n_body, t_body)},
+df AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM {tf} GROUP BY token),
+scored AS (
+  SELECT {"" if qt is None else "qt."}{qid}tf.doc_id,
+    {_bm25_contrib_expr()} AS contrib_micro
+  FROM {src}
+  JOIN df ON tf.token = df.token
+  JOIN {dl} dl ON tf.doc_id = dl.doc_id
+),
+bm25agg AS (
+  SELECT {qid}doc_id,
+    CAST(SUM(CAST(floor(contrib_micro + 0.5) AS BIGINT)) AS BIGINT)
+      AS score_micro,
+    COUNT(*) AS n_terms
+  FROM scored GROUP BY {qid}doc_id
+)"""
+
+
 def _bm25_score_ctes(
     tf: str,
     dl: str,
@@ -294,33 +355,12 @@ def _bm25_score_ctes(
     n_body: str | None = None,
     t_body: str | None = None,
 ) -> str:
-    """CTE-list + final SELECT (no leading WITH) over relations ``tf``
-    (doc_id, token, tf) and ``dl`` (doc_id, dl); N comes from ``table``,
-    T from ``dl`` — both as scalar subqueries — unless ``n_body``/
-    ``t_body`` override them (the indexed path inlines the sidecar stats
-    as literals).  Dialect-free ANSI."""
-    n_body = n_body or f"SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}"
-    t_body = t_body or f"SELECT CAST(SUM(dl) AS BIGINT) AS t_tok FROM {dl}"
-    return f"""
-n AS ({n_body}),
-t AS ({t_body}),
-df AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM {tf} GROUP BY token),
-scored AS (
-  SELECT tf.doc_id,
-    {_bm25_contrib_expr()} AS contrib_micro
-  FROM {tf} tf JOIN df ON tf.token = df.token
-  JOIN {dl} dl ON tf.doc_id = dl.doc_id
-),
-agg AS (
-  SELECT doc_id,
-    CAST(SUM(CAST(floor(contrib_micro + 0.5) AS BIGINT)) AS BIGINT)
-      AS score_micro,
-    COUNT(*) AS n_terms
-  FROM scored GROUP BY doc_id
-)
+    """CTE-list + final SELECT (no leading WITH): the single-query top-k
+    cut over the BM25 block (ORDER BY + LIMIT = TakeOrdered)."""
+    return f"""{_bm25_ctes(tf, dl, table, n_body, t_body)}
 SELECT doc_id, n_terms, score_micro,
   {X.fround("CAST(score_micro AS DOUBLE) / 1.0E6", 6)} AS score_bm25
-FROM agg
+FROM bm25agg
 ORDER BY score_micro DESC, doc_id
 LIMIT {k}
 """
@@ -331,13 +371,30 @@ def bm25_score_sql(tf: str, dl: str, table: str, k: int = BM25_K) -> str:
     return f"WITH {_bm25_score_ctes(tf, dl, table, k)}"
 
 
+def _oracle_with(
+    d: str,
+    table: str,
+    query: tuple[str, ...] = BM25_QUERY,
+    queries: dict[int, tuple[str, ...]] | None = None,
+) -> str:
+    """The oracle forms' WITH head (trailing comma): the token stream
+    ``tok``, the query-term tf ``tfq`` and the doc lengths ``dlt`` — with
+    ``queries``, the multi-query shape, also the (query_id, term) table
+    ``qt``, and tf over every query's terms."""
+    qt, terms = "", query
+    if queries is not None:
+        qt = f"qt AS ({bm25_queryset_sql(queries)}), "
+        terms = bm25_queryset_terms(queries)
+    return (
+        f"WITH tok AS ({tok_cte(d, table)}), {qt}"
+        f"tfq AS ({bm25_tf_sql('tok', terms)}), "
+        f"dlt AS ({bm25_dl_sql('tok')}), "
+    )
+
+
 def bm25_topk_sql(d: str, table: str = "documents") -> str:
     """Oracle form: plain CTEs."""
-    return (
-        f"WITH tok AS ({tok_cte(d, table)}), tfq AS ({bm25_tf_sql('tok')}), "
-        f"dlt AS ({bm25_dl_sql('tok')}), "
-        + _bm25_score_ctes("tfq", "dlt", table)
-    )
+    return _oracle_with(d, table) + _bm25_score_ctes("tfq", "dlt", table)
 
 
 def bm25_topk_df(
@@ -405,48 +462,144 @@ qlp AS (
 )"""
 
 
-def _bm25_leg_ctes(
+def _rrf_legs(d: str, names: tuple[str, str], weights: tuple[int, int]):
+    """The fusion tails' shared parts for legs named ``names`` with
+    ``weights``: the per-leg SELECT prefixes of ``legs`` (rn, the weight
+    column ``w`` unless both weights are 1, the is_<leg> flags), the
+    rrf_pico contribution w * RRF_SCALE DIV (RRF_K + rn) — at weights
+    (1, 1) that is RRF_SCALE DIV (RRF_K + rn) exactly, rendered without
+    the w column — and the leg-rank/n_legs aggregates of ``fused``."""
+    a, b = names
+    weighted = weights != (1, 1)
+    w1, w2 = (f"{w} AS w, " for w in weights) if weighted else ("", "")
+    cols = (f"rn, {w1}1 AS is_{a}, 0 AS is_{b}", f"rn, {w2}0 AS is_{a}, 1 AS is_{b}")
+    rrf = X.idiv(d, f"w * {RRF_SCALE}" if weighted else str(RRF_SCALE), f"{RRF_K} + rn")
+    aggs = f"""CAST(SUM({rrf}) AS BIGINT) AS rrf_pico,
+    CAST(MAX(is_{a} * rn) AS BIGINT) AS bm25_rank,
+    CAST(MAX(is_{b} * rn) AS BIGINT) AS {b}_rank,
+    CAST(COUNT(*) AS BIGINT) AS n_legs"""
+    return cols, aggs
+
+
+def _cut_ranked(
+    leg: str, src: str, score: str, leg_k: int, key: str = "doc_id"
+) -> str:
+    """``<leg>top``/``<leg>r`` CTE-list (no trailing comma): relation
+    ``src``'s top leg_k rows by (score DESC, key) — ORDER BY + LIMIT =
+    TakeOrdered — and their ranks (doc_id, rn) from ROW_NUMBER over those
+    <= leg_k rows, never corpus-wide."""
+    doc = key if key == "doc_id" else f"{key} AS doc_id"
+    return f"""
+{leg}top AS (
+  SELECT {key}, {score} FROM {src}
+  ORDER BY {score} DESC, {key} LIMIT {leg_k}
+),
+{leg}r AS (
+  SELECT {doc},
+    ROW_NUMBER() OVER (ORDER BY {score} DESC, {key}) AS rn
+  FROM {leg}top
+)"""
+
+
+def _rrf_ctes(
+    d: str,
     tf: str,
     dl: str,
+    leg2_ctes: str,
+    leg2: str,
+    names: tuple[str, str],
     table: str | None = None,
-    leg_k: int = HYBRID_LEG_K,
     n_body: str | None = None,
     t_body: str | None = None,
+    leg_k: int = HYBRID_LEG_K,
+    k: int = HYBRID_K,
 ) -> str:
-    """THE single-query BM25 leg (no leading WITH, no trailing comma):
-    n/t/df/scored/bm25agg/bm25top/bm25r over relations ``tf`` (doc_id,
-    token, tf) and ``dl`` (doc_id, dl) — one definition shared by the
-    lexical (BM25+QL) and the dense+sparse fusions so the sparse leg's
-    scoring cannot drift between them.  ``bm25r`` exposes (doc_id, rn)
-    with rn from ROW_NUMBER over the TakeOrdered top list (<= leg_k
-    rows — bounded, never corpus-wide)."""
-    n_body = n_body or f"SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}"
-    t_body = t_body or f"SELECT CAST(SUM(dl) AS BIGINT) AS t_tok FROM {dl}"
-    return f"""
-n AS ({n_body}),
-t AS ({t_body}),
-df AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM {tf} GROUP BY token),
-scored AS (
-  SELECT tf.doc_id,
-    {_bm25_contrib_expr()} AS contrib_micro
-  FROM {tf} tf JOIN df ON tf.token = df.token
-  JOIN {dl} dl ON tf.doc_id = dl.doc_id
+    """THE single-query RRF fusion (CTE-list + final SELECT, no leading
+    WITH): the BM25 leg — the BM25 block's ``_cut_ranked`` top leg_k —
+    fused with relation ``leg2`` (doc_id, rn), which the CTE-list
+    ``leg2_ctes`` defines already cut the same way.  ``names`` name the
+    two legs' flags (is_<name>); the second leg's rank column is
+    <name>_rank, the BM25 leg's bm25_rank.  The fused cut is another
+    TakeOrdered."""
+    cols, aggs = _rrf_legs(d, names, (1, 1))
+    return f"""{_bm25_ctes(tf, dl, table, n_body, t_body).rstrip()},
+{_cut_ranked("bm25", "bm25agg", "score_micro", leg_k).strip()},
+{leg2_ctes.strip()},
+legs AS (
+  SELECT doc_id, {cols[0]} FROM bm25r
+  UNION ALL
+  SELECT doc_id, {cols[1]} FROM {leg2}
 ),
-bm25agg AS (
+fused AS (
   SELECT doc_id,
-    CAST(SUM(CAST(floor(contrib_micro + 0.5) AS BIGINT)) AS BIGINT)
-      AS score_micro
-  FROM scored GROUP BY doc_id
-),
-bm25top AS (
-  SELECT doc_id, score_micro FROM bm25agg
-  ORDER BY score_micro DESC, doc_id LIMIT {leg_k}
-),
+    {aggs}
+  FROM legs GROUP BY doc_id
+)
+SELECT doc_id, rrf_pico, bm25_rank, {names[1]}_rank, n_legs,
+  {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
+FROM fused
+ORDER BY rrf_pico DESC, doc_id
+LIMIT {k}
+"""
+
+
+def _rrf_multi_ctes(
+    d: str,
+    tf: str,
+    dl: str,
+    qt: str,
+    leg2: str,
+    names: tuple[str, str],
+    table: str | None = None,
+    n_body: str | None = None,
+    t_body: str | None = None,
+    leg_k: int = HYBRID_LEG_K,
+    k: int = HYBRID_K,
+    weights: tuple[int, int] = (1, 1),
+    leg2_ctes: str = "",
+) -> str:
+    """THE multi-query RRF fusion (CTE-list + final SELECT, no leading
+    WITH): every stage of ``_rrf_ctes`` with a query_id key threaded
+    through.  The BM25 leg ranks the multi-query BM25 block's per-query
+    candidates by a rank window PARTITIONED BY query_id; relation
+    ``leg2`` (query_id, doc_id, rn) is the second leg — defined by the
+    CTE-list ``leg2_ctes`` when given, else a relation in scope.  Both
+    legs are cut at rn <= leg_k, the fused list at rk <= k per query.
+    ``weights`` are the two legs' integer RRF weights (each leg
+    contributes w * RRF_SCALE DIV (RRF_K + rn)); ``names`` as in
+    ``_rrf_ctes``."""
+    cols, aggs = _rrf_legs(d, names, weights)
+    leg2_ctes = f"{leg2_ctes.strip()},\n" if leg2_ctes else ""
+    return f"""{_bm25_ctes(tf, dl, table, n_body, t_body, qt).rstrip()},
 bm25r AS (
-  SELECT doc_id,
-    ROW_NUMBER() OVER (ORDER BY score_micro DESC, doc_id) AS rn
-  FROM bm25top
-)"""
+  SELECT query_id, doc_id,
+    ROW_NUMBER() OVER (
+      PARTITION BY query_id ORDER BY score_micro DESC, doc_id) AS rn
+  FROM bm25agg
+),
+{leg2_ctes}legs AS (
+  SELECT query_id, doc_id, {cols[0]}
+  FROM bm25r WHERE rn <= {leg_k}
+  UNION ALL
+  SELECT query_id, doc_id, {cols[1]}
+  FROM {leg2} WHERE rn <= {leg_k}
+),
+fused AS (
+  SELECT query_id, doc_id,
+    {aggs}
+  FROM legs GROUP BY query_id, doc_id
+),
+ranked AS (
+  SELECT fused.*,
+    ROW_NUMBER() OVER (
+      PARTITION BY query_id ORDER BY rrf_pico DESC, doc_id) AS rk
+  FROM fused
+)
+SELECT query_id, doc_id, rrf_pico, bm25_rank, {names[1]}_rank, n_legs, rk,
+  {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
+FROM ranked WHERE rk <= {k}
+ORDER BY query_id, rk
+"""
 
 
 def _hybrid_rrf_ctes(
@@ -458,43 +611,17 @@ def _hybrid_rrf_ctes(
     t_body: str | None = None,
 ) -> str:
     """CTE-list + final SELECT (no leading WITH) fusing the BM25 and QL
-    legs over shared ``tf``/``dl`` relations.  Leg ranks ride ROW_NUMBER
-    over the TakeOrdered top lists (<= HYBRID_LEG_K rows each); the fused cut is
-    another TakeOrdered.  ``n_body``/``t_body`` override the N/T scalar
+    legs over shared ``tf``/``dl`` relations (``_rrf_ctes``); the QL
+    leg's cut is a TakeOrdered too, its rank window covers <=
+    HYBRID_LEG_K rows.  ``n_body``/``t_body`` override the N/T scalar
     subqueries (the indexed path inlines the stats sidecar as literals,
     same convention as ``_bm25_score_ctes``)."""
-    rrf = X.idiv(d, str(RRF_SCALE), f"{RRF_K} + rn")
-    return f"""
-{_bm25_leg_ctes(tf, dl, table, n_body=n_body, t_body=t_body).strip()},
-{_ql_scores_ctes(tf, dl).lstrip()},
-qltop AS (
-  SELECT doc_id, ql_micro FROM qlp
-  ORDER BY ql_micro DESC, doc_id LIMIT {HYBRID_LEG_K}
-),
-qlr AS (
-  SELECT doc_id,
-    ROW_NUMBER() OVER (ORDER BY ql_micro DESC, doc_id) AS rn
-  FROM qltop
-),
-legs AS (
-  SELECT doc_id, rn, 1 AS is_bm25, 0 AS is_ql FROM bm25r
-  UNION ALL
-  SELECT doc_id, rn, 0 AS is_bm25, 1 AS is_ql FROM qlr
-),
-fused AS (
-  SELECT doc_id,
-    CAST(SUM({rrf}) AS BIGINT) AS rrf_pico,
-    CAST(MAX(is_bm25 * rn) AS BIGINT) AS bm25_rank,
-    CAST(MAX(is_ql * rn) AS BIGINT) AS ql_rank,
-    CAST(COUNT(*) AS BIGINT) AS n_legs
-  FROM legs GROUP BY doc_id
-)
-SELECT doc_id, rrf_pico, bm25_rank, ql_rank, n_legs,
-  {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
-FROM fused
-ORDER BY rrf_pico DESC, doc_id
-LIMIT {HYBRID_K}
-"""
+    ql = _ql_scores_ctes(tf, dl) + ",\n" + _cut_ranked(
+        "ql", "qlp", "ql_micro", HYBRID_LEG_K
+    ).strip()
+    return _rrf_ctes(
+        d, tf, dl, ql, "qlr", ("bm25", "ql"), table, n_body, t_body
+    )
 
 
 def hybrid_rrf_sql(
@@ -503,12 +630,7 @@ def hybrid_rrf_sql(
     query: tuple[str, ...] = BM25_QUERY,
 ) -> str:
     """Oracle form: plain CTEs."""
-    return (
-        f"WITH tok AS ({tok_cte(d, table)}), "
-        f"tfq AS ({bm25_tf_sql('tok', query)}), "
-        f"dlt AS ({bm25_dl_sql('tok')}), "
-        + _hybrid_rrf_ctes(d, "tfq", "dlt", table)
-    )
+    return _oracle_with(d, table, query) + _hybrid_rrf_ctes(d, "tfq", "dlt", table)
 
 
 def hybrid_rrf_df(
@@ -575,38 +697,17 @@ def _bm25_multi_ctes(
     n_body: str | None = None,
     t_body: str | None = None,
 ) -> str:
-    """CTE-list + final SELECT (no leading WITH) over relations ``tf``
-    (doc_id, token, tf — already filtered to the queryset's term union),
-    ``dl`` (doc_id, dl) and ``qt`` (query_id, term).  df is per-TOKEN
-    (docs containing it — independent of which queries reference it), so
-    scores match the single-query form exactly.  The rank window
-    partitions by query_id over the post-aggregation candidate set."""
-    n_body = n_body or f"SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}"
-    t_body = t_body or f"SELECT CAST(SUM(dl) AS BIGINT) AS t_tok FROM {dl}"
-    return f"""
-n AS ({n_body}),
-t AS ({t_body}),
-df AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM {tf} GROUP BY token),
-scored AS (
-  SELECT qt.query_id, tf.doc_id,
-    {_bm25_contrib_expr()} AS contrib_micro
-  FROM {qt} qt
-  JOIN {tf} tf ON tf.token = qt.term
-  JOIN df ON tf.token = df.token
-  JOIN {dl} dl ON tf.doc_id = dl.doc_id
-),
-agg AS (
-  SELECT query_id, doc_id,
-    CAST(SUM(CAST(floor(contrib_micro + 0.5) AS BIGINT)) AS BIGINT)
-      AS score_micro,
-    COUNT(*) AS n_terms
-  FROM scored GROUP BY query_id, doc_id
-),
+    """CTE-list + final SELECT (no leading WITH): the multi-query top-k
+    cut over the multi-query BM25 block (``tf`` already filtered to the
+    queryset's term union, ``qt`` the (query_id, term) relation).  The
+    rank window partitions by query_id over the post-aggregation
+    candidate set."""
+    return f"""{_bm25_ctes(tf, dl, table, n_body, t_body, qt)},
 ranked AS (
   SELECT query_id, doc_id, n_terms, score_micro,
     ROW_NUMBER() OVER (
       PARTITION BY query_id ORDER BY score_micro DESC, doc_id) AS rk
-  FROM agg
+  FROM bm25agg
 )
 SELECT query_id, doc_id, n_terms, score_micro, rk,
   {X.fround("CAST(score_micro AS DOUBLE) / 1.0E6", 6)} AS score_bm25
@@ -621,12 +722,8 @@ def bm25_multi_sql(
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
 ) -> str:
     """Oracle form: plain CTEs."""
-    return (
-        f"WITH tok AS ({tok_cte(d, table)}), "
-        f"qt AS ({bm25_queryset_sql(queries)}), "
-        f"tfq AS ({bm25_tf_sql('tok', bm25_queryset_terms(queries))}), "
-        f"dlt AS ({bm25_dl_sql('tok')}), "
-        + _bm25_multi_ctes("tfq", "dlt", "qt", table)
+    return _oracle_with(d, table, queries=queries) + _bm25_multi_ctes(
+        "tfq", "dlt", "qt", table
     )
 
 
@@ -647,49 +744,6 @@ def bm25_multi_df(
         )
 
 
-def _bm25_multi_leg_ctes(
-    tf: str,
-    dl: str,
-    qt: str,
-    table: str | None = None,
-    n_body: str | None = None,
-    t_body: str | None = None,
-) -> str:
-    """THE multi-query BM25 leg (no leading WITH, no trailing comma):
-    n/t/df/scored/bm25agg/bm25r with a query_id key threaded through —
-    one definition shared by the lexical and the dense+sparse multi
-    fusions.  ``bm25r`` exposes (query_id, doc_id, rn) with rn from a
-    rank window PARTITIONED BY query_id over the per-query candidate
-    aggregation (bounded by candidates per query, never corpus-wide);
-    callers cut at their leg_k."""
-    n_body = n_body or f"SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}"
-    t_body = t_body or f"SELECT CAST(SUM(dl) AS BIGINT) AS t_tok FROM {dl}"
-    return f"""
-n AS ({n_body}),
-t AS ({t_body}),
-df AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS df FROM {tf} GROUP BY token),
-scored AS (
-  SELECT qt.query_id, tf.doc_id,
-    {_bm25_contrib_expr()} AS contrib_micro
-  FROM {qt} qt
-  JOIN {tf} tf ON tf.token = qt.term
-  JOIN df ON tf.token = df.token
-  JOIN {dl} dl ON tf.doc_id = dl.doc_id
-),
-bm25agg AS (
-  SELECT query_id, doc_id,
-    CAST(SUM(CAST(floor(contrib_micro + 0.5) AS BIGINT)) AS BIGINT)
-      AS score_micro
-  FROM scored GROUP BY query_id, doc_id
-),
-bm25r AS (
-  SELECT query_id, doc_id,
-    ROW_NUMBER() OVER (
-      PARTITION BY query_id ORDER BY score_micro DESC, doc_id) AS rn
-  FROM bm25agg
-)"""
-
-
 def _hybrid_rrf_multi_ctes(
     d: str,
     tf: str,
@@ -702,23 +756,20 @@ def _hybrid_rrf_multi_ctes(
     t_body: str | None = None,
 ) -> str:
     """CTE-list + final SELECT (no leading WITH): the multi-query form of
-    the RRF fusion — every stage of the single-query version with a
-    query_id key threaded through.  Per-query candidates are docs holding
-    >= 1 of THAT query's terms; leg cuts ride rank windows PARTITIONED BY
-    query_id over the per-query candidate aggregations (bounded by
-    candidates per query, never corpus-wide).  ``n_body``/``t_body``
-    override the N/T scalar subqueries.
+    the BM25+QL fusion (``_rrf_multi_ctes``).  Per-query candidates are
+    docs holding >= 1 of THAT query's terms; the QL leg ranks them by a
+    window PARTITIONED BY query_id (bounded by candidates per query,
+    never corpus-wide).  ``n_body``/``t_body`` override the N/T scalar
+    subqueries.
 
     This is the ORACLE's form (``hybrid_rrf_multi_sql``): the formula
     written leg by leg.  The engine runs ``_hybrid_rrf_fused_ctes``,
     which returns the same rows in one pass."""
-    rrf = X.idiv(d, str(RRF_SCALE), f"{RRF_K} + rn")
     ql_contrib = (
         f"{qln_micro('5 * COALESCE(qtf.tf, 0) * (SELECT t_tok FROM t) + 5 * ctf.ctf * dl.dl')}"
         f" - {qln_micro('10 * dl.dl * (SELECT t_tok FROM t)')}"
     )
-    return f"""
-{_bm25_multi_leg_ctes(tf, dl, qt, table, n_body, t_body).strip()},
+    ql = f"""
 ctf AS (SELECT token, CAST(SUM(tf) AS BIGINT) AS ctf FROM {tf} GROUP BY token),
 candq AS (
   SELECT DISTINCT qt.query_id, tf.doc_id
@@ -738,33 +789,11 @@ qlr AS (
     ROW_NUMBER() OVER (
       PARTITION BY query_id ORDER BY ql_micro DESC, doc_id) AS rn
   FROM qlp
-),
-legs AS (
-  SELECT query_id, doc_id, rn, 1 AS is_bm25, 0 AS is_ql
-  FROM bm25r WHERE rn <= {leg_k}
-  UNION ALL
-  SELECT query_id, doc_id, rn, 0 AS is_bm25, 1 AS is_ql
-  FROM qlr WHERE rn <= {leg_k}
-),
-fused AS (
-  SELECT query_id, doc_id,
-    CAST(SUM({rrf}) AS BIGINT) AS rrf_pico,
-    CAST(MAX(is_bm25 * rn) AS BIGINT) AS bm25_rank,
-    CAST(MAX(is_ql * rn) AS BIGINT) AS ql_rank,
-    CAST(COUNT(*) AS BIGINT) AS n_legs
-  FROM legs GROUP BY query_id, doc_id
-),
-ranked AS (
-  SELECT fused.*,
-    ROW_NUMBER() OVER (
-      PARTITION BY query_id ORDER BY rrf_pico DESC, doc_id) AS rk
-  FROM fused
-)
-SELECT query_id, doc_id, rrf_pico, bm25_rank, ql_rank, n_legs, rk,
-  {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
-FROM ranked WHERE rk <= {k}
-ORDER BY query_id, rk
-"""
+)"""
+    return _rrf_multi_ctes(
+        d, tf, dl, qt, "qlr", ("bm25", "ql"), table, n_body, t_body,
+        leg_k, k, leg2_ctes=ql,
+    )
 
 
 def _hybrid_rrf_fused_ctes(
@@ -801,8 +830,6 @@ def _hybrid_rrf_fused_ctes(
     makes that reference read df as well as ctf, so both references plan
     one and the same ts aggregate and Spark reuses its shuffle instead of
     scanning the postings a third time."""
-    n_body = n_body or f"SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}"
-    t_body = t_body or f"SELECT CAST(SUM(dl) AS BIGINT) AS t_tok FROM {dl}"
     t_tok = "(SELECT t_tok FROM t)"
     ql_matched = (
         f"{qln_micro(f'5 * tf.tf * {t_tok} + 5 * df.ctf * dl.dl')}"
@@ -820,8 +847,7 @@ def _hybrid_rrf_fused_ctes(
         return in_leg(rn, X.idiv(d, str(RRF_SCALE), f"{RRF_K} + {rn}"))
 
     return f"""
-n AS ({n_body}),
-t AS ({t_body}),
+{_nt_ctes(table, dl, n_body, t_body)},
 ts AS (
   SELECT token, CAST(COUNT(*) AS BIGINT) AS df,
     CAST(SUM(tf) AS BIGINT) AS ctf
@@ -883,12 +909,8 @@ def hybrid_rrf_multi_sql(
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
 ) -> str:
     """Oracle form: plain CTEs."""
-    return (
-        f"WITH tok AS ({tok_cte(d, table)}), "
-        f"qt AS ({bm25_queryset_sql(queries)}), "
-        f"tfq AS ({bm25_tf_sql('tok', bm25_queryset_terms(queries))}), "
-        f"dlt AS ({bm25_dl_sql('tok')}), "
-        + _hybrid_rrf_multi_ctes(d, "tfq", "dlt", "qt", table)
+    return _oracle_with(d, table, queries=queries) + _hybrid_rrf_multi_ctes(
+        d, "tfq", "dlt", "qt", table
     )
 
 
@@ -978,42 +1000,14 @@ def _dense_sparse_ctes(
     leg_k: int = HYBRID_LEG_K,
     k: int = HYBRID_K,
 ) -> str:
-    """CTE-list + final SELECT (no leading WITH) fusing the shared BM25
-    leg (``_bm25_leg_ctes`` — the same fragment as the lexical fusion)
-    with a dense leg read from relation ``dcos`` (vec_id, cosine).  Leg
-    cuts are TakeOrdered; rank windows run over <= leg_k already-cut
-    rows."""
-    rrf = X.idiv(d, str(RRF_SCALE), f"{RRF_K} + rn")
-    return f"""
-{_bm25_leg_ctes(tf, dl, table, leg_k).strip()},
-dtop AS (
-  SELECT vec_id, cosine FROM {dcos}
-  ORDER BY cosine DESC, vec_id LIMIT {leg_k}
-),
-dr AS (
-  SELECT vec_id AS doc_id,
-    ROW_NUMBER() OVER (ORDER BY cosine DESC, vec_id) AS rn
-  FROM dtop
-),
-legs AS (
-  SELECT doc_id, rn, 1 AS is_sparse, 0 AS is_dense FROM bm25r
-  UNION ALL
-  SELECT doc_id, rn, 0 AS is_sparse, 1 AS is_dense FROM dr
-),
-fused AS (
-  SELECT doc_id,
-    CAST(SUM({rrf}) AS BIGINT) AS rrf_pico,
-    CAST(MAX(is_sparse * rn) AS BIGINT) AS bm25_rank,
-    CAST(MAX(is_dense * rn) AS BIGINT) AS dense_rank,
-    CAST(COUNT(*) AS BIGINT) AS n_legs
-  FROM legs GROUP BY doc_id
-)
-SELECT doc_id, rrf_pico, bm25_rank, dense_rank, n_legs,
-  {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
-FROM fused
-ORDER BY rrf_pico DESC, doc_id
-LIMIT {k}
-"""
+    """CTE-list + final SELECT (no leading WITH) fusing the BM25 leg with
+    a dense leg read from relation ``dcos`` (vec_id, cosine) through
+    ``_rrf_ctes`` — the same fusion as the lexical one.  The dense cut is
+    a TakeOrdered; its rank window runs over <= leg_k already-cut rows."""
+    return _rrf_ctes(
+        d, tf, dl, _cut_ranked("d", dcos, "cosine", leg_k, "vec_id"), "dr",
+        ("sparse", "dense"), table, leg_k=leg_k, k=k,
+    )
 
 
 def hybrid_dense_sparse_sql(
@@ -1025,10 +1019,8 @@ def hybrid_dense_sparse_sql(
 ) -> str:
     """Oracle form: plain CTEs."""
     return (
-        f"WITH tok AS ({tok_cte(d, table)}), "
-        f"tfq AS ({bm25_tf_sql('tok', query)}), "
-        f"dlt AS ({bm25_dl_sql('tok')}), "
-        f"dcos AS ({_dense_scored_sql(d, vec_table, query_vec)}), "
+        _oracle_with(d, table, query)
+        + f"dcos AS ({_dense_scored_sql(d, vec_table, query_vec)}), "
         + _dense_sparse_ctes(d, "tfq", "dlt", "dcos", table)
     )
 
@@ -1055,77 +1047,42 @@ def hybrid_dense_sparse_df(
         )
 
 
-def _dense_multi_scored_sql(
-    d: str, vec_table: str, query_vec_ids: tuple[int, ...]
-) -> str:
+def _dense_multi_scored_sql(vec_table: str, query_vec_ids: tuple[int, ...]) -> str:
     """(query_id, vec_id, cosine) of every corpus vector vs EVERY query
-    vector — the multi twin of ``_dense_scored_sql`` (each query excludes
-    only its own vector from the corpus)."""
-    from .similarity import cosine_multi_duck_cte, cosine_spark
+    vector, in DuckDB — the oracle's multi twin of ``_dense_scored_sql``
+    (each query excludes only its own vector from the corpus); the engine
+    runs ``_dense_multi_leg_df``."""
+    from .similarity import cosine_multi_duck_cte
 
     ids = ", ".join(str(i) for i in query_vec_ids)
-    if d == X.DUCK:
-        return cosine_multi_duck_cte(
-            vec_table, f"vec_id IN ({ids})", "e.vec_id <> q.query_id"
-        )
-    return (
-        f"SELECT /*+ BROADCAST(q) */ q.query_id, e.vec_id, "
-        f"{cosine_spark('e.embedding', 'q.qe')} AS cosine "
-        f"FROM {vec_table} e CROSS JOIN "
-        f"(SELECT vec_id AS query_id, embedding AS qe FROM {vec_table} "
-        f"WHERE vec_id IN ({ids})) q "
-        f"WHERE e.vec_id <> q.query_id"
+    return cosine_multi_duck_cte(
+        vec_table, f"vec_id IN ({ids})", "e.vec_id <> q.query_id"
     )
 
 
-def _dense_sparse_multi_ctes(
+def _dense_sparse_multi_sql(
     d: str,
-    tf: str,
-    dl: str,
-    qt: str,
-    drm: str,
-    table: str | None = None,
-    leg_k: int = HYBRID_LEG_K,
-    k: int = HYBRID_K,
-    n_body: str | None = None,
-    t_body: str | None = None,
+    table: str,
+    vec_table: str,
+    queries: dict[int, tuple[str, ...]],
+    weights: tuple[int, int],
 ) -> str:
-    """CTE-list + final SELECT (no leading WITH): the multi-query
-    dense+sparse fusion over the shared multi BM25 leg
-    (``_bm25_multi_leg_ctes``) and a dense leg read from relation ``drm``
-    (query_id, doc_id, rn) — the oracle derives drm from a rank window
-    over the full per-query cosine set, the engine stages
-    ``per_query_topk``'s partition-local pre-cut (bit-identical ranks
-    under the shared (cosine DESC, vec_id) total order)."""
-    rrf = X.idiv(d, str(RRF_SCALE), f"{RRF_K} + rn")
-    return f"""
-{_bm25_multi_leg_ctes(tf, dl, qt, table, n_body, t_body).strip()},
-legs AS (
-  SELECT query_id, doc_id, rn, 1 AS is_sparse, 0 AS is_dense
-  FROM bm25r WHERE rn <= {leg_k}
-  UNION ALL
-  SELECT query_id, doc_id, rn, 0 AS is_sparse, 1 AS is_dense
-  FROM {drm} WHERE rn <= {leg_k}
-),
-fused AS (
-  SELECT query_id, doc_id,
-    CAST(SUM({rrf}) AS BIGINT) AS rrf_pico,
-    CAST(MAX(is_sparse * rn) AS BIGINT) AS bm25_rank,
-    CAST(MAX(is_dense * rn) AS BIGINT) AS dense_rank,
-    CAST(COUNT(*) AS BIGINT) AS n_legs
-  FROM legs GROUP BY query_id, doc_id
-),
-ranked AS (
-  SELECT fused.*,
-    ROW_NUMBER() OVER (
-      PARTITION BY query_id ORDER BY rrf_pico DESC, doc_id) AS rk
-  FROM fused
-)
-SELECT query_id, doc_id, rrf_pico, bm25_rank, dense_rank, n_legs, rk,
-  {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
-FROM ranked WHERE rk <= {k}
-ORDER BY query_id, rk
-"""
+    """Oracle form of the multi-query dense+sparse fusion at leg
+    ``weights``: plain CTEs.  Each query_id's dense vector is the
+    embedding of vec_id == query_id (the fixture's doc/vec pairing), so
+    the queryset is (terms, vector) pairs keyed by one id; the dense leg
+    ``drm`` ranks the full per-query cosine set by a rank window."""
+    return (
+        _oracle_with(d, table, queries=queries)
+        + f"dcosm AS ({_dense_multi_scored_sql(vec_table, tuple(sorted(queries)))}), "
+        f"drm AS (SELECT query_id, vec_id AS doc_id, "
+        f"ROW_NUMBER() OVER (PARTITION BY query_id "
+        f"ORDER BY cosine DESC, vec_id) AS rn FROM dcosm), "
+        + _rrf_multi_ctes(
+            d, "tfq", "dlt", "qt", "drm", ("sparse", "dense"), table,
+            weights=weights,
+        )
+    )
 
 
 def hybrid_dense_sparse_multi_sql(
@@ -1134,20 +1091,8 @@ def hybrid_dense_sparse_multi_sql(
     vec_table: str = "embeddings",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
 ) -> str:
-    """Oracle form: plain CTEs.  Each query_id's dense vector is the
-    embedding of vec_id == query_id (the fixture's doc/vec pairing), so
-    the queryset is (terms, vector) pairs keyed by one id."""
-    return (
-        f"WITH tok AS ({tok_cte(d, table)}), "
-        f"qt AS ({bm25_queryset_sql(queries)}), "
-        f"tfq AS ({bm25_tf_sql('tok', bm25_queryset_terms(queries))}), "
-        f"dlt AS ({bm25_dl_sql('tok')}), "
-        f"dcosm AS ({_dense_multi_scored_sql(d, vec_table, tuple(sorted(queries)))}), "
-        f"drm AS (SELECT query_id, vec_id AS doc_id, "
-        f"ROW_NUMBER() OVER (PARTITION BY query_id "
-        f"ORDER BY cosine DESC, vec_id) AS rn FROM dcosm), "
-        + _dense_sparse_multi_ctes(d, "tfq", "dlt", "qt", "drm", table)
-    )
+    """Oracle form: plain CTEs (``_dense_sparse_multi_sql``, unweighted)."""
+    return _dense_sparse_multi_sql(d, table, vec_table, queries, (1, 1))
 
 
 def _dense_multi_leg_df(spark, vec_table: str, query_vec_ids, leg_k: int):
@@ -1191,6 +1136,36 @@ def _dense_multi_leg_df(spark, vec_table: str, query_vec_ids, leg_k: int):
     )
 
 
+def _dense_sparse_multi_df(
+    spark,
+    table: str,
+    vec_table: str,
+    queries: dict[int, tuple[str, ...]],
+    leg_k: int,
+    k: int,
+    weights: tuple[int, int],
+):
+    """Engine side of the multi-query dense+sparse fusion at leg
+    ``weights``: the sparse leg stages tf/dl exactly like the lexical
+    multi fusion (``_staged_tf_dl``); the dense leg stages
+    ``per_query_topk``'s pre-cut ranks as a view (<= |Q| x leg_k rows) and
+    feeds the SAME fusion fragment the oracle runs (``_rrf_multi_ctes``)
+    — leg ranks are bit-identical by the shared (cosine DESC, vec_id) /
+    (score DESC, doc_id) total orders."""
+    from .staging import staged_views
+
+    dr = _dense_multi_leg_df(spark, vec_table, sorted(queries), leg_k)
+    with _staged_tf_dl(spark, table, bm25_queryset_terms(queries)) as v2:
+        with staged_views(spark, drm=dr) as v3:
+            return spark.sql(
+                f"WITH qt AS ({bm25_queryset_sql(queries)}), "
+                + _rrf_multi_ctes(
+                    X.SPARK, v2.tf, v2.dl, "qt", v3.drm, ("sparse", "dense"),
+                    table, leg_k=leg_k, k=k, weights=weights,
+                )
+            )
+
+
 def hybrid_dense_sparse_multi_df(
     spark,
     table: str = "documents",
@@ -1199,23 +1174,10 @@ def hybrid_dense_sparse_multi_df(
     leg_k: int = HYBRID_LEG_K,
     k: int = HYBRID_K,
 ):
-    """Engine side: the sparse leg stages tok/tf/dl exactly like the
-    lexical multi fusion; the dense leg stages ``per_query_topk``'s
-    pre-cut ranks as a view (<= |Q| x leg_k rows) and feeds the SAME
-    fusion fragment the oracle runs — leg ranks are bit-identical by the
-    shared (cosine DESC, vec_id) / (score DESC, doc_id) total orders."""
-    from .staging import staged_views
-
-    d = X.SPARK
-    dr = _dense_multi_leg_df(spark, vec_table, sorted(queries), leg_k)
-    with _staged_tf_dl(spark, table, bm25_queryset_terms(queries)) as v2:
-        with staged_views(spark, drm=dr) as v3:
-            return spark.sql(
-                f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-                + _dense_sparse_multi_ctes(
-                    d, v2.tf, v2.dl, "qt", v3.drm, table, leg_k, k
-                )
-            )
+    """Engine side: ``_dense_sparse_multi_df``, unweighted."""
+    return _dense_sparse_multi_df(
+        spark, table, vec_table, queries, leg_k, k, (1, 1)
+    )
 
 
 def hybrid_dense_sparse_multi_indexed(
@@ -1230,23 +1192,14 @@ def hybrid_dense_sparse_multi_indexed(
     the dense leg is the same broadcast exact-cosine scan, and the fusion
     fragment is shared — bit-identical to ``hybrid_dense_sparse_multi_df``
     by construction (parity-tested)."""
-    from .staging import staged_views
-
     dr = _dense_multi_leg_df(spark, vec_table, sorted(queries), HYBRID_LEG_K)
-    post, dl, n_body, t_body = _indexed_inputs(
-        spark, path, bm25_queryset_terms(queries)
-    )
-    with staged_views(spark, tf=post, dl=dl, drm=dr, checkpoint=False) as v:
+    with _indexed_views(
+        spark, path, bm25_queryset_terms(queries), drm=dr
+    ) as (v, nt):
         return spark.sql(
             f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-            + _dense_sparse_multi_ctes(
-                X.SPARK,
-                v.tf,
-                v.dl,
-                "qt",
-                v.drm,
-                n_body=n_body,
-                t_body=t_body,
+            + _rrf_multi_ctes(
+                X.SPARK, v.tf, v.dl, "qt", v.drm, ("sparse", "dense"), **nt
             )
         )
 
@@ -1259,71 +1212,18 @@ HYBRID_W_SPARSE = 3
 HYBRID_W_DENSE = 2
 
 
-def _dense_sparse_weighted_ctes(
-    d: str,
-    tf: str,
-    dl: str,
-    qt: str,
-    drm: str,
-    table: str | None = None,
-) -> str:
-    """CTE-list + final SELECT (no leading WITH): WEIGHTED reciprocal rank
-    fusion — the leg-weighted generalization of the multi dense+sparse
-    fragment (rrf = sum of w_leg / (K + rank), the form production stacks
-    tune when one leg is known stronger for the workload).  Same shared
-    BM25 leg, same ``drm`` dense relation contract, exact integers
-    throughout: each leg's contribution is w * RRF_SCALE DIV (K + rn)."""
-    rrf = X.idiv(d, f"w * {RRF_SCALE}", f"{RRF_K} + rn")
-    return f"""
-{_bm25_multi_leg_ctes(tf, dl, qt, table).strip()},
-legs AS (
-  SELECT query_id, doc_id, rn, {HYBRID_W_SPARSE} AS w, 1 AS is_sparse, 0 AS is_dense
-  FROM bm25r WHERE rn <= {HYBRID_LEG_K}
-  UNION ALL
-  SELECT query_id, doc_id, rn, {HYBRID_W_DENSE} AS w, 0 AS is_sparse, 1 AS is_dense
-  FROM {drm} WHERE rn <= {HYBRID_LEG_K}
-),
-fused AS (
-  SELECT query_id, doc_id,
-    CAST(SUM({rrf}) AS BIGINT) AS rrf_pico,
-    CAST(MAX(is_sparse * rn) AS BIGINT) AS bm25_rank,
-    CAST(MAX(is_dense * rn) AS BIGINT) AS dense_rank,
-    CAST(COUNT(*) AS BIGINT) AS n_legs
-  FROM legs GROUP BY query_id, doc_id
-),
-ranked AS (
-  SELECT fused.*,
-    ROW_NUMBER() OVER (
-      PARTITION BY query_id ORDER BY rrf_pico DESC, doc_id) AS rk
-  FROM fused
-)
-SELECT query_id, doc_id, rrf_pico, bm25_rank, dense_rank, n_legs, rk,
-  {X.fround("CAST(rrf_pico AS DOUBLE) / 1.0E12", 9)} AS rrf_score
-FROM ranked WHERE rk <= {HYBRID_K}
-ORDER BY query_id, rk
-"""
-
-
 def hybrid_weighted_sql(
     d: str,
     table: str = "documents",
     vec_table: str = "embeddings",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
 ) -> str:
-    """Oracle form: plain CTEs (the multi dense+sparse oracle with the
-    weighted fusion tail)."""
-    return (
-        f"WITH tok AS ({tok_cte(d, table)}), "
-        f"qt AS ({bm25_queryset_sql(queries)}), "
-        f"tfq AS ({bm25_tf_sql('tok', bm25_queryset_terms(queries))}), "
-        f"dlt AS ({bm25_dl_sql('tok')}), "
-        f"dcosm AS ({_dense_multi_scored_sql(d, vec_table, tuple(sorted(queries)))}), "
-        f"drm AS (SELECT query_id, vec_id AS doc_id, "
-        f"ROW_NUMBER() OVER (PARTITION BY query_id "
-        f"ORDER BY cosine DESC, vec_id) AS rn FROM dcosm), "
-        + _dense_sparse_weighted_ctes(
-            d, "tfq", "dlt", "qt", "drm", table
-        )
+    """Oracle form: WEIGHTED reciprocal rank fusion — the multi
+    dense+sparse oracle at leg weights (HYBRID_W_SPARSE, HYBRID_W_DENSE):
+    rrf = sum of w_leg / (K + rank), the form production stacks tune when
+    one leg is known stronger for the workload."""
+    return _dense_sparse_multi_sql(
+        d, table, vec_table, queries, (HYBRID_W_SPARSE, HYBRID_W_DENSE)
     )
 
 
@@ -1333,20 +1233,12 @@ def hybrid_weighted_df(
     vec_table: str = "embeddings",
     queries: dict[int, tuple[str, ...]] = BM25_QUERYSET,
 ):
-    """Engine side: identical staging to hybrid_dense_sparse_multi_df,
-    the weighted fusion fragment on top."""
-    from .staging import staged_views
-
-    d = X.SPARK
-    dr = _dense_multi_leg_df(spark, vec_table, sorted(queries), HYBRID_LEG_K)
-    with _staged_tf_dl(spark, table, bm25_queryset_terms(queries)) as v2:
-        with staged_views(spark, drm=dr) as v3:
-            return spark.sql(
-                f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-                + _dense_sparse_weighted_ctes(
-                    d, v2.tf, v2.dl, "qt", v3.drm, table
-                )
-            )
+    """Engine side: ``_dense_sparse_multi_df`` at the weighted-RRF leg
+    weights."""
+    return _dense_sparse_multi_df(
+        spark, table, vec_table, queries, HYBRID_LEG_K, HYBRID_K,
+        (HYBRID_W_SPARSE, HYBRID_W_DENSE),
+    )
 
 
 def hybrid_dense_sparse_ann_indexed(
@@ -1361,7 +1253,7 @@ def hybrid_dense_sparse_ann_indexed(
     from the persisted cell-partitioned vector index (ivf_multi_indexed —
     |Q| pruned cell scans), the sparse leg is BM25 over pruned postings
     buckets + sidecar stats, fused through the SAME
-    ``_dense_sparse_multi_ctes`` fragment as the exact forms.  The dense
+    ``_rrf_multi_ctes`` fusion as the exact forms.  The dense
     leg is APPROXIMATE by design (nprobe cells, not the whole corpus) —
     standard RRF semantics absorb that: a doc outside the probed cells
     simply contributes no dense-leg term, exactly like a doc outside a
@@ -1379,6 +1271,7 @@ def hybrid_dense_sparse_ann_indexed(
     in scheduling round-trips per query."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.sql import functions as F
 
     from .similarity import _read_centroids, ivf_multi_indexed
@@ -1402,12 +1295,18 @@ def hybrid_dense_sparse_ann_indexed(
             .isEmpty()
         )
 
+    def inherit(fn):
+        # each read's jobs carry the caller's job group, description,
+        # scheduler pool and tags; one wrap per read, so no two threads
+        # share one copy of the local properties
+        return inheritable_thread_target(spark)(fn)
+
     with ThreadPoolExecutor(max_workers=4) as pool:
-        f_qv = pool.submit(query_vecs) if callable(query_vecs) else None
-        f_clash = pool.submit(_clashes)
-        f_cent = pool.submit(_read_centroids, spark, ivf_path)
+        f_qv = pool.submit(inherit(query_vecs)) if callable(query_vecs) else None
+        f_clash = pool.submit(inherit(_clashes))
+        f_cent = pool.submit(inherit(_read_centroids), spark, ivf_path)
         f_inputs = pool.submit(
-            _indexed_inputs, spark, text_path, bm25_queryset_terms(queries)
+            inherit(_indexed_inputs), spark, text_path, bm25_queryset_terms(queries)
         )
         qvecs = f_qv.result() if f_qv is not None else query_vecs
         # the id-set contract raises BEFORE any other future is consumed,
@@ -1441,12 +1340,13 @@ def hybrid_dense_sparse_ann_indexed(
     with staged_views(spark, tf=post, dl=dl, drm=dr, checkpoint=False) as v:
         return spark.sql(
             f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-            + _dense_sparse_multi_ctes(
+            + _rrf_multi_ctes(
                 X.SPARK,
                 v.tf,
                 v.dl,
                 "qt",
                 v.drm,
+                ("sparse", "dense"),
                 n_body=n_body,
                 t_body=t_body,
             )
@@ -1620,12 +1520,7 @@ def lm_model_score(docs_df, model: tuple[list[tuple[str, int]], int]):
     rows, qln_tv1 = model
     sess = docs_df.sparkSession
     lm = sess.createDataFrame(rows, "token string, c long")
-    view = "__lm_score_docs"
-    docs_df.createOrReplaceTempView(view)
-    try:
-        toks = sess.sql(tok_cte(X.SPARK, view))
-    finally:
-        sess.catalog.dropTempView(view)
+    toks = _doc_tokens(sess, docs_df, "__lm_score_docs")
     return (
         toks.join(F.broadcast(lm), "token", "left")
         .withColumn(
@@ -1668,17 +1563,24 @@ def _token_bucket(token: str) -> int:
     return int(hashlib.md5(token.encode()).hexdigest()[:15], 16) % TEXT_INDEX_BUCKETS
 
 
-def _assert_no_null_text(docs_df, where: str) -> None:
+def _assert_no_null_text(docs_df, where: str, head) -> None:
     """Enforce the index contract on an APPEND batch: NULL-text docs would
     land no doclen row, so the append's stats rebuild (N = doclen row
     count) would silently shift N away from build-time's docs-table count
-    — changing every idf.  An isEmpty() IsNull probe is batch-scale cheap
-    here (appends are micro-batches; parquet sources additionally prune
-    via row-group null counts).  The BUILD path enforces the same
-    contract for free instead — it compares the docs count it already
-    takes against the doclen row count it just wrote (one footer-metadata
-    read, no second corpus scan)."""
-    if not docs_df.filter("text IS NULL").isEmpty():
+    — changing every idf.  A bounded batch passes its collected ``head``
+    (rows carrying a ``_tnull`` flag) and costs no job; for an unbounded
+    one (``head`` None) an isEmpty() IsNull probe runs, batch-scale cheap
+    here (appends are
+    micro-batches; parquet sources additionally prune via row-group null
+    counts).  The BUILD path enforces the same contract for free instead
+    — it compares the docs count it already takes against the doclen row
+    count it just wrote (one footer-metadata read, no second corpus
+    scan)."""
+    if (
+        any(r["_tnull"] for r in head)
+        if head is not None
+        else not docs_df.filter("text IS NULL").isEmpty()
+    ):
         raise ValueError(
             f"{where}: NULL-text docs are outside the text-index contract "
             "(they produce no tokens and no doclen row, so the append-time "
@@ -1826,18 +1728,11 @@ def _assert_fresh_doc_ids(
     )
     head_ids = [r["doc_id"] for r in head]
     bounded = len(head) <= _FRESH_PROBE_INLIST
-    # same raise order as the standalone probe: NULL-text before dup
+    # NULL-text raises before dup, at any batch size
+    _assert_no_null_text(new_docs, where, head if bounded else None)
     if bounded:
-        if any(r["_tnull"] for r in head):
-            raise ValueError(
-                f"{where}: NULL-text docs are outside the text-index "
-                "contract (they produce no tokens and no doclen row, "
-                "so the append-time stats rebuild would drift N) — "
-                "filter them out before indexing"
-            )
         has_dup = len(set(head_ids)) < len(head_ids)
     else:
-        _assert_no_null_text(new_docs, where)
         has_dup = not (
             new_docs.groupBy("doc_id").count().filter("count > 1").isEmpty()
         )
@@ -1872,12 +1767,7 @@ def build_text_index(spark, docs_df, path: str) -> None:
     no pass over the corpus text at all."""
     from pyspark.sql import functions as F
 
-    view = "__text_index_docs"
-    docs_df.createOrReplaceTempView(view)
-    try:
-        tok_df = spark.sql(tok_cte(X.SPARK, view))
-    finally:
-        spark.catalog.dropTempView(view)
+    tok_df = _doc_tokens(spark, docs_df, "__text_index_docs")
     # ONE corpus pass: tokenize -> (doc, token) aggregation -> partitioned
     # write.  The overwrite-mode postings write doubles as free staging —
     # dl derives from the WRITTEN postings (dl = SUM(tf) == token count
@@ -2002,6 +1892,19 @@ def _indexed_inputs(spark, path: str, terms: tuple[str, ...]):
     return post, dl, n_body, t_body
 
 
+@contextmanager
+def _indexed_views(spark, path: str, terms: tuple[str, ...], **staged):
+    """The ``*_indexed`` forms' preamble: ``_indexed_inputs`` for
+    ``terms``, with the postings and doclen frames registered as the lazy
+    views ``tf``/``dl`` next to any ``staged`` frames.  Yields the views
+    and the N/T bodies as keyword arguments (``n_body``, ``t_body``)."""
+    from .staging import staged_views
+
+    post, dl, n_body, t_body = _indexed_inputs(spark, path, terms)
+    with staged_views(spark, tf=post, dl=dl, checkpoint=False, **staged) as v:
+        yield v, {"n_body": n_body, "t_body": t_body}
+
+
 def bm25_topk_indexed(
     spark,
     path: str,
@@ -2019,14 +1922,8 @@ def bm25_topk_indexed(
     the postings reflect the corpus at build time; ingest appends re-run
     ``build_text_index`` (or the stats drift, exactly like a Lucene
     segment awaiting merge)."""
-    from .staging import staged_views
-
-    post, dl, n_body, t_body = _indexed_inputs(spark, path, query)
-    with staged_views(spark, tf=post, dl=dl, checkpoint=False) as v:
-        return spark.sql(
-            "WITH "
-            + _bm25_score_ctes(v.tf, v.dl, k=k, n_body=n_body, t_body=t_body)
-        )
+    with _indexed_views(spark, path, query) as (v, nt):
+        return spark.sql("WITH " + _bm25_score_ctes(v.tf, v.dl, k=k, **nt))
 
 
 def bm25_multi_indexed(
@@ -2040,17 +1937,10 @@ def bm25_multi_indexed(
     buckets |Q| times), then the same multi scoring fragment as the online
     form with the 1-row stats sidecar inlined as literals.  Bit-identical
     to ``bm25_multi_df`` by construction (parity-tested)."""
-    from .staging import staged_views
-
-    post, dl, n_body, t_body = _indexed_inputs(
-        spark, path, bm25_queryset_terms(queries)
-    )
-    with staged_views(spark, tf=post, dl=dl, checkpoint=False) as v:
+    with _indexed_views(spark, path, bm25_queryset_terms(queries)) as (v, nt):
         return spark.sql(
             f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-            + _bm25_multi_ctes(
-                v.tf, v.dl, "qt", n_body=n_body, t_body=t_body
-            )
+            + _bm25_multi_ctes(v.tf, v.dl, "qt", **nt)
         )
 
 
@@ -2074,20 +1964,8 @@ def hybrid_rrf_topk_indexed(
     the term.  Same ``_hybrid_rrf_ctes`` fragment, so results are
     bit-identical to ``hybrid_rrf_df`` by construction (parity-tested on
     both the batch-built and streamed+compacted layouts)."""
-    from .staging import staged_views
-
-    post, dl, n_body, t_body = _indexed_inputs(spark, path, query)
-    with staged_views(spark, tf=post, dl=dl, checkpoint=False) as v:
-        return spark.sql(
-            "WITH "
-            + _hybrid_rrf_ctes(
-                X.SPARK,
-                v.tf,
-                v.dl,
-                n_body=n_body,
-                t_body=t_body,
-            )
-        )
+    with _indexed_views(spark, path, query) as (v, nt):
+        return spark.sql("WITH " + _hybrid_rrf_ctes(X.SPARK, v.tf, v.dl, **nt))
 
 
 def hybrid_rrf_multi_indexed(
@@ -2105,24 +1983,42 @@ def hybrid_rrf_multi_indexed(
     bit-identical to ``hybrid_rrf_multi_df`` by construction
     (parity-tested).  Building the frame runs no Spark job
     (``_indexed_inputs``)."""
-    from .staging import staged_views
-
-    post, dl, n_body, t_body = _indexed_inputs(
-        spark, path, bm25_queryset_terms(queries)
-    )
-    with staged_views(spark, tf=post, dl=dl, checkpoint=False) as v:
+    with _indexed_views(spark, path, bm25_queryset_terms(queries)) as (v, nt):
         return spark.sql(
             f"WITH qt AS ({bm25_queryset_sql(queries)}), "
-            + _hybrid_rrf_fused_ctes(
-                X.SPARK,
-                v.tf,
-                v.dl,
-                "qt",
-                leg_k=leg_k,
-                k=k,
-                n_body=n_body,
-                t_body=t_body,
-            )
+            + _hybrid_rrf_fused_ctes(X.SPARK, v.tf, v.dl, "qt", leg_k=leg_k, k=k, **nt)
+        )
+
+
+@contextmanager
+def _staged_postings(spark, docs, view: str):
+    """Stage the POSTINGS of ``docs`` (one tokenize through the temp view
+    ``view`` + one (doc, token) shuffle), not the raw token stream:
+    doclen is derivable from postings (dl = SUM(tf) == COUNT(*) of tokens
+    per doc), so staging after the aggregation writes both sidecars from
+    the small aggregated frame instead of re-scanning the full token
+    stream for the doclen pass — the batch is tokenized exactly once,
+    identical landed bytes.  Yields (postings with their tbucket, doclen,
+    the staged (doc_id, token, tf) view's name)."""
+    from pyspark.sql import functions as F
+
+    from .staging import staged_views
+
+    base = _doc_tokens(spark, docs, view).groupBy("doc_id", "token").agg(
+        F.count(F.lit(1)).cast("long").alias("tf")
+    )
+    with staged_views(spark, p=base) as v:
+        yield (
+            spark.sql(
+                f"SELECT doc_id, token, tf, "
+                f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS} AS tbucket "
+                f"FROM {v.p}"
+            ),
+            spark.sql(
+                f"SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl "
+                f"FROM {v.p} GROUP BY doc_id"
+            ),
+            v.p,
         )
 
 
@@ -2140,10 +2036,6 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     doclen aggregate, so a torn overwrite is repaired by any later
     NON-EMPTY batch (an empty batch returns before landing anything, so
     it neither tears nor repairs the sidecars)."""
-    from pyspark.sql import functions as F
-
-    from .staging import staged_views
-
     SI.require_layout(path, "tbucket", "batched", "text_index_ingest_batch")
     # one driver collect enforces NULL-text + intra-batch dup + freshness
     # AND reports emptiness (bounded batches) — three contract probes and
@@ -2157,39 +2049,17 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     )
     if n_batch == 0:
         return  # empty batch: nothing to land, stats unchanged
-    view = f"__text_index_batch_{batch_id}"
-    batch_df.createOrReplaceTempView(view)
-    try:
-        tok_df = bspark.sql(tok_cte(X.SPARK, view))
-    finally:
-        bspark.catalog.dropTempView(view)
-    # Stage the POSTINGS (one tokenize + one (doc, token) shuffle), not the
-    # raw token stream: doclen is derivable from postings (dl = SUM(tf) ==
-    # COUNT(*) of tokens per doc), so staging after the aggregation writes
-    # both sidecars from the small aggregated frame instead of re-scanning
-    # the full token stream for the doclen pass — one fewer token-stream
-    # pass per micro-batch, identical landed bytes.
-    postings_base = tok_df.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
-    )
-    with staged_views(bspark, p=postings_base) as v:
-        postings = bspark.sql(
-            f"SELECT doc_id, token, tf, "
-            f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS} AS tbucket "
-            f"FROM {v.p}"
-        )
+    with _staged_postings(
+        bspark, batch_df, f"__text_index_batch_{batch_id}"
+    ) as (postings, dl, staged):
         SI.land_batch(postings, batch_id, path, "tbucket")
-        dl = bspark.sql(
-            f"SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl "
-            f"FROM {v.p} GROUP BY doc_id"
-        )
         SI.land_batch(dl, batch_id, f"{path}.doclen", None)
         # THIS batch's stats contribution from the staged postings — one
         # batch-scale aggregation, so the watermark fast path below never
         # touches the corpus-scale doclen sidecar
         brow = bspark.sql(
             f"SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n, "
-            f"CAST(COALESCE(SUM(tf), 0) AS BIGINT) AS t FROM {v.p}"
+            f"CAST(COALESCE(SUM(tf), 0) AS BIGINT) AS t FROM {staged}"
         ).collect()[0]
     _ingest_stats_update(
         bspark, path, batch_id, int(brow["n"]), int(brow["t"])
@@ -2343,42 +2213,18 @@ def text_index_append(spark, path: str, new_docs) -> None:
     append time, so N cannot silently drift.
 
     Flat layout only (``standing_index``)."""
-    from pyspark.sql import functions as F
-
-    from .staging import staged_views
-
     SI.require_layout(path, "tbucket", "flat", "text_index_append")
     # one contract collect: NULL-text + dup + freshness (bounded batches)
     _assert_fresh_doc_ids(spark, new_docs, path, "text_index_append")
-    view = "__text_index_append_docs"
-    new_docs.createOrReplaceTempView(view)
-    try:
-        tok_df = spark.sql(tok_cte(X.SPARK, view))
-    finally:
-        spark.catalog.dropTempView(view)
-    # Stage the POSTINGS aggregation, not the raw token stream (same
-    # one-token-pass discipline as text_index_ingest_batch): dl derives
-    # from the staged postings (dl = SUM(tf) == token count per doc), so
-    # the batch is tokenized exactly once and the only materialized frame
-    # is the aggregated (doc, token, tf) table.  Landed bytes identical.
-    postings_base = tok_df.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).alias("tf")
-    )
-    with staged_views(spark, p=postings_base) as v:
-        postings = spark.sql(
-            f"SELECT doc_id, token, tf, "
-            f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS} AS tbucket "
-            f"FROM {v.p}"
-        )
+    with _staged_postings(spark, new_docs, "__text_index_append_docs") as (
+        postings, dl, _
+    ):
         # bucket-aligned append: one file per touched bucket per append
         # (unaligned, tasks x buckets slivers — see build_text_index)
         postings.repartition("tbucket").write.mode("append").partitionBy(
             "tbucket"
         ).parquet(path)
-        spark.sql(
-            f"SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS dl "
-            f"FROM {v.p} GROUP BY doc_id"
-        ).write.mode("append").parquet(f"{path}.doclen")
+        dl.write.mode("append").parquet(f"{path}.doclen")
     _rebuild_stats(spark, path)
 
 

@@ -1012,6 +1012,8 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
 def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     emb = load_table(spark, sf_dir, "embeddings")
     path = _ensure_ivf_index(spark, sf_dir)
 
@@ -1022,10 +1024,14 @@ def ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         }
 
     # the two standing-file reads (query vectors, centroid sidecar) are
-    # independent bounded driver jobs — overlap them (guide §2.6)
+    # independent bounded driver jobs — overlap them (guide §2.6), each
+    # under the caller's job group, description, pool and tags (one
+    # local-properties copy per read)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_q = pool.submit(qvecs)
-        f_c = pool.submit(SIM._read_centroids, spark, path)
+        f_q = pool.submit(inheritable_thread_target(spark)(qvecs))
+        f_c = pool.submit(
+            inheritable_thread_target(spark)(SIM._read_centroids), spark, path
+        )
         queries, centers = f_q.result(), f_c.result()
     return SIM.ivf_multi_indexed(
         spark, path, queries, k=COSINE_MULTI_K, centers=centers
@@ -2617,20 +2623,8 @@ def _semantic_pairs_sql(d: str) -> str:
     produced one pair whose dot landed exactly on an fround(6) half-up
     tie, flipping the 6th decimal between engines (round-6 regression
     caught by the three-scale gate)."""
-    cand = DD.minhash_lsh_pairs_sql(d)
-    emb = TX.text_embed_sql(d)
-    return f"""
-WITH cand AS ({cand}),
-emb AS ({emb}),
-sh AS ({DD.shingles_cte(d)}),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS both_n
-  FROM cand c
-  JOIN sh a ON a.doc_id = c.doc_a
-  JOIN sh b ON b.doc_id = c.doc_b AND b.sh = a.sh
-  GROUP BY 1, 2
-),
+    return DD._lsh_verify_with(d, "documents").rstrip() + f""",
+emb AS ({TX.text_embed_sql(d)}),
 cosine AS (
   SELECT c.doc_a, c.doc_b,
     CAST(SUM(CAST(ea.comp * eb.comp AS DECIMAL(30,15))) AS DOUBLE) AS dot
@@ -2891,23 +2885,8 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier=2,
 )
 def containment_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.staging import staged_views
-
     register_temp_views(spark, sf_dir, ("documents",))
-    sh, _sig, cand, sizes = DD._staged_minhash_parts(spark)
-    capped = DD.cap_candidate_degree(cand)
-    inter = DD._staged_intersections(capped, sh)
-    with staged_views(spark, inter=inter, sizes=sizes) as v:
-        return spark.sql(f"""
-SELECT doc_a, doc_b,
-  {X.fround("CAST(both_n AS DOUBLE) / na.n", 6)} AS contain_ab,
-  {X.fround("CAST(both_n AS DOUBLE) / nb.n", 6)} AS contain_ba,
-  CASE WHEN na.n <= nb.n THEN doc_a ELSE doc_b END AS contained_doc
-FROM {v.inter} i
-JOIN {v.sizes} na ON i.doc_a = na.doc_id
-JOIN {v.sizes} nb ON i.doc_b = nb.doc_id
-WHERE CAST(both_n AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5
-""")
+    return DD.containment_on_lsh_capped_df(spark)
 
 
 @register(

@@ -64,8 +64,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never corpus-wide).  tf still shuffles only the term-union rows.  "
     "Rotated tier-2 in round 10 to admit the round-9 production shapes: "
     "driver-gated via bm25_indexed (the same BM25 math over the standing "
-    "index) + hybrid_dense_sparse_multi (whose sparse leg IS "
-    "_bm25_multi_leg_ctes, shared verbatim)",
+    "index) + hybrid_dense_sparse_multi (whose sparse leg runs the same "
+    "_bm25_ctes block, shared verbatim)",
     tier=2,
 )
 def bm25_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -230,7 +230,7 @@ def hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Extension — single-query dense+sparse hybrid retrieval: exact "
     "cosine vs the vec_id=0 reference vector (1e-8-quantized, ties on "
     "vec_id — leg ranks bit-stable cross-engine) fused with the shared "
-    "_bm25_leg_ctes sparse leg via exact-integer RRF (rrf_pico = sum of "
+    "BM25 leg of _rrf_ctes via exact-integer RRF (rrf_pico = sum of "
     "1e12 DIV (60 + leg rank)).  Leg cuts are TakeOrdered; the 1-row "
     "query vector broadcasts (whitelisted BNLJ — dense scoring has no "
     "equi key by construction).  driver-gated via hybrid_dense_sparse_"
@@ -252,7 +252,7 @@ def hybrid_dense_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     "RRF in Cormack et al. 2009): per query_id, exact-decimal cosine vs "
     "the embedding of vec_id=query_id (broadcast |Q|-row query-vector "
     "table, thin projection, per_query_topk partition-local pre-cut) "
-    "fused with the shared _bm25_multi_leg_ctes BM25 leg in exact-integer "
+    "fused with the shared BM25 leg of _rrf_multi_ctes in exact-integer "
     "rrf_pico.  Dense leg ranks are bit-stable cross-engine (1e-8 "
     "quantized cosine, vec_id ties); each query excludes only its own "
     "vector from the dense corpus",
@@ -297,7 +297,7 @@ from . import oracles_py as ORC  # noqa: E402
     "index (|Q| pruned cell scans, approximate by design — standard RRF "
     "absence semantics absorb the probe cut), sparse leg = BM25 over "
     "pruned postings buckets + sidecar stats, fused through the same "
-    "_dense_sparse_multi_ctes fragment as the exact forms.  The "
+    "_rrf_multi_ctes fusion as the exact forms.  The "
     "production query path at 100 TB: per query set, |Q| postings "
     "buckets + nprobe cell partitions, ZERO corpus passes.  The oracle "
     "recomputes both legs deterministically in Python (the IVF family's "
@@ -338,8 +338,9 @@ def hybrid_dense_sparse_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one leg is known stronger for the workload: rrf = sum of "
     "w_leg/(K + rank), sparse w=3 / dense w=2 here, weights are config): "
     "each leg contributes w * RRF_SCALE DIV (60 + rank) — exact BIGINT "
-    "picos end-to-end, same shared BM25 leg and per_query_topk dense "
-    "pre-cut as the unweighted form.  driver-gated via "
+    "picos end-to-end, the same _rrf_multi_ctes fusion, BM25 leg and "
+    "per_query_topk dense pre-cut as the unweighted form at weights "
+    "(3, 2).  driver-gated via "
     "hybrid_dense_sparse_multi (the identical legs; only the fusion "
     "weights differ)",
     tier=2,
