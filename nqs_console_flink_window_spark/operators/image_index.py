@@ -2,9 +2,9 @@
 persisted as parquet partitioned by ``bband``, a 64-way arithmetic
 bucket of the band value.  A corpus-scale near-dup gate cannot re-decode
 and re-hash history per ingest batch, so the bands persist.  The
-lifecycle verbs (layouts, append/ingest refusal, compaction, delete,
-batch landing, the doc_id freshness probe) are the shared
-``standing_index`` core keyed by ``bband``.
+lifecycle verbs (build and batch landing, compaction, delete, the
+doc_id freshness probe) are the shared ``standing_index`` core keyed by
+``bband``.
 
 This module hosts the verbs for the whole perceptual-hash family: the
 audio index (audio_index.py, same band shape, different extractor) and
@@ -107,33 +107,29 @@ def _batch_bands(media: DataFrame, bands_fn, where: str) -> DataFrame:
 def build_image_index(
     spark, media: DataFrame, path: str, bands_fn=None
 ) -> None:
-    """Materialize the band table partitioned by ``bband`` — the offline
-    bulk build.  Once stored bucketed, an ingest probe's (band, bv) keys
-    prune at the file listing.  ``bands_fn`` swaps the band extractor.
+    """Materialize the band table as the ``bband=<b>/batch_id=-1``
+    generation — the offline bulk build.  Once stored bucketed, an ingest
+    probe's (band, bv) keys prune at the file listing.  ``bands_fn``
+    swaps the band extractor.
 
-    The pre-write ``repartition("bband")`` aligns shuffle output with the
-    partition columns so each bucket directory gets ONE file instead of
-    one per upstream task (measured: 1534 tiny files -> 48 on the sf0.1
-    video index, ~1 s of per-read listing/footer overhead gone).  At
-    100 TB a single file per bucket would be oversized — there the knob
-    is adding ``bv`` (or a salt) to the repartition key, which spreads a
-    bucket over many tasks while keeping every file bucket-pure."""
-    (bands_fn or image_bands)(media).repartition("bband").write.mode(
-        "overwrite"
-    ).partitionBy("bband").parquet(path)
+    The bband-aligned write gives each bucket directory ONE file instead
+    of one per upstream task (measured: 1534 tiny files -> 48 on the
+    sf0.1 video index, ~1 s of per-read listing/footer overhead gone).
+    At 100 TB a single file per bucket would be oversized — there the
+    knob is adding ``bv`` (or a salt) to the repartition key, which
+    spreads a bucket over many tasks while keeping every file
+    bucket-pure."""
+    SI.land_build((bands_fn or image_bands)(media), path, "bband")
 
 
 def image_index_append(spark, path: str, media: DataFrame) -> None:
-    """Flat-layout maintenance: hash NEW images and append their bands
-    into the bband partitions (small-file debt settled by
-    ``compact_image_index``)."""
-    where = "image_index_append"
-    SI.require_layout(path, "bband", "flat", where)
-    bands = _batch_bands(media, image_bands, where)
-    _assert_fresh_image_ids(bands, path, where)
-    bands.repartition("bband").write.mode("append").partitionBy(
-        "bband"
-    ).parquet(path)
+    """Hash NEW images and land their bands with
+    ``image_index_ingest_batch`` at the next append id
+    (``standing_index.append_batch_id``); small-file debt is settled by
+    ``compact_image_index``."""
+    image_index_ingest_batch(
+        spark, media, SI.append_batch_id(path, "bband", ()), path
+    )
 
 
 def _ingest_bands(bspark, bands: DataFrame, batch_id: int, path: str) -> None:
@@ -146,25 +142,23 @@ def _ingest_bands(bspark, bands: DataFrame, batch_id: int, path: str) -> None:
 def image_index_ingest_batch(
     bspark, batch_media: DataFrame, batch_id: int, path: str, bands_fn=None
 ) -> None:
-    """One micro-batch's replay-idempotent landing (streamed layout)."""
+    """One batch's replay-idempotent landing."""
     where = "image_index_ingest_batch"
-    SI.require_layout(path, "bband", "batched", where)
     bands = _batch_bands(batch_media, bands_fn, where).localCheckpoint()
     _assert_fresh_image_ids(bands, path, where, exclude_batch_id=batch_id)
     _ingest_bands(bspark, bands, batch_id, path)
 
 
-def compact_image_index(
-    spark, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict[str, int]:
-    """Flat-layout compaction of each bband partition."""
-    return SI.compact_flat(spark, path, "bband", target_bytes)
+def compact_image_index(spark, path: str) -> dict[str, int]:
+    """Compaction of everything landed into each bband partition's
+    ``batch_id=-1`` generation."""
+    return SI.compact_all(spark, path, "bband")
 
 
 def compact_streamed_image_index(
     spark, path: str, upto_batch_id: int
 ) -> dict[str, int]:
-    """Streamed-layout compaction below the committed watermark."""
+    """Compaction below the committed watermark."""
     return SI.compact_streamed(spark, path, "bband", upto_batch_id)
 
 

@@ -1589,24 +1589,22 @@ def _assert_no_null_text(docs_df, where: str, head) -> None:
 
 
 # contract schemas of the postings and doclen files (tbucket is the
-# postings partition column; the streamed layout adds a batch_id one)
+# postings partition column; every slice adds a batch_id one)
 _POSTINGS_SCHEMA = "doc_id bigint, token string, tf bigint, tbucket int"
 _DOCLEN_SCHEMA = "doc_id bigint, dl bigint"
 
 
 def _rebuild_stats(spark, path: str) -> None:
-    """Rebuild the 1-row stats sidecar FROM the doclen sidecar — the ONE
-    convergence rule every maintenance verb (append, streamed ingest,
-    delete) shares: stats is a pure function of doclen, so a torn write
-    is repaired by any later maintenance call.  The COALESCE keeps t_tok
-    a real 0 when a delete empties the corpus (a NULL would crash
-    _indexed_inputs' int() on the next query).  On the STREAMED layout a
-    delete of every doc removes all batch_id=* partition dirs outright —
-    the doclen dir then holds no parquet files at all and spark.read
-    cannot infer a schema, so an empty dir writes the 0/0 stats row
-    directly — via the shared ``_read_index_or_empty`` probe, whose
-    empty frame aggregates to exactly that row (COUNT 0, COALESCE 0), so
-    both layouts take one code path."""
+    """Rebuild the 1-row stats sidecar FROM the doclen sidecar — the
+    convergence rule delete shares with the ingest's full-rebuild
+    fallback: stats is a pure function of doclen, so a torn write is
+    repaired by any later maintenance call.  The COALESCE keeps t_tok a
+    real 0 when a delete empties the corpus (a NULL would crash
+    _indexed_inputs' int() on the next query).  A delete of every doc
+    removes all batch_id=* partition dirs outright — the doclen dir then
+    holds no parquet files at all and spark.read cannot infer a schema,
+    so the shared ``_read_index_or_empty`` probe stands in an empty frame,
+    which aggregates to exactly the 0/0 row (COUNT 0, COALESCE 0)."""
     from pyspark.sql import functions as F
 
     dl = SI._read_index_or_empty(spark, f"{path}.doclen", _DOCLEN_SCHEMA)
@@ -1646,9 +1644,9 @@ def _ingest_stats_update(
     - a fresh-checkpoint restart re-owning an existing slice (same
       mismatch, from the other side),
     - a torn/absent/legacy stats row (unreadable, or no certificate
-      column — every non-ingest maintenance verb, delete/compact/append
-      rebuilds, writes the plain 2-column row, deliberately invalidating
-      the fast path for one batch),
+      column — a build and a delete write the plain 2-column row,
+      deliberately invalidating the fast path for one batch),
+    - a compaction, which changes the landed slice set,
     and the full rebuild re-certifies over whatever slice set is landed
     (including the compaction fold's ``batch_id=-1`` generation — the
     certificate is a set signature, not a contiguity claim).  The
@@ -1668,7 +1666,7 @@ def _ingest_stats_update(
                     int(row["n_docs"]) + int(n_b),
                     int(row["t_tok"]) + int(t_b),
                 )
-        except Exception:  # noqa: BLE001 - any anomaly => full rebuild
+        except (OSError, ValueError):  # missing or torn sidecar
             fast = None
     if fast is not None:
         n_docs, t_tok = fast
@@ -1755,9 +1753,10 @@ def _assert_fresh_doc_ids(
 
 def build_text_index(spark, docs_df, path: str) -> None:
     """Materialize the inverted index: postings (token, doc_id, tf)
-    written partitioned by ``tbucket`` = md5_int(token) % 64, plus two
-    sidecars — ``<path>.doclen`` (doc_id, dl) and ``<path>.stats``
-    (n_docs, t_tok, 1 row).
+    landed as the ``tbucket=<b>/batch_id=-1`` generation, tbucket =
+    md5_int(token) % 64, plus two sidecars — ``<path>.doclen`` (doc_id,
+    dl; its ``batch_id=-1`` slice) and ``<path>.stats`` (n_docs, t_tok,
+    1 row).
 
     This is the storage shape the online ``bm25_topk`` only approximates:
     once postings are *stored* token-bucketed, a query's term filter is
@@ -1783,19 +1782,13 @@ def build_text_index(spark, docs_df, path: str) -> None:
             F.expr(f"{X.md5_int(X.SPARK, 'token')} % {TEXT_INDEX_BUCKETS}"),
         )
     )
-    # bucket-aligned write (the image index's r11 fix): unaligned, every
-    # shuffle task writes a sliver into every tbucket dir (tasks x 64
-    # files); aligned, each bucket is one file and every pruned read
-    # lists |Q| files
-    postings.repartition("tbucket").write.mode("overwrite").partitionBy(
-        "tbucket"
-    ).parquet(path)
+    SI.land_build(postings, path, "tbucket")
     dl = (
         spark.read.parquet(path)
         .groupBy("doc_id")
         .agg(F.sum("tf").cast("long").alias("dl"))
     )
-    dl.write.mode("overwrite").parquet(f"{path}.doclen")
+    SI.land_build(dl, f"{path}.doclen", None)
     # n_docs counts the DOCS TABLE (the same N the online form's
     # scalar subquery reads) — a distinct-doc count over the token
     # stream would undercount by every zero-token document and shift
@@ -1963,7 +1956,7 @@ def hybrid_rrf_topk_indexed(
     over query-term tf rows because postings hold tf for EVERY doc holding
     the term.  Same ``_hybrid_rrf_ctes`` fragment, so results are
     bit-identical to ``hybrid_rrf_df`` by construction (parity-tested on
-    both the batch-built and streamed+compacted layouts)."""
+    both built and streamed+compacted indexes)."""
     with _indexed_views(spark, path, query) as (v, nt):
         return spark.sql("WITH " + _hybrid_rrf_ctes(X.SPARK, v.tf, v.dl, **nt))
 
@@ -2023,11 +2016,11 @@ def _staged_postings(spark, docs, view: str):
 
 
 def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
-    """One micro-batch's index landing — the REPLAY-IDEMPOTENT streaming
-    form of ``text_index_append`` (which is NOT replay-safe — that is the
-    batch-job path): postings land as the batch's
-    ``tbucket=<b>/batch_id=<n>`` slices and doclen as its ``batch_id=<n>``
-    slice (``standing_index.land_batch``).  The stats sidecar is
+    """One batch's index landing, replay-idempotent: postings land as the
+    batch's ``tbucket=<b>/batch_id=<n>`` slices and doclen as its
+    ``batch_id=<n>`` slice (``standing_index.land_batch``).  A stream
+    lands its micro-batch ids; ``text_index_append`` lands the next
+    append id below the build's.  The stats sidecar is
     maintained by ``_ingest_stats_update`` after every landing: an O(batch)
     slice-set-certified increment when this batch is provably a new
     slice over exactly the set the stored row aggregates, a full doclen
@@ -2036,7 +2029,6 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     doclen aggregate, so a torn overwrite is repaired by any later
     NON-EMPTY batch (an empty batch returns before landing anything, so
     it neither tears nor repairs the sidecars)."""
-    SI.require_layout(path, "tbucket", "batched", "text_index_ingest_batch")
     # one driver collect enforces NULL-text + intra-batch dup + freshness
     # AND reports emptiness (bounded batches) — three contract probes and
     # the caller's would-be emptiness job folded into a single job
@@ -2049,9 +2041,9 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
     )
     if n_batch == 0:
         return  # empty batch: nothing to land, stats unchanged
-    with _staged_postings(
-        bspark, batch_df, f"__text_index_batch_{batch_id}"
-    ) as (postings, dl, staged):
+    # a view name takes no '-': append ids are negative
+    view = f"__text_index_batch_{batch_id}".replace("-", "m")
+    with _staged_postings(bspark, batch_df, view) as (postings, dl, staged):
         SI.land_batch(postings, batch_id, path, "tbucket")
         SI.land_batch(dl, batch_id, f"{path}.doclen", None)
         # THIS batch's stats contribution from the staged postings — one
@@ -2069,8 +2061,8 @@ def text_index_ingest_batch(bspark, batch_df, batch_id: int, path: str) -> None:
 def compact_streamed_text_index(
     spark, path: str, upto_batch_id: int
 ) -> dict[str, int]:
-    """Streamed-layout compaction of each token bucket and the doclen
-    sidecar below the committed watermark."""
+    """Compaction of each token bucket and the doclen sidecar below the
+    committed watermark."""
     return SI.compact_streamed(
         spark, path, "tbucket", upto_batch_id, sidecars=("doclen",)
     )
@@ -2195,47 +2187,26 @@ def lm_ppl_terciles_df(spark, table: str = "documents"):
 
 def text_index_append(spark, path: str, new_docs) -> None:
     """Incremental index maintenance (the ``ivf_index_append`` analogue):
-    tokenize ONLY the new docs, append their postings into the same
-    token-hash buckets (appended files join their bucket's partition, so
-    term-routing partition pruning keeps holding without touching old
-    files) and their lengths into the doclen sidecar, then rebuild the
-    1-row stats sidecar FROM the doclen sidecar.
-
-    The stats rebuild makes the append replay-convergent: doclen is
-    append-only and stats is a pure function of it, so a torn or stale
-    stats overwrite is repaired by any later append.  N is rebuilt as the
-    doclen row count, which equals total docs ingested for every doc with
-    non-NULL text (whitespace split always yields >= 1 token, so every
-    such doc lands one dl row) — the same N ``build_text_index`` takes
-    from the docs table; NULL-text docs are outside the contract on both
-    paths (they produce no tokens anywhere, online form included) — and
-    the contract is now ENFORCED by ``_assert_no_null_text`` at build and
-    append time, so N cannot silently drift.
-
-    Flat layout only (``standing_index``)."""
-    SI.require_layout(path, "tbucket", "flat", "text_index_append")
-    # one contract collect: NULL-text + dup + freshness (bounded batches)
-    _assert_fresh_doc_ids(spark, new_docs, path, "text_index_append")
-    with _staged_postings(spark, new_docs, "__text_index_append_docs") as (
-        postings, dl, _
-    ):
-        # bucket-aligned append: one file per touched bucket per append
-        # (unaligned, tasks x buckets slivers — see build_text_index)
-        postings.repartition("tbucket").write.mode("append").partitionBy(
-            "tbucket"
-        ).parquet(path)
-        dl.write.mode("append").parquet(f"{path}.doclen")
-    _rebuild_stats(spark, path)
+    ``text_index_ingest_batch`` at the next append id
+    (``standing_index.append_batch_id``), so only the new docs are
+    tokenized, their postings join the same token-hash buckets (term
+    routing keeps pruning without touching old files), and the stats
+    sidecar follows the doclen sidecar under the same certificate rule.
+    N stays the doclen row count, the same N ``build_text_index`` takes
+    from the docs table: the NULL-text and fresh-id contracts are
+    enforced here as at build time."""
+    text_index_ingest_batch(
+        spark, new_docs, SI.append_batch_id(path, "tbucket", ("doclen",)), path
+    )
 
 
 def compact_text_index(spark, path: str) -> dict[str, int]:
-    """Flat-layout compaction of ``text_index_append``'s small files: each
-    token bucket's postings and the doclen sidecar.  The stats sidecar
-    needs no rebuild (it is a pure function of doclen, whose rows do not
-    change).  Files are folded toward 128 MiB.  Returns ``{subdir_name: file_count}``."""
-    return SI.compact_flat(
-        spark, path, "tbucket", 128 * 1024 * 1024, sidecars=("doclen",)
-    )
+    """Compaction of everything landed (build, appends, stream batches)
+    into each token bucket's and the doclen sidecar's ``batch_id=-1``
+    generation.  The stats sidecar needs no rebuild (it is a pure
+    function of doclen, whose rows do not change).  Returns
+    ``{subdir_name: file_count}``."""
+    return SI.compact_all(spark, path, "tbucket", sidecars=("doclen",))
 
 
 def text_index_delete(spark, path: str, doc_ids) -> None:
@@ -2243,11 +2214,10 @@ def text_index_delete(spark, path: str, doc_ids) -> None:
     lifecycle verb next to build/append/ingest/compact: remove every
     trace of ``doc_ids`` from the inverted index.
 
-    - postings: targeted rewrite of only the (tbucket[, batch_id])
+    - postings: targeted rewrite of only the (tbucket, batch_id)
       partitions holding the docs' tokens (delete_rows_partitioned);
-    - doclen sidecar: per-batch rewrite on the streamed layout, full
-      rewrite on the flat one (the sidecar is doc_id -> dl, one row per
-      doc — the bounded-side-table case);
+    - doclen sidecar: targeted rewrite of the batch slices holding
+      the docs;
     - stats sidecar: rebuilt from doclen, the standing convergence rule
       (a torn run is repaired by any later append/ingest/delete).
 

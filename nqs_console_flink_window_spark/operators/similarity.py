@@ -462,46 +462,34 @@ def ivf_fit_centroids(df: DataFrame, path: str, vec_col: str = "embedding") -> N
 
 
 def build_ivf_index(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
-    """Materialize the IVF index: the corpus rewritten as parquet partitioned
-    by ``cell``, centroids stored alongside (``<path>.centroids``).
+    """Materialize the IVF index: the corpus rewritten as parquet landed as
+    the ``cell=<c>/batch_id=-1`` generation, centroids stored alongside
+    (``<path>.centroids``).
 
     This is the 100 TB shape the in-memory ``ivf_topk`` only approximates:
     once the corpus is *stored* cell-partitioned, a query's nprobe filter is
     partition pruning at the file-listing level — Spark never opens, reads,
     or schedules the other cells' files at all."""
     assigned, centers = ivf_assignments(df, vec_col)
-    # cell-aligned write (the image index's r11 discipline): unaligned,
-    # every task writes a sliver into every cell dir (tasks x cells tiny
-    # files at scale); aligned, each cell is one file per build and a
-    # probe's nprobe listing stays nprobe files
-    assigned.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
+    SI.land_build(assigned, path, "cell")
     _write_centroids(df.sparkSession, centers, path)
 
 
 def ivf_index_append(
     spark, path: str, new_vecs: DataFrame, vec_col: str = "embedding"
 ) -> None:
-    """Incremental index maintenance: assign NEW vectors to cells with the
-    PERSISTED centroids (no re-fit — the production contract: the coarse
-    quantizer is a build-time artifact, ingest only routes into it) and
-    append them to the cell-partitioned parquet.  Routing is the SAME
-    assign_cells_udf rule every other IVF path uses (one numpy matmul per
-    Arrow batch against the <= IVF_CLUSTERS broadcast centroids, ties to
-    the lowest cell id), so appended vectors land exactly where a full
-    rebuild would put them; appended files join their cell's partition, so
-    nprobe partition pruning keeps holding without touching old files.
-    Re-clustering (when drift makes cells lopsided) is build_ivf_index
-    again — an offline rebuild, exactly like production ANN systems.
-    Small-file debt from repeated appends is settled by
-    ``compact_ivf_index``.  Flat layout only (``standing_index``)."""
-    SI.require_layout(path, "cell", "flat", "ivf_index_append")
-    centers = _read_centroids(spark, path)
-    new_vecs.withColumn(
-        "cell", assign_cells_udf(centers)(F.col(vec_col))
-    ).repartition("cell").write.mode("append").partitionBy("cell").parquet(
-        path
+    """Incremental index maintenance: ``ivf_index_ingest_batch`` at the
+    next append id (``standing_index.append_batch_id``).  NEW vectors
+    route through the PERSISTED centroids (no re-fit — the production
+    contract: the coarse quantizer is a build-time artifact, ingest only
+    routes into it), so they land exactly where a full rebuild would put
+    them, and nprobe partition pruning keeps holding without touching old
+    files.  Re-clustering (when drift makes cells lopsided) is
+    build_ivf_index again — an offline rebuild, exactly like production
+    ANN systems.  Small-file debt from repeated appends is settled by
+    ``compact_ivf_index``."""
+    ivf_index_ingest_batch(
+        spark, new_vecs, SI.append_batch_id(path, "cell", ()), path, vec_col
     )
 
 
@@ -509,14 +497,11 @@ def ivf_index_ingest_batch(
     bspark, batch_df: DataFrame, batch_id: int, path: str,
     vec_col: str = "embedding",
 ) -> None:
-    """One micro-batch's replay-idempotent IVF landing (the streamed
-    form of ``ivf_index_append``): vectors route through the persisted
-    centroids and land as the batch's ``cell=<c>/batch_id=<n>`` slices.
-    The quantizer must already be persisted — streaming ingest never
-    re-fits; a pure streaming build bootstraps with ``ivf_fit_centroids``
-    (quantizer ONLY: ``build_ivf_index`` would leave the flat layout,
-    which ingest refuses)."""
-    SI.require_layout(path, "cell", "batched", "ivf_index_ingest_batch")
+    """One batch's replay-idempotent IVF landing: vectors route through
+    the persisted centroids (assign_cells_udf, the rule every IVF path
+    uses) and land as the batch's ``cell=<c>/batch_id=<n>`` slices.  The
+    quantizer must already be persisted — ingest never re-fits; a pure
+    streaming build bootstraps with ``ivf_fit_centroids``."""
     centers = _read_centroids(bspark, path)
     SI.land_batch(
         batch_df.withColumn("cell", assign_cells_udf(centers)(F.col(vec_col))),
@@ -527,18 +512,16 @@ def ivf_index_ingest_batch(
 def compact_streamed_ivf_index(
     spark, path: str, upto_batch_id: int
 ) -> dict[str, int]:
-    """Streamed-layout compaction of each cell below the committed
-    watermark; ``{cell_dir: file_count}``."""
+    """Compaction of each cell below the committed watermark;
+    ``{cell_dir: file_count}``."""
     return SI.compact_streamed(spark, path, "cell", upto_batch_id)
 
 
-def compact_ivf_index(
-    spark, path: str, target_bytes: int = 128 * 1024 * 1024
-) -> dict[str, int]:
-    """Flat-layout compaction of ``ivf_index_append``'s small files per
-    cell.  The centroids sidecar needs no touch (appends never change
-    it)."""
-    return SI.compact_flat(spark, path, "cell", target_bytes)
+def compact_ivf_index(spark, path: str) -> dict[str, int]:
+    """Compaction of everything landed (build, appends, stream batches)
+    into each cell's ``batch_id=-1`` generation.  The centroids sidecar
+    needs no touch (appends never change it)."""
+    return SI.compact_all(spark, path, "cell")
 
 
 def ivf_topk_indexed(
@@ -1289,7 +1272,7 @@ def ivfpq_topk(
 # IVF-PQ serves exact re-rank).
 #
 # Maintenance verbs are SHARED with the IVF index: the layout is the same
-# cell[/batch_id] partitioned parquet (``standing_index``).
+# cell/batch_id partitioned parquet (``standing_index``).
 # ---------------------------------------------------------------------------
 
 
@@ -1311,8 +1294,7 @@ def _read_codebooks(spark, path: str) -> np.ndarray:
     """Load the fine quantizer, REFUSING a foreign code format: a
     pre-residual (raw-subvector) index read by residual-aware code would
     silently mis-score every estimate (the q.c_cell term double-counts
-    what raw codes already encode) — the same loud-refusal contract as
-    the flat/batched layout guards."""
+    what raw codes already encode), so it raises instead."""
     df = spark.read.parquet(f"{path}.codebooks")
     if "enc" not in df.columns:
         raise ValueError(
@@ -1350,17 +1332,16 @@ def ivfpq_fit(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
 
 def build_ivfpq_index(df: DataFrame, path: str, vec_col: str = "embedding") -> None:
     """Materialize the IVF-PQ index: codes-only rows (vec_id, pq_code —
-    RESIDUAL codes against the cell centroid) partitioned by ``cell``,
-    both quantizer sidecars alongside.  The float column never lands in
+    RESIDUAL codes against the cell centroid) landed as the
+    ``cell=<c>/batch_id=-1`` generation, both quantizer sidecars
+    alongside.  The float column never lands in
     the index — the standing artifact is M bytes per vector."""
     assigned, centers = ivf_assignments(df, vec_col)
     books = _ivfpq_books(df, centers, vec_col)
     coded = pq_encode_residual(assigned, books, centers, vec_col).select(
         "vec_id", "pq_code", "cell"
     )
-    coded.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
+    SI.land_build(coded, path, "cell")
     _write_centroids(df.sparkSession, centers, path)
     _write_codebooks(df.sparkSession, books, path)
 
@@ -1375,9 +1356,8 @@ def ivfpq_index_ingest_batch(
     persisted codebooks (ingest never re-fits either quantizer), and the
     (vec_id, pq_code) rows land under ``cell=<c>/batch_id=<n>`` with
     dynamic partition overwrite, so an at-least-once replay overwrites
-    exactly its own slices.  Bootstrap a pure streaming index with
-    ``ivfpq_fit``; a flat (build_ivfpq_index) layout refuses ingest."""
-    SI.require_layout(path, "cell", "batched", "ivfpq_index_ingest_batch")
+    exactly its own slices.  Ingest into a ``build_ivfpq_index`` index,
+    or bootstrap a pure streaming one with ``ivfpq_fit``."""
     centers = _read_centroids(bspark, path)
     books = _read_codebooks(bspark, path)
     coded = pq_encode_residual(
@@ -1748,7 +1728,7 @@ GROUP BY vec_id, j
 def ivf_index_delete(spark, path: str, vec_ids) -> None:
     """Compliance deletion for the vector index — the lifecycle verb next
     to build/append/ingest/compact: remove ``vec_ids`` by targeted
-    rewrite of only the (cell[, batch_id]) partitions holding them; a
+    rewrite of only the (cell, batch_id) partitions holding them; a
     fully-emptied cell's directory disappears (and partition pruning
     simply never lists it again).  The centroids sidecar is deliberately
     untouched: deletion never re-fits, exactly like the append contract —

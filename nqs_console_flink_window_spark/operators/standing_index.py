@@ -9,30 +9,33 @@ keeps its own build, extraction and query code; the maintenance verbs
 below are shared, parameterized by the partition-key name and the id
 column.
 
-Two physical layouts exist, and an index carries exactly one:
+Every index has one layout, ``<key>=K/batch_id=M/``: data lands in
+(key, batch) slices, and a sidecar in ``batch_id=M`` slices.  The batch
+id says who wrote a slice:
 
-- **flat** (build / append): data files directly under ``<key>=N/``;
-- **batched** (streamed ingest): ``<key>=N/batch_id=M/``, landed with
-  dynamic partition overwrite, so an at-least-once replay overwrites
-  exactly its own (key, batch) slices instead of double-appending.
+- a build lands ``batch_id=-1``, the compacted generation, with a static
+  overwrite that replaces everything the path held (``land_build``);
+- an append lands one below the lowest landed id: -2, -3, ...
+  (``append_batch_id``);
+- a stream lands its own micro-batch ids, from 0 up, with dynamic
+  partition overwrite, so an at-least-once replay overwrites exactly
+  its own slices instead of double-appending (``land_batch``).
 
-``<key>`` stays the top-level partition either way, so a probe's key
-filter prunes at the file listing on both layouts.  Spark cannot read a
-directory mixing both partition depths (CONFLICTING_PARTITION_COLUMN_NAMES),
-so each append/ingest verb refuses the other layout up front
-(``require_layout``) instead of corrupting the index.
+A build is thus one landed batch and an append one more; each family's
+append is a short caller of its ingest.  ``<key>`` is the top-level
+partition, so a probe's key filter prunes at the file listing.
 
 Compaction folds each key dir through the one crash-safe fold core in
-``sinks.writers`` (``fold_parquet_files`` for flat, ``compact_batch_landings``
-for batched, which folds batches below the committed watermark into the
-reserved ``batch_id=-1`` generation and inherits its watermark-coupling
-and replay-ownership contract).  Deletion is ``delete_rows_partitioned``'s
-targeted rewrite under a staged-commit manifest.  Both are pure layout
-changes: rows, the key encoding and pruning hold.
+``sinks.writers``: ``compact_batch_landings`` folds every slice below the
+committed watermark (the build, the appends and the committed stream
+batches) into the ``batch_id=-1`` generation and inherits its
+watermark-coupling and replay-ownership contract; ``compact_all`` folds
+everything landed.  Deletion is ``delete_rows_partitioned``'s targeted
+rewrite under a staged-commit manifest.  Both are pure layout changes:
+rows, the key encoding and pruning hold.
 
-Sidecars (the text index's ``<path>.doclen``) are per-row side tables
-landed by batch id only; compaction and deletion treat them like one
-more key dir.
+Sidecars (the text index's ``<path>.doclen``) are per-row side tables;
+compaction and deletion treat each like one more key dir.
 
 Every listing goes through ``local_fs_path``: the listings are local
 filesystem calls, which see nothing on a remote filesystem, so a remote
@@ -44,6 +47,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sinks.writers import (
+    COMPACTED_GEN,
+    compact_batch_landings,
+    delete_rows_partitioned,
+)
 
 _FRESH_PROBE_INLIST = 10_000  # max ids inlined as a pushed-down IN filter
 
@@ -97,9 +106,8 @@ def _read_index_or_empty(spark, path: str, empty_schema: str) -> DataFrame:
 
 
 def _key_dirs(path: str, key: str) -> list:
-    """The ``<key>=<int>`` partition dirs under ``path``, sorted.  A
-    crash-leftover ``<key>=N__compact`` staging dir is no partition and
-    is skipped (the fold core deletes it when it next touches N)."""
+    """The ``<key>=<int>`` partition dirs under ``path``, sorted; a dir
+    whose value is no integer is no partition and is skipped."""
     out = []
     for sub in sorted(local_fs_path(path).glob(f"{key}=*")):
         try:
@@ -125,114 +133,92 @@ def landed_batches(path: str) -> set[int] | None:
     return ids
 
 
-def layout(path: str, key: str) -> str | None:
-    """``"flat"``, ``"batched"``, or None (no data yet — e.g. only the
-    IVF centroids sidecar).  An index mixing both raises."""
-    kinds = set()
-    for sub in _key_dirs(path, key):
-        if any(sub.glob("batch_id=*")):
-            kinds.add("batched")
-        if any(sub.glob("*.parquet")):
-            kinds.add("flat")
-    if len(kinds) > 1:
-        raise ValueError(
-            f"index at {path} mixes flat and batched {key} layouts — "
-            "unreadable by Spark; rebuild it or remove the foreign-layout "
-            "files"
-        )
-    return kinds.pop() if kinds else None
-
-
-def require_layout(path: str, key: str, allowed: str, verb: str) -> None:
-    """Refuse ``verb`` (which writes the ``allowed`` layout) on an index
-    already holding the other one."""
-    found = layout(path, key)
-    if found not in (None, allowed):
-        shape = (
-            f"FLAT ({key}=N)" if found == "flat"
-            else f"STREAMED ({key}/batch_id)"
-        )
-        raise ValueError(
-            f"{verb} into a {shape} index would mix partition depths and "
-            "break every reader — maintain it with the verbs of its "
-            "layout, or write a fresh path"
-        )
-
-
 def _fold_dirs(path: str, key: str, sidecars) -> list:
     return [(d.name, d) for d in _key_dirs(path, key)] + [
         (s, local_fs_path(f"{path}.{s}")) for s in sidecars
     ]
 
 
-def compact_flat(
-    spark, path: str, key: str, target_bytes: int, sidecars=()
-) -> dict[str, int]:
-    """Fold each key dir's (and each sidecar's) files toward
-    ~``target_bytes`` files — the small-file debt of repeated appends,
-    the Lucene segment-merge analogue.  Returns ``{dir: file_count}``."""
-    from ..sinks.writers import fold_parquet_files
+def _landed_ids(path: str, key: str, sidecars) -> set[int]:
+    """Every batch id landed in any key dir or sidecar of the index."""
+    ids: set[int] = set()
+    for _, d in _fold_dirs(path, key, sidecars):
+        ids |= landed_batches(str(d)) or set()
+    return ids
 
-    return {
-        name: fold_parquet_files(
-            spark, sorted(str(p) for p in d.glob("*.parquet")), d, target_bytes
-        )
-        for name, d in _fold_dirs(path, key, sidecars)
-    }
+
+def append_batch_id(path: str, key: str, sidecars) -> int:
+    """The id an append lands at: one below the lowest landed id, so -2
+    after a build, then -3, ...  Stream ids start at 0, so an append and
+    a running stream on one path never own the same slice."""
+    return min(_landed_ids(path, key, sidecars) | {COMPACTED_GEN}) - 1
 
 
 def compact_streamed(
     spark, path: str, key: str, upto_batch_id: int, sidecars=()
 ) -> dict[str, int]:
-    """Fold each key dir's (and each sidecar's) ``batch_id`` landings
-    below ``upto_batch_id`` (at or below the committed watermark) into
-    the ``batch_id=-1`` generation.  Returns ``{dir: file_count}``."""
-    from ..sinks.writers import compact_batch_landings
-
+    """Fold each key dir's (and each sidecar's) landings below
+    ``upto_batch_id`` (at or below the committed watermark) into the
+    ``batch_id=-1`` generation.  Returns ``{dir: file_count}``."""
     return {
         name: compact_batch_landings(spark, str(d), upto_batch_id)
         for name, d in _fold_dirs(path, key, sidecars)
     }
 
 
+def compact_all(spark, path: str, key: str, sidecars=()) -> dict[str, int]:
+    """``compact_streamed`` over everything landed: the build, every
+    append and every stream batch.  Run it while no stream writes to
+    ``path`` — a batch the checkpoint may still replay must keep its
+    slice (``compact_batch_landings``)."""
+    upto = max(_landed_ids(path, key, sidecars), default=COMPACTED_GEN) + 1
+    return compact_streamed(spark, path, key, upto, sidecars)
+
+
 def delete(spark, path: str, key: str, id_col: str, ids, sidecars=()) -> bool:
     """Compliance deletion: remove every row whose ``id_col`` is in
-    ``ids`` by targeted rewrite of only the (key[, batch_id]) partitions
-    holding them; an emptied partition's dir disappears.  A sidecar is
-    rewritten per batch when landed by batch id, whole when flat (a
-    bounded side table).  Idempotent and crash-convergent.  Returns
-    False when the index holds no data (nothing deleted)."""
-    from ..sinks.writers import delete_rows_partitioned
-
-    found = layout(path, key)
-    if found is None:
+    ``ids`` by targeted rewrite of only the (key, batch_id) partitions
+    (a sidecar's batch_id partitions) holding them; an emptied partition's
+    dir disappears.  Idempotent and crash-convergent.  Returns False when
+    the index holds no data (nothing deleted)."""
+    if not _landed_ids(path, key, ()):
         return False
-    pcols = [key] if found == "flat" else [key, "batch_id"]
-    delete_rows_partitioned(spark, path, id_col, ids, pcols)
+    delete_rows_partitioned(spark, path, id_col, ids, [key, "batch_id"])
     for s in sidecars:
-        side = f"{path}.{s}"
-        batched = any(local_fs_path(side).glob("batch_id=*"))
-        delete_rows_partitioned(
-            spark, side, id_col, ids, ["batch_id"] if batched else []
-        )
+        delete_rows_partitioned(spark, f"{path}.{s}", id_col, ids, ["batch_id"])
     return True
 
 
-def land_batch(df: DataFrame, batch_id: int, path: str, key: str | None) -> None:
-    """One micro-batch's replay-idempotent landing under
-    ``<key>=<k>/batch_id=<n>`` (``batch_id=<n>`` for a sidecar, key None)
-    with dynamic partition overwrite.  The write is key-aligned, one file
-    per (key, batch) slice — unaligned, every shuffle task would write a
-    sliver into every key dir, and every later pruned read and probe
-    would list tasks x batches files per key.  A sidecar slice is one
-    file: the sidecar is read back every micro-batch, so its listing
-    stays at one file per batch."""
+def _writer(df: DataFrame, batch_id: int, key: str | None):
+    """``df`` tagged with ``batch_id`` as an overwrite partitioned by
+    ``key`` (when given) and ``batch_id``.  The write is key-aligned, one
+    file per (key, batch) slice: unaligned, every shuffle task would
+    write a sliver into every key dir, and every later pruned read and
+    probe would list tasks x batches files per key."""
     df = df.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-    df = df.repartition(key) if key else df.coalesce(1)
+    if key:
+        df = df.repartition(key)
+    return df.write.mode("overwrite").partitionBy(
+        *([key] if key else []), "batch_id"
+    )
+
+
+def land_build(df: DataFrame, path: str, key: str | None) -> None:
+    """A build: ``df`` lands as the compacted generation
+    ``<key>=<k>/batch_id=-1`` (``batch_id=-1`` for a sidecar, key None)
+    with a static overwrite, which replaces everything ``path`` held."""
+    _writer(df, COMPACTED_GEN, key).parquet(path)
+
+
+def land_batch(df: DataFrame, batch_id: int, path: str, key: str | None) -> None:
+    """One batch's replay-idempotent landing under
+    ``<key>=<k>/batch_id=<n>`` (``batch_id=<n>`` for a sidecar, key None)
+    with dynamic partition overwrite.  A sidecar slice is one file: the
+    sidecar is read back every micro-batch, so its listing stays at one
+    file per batch."""
     (
-        df.write.mode("overwrite")
+        _writer(df if key else df.coalesce(1), batch_id, key)
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*([key] if key else []), "batch_id")
         .parquet(path)
     )
 

@@ -31,6 +31,7 @@ from ..operators.windows import (
     tumbling_agg,
 )
 from ..sources.batch import load_table
+from ..streaming.jobs import PROTO_EXPR
 from .registry import (
     SALT_BUCKETS,
     qsum,
@@ -184,19 +185,14 @@ _DISPATCH_MAPS = {
     "GAME": {"tcp_delay": "value", "rtt": "value - 100.0", "conn_cost": "value"},
     "SPEED": {},
 }
-_PROTO_EXPR = (
-    "CASE WHEN user_id % 5 = 0 THEN 'PING' WHEN user_id % 5 = 1 THEN 'HTTP' "
-    "WHEN user_id % 5 = 2 THEN 'GAME' WHEN user_id % 5 = 3 THEN 'SPEED' "
-    "ELSE 'UNKNOWN' END"
-)
-_DISPATCH_SQL = dispatch_score_sql(_PROTO_EXPR, _DISPATCH_MAPS)
-_DISPATCH_SQL_ENGINE = dispatch_score_rank_sql(_PROTO_EXPR, _DISPATCH_MAPS)
+_DISPATCH_SQL = dispatch_score_sql(PROTO_EXPR, _DISPATCH_MAPS)
+_DISPATCH_SQL_ENGINE = dispatch_score_rank_sql(PROTO_EXPR, _DISPATCH_MAPS)
 
 
 @register(
     "score_dispatch",
     sql=f"""
-SELECT event_id, {_PROTO_EXPR} AS protocol, {_DISPATCH_SQL} AS score
+SELECT event_id, {PROTO_EXPR} AS protocol, {_DISPATCH_SQL} AS score
 FROM events
 """,
     doc="Q1-Q4 + R3 — per-record protocol dispatch incl. outlier zeroing, "
@@ -208,7 +204,7 @@ def score_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
-        F.expr(_PROTO_EXPR).alias("protocol"),
+        F.expr(PROTO_EXPR).alias("protocol"),
         F.expr(_DISPATCH_SQL_ENGINE).alias("score"),
     )
 
@@ -428,7 +424,7 @@ def enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FACT_ORACLE = f"""
 WITH enriched AS (
   SELECT e.ts, e.user_id, e.value, c.c_mktsegment,
-         {_PROTO_EXPR} AS protocol,
+         {PROTO_EXPR} AS protocol,
          {_DISPATCH_SQL} AS score
   FROM events e
   LEFT JOIN customer c ON e.user_id = c.c_custkey

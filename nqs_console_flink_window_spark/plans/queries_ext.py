@@ -2664,27 +2664,29 @@ def semantic_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     normed = spark.sql(TX.text_embed_normed_sql(X.SPARK))
     with staged_views(spark, normed=normed, cand=cand) as v1:
         emb = spark.sql(TX.text_embed_union(v1.normed))
-        inter = DD._staged_intersections(cand, sh)
-        with staged_views(spark, emb=emb, inter=inter, sizes=sizes) as v:
-            return spark.sql(f"""
-WITH cosine AS (
-  -- DECIMAL(30,15) accumulation: the exact-sum pattern (a raw double SUM
-  -- hit an fround tie at sf0.1 — see _semantic_pairs_sql docstring)
-  SELECT c.doc_a, c.doc_b,
-    CAST(SUM(CAST(ea.comp * eb.comp AS DECIMAL(30,15))) AS DOUBLE) AS dot
-  FROM {v1.cand} c
-  JOIN {v.emb} ea ON ea.doc_id = c.doc_a
-  JOIN {v.emb} eb ON eb.doc_id = c.doc_b AND eb.j = ea.j
-  GROUP BY 1, 2
-)
-SELECT co.doc_a, co.doc_b,
-  {X.fround("co.dot", 6)} AS cosine,
-  {X.fround("CAST(COALESCE(i.both_n, 0) AS DOUBLE) / (na.n + nb.n - COALESCE(i.both_n, 0))", 6)} AS jaccard
-FROM cosine co
-LEFT JOIN {v.inter} i ON i.doc_a = co.doc_a AND i.doc_b = co.doc_b
-JOIN {v.sizes} na ON co.doc_a = na.doc_id
-JOIN {v.sizes} nb ON co.doc_b = nb.doc_id
+        with staged_views(spark, emb=emb) as v:
+            # DECIMAL(30,15) accumulation: the exact-sum pattern (a raw double
+            # SUM hit an fround tie at sf0.1 — see _semantic_pairs_sql docstring)
+            cosine = spark.sql(f"""
+SELECT c.doc_a, c.doc_b,
+  CAST(SUM(CAST(ea.comp * eb.comp AS DECIMAL(30,15))) AS DOUBLE) AS dot
+FROM {v1.cand} c
+JOIN {v.emb} ea ON ea.doc_id = c.doc_a
+JOIN {v.emb} eb ON eb.doc_id = c.doc_b AND eb.j = ea.j
+GROUP BY 1, 2
 """)
+    inter = DD._staged_intersections(cand, sh)
+    both = "COALESCE(both_n, 0)"
+    return DD._with_sizes(
+        cosine.join(inter, ["doc_a", "doc_b"], "left"), sizes
+    ).select(
+        "doc_a",
+        "doc_b",
+        F.expr(X.fround("dot", 6)).alias("cosine"),
+        F.expr(
+            X.fround(f"CAST({both} AS DOUBLE) / (na_n + nb_n - {both})", 6)
+        ).alias("jaccard"),
+    )
 
 
 @register(

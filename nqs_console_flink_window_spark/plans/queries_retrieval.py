@@ -173,8 +173,8 @@ def _ensure_text_index(spark: SparkSession, sf_dir: str) -> str:
     sql=RT.bm25_topk_sql(X.DUCK),
     headline=True,  # standing-index sparse hot path — benched since round 9
     doc="Extension — bm25_topk against the MATERIALIZED inverted index "
-    "(build_text_index layout: tbucket-partitioned postings + doclen/"
-    "stats sidecars): query terms route to buckets at the file-listing "
+    "(the standing-index layout: postings in tbucket=<b>/batch_id=<m> "
+    "slices, a build landing batch_id=-1, + doclen/stats sidecars): query terms route to buckets at the file-listing "
     "level (PartitionFilters pytest-asserted), tf/dl/N/T all precomputed "
     "— no pass over corpus text.  Results bit-identical to the online "
     "form, so the oracle IS bm25_topk's SQL (tier-1 since round 8 close: "

@@ -224,15 +224,15 @@ def _repair_crashed_compaction(gen_path: Path) -> None:
 def fold_parquet_files(
     spark, inputs: list[str], dest_dir, target_bytes: int = 128 * 1024 * 1024
 ) -> int:
-    """THE fold core shared by ``compact_batch_landings`` and the text
-    index's ``compact_text_index``: merge ``inputs`` (parquet file paths —
+    """THE fold core shared by ``compact_batch_landings`` and
+    ``compact_partition``: merge ``inputs`` (parquet file paths —
     may include files already living in ``dest_dir``) into
     ~``target_bytes`` files named ``compact-<stamp>-NNNNN.parquet`` inside
     ``dest_dir``, crash-safe under the fold-manifest protocol
     (``_repair_crashed_compaction``'s schema — one writer, one repairer,
     so the manifest format cannot drift between call sites).  Settles any
-    crashed prior fold first (including pre-commit ``__compact`` staging
-    garbage, which the manifest never covers because it exists only
+    crashed prior fold first (including pre-commit ``.<dest>__compact``
+    staging garbage, which the manifest never covers because it exists only
     before the commit point).  Skips the rewrite when every input already
     lives in ``dest_dir`` at or under the byte target (idempotence).
     Returns the dest dir's parquet file count afterwards."""
@@ -241,7 +241,10 @@ def fold_parquet_files(
 
     dest = Path(dest_dir)
     _repair_crashed_compaction(dest)
-    tmp_path = f"{dest}__compact"
+    # dot-prefixed: Spark's file listing skips it (an `_` name holding
+    # `=` would still read as a partition), so a fold that dies before
+    # its commit leaves nothing a reader would count
+    tmp_path = str(dest.parent / f".{dest.name}__compact")
     shutil.rmtree(tmp_path, ignore_errors=True)
     # Manifest paths must be ABSOLUTE: a crash repair may run from a
     # different working directory, and relative inputs would make the
@@ -294,10 +297,11 @@ def fold_parquet_files(
 
 def compact_batch_landings(spark, base_dir: str, upto_batch_id: int) -> int:
     """Small-file maintenance for batch_id-keyed landing tables (the dedup
-    index / curation output): merge every ``batch_id`` subpath in
-    ``[0, upto_batch_id)`` into the reserved ``batch_id=-1`` compacted
-    generation (folding any previous generation in), then delete the merged
-    subpaths.  One file per ~128 MB of merged data.
+    index / curation output, the standing indexes): merge every
+    ``batch_id`` subpath below ``upto_batch_id`` into the reserved
+    ``batch_id=-1`` compacted generation (folding any previous generation
+    in, and the standing indexes' append slices at -2, -3, ...), then
+    delete the merged subpaths.  One file per ~128 MB of merged data.
 
     Correctness contract (couples to streaming/jobs._read_prior_batches):
     - The ``batch_id < current`` exclusion rule keeps working unchanged —
@@ -343,7 +347,7 @@ def compact_batch_landings(spark, base_dir: str, upto_batch_id: int) -> int:
             bid = int(sub.name.split("=", 1)[1])
         except ValueError:
             continue
-        if bid == COMPACTED_GEN or 0 <= bid < upto_batch_id:
+        if bid < upto_batch_id:
             inputs.extend(sorted(str(p) for p in sub.glob("*.parquet")))
     fold_parquet_files(spark, inputs, gen_path)
     for sub in sorted(Path(base_dir).glob("batch_id=*")):
@@ -351,7 +355,7 @@ def compact_batch_landings(spark, base_dir: str, upto_batch_id: int) -> int:
             bid = int(sub.name.split("=", 1)[1])
         except ValueError:
             continue
-        if 0 <= bid < upto_batch_id:
+        if bid != COMPACTED_GEN and bid < upto_batch_id:
             # clear Spark write residue (_SUCCESS, .crc) so the emptied
             # subpath actually disappears instead of lingering partitionless
             leftovers = list(sub.iterdir())
@@ -383,7 +387,8 @@ def _commit_delete(path: str, manifest: dict) -> None:
     """Roll the staged delete FORWARD (idempotent — every step checks
     what already happened).  Partitioned: for each affected partition,
     remove the old directory and move the staged replacement in (kept
-    partitions) or just remove it (emptied).  Flat: remove exactly the
+    partitions) or just remove it, with any partition dir it leaves
+    empty (emptied).  Flat: remove exactly the
     data files the staged snapshot READ (the manifest records their
     names — a file appended between snapshot and commit survives as
     duplicate-free extra rows instead of being silently destroyed, the
@@ -425,6 +430,11 @@ def _commit_delete(path: str, manifest: dict) -> None:
                 # staged gone -> this partition already committed
             else:
                 _sh.rmtree(real, ignore_errors=True)
+                # an emptied (key, batch) slice can empty its key dir too
+                for parent in list(real.parents)[: len(pcols) - 1]:
+                    if not parent.is_dir() or any(parent.iterdir()):
+                        break
+                    parent.rmdir()
     (Path(path) / DELETE_MANIFEST).unlink(missing_ok=True)
     _sh.rmtree(staging, ignore_errors=True)
 
@@ -492,8 +502,7 @@ def delete_rows_partitioned(
     expression tree and defeat pushdown anyway — the bulk-delete
     shape).  Both forms rewrite only affected partitions.
     ``partition_cols=[]`` degrades to a staged full rewrite — only for
-    bounded side tables (the flat doclen sidecar), never for
-    corpus-scale data.
+    bounded unpartitioned side tables, never for corpus-scale data.
     """
     import os as _os
     from pathlib import Path

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .formats import EVENTS_SCHEMA
+
 # The Kafka source's fixed output schema (Spark docs; stable across
 # releases) — what ``format("kafka").load()`` yields and what the simulated
 # wire batches in tests must match.
@@ -46,17 +48,6 @@ KAFKA_WIRE_SCHEMA = T.StructType(
     ]
 )
 
-# Event payload schema on the wire (the fixture events table, as JSON).
-EVENT_JSON_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
 
 
 def kafka_options(
@@ -105,7 +96,7 @@ def parse_kafka_events(wire: DataFrame) -> DataFrame:
     Kafka micro-batch and on any DataFrame with the same wire schema."""
     return (
         wire.select(
-            F.from_json(F.col("value").cast("string"), EVENT_JSON_SCHEMA).alias("e")
+            F.from_json(F.col("value").cast("string"), EVENTS_SCHEMA).alias("e")
         )
         .select("e.*")
     )

@@ -717,7 +717,8 @@ def run_packing_stream(
 # own their slices; the stats sidecar converges from doclen.  Queries run
 # against the live index via bm25_topk_indexed with no rebuild; history
 # folds into batch_id=-1 via compact_streamed_text_index at-or-below the
-# committed watermark (compact_batch_landings' contract, per bucket).
+# committed watermark (compact_batch_landings' contract, per bucket).  The
+# stream may start on a built index: the build is the batch_id=-1 slice.
 # ---------------------------------------------------------------------------
 
 
@@ -742,11 +743,10 @@ def run_ivf_indexing_stream(
 ) -> None:
     """Streaming runner for incremental IVF vector indexing — the
     ``run_indexing_stream`` twin for the embedding index.  The coarse
-    quantizer must already be persisted via ``ivf_fit_centroids``
-    (quantizer ONLY — a ``build_ivf_index`` bootstrap leaves flat
-    ``cell=N`` data files whose partition depth conflicts with the
-    streamed ``cell/batch_id`` landings; the ingest refuses that layout):
-    streaming ingest only ROUTES into the frozen centroids, never re-fits."""
+    quantizer must already be persisted, by ``ivf_fit_centroids``
+    (quantizer only) or ``build_ivf_index`` (quantizer and the
+    ``batch_id=-1`` generation): streaming ingest only ROUTES into the
+    frozen centroids, never re-fits."""
     from ..operators.similarity import ivf_index_ingest_batch
 
     _run_foreach_batch(

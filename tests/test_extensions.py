@@ -1690,7 +1690,7 @@ def test_ivf_append_compaction_preserves_results(spark, tmp_path) -> None:
 
     for sub, c in counts.items():
         assert c == 1, (sub, c)  # tiny cells fold to one file each
-        files = list((Path(path) / sub).glob("*.parquet"))
+        files = list((Path(path) / sub / "batch_id=-1").glob("*.parquet"))
         assert len(files) == 1 and files[0].name.startswith("compact-")
     assert spark.read.parquet(path).count() == n_before
     assert [
@@ -2732,46 +2732,56 @@ def test_gif_lzw_roundtrip_through_width_growth() -> None:
 
 
 def test_index_layout_guards(spark, tmp_path) -> None:
-    """The flat (build/append) and streamed (ingest) index layouts put
-    data files at DIFFERENT partition depths (cell=N vs cell=N/batch_id=M;
-    tbucket likewise) — Spark refuses to read a directory mixing both
-    (CONFLICTING_PARTITION_COLUMN_NAMES), so each maintenance path must
-    refuse the other's layout up front instead of corrupting the index."""
+    """Build, append and streamed ingest land slices of one layout
+    (cell=N/batch_id=M; tbucket likewise), so they mix on one path: a
+    build followed by an ingest, and an ingest followed by an append,
+    each answer as a fresh build of the same rows does."""
     from nqs_console_flink_window_spark.operators import retrieval as RT
 
     emb = load_table(spark, SMOKE_SF_DIR, "embeddings")
     old = emb.filter("vec_id < 100")
     new = emb.filter("vec_id >= 100 AND vec_id < 110")
+    qvec = [float(x) for x in emb.filter("vec_id = 105").first()["embedding"]]
 
-    # IVF: streamed ingest refuses a flat (build_ivf_index) layout...
-    flat = str(tmp_path / "ivf_flat")
-    SIM.build_ivf_index(old, flat)
-    with pytest.raises(ValueError, match="partition depths"):
-        SIM.ivf_index_ingest_batch(spark, new, 0, flat)
-    # ...and flat append refuses a streamed layout
+    def ivf_top(path):
+        return [tuple(r) for r in SIM.ivf_topk_indexed(spark, path, qvec).collect()]
+
+    # IVF: the fresh index routes the same rows through the same quantizer
+    fresh = str(tmp_path / "ivf_fresh")
+    SIM.ivf_fit_centroids(old, fresh)
+    SIM.ivf_index_ingest_batch(spark, old.unionByName(new), 0, fresh)
+    built = str(tmp_path / "ivf_built")
+    SIM.build_ivf_index(old, built)
+    SIM.ivf_index_ingest_batch(spark, new, 0, built)
     streamed = str(tmp_path / "ivf_stream")
     SIM.ivf_fit_centroids(old, streamed)
     SIM.ivf_index_ingest_batch(spark, old, 0, streamed)
-    with pytest.raises(ValueError, match="partition depths"):
-        SIM.ivf_index_append(spark, streamed, new)
-    # the sanctioned pairings still work
-    SIM.ivf_index_append(spark, flat, new)
-    SIM.ivf_index_ingest_batch(spark, new, 1, streamed)
+    SIM.ivf_index_append(spark, streamed, new)
+    want = ivf_top(fresh)
+    assert want and ivf_top(built) == want and ivf_top(streamed) == want
 
-    # text index: same mutual refusal
+    # text index: the fresh build holds the same docs
     docs = load_table(spark, SMOKE_SF_DIR, "documents")
     dold = docs.filter("doc_id < 100")
     dnew = docs.filter("doc_id >= 100 AND doc_id < 110")
-    tflat = str(tmp_path / "ti_flat")
-    RT.build_text_index(spark, dold, tflat)
-    with pytest.raises(ValueError, match="partition depths"):
-        RT.text_index_ingest_batch(spark, dnew, 0, tflat)
+    tfresh = str(tmp_path / "ti_fresh")
+    RT.build_text_index(spark, docs.filter("doc_id < 110"), tfresh)
+    tbuilt = str(tmp_path / "ti_built")
+    RT.build_text_index(spark, dold, tbuilt)
+    RT.text_index_ingest_batch(spark, dnew, 0, tbuilt)
     tstream = str(tmp_path / "ti_stream")
     RT.text_index_ingest_batch(spark, dold, 0, tstream)
-    with pytest.raises(ValueError, match="partition depths"):
-        RT.text_index_append(spark, tstream, dnew)
-    RT.text_index_append(spark, tflat, dnew)
-    RT.text_index_ingest_batch(spark, dnew, 1, tstream)
+    RT.text_index_append(spark, tstream, dnew)
+
+    def answers(path):
+        return (
+            [tuple(r) for r in RT.bm25_topk_indexed(spark, path).collect()],
+            [tuple(r) for r in RT.hybrid_rrf_multi_indexed(spark, path).collect()],
+        )
+
+    twant = answers(tfresh)
+    assert twant[0] and twant[1]
+    assert answers(tbuilt) == twant and answers(tstream) == twant
 
 
 def test_fresh_doc_id_probe_is_pushed_down(spark, tmp_path) -> None:
@@ -3515,7 +3525,7 @@ def test_ivfpq_persisted_index_lifecycle(spark, tmp_path) -> None:
     (c) replay idempotence of a re-landed batch; (d) compaction on the
     SHARED fold core preserves results; (e) the codes index stores NO
     float vector column; (f) nprobe partition pruning in the plan;
-    (g) flat/batched layout mixing refuses; (h) compliance deletion via
+    (g) a stream ingests into the built index; (h) compliance deletion via
     the shared ivf_index_delete removes the ids."""
     from nqs_console_flink_window_spark.sources.batch import load_table
 
@@ -3534,7 +3544,7 @@ def test_ivfpq_persisted_index_lifecycle(spark, tmp_path) -> None:
 
     # (e) codes-only rows: 8 ints per vector, no embedding column
     codes = spark.read.parquet(idx)
-    assert set(codes.columns) == {"vec_id", "pq_code", "cell"}
+    assert set(codes.columns) == {"vec_id", "pq_code", "cell", "batch_id"}
     assert codes.count() == corpus.count()
 
     # (f) the pruned scan plans PartitionFilters on cell
@@ -3579,9 +3589,14 @@ def test_ivfpq_persisted_index_lifecycle(spark, tmp_path) -> None:
         for r in SIM.ivfpq_topk_indexed(spark, sidx, corpus, qvec, k=10).collect()
     ] == online
 
-    # (g) layout mixing refuses both ways
-    with pytest.raises(ValueError, match="FLAT"):
-        SIM.ivfpq_index_ingest_batch(spark, corpus.limit(1), 9, idx)
+    # (g) one layout: a stream ingests into the built index beside the
+    # build's slices, and its rows delete like any other
+    SIM.ivfpq_index_ingest_batch(
+        spark, emb.filter(F.col("vec_id") == 0), 9, idx
+    )
+    assert spark.read.parquet(idx).count() == corpus.count() + 1
+    SIM.ivf_index_delete(spark, idx, [0])
+    assert spark.read.parquet(idx).count() == corpus.count()
 
     # (h) compliance deletion (shared verb): top hit disappears
     top = online[0][0]

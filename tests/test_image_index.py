@@ -35,7 +35,8 @@ def test_image_index_streamed_matches_build_replays_and_compacts(
     """Three micro-batch ingests hold the SAME rows as one bulk build; a
     replayed batch overwrites its own (bband, batch) slices instead of
     double-appending; streamed compaction folds files below the watermark
-    without changing a row; the two layouts refuse each other."""
+    without changing a row; append and ingest reach the fresh-id contract
+    on either writer's index (one layout, no partition-depth refusal)."""
     idx = str(tmp_path / "imgidx")
     for b in range(3):
         II.image_index_ingest_batch(
@@ -61,10 +62,11 @@ def test_image_index_streamed_matches_build_replays_and_compacts(
         gens = {p.name for p in sub.glob("batch_id=*")}
         assert gens == {"batch_id=-1"}, (sub, gens)
 
-    # layout guards: append into batched / ingest into flat both refuse
-    with pytest.raises(ValueError, match="mix partition depths"):
+    # append into the streamed index / ingest into the built one: a
+    # re-landed id hits the fresh-id contract, not a layout refusal
+    with pytest.raises(ValueError, match="re-ingests"):
         II.image_index_append(spark, idx, _media(spark, "doc_id = 0"))
-    with pytest.raises(ValueError, match="mix partition depths"):
+    with pytest.raises(ValueError, match="re-ingests"):
         II.image_index_ingest_batch(spark, _media(spark, "doc_id = 0"), 9, flat)
 
     # flat compaction folds append debt down to one file per bucket
@@ -82,7 +84,7 @@ def test_image_index_streamed_matches_build_replays_and_compacts(
     II.compact_image_index(spark, flat)
     spark.catalog.refreshByPath(flat)
     for sub in Path(flat).glob("bband=*"):
-        assert len(list(sub.glob("*.parquet"))) == 1, sub
+        assert len(list(sub.glob("batch_id=-1/*.parquet"))) == 1, sub
 
 
 def test_image_index_fresh_id_contract_and_delete(spark, tmp_path) -> None:

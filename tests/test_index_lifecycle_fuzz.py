@@ -3,7 +3,8 @@
 were not — a randomized (seeded, shrinking) op sequence now drives each
 index and asserts the standing invariants after every step:
 
-- text index: stats is exactly f(doclen) at all times; the maintained
+- text index (whose ops include batch appends): stats is exactly
+  f(doclen) at all times; the maintained
   index answers BM25 identically to a fresh build on the live corpus
   (scores INCLUDING N/T/df reconverge after any op mix); no leftover
   maintenance machinery (staging dirs / delete manifests) after a
@@ -30,12 +31,18 @@ from nqs_console_flink_window_spark.operators import similarity as SIM
 
 # an op is (verb, selector); the selector picks which ids a delete targets
 # or which slice an ingest lands, so shrinking finds minimal failing mixes
-_OPS = st.lists(
-    st.tuples(st.sampled_from(["ingest", "delete", "compact"]),
-              st.integers(min_value=0, max_value=9)),
-    min_size=2,
-    max_size=6,
-)
+def _ops(*verbs):
+    return st.lists(
+        st.tuples(st.sampled_from(list(verbs)),
+                  st.integers(min_value=0, max_value=9)),
+        min_size=2,
+        max_size=6,
+    )
+
+
+_OPS = _ops("ingest", "delete", "compact")
+# the text index also takes batch appends, which land below the build
+_TEXT_OPS = _ops("ingest", "append", "delete", "compact")
 
 _VOCAB = ["query", "window", "dup", "fast", "merge", "scan", "sort", "agg"]
 
@@ -84,7 +91,7 @@ def _no_maintenance_leftovers(path: str) -> None:
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(ops=_OPS)
+@given(ops=_TEXT_OPS)
 def test_text_index_lifecycle_interleavings(spark, ops) -> None:
     base = tempfile.mkdtemp(prefix="fuzz_text_idx_")
     try:
@@ -93,14 +100,17 @@ def test_text_index_lifecycle_interleavings(spark, ops) -> None:
         next_batch = 0
         next_id = 0
         for verb, sel in [("ingest", 0), *ops]:  # always start landed
-            if verb == "ingest":
+            if verb in ("ingest", "append"):
                 new_ids = list(range(next_id, next_id + 4 + sel % 3))
                 next_id = new_ids[-1] + 1
-                RT.text_index_ingest_batch(
-                    spark, _docs_df(spark, new_ids), next_batch, idx
-                )
+                if verb == "ingest":
+                    RT.text_index_ingest_batch(
+                        spark, _docs_df(spark, new_ids), next_batch, idx
+                    )
+                    next_batch += 1
+                else:
+                    RT.text_index_append(spark, idx, _docs_df(spark, new_ids))
                 live |= set(new_ids)
-                next_batch += 1
             elif verb == "delete":
                 if live:
                     victims = sorted(live)[:: (sel % 3) + 1][: 1 + sel % 4]

@@ -761,7 +761,7 @@ def test_compact_text_index_preserves_state_and_pruning(spark, tmp_path) -> None
 
     def bucket_files():
         return {
-            sub.name: len(list(sub.glob("*.parquet")))
+            sub.name: len(list(sub.glob("batch_id=*/*.parquet")))
             for sub in Path(idx).glob("tbucket=*")
         }
 
@@ -785,13 +785,16 @@ def test_compact_text_index_preserves_state_and_pruning(spark, tmp_path) -> None
     assert "PartitionFilters" in plan and "tbucket" in plan.split(
         "PartitionFilters", 1
     )[1].splitlines()[0]
-    # a crash-leftover `tbucket=N__compact` staging dir is neither treated
-    # as a bucket (integer-suffix guard) nor left on disk (the fold core
-    # clears pre-commit staging garbage when it next touches the bucket)
+    # a crash-leftover `tbucket=N/.batch_id=-1__compact` staging dir is
+    # neither read (Spark skips `.` names) nor left on disk (the fold
+    # core clears pre-commit staging garbage when it next touches the
+    # bucket)
+    n_rows = spark.read.parquet(idx).count()
     some_bucket = sorted(Path(idx).glob("tbucket=*"))[0]
-    leftover = Path(f"{some_bucket}__compact")
+    leftover = Path(f"{some_bucket}/.batch_id=-1__compact")
     leftover.mkdir()
     (leftover / "junk.parquet").write_bytes(b"not parquet")
+    assert spark.read.parquet(idx).count() == n_rows
     # idempotent: a second pass folds nothing further
     assert RT.compact_text_index(spark, idx) == counts
     assert not leftover.exists()

@@ -2,12 +2,17 @@
 per query.
 
 Each entry gives the query's name, the sha256 of its optimized logical
-plan, the Spark jobs it takes to build the frame and collect it (counted
+plan folded after the optimized plans of the frames it stages, the
+number of those staged frames, the Spark jobs it takes to build the frame and collect it (counted
 under a job group, after one warm-up call so standing-index builds and
 first-call caches are not counted) and that call's wall time.  Before
 hashing, the plan text is normalised: expression ids, RDD ids, the uuid
 suffixes of ``__staged_*`` and other per-call view names, and temp-dir
 paths are replaced by fixed tokens, so two runs of one tree hash the same.
+A staged frame (``DataFrame.localCheckpoint``) is a bare ``LogicalRDD``
+leaf in the plan that reads it, so each frame the query checkpoints while
+it is built is hashed too, in call order: two queries that differ only
+before a checkpoint hash apart.
 Diff the output of two checkouts to show that a refactor left the engine
 plans unchanged:
 
@@ -25,8 +30,12 @@ import pathlib
 import re
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
+
+# the classic (non-Connect) frame defines its own localCheckpoint
+from pyspark.sql.classic.dataframe import DataFrame  # noqa: E402
 
 from nqs_console_flink_window_spark.config import ORACLE_SF_DIR  # noqa: E402
 from nqs_console_flink_window_spark.plans import all as _all  # noqa: E402,F401
@@ -47,6 +56,28 @@ def normalise(plan: str) -> str:
     return plan
 
 
+def _optimized(df: DataFrame) -> str:
+    return normalise(df._jdf.queryExecution().optimizedPlan().toString())
+
+
+@contextmanager
+def staged_plans():
+    """Record the optimized plan of every frame checkpointed inside the
+    block, in call order."""
+    plans: list[str] = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(_optimized(self))
+        return checkpoint(self, *args, **kwargs)
+
+    DataFrame.localCheckpoint = recording
+    try:
+        yield plans
+    finally:
+        DataFrame.localCheckpoint = checkpoint
+
+
 def fingerprint(spark, name: str, sf_dir: str) -> dict:
     q = REGISTRY[name]
     q.spark(spark, sf_dir).collect()  # warm-up
@@ -55,15 +86,20 @@ def fingerprint(spark, name: str, sf_dir: str) -> dict:
     t0 = time.perf_counter()
     sc.setJobGroup(group, name)
     try:
-        df = q.spark(spark, sf_dir)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        with staged_plans() as plans:
+            df = q.spark(spark, sf_dir)
+        plans.append(_optimized(df))
         df.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     wall = time.perf_counter() - t0
+    digest = hashlib.sha256()
+    for plan in plans:
+        digest.update(plan.encode() + b"\0")
     return {
         "name": name,
-        "plan_sha256": hashlib.sha256(normalise(plan).encode()).hexdigest(),
+        "plan_sha256": digest.hexdigest(),
+        "staged": len(plans) - 1,
         "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
         "wall_s": round(wall, 3),
     }
