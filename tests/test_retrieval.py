@@ -1021,6 +1021,60 @@ def test_query_terms_with_quotes_are_escaped(spark) -> None:
     } == set(spiky)
 
 
+def test_queryset_is_one_local_relation(spark, tmp_path) -> None:
+    """The (query_id, term) table is one inline VALUES relation: Spark
+    plans it as a single LocalRelation (a UNION ALL of one-row SELECTs
+    plans one OneRowRelation branch per term, and each broadcast of it
+    runs one task per term), and the indexed multi form's physical plan
+    holds no Union.  Both engines return the same rows, in order, with
+    repeated terms and a quoted term kept as written."""
+    queries = {2: ("b", "a", "b"), 1: ("o'brien", "a"), 3: ("a",)}
+    qs = RT.bm25_queryset_sql(queries)
+    df = spark.sql(qs)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert "Union" not in plan and "OneRowRelation" not in plan, plan
+    want = [
+        (1, "o'brien"), (1, "a"), (2, "b"), (2, "a"), (2, "b"), (3, "a"),
+    ]
+    assert df.columns == ["query_id", "term"]
+    assert [tuple(r) for r in df.collect()] == want
+    assert duckdb.connect().execute(qs).fetchall() == want
+
+    docs = spark.createDataFrame(
+        [(1, "o'brien a b"), (2, "b b filler"), (3, "a filler")],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "textidx_values")
+    RT.build_text_index(spark, docs, idx)
+    m = RT.hybrid_rrf_multi_indexed(spark, idx, queries=queries)
+    phys = m._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in phys and "OneRowRelation" not in phys, phys
+    assert {r["query_id"] for r in m.collect()} == {1, 2, 3}
+
+
+def test_empty_query_set_raises(spark, tmp_path) -> None:
+    """An empty query set is refused up front with the error the online
+    multi forms raise, not a ParseException on an empty qt relation: the
+    indexed forms and the DuckDB oracle builder alike."""
+    from nqs_console_flink_window_spark.functions import dialect as X
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta")], "doc_id long, text string"
+    )
+    idx = str(tmp_path / "textidx_empty_q")
+    RT.build_text_index(spark, docs, idx)
+    bad = "empty query term set"
+    with pytest.raises(ValueError, match=bad):
+        RT.hybrid_rrf_multi_indexed(spark, idx, queries={})
+    with pytest.raises(ValueError, match=bad):
+        RT.bm25_multi_indexed(spark, idx, queries={})
+    with pytest.raises(ValueError, match=bad):
+        RT.hybrid_rrf_multi_sql(X.DUCK, queries={})
+    with pytest.raises(ValueError, match=bad):
+        RT.bm25_queryset_sql({})
+
+
 def test_ingest_stats_slice_certificate(spark, tmp_path) -> None:
     """The O(batch) stats fast path (r13): the 1-row sidecar carries a
     slice-set certificate; after every maintenance event — new batch
