@@ -2230,6 +2230,12 @@ def text_index_delete(spark, path: str, doc_ids) -> None:
     - stats sidecar: rebuilt from doclen, the standing convergence rule
       (a torn run is repaired by any later append/ingest/delete).
 
+    Both rewrites go through the one crash-safe rewrite
+    (``sinks.writers._rewrite``), whose manifests live at the index
+    root and at the doclen sidecar's root; each first finishes any fold
+    or delete that crashed on its root, so retrying a crashed delete, or
+    running any fold or delete after it, converges.
+
     N/T shrink so every post-delete BM25/QL score reflects the smaller
     corpus — exactly what a rebuild on the filtered corpus would produce
     (pytest-pinned bit-parity)."""

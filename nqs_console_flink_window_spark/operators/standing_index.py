@@ -25,22 +25,26 @@ A build is thus one landed batch and an append one more; each family's
 append is a short caller of its ingest.  ``<key>`` is the top-level
 partition, so a probe's key filter prunes at the file listing.
 
-Compaction folds each key dir through the one crash-safe fold core in
-``sinks.writers``: ``compact_batch_landings`` folds every slice below the
+Every fold and delete commits through the one crash-safe rewrite in
+``sinks.writers`` (``_rewrite``): its manifest lives at the index root,
+and each sidecar's at the sidecar's own root, so a fold and a delete on
+one index always see, and first finish, each other's crashed work.
+Compaction (``compact_streamed``) folds every key dir's slices below the
 committed watermark (the build, the appends and the committed stream
-batches) into the ``batch_id=-1`` generation and inherits its
-watermark-coupling and replay-ownership contract; ``compact_all`` folds
-everything landed.  Deletion is ``delete_rows_partitioned``'s targeted
-rewrite under a staged-commit manifest.  Both are pure layout changes:
-rows, the key encoding and pruning hold.
+batches) into their ``batch_id=-1`` generation in one rewrite, and
+inherits ``compact_batch_landings``' watermark-coupling and
+replay-ownership contract; ``compact_all`` folds everything landed.
+Deletion (``delete``) rewrites only the (key, batch) slices holding a
+hit.  Both are pure layout changes: rows, the key encoding and pruning
+hold.
 
-Sidecars (the text index's ``<path>.doclen``) are per-row side tables;
-compaction and deletion treat each like one more key dir.
+Sidecars (the text index's ``<path>.doclen``) are per-row side tables,
+folded and deleted from like a one-key index.
 
-Every listing goes through ``local_fs_path``: the listings are local
-filesystem calls, which see nothing on a remote filesystem, so a remote
-path raises instead of reading as an empty index (and a delete silently
-deleting nothing).
+Every listing goes through ``sinks.writers.local_fs_path``: the listings
+are local filesystem calls, which see nothing on a remote filesystem, so
+a remote path raises instead of reading as an empty index (and a delete
+silently deleting nothing).
 """
 
 from __future__ import annotations
@@ -52,33 +56,17 @@ from ..sinks.writers import (
     COMPACTED_GEN,
     compact_batch_landings,
     delete_rows_partitioned,
+    fold_landings,
+    local_fs_path,
 )
 
 _FRESH_PROBE_INLIST = 10_000  # max ids inlined as a pushed-down IN filter
 
 
-def local_fs_path(path: str):
-    """``path`` as a local ``pathlib.Path`` (a ``file:`` URI is accepted).
-    Any other URI scheme (``hdfs://``, ``s3a://``...) raises: the index
-    listings cannot see it, so it would read as empty."""
-    from pathlib import Path
-    from urllib.parse import urlparse
-
-    u = urlparse(path)
-    if u.scheme == "":
-        return Path(path)
-    if u.scheme == "file":
-        return Path(u.path)
-    raise ValueError(
-        f"index path {path!r}: only local filesystem paths are supported "
-        f"(the index listings cannot see a {u.scheme}:// filesystem)"
-    )
-
-
 def index_parquet_files(path: str) -> list:
     """Parquet files Spark's FileIndex would actually list under ``path``:
-    underscore/dot-prefixed path segments (``__delete_staging``, fold
-    staging, metadata dirs) are invisible to Spark, so a crashed delete's
+    underscore/dot-prefixed path segments (the rewrite's staging dir,
+    metadata dirs) are invisible to Spark, so a crashed rewrite's
     staged files must not make an otherwise-emptied index look
     non-empty (the read would then fail schema inference at query
     time)."""
@@ -133,16 +121,10 @@ def landed_batches(path: str) -> set[int] | None:
     return ids
 
 
-def _fold_dirs(path: str, key: str, sidecars) -> list:
-    return [(d.name, d) for d in _key_dirs(path, key)] + [
-        (s, local_fs_path(f"{path}.{s}")) for s in sidecars
-    ]
-
-
 def _landed_ids(path: str, key: str, sidecars) -> set[int]:
     """Every batch id landed in any key dir or sidecar of the index."""
     ids: set[int] = set()
-    for _, d in _fold_dirs(path, key, sidecars):
+    for d in _key_dirs(path, key) + [f"{path}.{s}" for s in sidecars]:
         ids |= landed_batches(str(d)) or set()
     return ids
 
@@ -159,11 +141,12 @@ def compact_streamed(
 ) -> dict[str, int]:
     """Fold each key dir's (and each sidecar's) landings below
     ``upto_batch_id`` (at or below the committed watermark) into the
-    ``batch_id=-1`` generation.  Returns ``{dir: file_count}``."""
-    return {
-        name: compact_batch_landings(spark, str(d), upto_batch_id)
-        for name, d in _fold_dirs(path, key, sidecars)
-    }
+    ``batch_id=-1`` generation: one rewrite for the key dirs, one per
+    sidecar.  Returns ``{dir: file_count}``."""
+    counts = fold_landings(spark, path, upto_batch_id, key)
+    for s in sidecars:
+        counts[s] = compact_batch_landings(spark, f"{path}.{s}", upto_batch_id)
+    return counts
 
 
 def compact_all(spark, path: str, key: str, sidecars=()) -> dict[str, int]:
@@ -179,7 +162,8 @@ def delete(spark, path: str, key: str, id_col: str, ids, sidecars=()) -> bool:
     """Compliance deletion: remove every row whose ``id_col`` is in
     ``ids`` by targeted rewrite of only the (key, batch_id) partitions
     (a sidecar's batch_id partitions) holding them; an emptied partition's
-    dir disappears.  Idempotent and crash-convergent.  Returns False when
+    dir disappears.  Idempotent and crash-convergent: each root's rewrite
+    first settles any crashed fold or delete there.  Returns False when
     the index holds no data (nothing deleted)."""
     if not _landed_ids(path, key, ()):
         return False

@@ -39,9 +39,11 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .writers import local_fs_path
+
 
 def _manifest_dir(table_dir: str) -> Path:
-    return Path(table_dir) / "_manifests"
+    return local_fs_path(table_dir) / "_manifests"
 
 
 def _manifest_path(table_dir: str, version: int) -> Path:
@@ -76,7 +78,7 @@ def commit_version(
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     chunk = f"data/{uuid.uuid4().hex}"
-    out = str(Path(table_dir) / chunk)
+    out = str(local_fs_path(table_dir) / chunk)
     df.write.mode("error").parquet(out)
     new_files = sorted(
         str(Path(chunk) / p.name)
@@ -126,7 +128,7 @@ def read_version(
     m = _load_manifest(table_dir, version)
     if not m["files"]:
         return spark.createDataFrame([], StructType.fromJson(m["schema"]))
-    paths = [str(Path(table_dir) / f) for f in m["files"]]
+    paths = [str(local_fs_path(table_dir) / f) for f in m["files"]]
     return spark.read.parquet(*paths)
 
 
@@ -172,7 +174,7 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
         for f in _load_manifest(table_dir, v)["files"]:
             live_chunks.add(str(Path(f).parent))
     deleted = []
-    data_root = Path(table_dir) / "data"
+    data_root = local_fs_path(table_dir) / "data"
     if data_root.is_dir():
         for chunk in sorted(data_root.iterdir()):
             rel = str(Path("data") / chunk.name)

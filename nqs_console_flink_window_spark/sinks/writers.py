@@ -15,11 +15,14 @@ ClickHouse semantics -> Spark:
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import shutil
+import uuid
 from datetime import date, timedelta
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -94,6 +97,22 @@ def idempotent_batch_write(
     w.parquet(f"{base_dir}/batch_id={batch_id}")
 
 
+def local_fs_path(path: str) -> Path:
+    """``path`` as a local ``pathlib.Path`` (a ``file:`` URI is accepted).
+    Any other URI scheme (``hdfs://``, ``s3a://``...) raises, naming the
+    path: every listing and file move in ``sinks`` is a local filesystem
+    call, which would find nothing there and silently do nothing."""
+    u = urlparse(path)
+    if u.scheme == "":
+        return Path(path)
+    if u.scheme == "file":
+        return Path(unquote(u.path))
+    raise ValueError(
+        f"{path!r}: only local filesystem paths are supported (a local "
+        f"listing cannot see a {u.scheme}:// filesystem)"
+    )
+
+
 def drop_expired_partitions(out_dir: str, date_col: str, keep_months: int = 3,
                             today: date | None = None) -> list[str]:
     """TTL enforcement as a partition-drop job (DDL `TTL ... + INTERVAL 3
@@ -101,7 +120,7 @@ def drop_expired_partitions(out_dir: str, date_col: str, keep_months: int = 3,
     today = today or date.today()
     cutoff = today - timedelta(days=math.ceil(keep_months * 30.44))
     dropped = []
-    root = Path(out_dir)
+    root = local_fs_path(out_dir)
     if not root.exists():
         return dropped
     for part in root.glob(f"{date_col}=*"):
@@ -123,6 +142,148 @@ def kafka_payload(df: DataFrame) -> DataFrame:
     return df.select(F.to_json(F.struct(*df.columns)).alias("value"))
 
 
+COMPACTED_GEN = -1  # reserved batch_id for compacted history
+_FOLD_BYTES = 128 * 1024 * 1024  # a rewrite writes one file per this much input
+# The one staged-commit protocol's names under a dataset root (``_rewrite``).
+# Both are hidden from Spark's listing (a leading "." or "_").
+REWRITE_STAGING = ".rewrite-staging"
+REWRITE_MANIFEST = "_rewrite-manifest.json"
+
+
+def _settle(root: Path) -> None:
+    """Settle whatever rewrite a crash left under ``root``.  Every fold and
+    delete runs this before it lists anything, so each verb finishes the
+    others' crashed work, whichever verb crashed.
+
+    A readable manifest was committed only after its staging was
+    complete, so it is re-applied: always a roll forward.  None, or an
+    unreadable one, means nothing was applied; only the staging dir and
+    the manifest go.  The staging dir of a concurrent dynamic-overwrite
+    landing (``.spark-staging-*``) is not this protocol's and is left
+    alone."""
+    man = root / REWRITE_MANIFEST
+    if man.is_file():
+        try:
+            spec = json.loads(man.read_text())
+        except ValueError:  # torn: the commit never happened
+            spec = None
+        if spec:
+            _apply(root, spec)
+    shutil.rmtree(root / REWRITE_STAGING, ignore_errors=True)
+    man.unlink(missing_ok=True)
+    Path(f"{man}.tmp").unlink(missing_ok=True)
+
+
+def _apply(root: Path, spec: dict) -> None:
+    """Apply a committed manifest.  Each step is idempotent, so a crash
+    anywhere is finished by running it again: move the staged files in
+    under their stamped names, unlink exactly the listed inputs (a file
+    that landed after the snapshot survives), and remove the dirs this
+    left empty.  A staged file found neither in staging nor at its
+    destination raises before anything is unlinked."""
+    staging = root / REWRITE_STAGING
+    lost = [
+        dst
+        for src, dst in spec["staged"]
+        if not (staging / src).exists() and not (root / dst).exists()
+    ]
+    if lost:
+        raise RuntimeError(
+            f"rewrite manifest {root / REWRITE_MANIFEST}: staged files "
+            f"{lost} are neither staged nor in place; no input was unlinked"
+        )
+    for src, dst in spec["staged"]:
+        if (staging / src).exists():
+            (root / dst).parent.mkdir(parents=True, exist_ok=True)
+            (staging / src).rename(root / dst)
+    for rel in spec["inputs"]:
+        f = root / rel
+        f.unlink(missing_ok=True)
+        (f.parent / f".{f.name}.crc").unlink(missing_ok=True)
+        # a dir holding only Spark's write residue is gone for readers:
+        # remove it, and each parent it leaves empty, up to the root
+        d = f.parent
+        while root in d.parents and d.is_dir():
+            rest = list(d.iterdir())
+            if not all(p.name == "_SUCCESS" or p.suffix == ".crc" for p in rest):
+                break
+            for p in rest:
+                p.unlink()
+            d.rmdir()
+            d = d.parent
+
+
+def _read_snapshot(spark, root: Path, files: list[Path]) -> DataFrame:
+    """Exactly ``files``, carrying the partition columns of their dirs
+    under ``root``: a file that lands later is not read."""
+    return spark.read.option("basePath", str(root)).parquet(*map(str, files))
+
+
+def _num_rows(f: Path) -> int:
+    """A parquet file's row count, from its footer alone."""
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(f).num_rows
+
+
+def _rewrite(
+    spark,
+    root: Path,
+    inputs: list[Path],
+    df: DataFrame,
+    partition_cols: list[str],
+    target_bytes: float,
+) -> list[str]:
+    """THE crash-safe rewrite behind every fold and delete: replace the
+    parquet files ``inputs`` under ``root`` with ``df``'s rows,
+    partitioned by ``partition_cols`` as the inputs are, with about one
+    file per ``target_bytes`` of input (at least one) in each partition.
+    The caller settles ``root`` before listing ``inputs``.  Returns the
+    new files' paths, relative to ``root``.
+
+    1. Stage: ``df`` is written under ``REWRITE_STAGING``, which Spark
+       never lists.
+    2. Commit: ``REWRITE_MANIFEST`` lists each staged file with its
+       destination, and each input to unlink, all relative to ``root``.
+       It is written to a tmp file, fsynced, then renamed into place.
+       An empty staged list is a valid commit: a delete that empties
+       every partition it touches.
+    3. Apply: ``_settle`` runs the committed manifest exactly as a
+       restart after a crash would (``_apply``).
+
+    A crash before the rename leaves the dataset as it was; a crash after
+    it is rolled forward by the next fold or delete on ``root``."""
+    staging = root / REWRITE_STAGING
+    nbytes = sum(f.stat().st_size for f in inputs)
+    rows = sum(_num_rows(f) for f in inputs)
+    (
+        df.repartition(*partition_cols)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", max(1, math.ceil(rows * target_bytes / nbytes)))
+        .partitionBy(*partition_cols)
+        .parquet(str(staging))
+    )
+    stamp = uuid.uuid4().hex[:12]
+    staged = sorted(p.relative_to(staging) for p in staging.rglob("*.parquet"))
+    spec = {
+        "staged": [
+            [str(s), str(s.parent / f"compact-{stamp}-{i:05d}.parquet")]
+            for i, s in enumerate(staged)
+        ],
+        "inputs": [str(f.relative_to(root)) for f in inputs],
+    }
+    man = root / REWRITE_MANIFEST
+    tmp = Path(f"{man}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(spec, fh)
+        fh.flush()
+        os.fsync(fh.fileno())  # content durable BEFORE the rename commits it
+    tmp.rename(man)  # the commit point
+    _settle(root)
+    spark.catalog.refreshByPath(str(root))
+    return [dst for _, dst in spec["staged"]]
+
+
 def compact_partition(
     spark, out_dir: str, date_col: str, part_value: str, target_files: int = 1
 ) -> int:
@@ -131,177 +292,85 @@ def compact_partition(
     ``target_files`` files — the ClickHouse background-merge analogue,
     scheduled instead of implicit.
 
-    Safe next to a live streaming writer: the input file list is snapshotted
-    before the rewrite and the fold reads exactly that snapshot, so a file appended
-    concurrently is never read, never deleted, and the partition directory
-    never disappears.  Crash-safe: the swap is ``fold_parquet_files``'s
-    manifest protocol, so a pass that dies mid-swap is settled by the next
-    one without duplicating or losing rows.
+    Safe next to a live streaming writer: the input file list is
+    snapshotted before the rewrite, which reads and unlinks exactly that
+    snapshot, so a file appended concurrently is never read, never
+    deleted, and the partition directory never disappears.  Crash-safe
+    through ``_rewrite``.
 
     Returns the number of files after compaction.
     """
     import glob as _glob
 
-    part_path = f"{out_dir}/{date_col}={part_value}"
-    # settle a crashed fold BEFORE the snapshot (compact_batch_landings'
-    # rule): its roll-forward deletes files the listing would include
-    _repair_crashed_compaction(Path(part_path))
-    inputs = _glob.glob(f"{part_path}/*.parquet")
-    if not inputs:
-        return 0
-    # a byte target the fold's ceil(total / target) turns into exactly
-    # target_files output files
-    total_bytes = sum(os.path.getsize(f) for f in inputs)
-    return fold_parquet_files(
-        spark, inputs, part_path, target_bytes=total_bytes / (target_files - 0.5)
-    )
-
-
-COMPACTED_GEN = -1  # reserved batch_id for compacted history
-
-
-def _repair_crashed_compaction(gen_path: Path) -> None:
-    """Settle any fold manifest left by a crashed compact_batch_landings.
-
-    A manifest is committed BEFORE any compacted file moves into the live
-    generation dir, and removed only after every folded input is deleted —
-    so its mere presence means the fold did not finish.  All listed new
-    files present -> the crash happened during input deletion: roll forward
-    (delete remaining inputs).  Any new file missing -> the crash happened
-    mid-rename: roll back (delete the partial new files; the inputs are
-    complete because deletion never starts before the rename finishes).
-    A torn (unparseable) or empty-new_files manifest also rolls BACK —
-    content durability is fsynced before the rename, so a torn manifest
-    proves the fold never got past its commit point and the inputs are
-    whole; keeping the candidates would bake in duplicates on the next
-    fold, and trusting an empty list would delete inputs with no
-    replacement."""
-    if not gen_path.is_dir():
-        return
-    import json as _json
-
-    for manifest in sorted(gen_path.glob("_compact-*.manifest.json")):
-        stamp = manifest.name[len("_compact-") : -len(".manifest.json")]
-        try:
-            spec = _json.loads(manifest.read_text())
-        except ValueError:
-            spec = None
-        if spec is None or not spec.get("new_files"):
-            # Torn write, or a manifest committed with an empty new_files
-            # list (invalid by construction — the fold always stages >=1
-            # file).  Both mean the content fsync never completed or the
-            # writer was broken, and the fsync-before-rename discipline
-            # guarantees nothing AFTER the manifest commit ran — the
-            # inputs are intact.  Roll BACK: delete the stamp's candidate
-            # new files (stamp-matched only, so prior-generation inputs
-            # living in this dir are never touched) and keep the inputs.
-            # Rolling FORWARD here would fold the new generation next to
-            # its surviving inputs (permanent duplication), or — for the
-            # empty-list case — delete every input with no replacement.
-            for p in gen_path.glob(f"compact-{stamp}-*.parquet"):
-                p.unlink(missing_ok=True)
-            manifest.unlink(missing_ok=True)
-            continue
-        new_files = [gen_path / name for name in spec["new_files"]]
-        if all(p.exists() for p in new_files):
-            # inputs are recorded as ABSOLUTE paths at manifest-write time,
-            # so this roll-forward works from any working directory;
-            # missing_ok stays — a crash mid-deletion legitimately leaves
-            # some inputs already gone
-            new_abs = {p.resolve() for p in new_files}
-            for f in spec["inputs"]:
-                if Path(f).resolve() not in new_abs:
-                    Path(f).unlink(missing_ok=True)
-        else:
-            for p in new_files:
-                p.unlink(missing_ok=True)
-        manifest.unlink(missing_ok=True)
-    # half-committed manifests (tmp never renamed) are dead letters
-    for tmp in sorted(gen_path.glob(".compact-*.manifest.tmp")):
-        tmp.unlink(missing_ok=True)
-
-
-def fold_parquet_files(
-    spark, inputs: list[str], dest_dir, target_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """THE fold core shared by ``compact_batch_landings`` and
-    ``compact_partition``: merge ``inputs`` (parquet file paths —
-    may include files already living in ``dest_dir``) into
-    ~``target_bytes`` files named ``compact-<stamp>-NNNNN.parquet`` inside
-    ``dest_dir``, crash-safe under the fold-manifest protocol
-    (``_repair_crashed_compaction``'s schema — one writer, one repairer,
-    so the manifest format cannot drift between call sites).  Settles any
-    crashed prior fold first (including pre-commit ``.<dest>__compact``
-    staging garbage, which the manifest never covers because it exists only
-    before the commit point).  Skips the rewrite when every input already
-    lives in ``dest_dir`` at or under the byte target (idempotence).
-    Returns the dest dir's parquet file count afterwards."""
-    import json as _json
-    import uuid as _uuid
-
-    dest = Path(dest_dir)
-    _repair_crashed_compaction(dest)
-    # dot-prefixed: Spark's file listing skips it (an `_` name holding
-    # `=` would still read as a partition), so a fold that dies before
-    # its commit leaves nothing a reader would count
-    tmp_path = str(dest.parent / f".{dest.name}__compact")
-    shutil.rmtree(tmp_path, ignore_errors=True)
-    # Manifest paths must be ABSOLUTE: a crash repair may run from a
-    # different working directory, and relative inputs would make the
-    # roll-forward deletion silently no-op (missing_ok), leaving the
-    # merged inputs on disk and permanently duplicating rows in the
-    # folded generation on the next pass.
-    inputs = sorted(str(Path(f).resolve()) for f in inputs)
-
-    def _count() -> int:
-        return len(list(dest.glob("*.parquet"))) if dest.is_dir() else 0
-
-    if not inputs:
-        return _count()
-    total_bytes = sum(Path(f).stat().st_size for f in inputs)
-    n_files = max(1, math.ceil(total_bytes / target_bytes))
-    if n_files >= len(inputs) and all(
-        Path(f).parent == dest.resolve() for f in inputs
-    ):
-        return _count()
-    # snapshot read: concurrent appends land new files, unseen here
-    df = spark.read.parquet(*inputs)
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp_path)
-    stamp = _uuid.uuid4().hex[:8]
-    dest.mkdir(parents=True, exist_ok=True)
-    staged = sorted(Path(tmp_path).glob("*.parquet"))
-    dests = [dest / f"compact-{stamp}-{i:05d}.parquet" for i in range(len(staged))]
-    # Commit point: manifest first (atomic rename), then move files in.
-    manifest = dest / f"_compact-{stamp}.manifest.json"
-    manifest_tmp = dest / f".compact-{stamp}.manifest.tmp"
-    with open(manifest_tmp, "w") as fh:
-        fh.write(
-            _json.dumps({"new_files": [d.name for d in dests], "inputs": inputs})
+    root = local_fs_path(out_dir)
+    part = root / f"{date_col}={part_value}"
+    # settle a crashed rewrite BEFORE the snapshot: its roll-forward
+    # unlinks files the listing would include
+    _settle(root)
+    inputs = sorted(Path(f) for f in _glob.glob(f"{part}/*.parquet"))
+    if len(inputs) > target_files:
+        # a byte target that the rewrite turns into target_files files
+        nbytes = sum(f.stat().st_size for f in inputs)
+        _rewrite(
+            spark, root, inputs, _read_snapshot(spark, root, inputs),
+            [date_col], nbytes / (target_files - 0.5),
         )
-        fh.flush()
-        os.fsync(fh.fileno())  # content durable BEFORE the rename commits it
-    manifest_tmp.rename(manifest)
-    moved = []
-    for f, d in zip(staged, dests):
-        f.rename(d)
-        moved.append(d)
-    shutil.rmtree(tmp_path)
-    # delete merged inputs only after the new generation is fully in place
-    moved_abs = {d.resolve() for d in moved}
-    for f in inputs:
-        if Path(f) not in moved_abs:
-            Path(f).unlink(missing_ok=True)
-    manifest.unlink(missing_ok=True)  # fold complete
-    return _count()
+    return len(list(part.glob("*.parquet")))
+
+
+def _below(slice_dir: Path, upto_batch_id: int) -> bool:
+    v = slice_dir.name.split("=", 1)[1]
+    return v.lstrip("-").isdigit() and int(v) < upto_batch_id
+
+
+def fold_landings(
+    spark, root: str, upto_batch_id: int, key: str | None
+) -> dict[str, int]:
+    """Fold every ``batch_id=N`` slice below ``upto_batch_id`` into the
+    reserved ``batch_id=-1`` generation beside it: under ``root`` itself
+    when ``key`` is None, else under each ``<key>=K`` dir, all in one
+    ``_rewrite``.  A dir whose slices are already folded, or hold no
+    row, is left as it is, so a fold with nothing to do rewrites nothing.
+    Returns each dir's file count in its generation, by dir name."""
+    base = local_fs_path(root)
+    # settle BEFORE listing: a roll-forward unlinks files a listing
+    # would otherwise hand to this fold
+    _settle(base)
+    dirs = sorted(d for d in base.glob(f"{key}=*") if d.is_dir()) if key else [base]
+    gen = f"batch_id={COMPACTED_GEN}"
+    inputs: list[Path] = []
+    for d in dirs:
+        files = sorted(
+            f
+            for s in d.glob("batch_id=*")
+            if _below(s, upto_batch_id)
+            for f in s.glob("*.parquet")
+        )
+        folded = all(f.parent.name == gen for f in files) and len(files) <= max(
+            1, math.ceil(sum(f.stat().st_size for f in files) / _FOLD_BYTES)
+        )
+        # an empty micro-batch lands a 0-row file; a dir of nothing else
+        # would fold to no file at all, and the table would lose its schema
+        if not folded and any(_num_rows(f) for f in files):
+            inputs += files
+    if inputs:
+        df = _read_snapshot(spark, base, inputs).withColumn(
+            "batch_id", F.lit(COMPACTED_GEN)
+        )
+        _rewrite(
+            spark, base, inputs, df, [key, "batch_id"] if key else ["batch_id"],
+            _FOLD_BYTES,
+        )
+    return {d.name: len(list((d / gen).glob("*.parquet"))) for d in dirs}
 
 
 def compact_batch_landings(spark, base_dir: str, upto_batch_id: int) -> int:
     """Small-file maintenance for batch_id-keyed landing tables (the dedup
-    index / curation output, the standing indexes): merge every
+    index / curation output, the standing indexes' sidecars): fold every
     ``batch_id`` subpath below ``upto_batch_id`` into the reserved
     ``batch_id=-1`` compacted generation (folding any previous generation
-    in, and the standing indexes' append slices at -2, -3, ...), then
-    delete the merged subpaths.  One file per ~128 MB of merged data.
+    in, and the standing indexes' append slices at -2, -3, ...); the
+    merged subpaths disappear.  One file per ~128 MB of merged data.
 
     Correctness contract (couples to streaming/jobs._read_prior_batches):
     - The ``batch_id < current`` exclusion rule keeps working unchanged —
@@ -317,182 +386,35 @@ def compact_batch_landings(spark, base_dir: str, upto_batch_id: int) -> int:
       must reset the landing table too (same rule as before compaction —
       re-owning subpaths cannot reclaim rows folded into -1).
 
-    Crash safety (the fold manifest): renaming the new generation in and
-    deleting the merged inputs cannot be one atomic step, so a BEFORE the
-    files move, a manifest listing the expected new files and every folded
-    input is committed (tmp-write + rename) into the generation dir.
-    ``_repair_crashed_compaction`` runs first on every pass and settles any
-    manifest it finds: if the listed new files are all present the previous
-    run got past the rename — roll FORWARD by deleting its listed inputs
-    (finishing the interrupted deletion); otherwise roll BACK by deleting
-    the partially-renamed new files (the inputs are still intact, since
-    deletion only ever starts after the rename completes).  Either way no
-    row is ever folded twice — without the manifest, a crash between rename
-    and unlink left rows in both the new generation and the original
-    subpaths, and the NEXT pass merged both copies, baking the duplicates
-    in permanently.
+    Crash-safe through ``_rewrite``: a fold that dies at any step is
+    settled by the next fold or delete on ``base_dir``, and no row is
+    ever folded twice.
 
     Returns the number of files in the compacted generation.
     """
-    import glob as _glob
-
-    gen_path = Path(base_dir) / f"batch_id={COMPACTED_GEN}"
-    # settle any crashed fold BEFORE listing inputs: roll-forward deletes
-    # already-folded input files, and listing them first would hand the
-    # fold core paths the repair is about to remove
-    _repair_crashed_compaction(gen_path)
-    inputs: list[str] = []
-    for sub in sorted(Path(base_dir).glob("batch_id=*")):
-        try:
-            bid = int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid < upto_batch_id:
-            inputs.extend(sorted(str(p) for p in sub.glob("*.parquet")))
-    fold_parquet_files(spark, inputs, gen_path)
-    for sub in sorted(Path(base_dir).glob("batch_id=*")):
-        try:
-            bid = int(sub.name.split("=", 1)[1])
-        except ValueError:
-            continue
-        if bid != COMPACTED_GEN and bid < upto_batch_id:
-            # clear Spark write residue (_SUCCESS, .crc) so the emptied
-            # subpath actually disappears instead of lingering partitionless
-            leftovers = list(sub.iterdir())
-            if all(p.name == "_SUCCESS" or p.name.endswith(".crc") for p in leftovers):
-                for p in leftovers:
-                    p.unlink(missing_ok=True)
-                sub.rmdir()
-    return len(_glob.glob(f"{gen_path}/*.parquet"))
+    (n,) = fold_landings(spark, base_dir, upto_batch_id, None).values()
+    return n
 
 
-DELETE_MANIFEST = "__delete_manifest.json"
-DELETE_STAGING = "__delete_staging"
 # max ids inlined as a pushed-down IN filter; above this the delete
 # switches to semi/anti joins against a distributed id frame (same
 # threshold role as retrieval._FRESH_PROBE_INLIST)
 _DELETE_INLIST = 10_000
 
 
-def _delete_part_dir(path: str, partition_cols: list[str], values):
-    from pathlib import Path
-
-    sub = Path(path)
-    for c, v in zip(partition_cols, values):
-        sub = sub / f"{c}={v}"
-    return sub
-
-
-def _commit_delete(path: str, manifest: dict) -> None:
-    """Roll the staged delete FORWARD (idempotent — every step checks
-    what already happened).  Partitioned: for each affected partition,
-    remove the old directory and move the staged replacement in (kept
-    partitions) or just remove it, with any partition dir it leaves
-    empty (emptied).  Flat: remove exactly the
-    data files the staged snapshot READ (the manifest records their
-    names — a file appended between snapshot and commit survives as
-    duplicate-free extra rows instead of being silently destroyed, the
-    same inputs-only discipline as fold_parquet_files), then move the
-    staged files in under generation-prefixed names (stable across
-    repair re-runs — a crashed move never orphans or double-deletes).
-    Underscore-prefixed staging/manifest names keep Spark's FileIndex
-    blind to the machinery."""
-    import hashlib as _hl
-    import json as _json
-    import shutil as _sh
-    from pathlib import Path
-
-    staging = Path(path) / DELETE_STAGING
-    if manifest.get("flat"):
-        gen = _hl.md5(
-            _json.dumps(manifest, sort_keys=True).encode()
-        ).hexdigest()[:8]
-        prefix = f"delete-{gen}-"
-        flat_staged = staging / "__flat"
-        if flat_staged.exists():
-            inputs = set(manifest["inputs"])
-            for f in sorted(Path(path).glob("*.parquet")):
-                if f.name in inputs:
-                    f.unlink(missing_ok=True)
-            for f in sorted(flat_staged.glob("*.parquet")):
-                f.rename(Path(path) / (prefix + f.name))
-    else:
-        pcols = manifest["partition_cols"]
-        kept = {tuple(t) for t in manifest["kept"]}
-        for t in (tuple(t) for t in manifest["affected"]):
-            real = _delete_part_dir(path, pcols, t)
-            staged = _delete_part_dir(str(staging), pcols, t)
-            if t in kept:
-                if staged.exists():
-                    _sh.rmtree(real, ignore_errors=True)
-                    real.parent.mkdir(parents=True, exist_ok=True)
-                    staged.rename(real)
-                # staged gone -> this partition already committed
-            else:
-                _sh.rmtree(real, ignore_errors=True)
-                # an emptied (key, batch) slice can empty its key dir too
-                for parent in list(real.parents)[: len(pcols) - 1]:
-                    if not parent.is_dir() or any(parent.iterdir()):
-                        break
-                    parent.rmdir()
-    (Path(path) / DELETE_MANIFEST).unlink(missing_ok=True)
-    _sh.rmtree(staging, ignore_errors=True)
-
-
-def _repair_crashed_delete(path: str) -> None:
-    """Settle a crashed prior delete before doing anything else: with a
-    manifest, roll forward (the staging holds the complete kept rows of
-    every not-yet-committed partition); without one, any staging dir is
-    pre-commit garbage — the dataset is untouched, drop the staging."""
-    import json as _json
-    import shutil as _sh
-    from pathlib import Path
-
-    man = Path(path) / DELETE_MANIFEST
-    if man.exists():
-        _commit_delete(path, _json.loads(man.read_text()))
-    else:
-        _sh.rmtree(Path(path) / DELETE_STAGING, ignore_errors=True)
-
-
-def _write_delete_manifest(path: str, manifest: dict) -> dict:
-    import json as _json
-    import os as _os
-    from pathlib import Path
-
-    man = Path(path) / DELETE_MANIFEST
-    tmp = Path(path) / (DELETE_MANIFEST + ".tmp")
-    tmp.write_text(_json.dumps(manifest, sort_keys=True))
-    fd = _os.open(tmp, _os.O_RDONLY)
-    try:
-        _os.fsync(fd)
-    finally:
-        _os.close(fd)
-    tmp.rename(man)
-    return _json.loads(man.read_text())
-
-
 def delete_rows_partitioned(
     spark, path: str, key_col: str, ids, partition_cols: list[str]
 ) -> tuple[int, int]:
     """Compliance deletion core — remove every row whose ``key_col`` is in
-    ``ids`` from a parquet dataset by TARGETED partition rewrite under a
-    staged-commit manifest: only partitions that actually contain a hit
-    are read back and filtered, the kept rows land in an underscore-
-    hidden staging dir FIRST (real files on disk before anything is
-    removed), a manifest records the plan (fsync + rename), and only
-    then are old partition directories swapped for their staged
-    replacements (or removed outright when the delete emptied them).
-    Returns (affected, emptied) partition counts.
-
-    Crash safety (the fold-manifest discipline): a crash before the
-    manifest rename leaves the dataset untouched (staging is pre-commit
-    garbage, dropped on the next call); a crash after it is rolled
-    FORWARD by ``_repair_crashed_delete`` — the staging holds the
-    complete kept rows of every partition not yet swapped, and every
-    commit step is idempotent.  Readers racing the commit window can see
-    a partition mid-swap: deletion is an offline maintenance operation,
-    exactly like compaction.
+    ``ids`` from a partitioned parquet dataset by TARGETED rewrite: only
+    the partitions holding a hit are read back, and their files are
+    replaced with the kept rows through ``_rewrite`` (crash-safe; a file
+    that lands in an affected partition after the snapshot survives).  A
+    partition left with no row disappears.  ``partition_cols`` names the
+    dataset's partition columns, outermost first; an empty list raises.
+    Returns (affected, emptied) partition counts.  Readers racing the
+    apply step can see a partition mid-swap: deletion is an offline
+    maintenance operation, exactly like compaction.
 
     Cost model: up to ``_DELETE_INLIST`` ids inline as an IN-list the
     scan pushes down to find hits (row-group min/max pruning — the
@@ -501,20 +423,17 @@ def delete_rows_partitioned(
     switches to a semi/anti join (a 10M-literal IN would blow up the
     expression tree and defeat pushdown anyway — the bulk-delete
     shape).  Both forms rewrite only affected partitions.
-    ``partition_cols=[]`` degrades to a staged full rewrite — only for
-    bounded unpartitioned side tables, never for corpus-scale data.
     """
-    import os as _os
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
+    if not partition_cols:
+        raise ValueError(
+            "delete_rows_partitioned: partition_cols is empty — the delete "
+            "rewrites whole partitions, so the dataset must be partitioned"
+        )
     # ids pass through as-is: isin() takes any literal type, so string
     # doc ids work unchanged (coercing via int() would silently constrain
     # the compliance key to integers)
     ids = list(ids)
-    bulk = len(ids) > _DELETE_INLIST
-    if bulk:
+    if len(ids) > _DELETE_INLIST:
         # distinct: a repeated id must not repeat semi-join hit rows
         # (affected-partition discovery would still dedup, but the keep
         # anti-join is cheaper against a deduped build side)
@@ -536,85 +455,24 @@ def delete_rows_partitioned(
         def _keep(d):
             return d.filter(~F.col(key_col).isin(ids))
 
-    _repair_crashed_delete(path)
-    # both repair and commit move files BEHIND Spark's FileIndex cache —
-    # refresh or this very function would plan against a stale listing
-    spark.catalog.refreshByPath(path)
-    df = spark.read.parquet(path)
-    staging = Path(path) / DELETE_STAGING
-
-    if not partition_cols:
-        # the flat path swaps ROOT data files; on a partitioned dataset
-        # that would leave the old partition dirs in place next to the
-        # new flat files — silent duplication, refuse up front
-        if any(
-            c.is_dir() and "=" in c.name and not c.name.startswith("_")
-            for c in Path(path).iterdir()
-        ):
-            raise ValueError(
-                "flat delete on a partitioned dataset — pass its "
-                "partition_cols"
-            )
-        # a no-op delete must be an actual no-op (the idempotent re-run
-        # case): probe before rewriting the whole side table
-        if _hits(df).isEmpty():
-            return (0, 0)
-        keep = _keep(df)
-        # snapshot the exact files this rewrite read BEFORE staging: the
-        # commit unlinks only these, so a file appended mid-delete is
-        # left alone (extra rows, never silent loss)
-        inputs = sorted(_os.path.basename(f) for f in df.inputFiles())
-        keep.write.mode("overwrite").parquet(str(staging / "__flat"))
-        # bulk manifests carry a digest, not the id list itself — a
-        # multi-million-id JSON manifest would make every fsync/commit
-        # step O(ids); the digest keeps the flat path's generation
-        # prefix unique without the payload
-        import hashlib as _hl
-
-        # distinct: the manifest describes the EFFECTIVE delete set, so a
-        # duplicate-carrying request hashes the same as its deduped twin
-        id_strs = sorted({str(i) for i in ids})
-        id_field = (
-            {
-                "ids_md5": _hl.md5("\n".join(id_strs).encode()).hexdigest(),
-                "n_ids": len(id_strs),
-            }
-            if bulk
-            else {"ids": id_strs}
-        )
-        manifest = _write_delete_manifest(
-            path,
-            {"flat": True, "key_col": key_col, "inputs": inputs, **id_field},
-        )
-        _commit_delete(path, manifest)
-        spark.catalog.refreshByPath(path)
-        return (1, 0)
-
-    aff = [
-        tuple(r)
-        for r in _hits(df).select(*partition_cols).distinct().collect()
+    root = local_fs_path(path)
+    _settle(root)
+    # a settle moves files behind Spark's FileIndex cache — refresh, or
+    # the hit scan would plan against a stale listing
+    spark.catalog.refreshByPath(str(root))
+    hits = _hits(spark.read.parquet(str(root))).select(*partition_cols)
+    dirs = [
+        root.joinpath(*(f"{c}={v}" for c, v in zip(partition_cols, r)))
+        for r in hits.distinct().collect()
     ]
-    if not aff:
+    inputs = sorted(f for d in dirs for f in d.glob("*.parquet"))
+    if not inputs:
         return (0, 0)
-    aff_df = spark.createDataFrame([list(t) for t in aff], partition_cols)
-    keep = _keep(df.join(F.broadcast(aff_df), partition_cols, "left_semi"))
-    keep.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-        str(staging)
-    )
-    kept = [
-        t
-        for t in aff
-        if _delete_part_dir(str(staging), partition_cols, t).exists()
-    ]
-    manifest = _write_delete_manifest(
-        path,
-        {
-            "flat": False,
-            "partition_cols": partition_cols,
-            "affected": [list(t) for t in aff],
-            "kept": [list(t) for t in kept],
-        },
-    )
-    _commit_delete(path, manifest)
-    spark.catalog.refreshByPath(path)
-    return (len(aff), len(aff) - len(kept))
+    kept = {
+        str(Path(f).parent)
+        for f in _rewrite(
+            spark, root, inputs, _keep(_read_snapshot(spark, root, inputs)),
+            partition_cols, _FOLD_BYTES,
+        )
+    }
+    return (len(dirs), sum(str(d.relative_to(root)) not in kept for d in dirs))

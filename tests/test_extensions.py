@@ -3111,92 +3111,62 @@ def test_index_compliance_deletion(spark, tmp_path) -> None:
 
 
 def test_delete_crash_recovery(spark, tmp_path) -> None:
-    """The staged-commit delete survives a crash at either phase:
-    pre-manifest (staging is garbage — dataset untouched, re-run
-    completes) and post-manifest (roll-forward — the next call finishes
-    the swap; no kept row is lost, no deleted row survives).  Both the
-    partitioned and the flat path."""
+    """The staged-commit delete survives a crash at every step:
+    pre-commit (the staging is garbage — dataset untouched, a re-run
+    completes) and post-commit, before and during the apply (roll
+    forward — the next call finishes it; no kept row is lost, no deleted
+    row survives), including a delete that empties a partition."""
     import pytest as _pytest
 
     from nqs_console_flink_window_spark.sinks import writers as W
+    from tests.crash_points import crash_at
 
-    def build(path, partitioned=True):
-        w = spark.createDataFrame(
+    def build(path):
+        spark.createDataFrame(
             [(k, k % 3) for k in range(30)], "k long, p int"
-        ).write.mode("overwrite")
-        (w.partitionBy("p") if partitioned else w).parquet(path)
+        ).write.mode("overwrite").partitionBy("p").parquet(path)
 
     def keys(path):
+        spark.catalog.refreshByPath(path)
         return sorted(r["k"] for r in spark.read.parquet(path).collect())
 
     # phase 1: staging exists, no manifest -> repair drops it, data intact
     p1 = str(tmp_path / "d1")
     build(p1)
-    boom = {"armed": True}
-    real_manifest = W._write_delete_manifest
-
-    def no_manifest(path, manifest):
-        if boom["armed"]:
-            raise RuntimeError("crash before manifest")
-        return real_manifest(path, manifest)
-
-    with _pytest.MonkeyPatch.context() as mp:
-        mp.setattr(W, "_write_delete_manifest", no_manifest)
-        with _pytest.raises(RuntimeError):
-            W.delete_rows_partitioned(spark, p1, "k", [1, 5, 9], ["p"])
+    with crash_at("before_commit"):
+        W.delete_rows_partitioned(spark, p1, "k", [1, 5, 9], ["p"])
     assert keys(p1) == list(range(30))  # untouched
-    boom["armed"] = False
     assert W.delete_rows_partitioned(spark, p1, "k", [1, 5, 9], ["p"])[0] == 3
     assert keys(p1) == [k for k in range(30) if k not in (1, 5, 9)]
 
-    # phase 2: manifest written, commit crashes -> next call rolls forward
-    for pcols, tag in ((["p"], "d2"), ([], "d3")):
-        p2 = str(tmp_path / tag)
-        build(p2, partitioned=bool(pcols))
-        real_commit = W._commit_delete
-        state = {"armed": True}
+    # phase 2: manifest committed, the apply crashes at each step -> the
+    # next call rolls forward, then finds nothing left to delete
+    for step in ("after_commit", "mid_move", "before_unlink"):
+        p2 = str(tmp_path / f"d2_{step}")
+        build(p2)
+        with crash_at(step):
+            W.delete_rows_partitioned(spark, p2, "k", [2, 5, 7], ["p"])
+        assert W.delete_rows_partitioned(
+            spark, p2, "k", [2, 5, 7], ["p"]
+        ) == (0, 0)
+        assert keys(p2) == [k for k in range(30) if k not in (2, 5, 7)]
 
-        def crash_commit(path, manifest):
-            if state["armed"]:
-                raise RuntimeError("crash after manifest")
-            return real_commit(path, manifest)
-
-        with _pytest.MonkeyPatch.context() as mp:
-            mp.setattr(W, "_commit_delete", crash_commit)
-            with _pytest.raises(RuntimeError):
-                W.delete_rows_partitioned(spark, p2, "k", [2, 5], pcols)
-        state["armed"] = False
-        # the NEXT delete call settles the crashed one first, then no-ops
-        assert W.delete_rows_partitioned(spark, p2, "k", [2, 5], pcols) == (0, 0)
-        assert keys(p2) == [k for k in range(30) if k not in (2, 5)]
-
-    # phase 2b: emptying delete crashes post-manifest; roll-forward still
-    # removes the whole partition directory
+    # phase 2b: emptying delete crashes post-commit; the roll-forward
+    # still removes the whole partition directory
     p4 = str(tmp_path / "d4")
     build(p4)
     all_p0 = [k for k in range(30) if k % 3 == 0]
-    state = {"armed": True}
-    real_commit = W._commit_delete
-
-    def crash_once(path, manifest):
-        if state["armed"]:
-            raise RuntimeError("crash")
-        return real_commit(path, manifest)
-
-    with _pytest.MonkeyPatch.context() as mp:
-        mp.setattr(W, "_commit_delete", crash_once)
-        with _pytest.raises(RuntimeError):
-            W.delete_rows_partitioned(spark, p4, "k", all_p0, ["p"])
-    state["armed"] = False
-    W._repair_crashed_delete(p4)
+    with crash_at("after_commit"):
+        W.delete_rows_partitioned(spark, p4, "k", all_p0, ["p"])
+    assert W.delete_rows_partitioned(spark, p4, "k", all_p0, ["p"]) == (0, 0)
     from pathlib import Path
 
     assert not (Path(p4) / "p=0").exists()
     assert keys(p4) == [k for k in range(30) if k % 3 != 0]
 
-    # misuse guard: the flat path on a partitioned dataset would silently
-    # duplicate rows (old partition dirs + new flat files) — it refuses
-    with _pytest.raises(ValueError, match="partitioned dataset"):
+    # misuse guard: the rewrite replaces whole partitions, so an
+    # unpartitioned dataset is refused up front
+    with _pytest.raises(ValueError, match="partition_cols"):
         W.delete_rows_partitioned(spark, p4, "k", [1], [])
 
 
@@ -3206,47 +3176,48 @@ def test_bulk_delete_semi_join_parity(spark, tmp_path) -> None:
     pushed-down IN-list to semi/anti joins against a distributed id
     frame (a multi-million-literal IN would blow up Catalyst's
     expression tree and defeat pushdown).  Parity at both sizes: same
-    rows removed, same (affected, emptied) accounting, on both layouts;
-    duplicate and string ids included; the bulk flat manifest carries an
-    id digest, never the id payload; and the switch propagates through
-    ``text_index_delete`` (which rides this core)."""
+    rows removed, same (affected, emptied) accounting, on a one- and a
+    two-level partitioning; duplicate and string ids included; the
+    manifest lists files, never the id payload; and the switch
+    propagates through ``text_index_delete`` (which rides this core)."""
+    import json
+
     import pytest as _pytest
 
     from nqs_console_flink_window_spark.sinks import writers as W
 
-    def build(path, partitioned=True):
-        w = spark.createDataFrame(
-            [(k, k % 3) for k in range(40)], "k long, p int"
-        ).write.mode("overwrite")
-        (w.partitionBy("p") if partitioned else w).parquet(path)
+    def build(path, pcols):
+        spark.createDataFrame(
+            [(k, k % 3, k % 2) for k in range(40)], "k long, p int, q int"
+        ).write.mode("overwrite").partitionBy(*pcols).parquet(path)
 
     def keys(path):
         return sorted(r["k"] for r in spark.read.parquet(path).collect())
 
     ids = [1, 5, 9, 33, 12, 5]  # repeated id: must not double-hit
     expect = [k for k in range(40) if k not in ids]
-    for pcols, tag in ((["p"], "part"), ([], "flat")):
+    for pcols, tag in ((["p"], "one"), (["p", "q"], "two")):
         inl = str(tmp_path / f"{tag}_in")
         blk = str(tmp_path / f"{tag}_blk")
-        build(inl, partitioned=bool(pcols))
-        build(blk, partitioned=bool(pcols))
+        build(inl, pcols)
+        build(blk, pcols)
         r_in = W.delete_rows_partitioned(spark, inl, "k", ids, pcols)
         captured = {}
-        real_manifest = W._write_delete_manifest
+        real_settle = W._settle
 
-        def capture(path, manifest, _c=captured, _r=real_manifest):
-            _c.update(manifest)
-            return _r(path, manifest)
+        def capture(root, _c=captured, _r=real_settle):
+            man = root / W.REWRITE_MANIFEST
+            if man.exists():
+                _c.update(json.loads(man.read_text()))
+            return _r(root)
 
         with _pytest.MonkeyPatch.context() as mp:
             mp.setattr(W, "_DELETE_INLIST", 3)  # force the bulk path
-            mp.setattr(W, "_write_delete_manifest", capture)
+            mp.setattr(W, "_settle", capture)
             r_blk = W.delete_rows_partitioned(spark, blk, "k", ids, pcols)
             assert r_in == r_blk
             assert keys(inl) == keys(blk) == expect
-            if not pcols:
-                assert "ids" not in captured and "ids_md5" in captured
-                assert captured["n_ids"] == len(set(ids))
+            assert set(captured) == {"staged", "inputs"}
             # idempotent re-run stays a no-op on the bulk path too
             assert W.delete_rows_partitioned(spark, blk, "k", ids, pcols) == (
                 0,
@@ -3254,16 +3225,16 @@ def test_bulk_delete_semi_join_parity(spark, tmp_path) -> None:
             )
 
     # string keys survive the bulk path (r8-advice invariant carried over)
-    sflat = str(tmp_path / "sflat")
+    spart = str(tmp_path / "spart")
     spark.createDataFrame(
-        [(f"doc-{k}", k) for k in range(12)], "k string, v int"
-    ).write.mode("overwrite").parquet(sflat)
+        [(f"doc-{k}", k % 2) for k in range(12)], "k string, v int"
+    ).write.mode("overwrite").partitionBy("v").parquet(spart)
     with _pytest.MonkeyPatch.context() as mp:
         mp.setattr(W, "_DELETE_INLIST", 2)
         W.delete_rows_partitioned(
-            spark, sflat, "k", ["doc-1", "doc-6", "doc-9"], []
+            spark, spart, "k", ["doc-1", "doc-6", "doc-9"], ["v"]
         )
-    assert sorted(r["k"] for r in spark.read.parquet(sflat).collect()) == (
+    assert sorted(r["k"] for r in spark.read.parquet(spart).collect()) == (
         sorted(f"doc-{k}" for k in range(12) if k not in (1, 6, 9))
     )
 
@@ -3298,58 +3269,60 @@ def test_bulk_delete_semi_join_parity(spark, tmp_path) -> None:
     ]
 
 
-def test_flat_delete_spares_late_arriving_file(spark, tmp_path) -> None:
-    """r8-advice regression (writers.py _commit_delete, flat branch): the
+def test_delete_spares_late_arriving_file(spark, tmp_path) -> None:
+    """r8-advice regression (writers.py delete_rows_partitioned): the
     commit must unlink exactly the files the staged snapshot READ — a
-    file appended between the snapshot and the commit is NOT part of the
-    delete's inputs and must survive (as extra rows, never silent loss).
-    The old prefix rule deleted every non-generation-prefixed root file,
-    destroying the late arrival."""
+    file that lands in an affected partition between the snapshot and
+    the commit is NOT part of the delete's inputs and must survive (as
+    extra rows, never silent loss), and so must its partition dir.  A
+    whole-partition swap would destroy the late arrival."""
+    from pathlib import Path
+
     import pyarrow as pa
     import pyarrow.parquet as pq
-    import pytest as _pytest
 
     from nqs_console_flink_window_spark.sinks import writers as W
 
-    p = str(tmp_path / "flat_late")
+    p = str(tmp_path / "part_late")
     spark.createDataFrame(
         [(k, k % 3) for k in range(10)], "k long, p int"
-    ).write.mode("overwrite").parquet(p)
+    ).write.mode("overwrite").partitionBy("p").parquet(p)
 
-    real_commit = W._commit_delete
+    real_rename = Path.rename
 
-    def commit_after_append(path, manifest):
-        # a concurrent writer lands a file in the commit window
-        pq.write_table(
-            pa.table(
-                {
-                    "k": pa.array([100], pa.int64()),
-                    "p": pa.array([9], pa.int32()),
-                }
-            ),
-            f"{path}/late-arrival.parquet",
-        )
-        return real_commit(path, manifest)
+    def commit_then_land(self, target):
+        out = real_rename(self, target)
+        if self.name.endswith(".tmp"):  # the manifest commit
+            # a concurrent writer lands a file in the commit window, into
+            # the partition the delete is rewriting (k=1 lives in p=1)
+            pq.write_table(
+                pa.table({"k": pa.array([100], pa.int64())}),
+                f"{p}/p=1/late-arrival.parquet",
+            )
+        return out
 
-    with _pytest.MonkeyPatch.context() as mp:
-        mp.setattr(W, "_commit_delete", commit_after_append)
-        W.delete_rows_partitioned(spark, p, "k", [1, 5], [])
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(Path, "rename", commit_then_land)
+        W.delete_rows_partitioned(spark, p, "k", [1, 5], ["p"])
+    spark.catalog.refreshByPath(p)
     got = sorted(r["k"] for r in spark.read.parquet(p).collect())
     assert got == [k for k in range(10) if k not in (1, 5)] + [100]
 
 
 def test_delete_rows_accepts_string_keys(spark, tmp_path) -> None:
     """r8-advice regression (writers.py delete_rows_partitioned): ids pass
-    through untouched — a string key_col (e.g. string doc ids) must work
-    on both the flat and the partitioned path instead of dying in an
+    through untouched — a string key_col (e.g. string doc ids) must work,
+    under a string or an int partition column, instead of dying in an
     int() cast."""
     from nqs_console_flink_window_spark.sinks import writers as W
 
     rows = [(f"doc-{k}", k % 2) for k in range(8)]
-    flat = str(tmp_path / "str_flat")
-    spark.createDataFrame(rows, "k string, p int").write.parquet(flat)
-    W.delete_rows_partitioned(spark, flat, "k", ["doc-1", "doc-6"], [])
-    assert sorted(r["k"] for r in spark.read.parquet(flat).collect()) == [
+    spart = str(tmp_path / "str_spart")
+    spark.createDataFrame(
+        [(k, f"s{p}") for k, p in rows], "k string, s string"
+    ).write.partitionBy("s").parquet(spart)
+    W.delete_rows_partitioned(spark, spart, "k", ["doc-1", "doc-6"], ["s"])
+    assert sorted(r["k"] for r in spark.read.parquet(spart).collect()) == [
         f"doc-{k}" for k in range(8) if k not in (1, 6)
     ]
 

@@ -7,7 +7,7 @@ index and asserts the standing invariants after every step:
   f(doclen) at all times; the maintained
   index answers BM25 identically to a fresh build on the live corpus
   (scores INCLUDING N/T/df reconverge after any op mix); no leftover
-  maintenance machinery (staging dirs / delete manifests) after a
+  maintenance machinery (the rewrite's staging dir or manifest) after a
   completed verb.
 - IVF-PQ index: the maintained codes index answers identically to a fresh
   ingest of the live corpus through the SAME persisted quantizers (the
@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from nqs_console_flink_window_spark.operators import retrieval as RT
 from nqs_console_flink_window_spark.operators import similarity as SIM
+from nqs_console_flink_window_spark.sinks import writers as W
 
 # an op is (verb, selector); the selector picks which ids a delete targets
 # or which slice an ingest lands, so shrinking finds minimal failing mixes
@@ -73,6 +74,8 @@ def _stats_is_f_of_doclen(spark, path: str) -> None:
 
 
 def _no_maintenance_leftovers(path: str) -> None:
+    """No rewrite staging dir or manifest (nor its tmp file) is left
+    anywhere under ``path`` once a verb has returned."""
     import pathlib
 
     root = pathlib.Path(path)
@@ -81,7 +84,7 @@ def _no_maintenance_leftovers(path: str) -> None:
     leftovers = [
         p
         for p in root.rglob("*")
-        if p.name.startswith(("__delete_", "__fold_"))
+        if p.name.startswith((W.REWRITE_STAGING, W.REWRITE_MANIFEST))
     ]
     assert not leftovers, leftovers
 

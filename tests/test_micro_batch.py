@@ -4,7 +4,6 @@ partition compaction."""
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from pathlib import Path
@@ -133,10 +132,12 @@ def test_read_prior_batches_raises_on_corrupt_landing(spark, tmp_path) -> None:
 
 
 def test_compact_partition_crash_recovery_never_duplicates(spark, tmp_path) -> None:
-    """A compaction that died after moving the new file in but before
-    deleting its inputs leaves both copies and the fold manifest; the next
-    compact_partition must settle that to the original rows, not fold the
-    duplicates in for good."""
+    """A compaction killed after moving the new file in but before
+    unlinking its inputs leaves both copies and the committed rewrite
+    manifest; the next compact_partition must settle that to the original
+    rows, not fold the duplicates in for good."""
+    from tests.crash_points import crash_at
+
     ev = load_table(spark, SMOKE_SF_DIR, "events").withColumn("d", F.to_date("ts"))
     out = str(tmp_path / "facts")
     for i in range(3):
@@ -144,18 +145,36 @@ def test_compact_partition_crash_recovery_never_duplicates(spark, tmp_path) -> N
     day = "2024-01-03"
     part = Path(out) / f"d={day}"
     rows = spark.read.parquet(str(part)).count()
-    saved = {str(p.resolve()): p.read_bytes() for p in part.glob("*.parquet")}
-    assert len(saved) >= 3
+    assert len(list(part.glob("*.parquet"))) >= 3
 
-    assert W.compact_partition(spark, out, "d", day, target_files=1) == 1
-    new_files = sorted(p.name for p in part.glob("compact-*.parquet"))
-    for f, blob in saved.items():  # resurrect the "undeleted" inputs
-        Path(f).write_bytes(blob)
-    (part / "_compact-deadbeef.manifest.json").write_text(
-        json.dumps({"new_files": new_files, "inputs": list(saved)})
-    )
+    with crash_at("before_unlink"):
+        W.compact_partition(spark, out, "d", day, target_files=1)
+    assert (Path(out) / W.REWRITE_MANIFEST).exists()
+    spark.catalog.refreshByPath(str(part))
     assert spark.read.parquet(str(part)).count() == 2 * rows  # the crash window
 
     assert W.compact_partition(spark, out, "d", day, target_files=1) == 1
     assert spark.read.parquet(str(part)).count() == rows
-    assert not list(part.glob("_compact-*.manifest.json"))
+    assert not (Path(out) / W.REWRITE_MANIFEST).exists()
+
+
+def test_compacting_only_empty_landings_keeps_the_table_readable(
+    spark, tmp_path
+) -> None:
+    """An empty micro-batch lands a 0-row file that carries the schema.
+    A table landed only from empty batches has no row to fold: compaction
+    must leave it readable (zero rows, same schema), and fold the empty
+    slices away once a batch with rows joins them."""
+    rows = spark.createDataFrame([(1, "a")], "k int, v string")
+    out = tmp_path / "landed"
+    for b in range(2):
+        W.idempotent_batch_write(rows.limit(0), str(out), b)
+    W.compact_batch_landings(spark, str(out), 2)
+    assert spark.read.parquet(str(out)).drop("batch_id").schema == rows.schema
+    assert spark.read.parquet(str(out)).count() == 0
+
+    W.idempotent_batch_write(rows, str(out), 2)
+    assert W.compact_batch_landings(spark, str(out), 3) == 1
+    assert [p.name for p in out.iterdir()] == ["batch_id=-1"]
+    spark.catalog.refreshByPath(str(out))
+    assert spark.read.parquet(str(out)).count() == 1

@@ -785,14 +785,14 @@ def test_compact_text_index_preserves_state_and_pruning(spark, tmp_path) -> None
     assert "PartitionFilters" in plan and "tbucket" in plan.split(
         "PartitionFilters", 1
     )[1].splitlines()[0]
-    # a crash-leftover `tbucket=N/.batch_id=-1__compact` staging dir is
-    # neither read (Spark skips `.` names) nor left on disk (the fold
-    # core clears pre-commit staging garbage when it next touches the
-    # bucket)
+    # a crash-leftover rewrite staging dir (staged before any commit) is
+    # neither read (Spark skips `.` names) nor left on disk (every fold
+    # settles the index root before it lists anything)
+    from nqs_console_flink_window_spark.sinks.writers import REWRITE_STAGING
+
     n_rows = spark.read.parquet(idx).count()
-    some_bucket = sorted(Path(idx).glob("tbucket=*"))[0]
-    leftover = Path(f"{some_bucket}/.batch_id=-1__compact")
-    leftover.mkdir()
+    leftover = Path(idx) / REWRITE_STAGING / "tbucket=0" / "batch_id=-1"
+    leftover.mkdir(parents=True)
     (leftover / "junk.parquet").write_bytes(b"not parquet")
     assert spark.read.parquet(idx).count() == n_rows
     # idempotent: a second pass folds nothing further

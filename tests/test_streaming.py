@@ -1042,101 +1042,104 @@ def test_compact_batch_landings_preserves_derived_state(spark, tmp_path) -> None
 
 
 def test_compaction_crash_recovery_never_duplicates(spark, tmp_path) -> None:
-    """Fold-manifest crash safety: a compaction that dies (a) after moving
-    the new generation in but before deleting the merged inputs, or (b)
-    mid-rename with the manifest committed, must be settled by the next pass
-    with the landing table's rows EXACTLY as before — the pre-manifest
-    behavior permanently baked the (a) duplicates in on the next merge."""
+    """Rewrite-manifest crash safety: a compaction killed (a) after moving
+    the new generation in but before unlinking the merged inputs, or (b)
+    between moving one staged file in and the next, is rolled forward by
+    the next pass with the landing table's rows EXACTLY as before — the
+    (a) duplicates must never be merged in for good.  (c) A torn manifest
+    was never committed: the next pass drops it and the staging, and the
+    inputs stay.  (d) A manifest whose staged file is in neither staging
+    nor place must raise, naming the manifest, and unlink nothing."""
     import json
-    import shutil
     from pathlib import Path
 
-    from nqs_console_flink_window_spark.sinks.writers import (
-        COMPACTED_GEN,
-        compact_batch_landings,
-    )
+    import pytest
+
+    from nqs_console_flink_window_spark.sinks import writers as W
+    from tests.crash_points import crash_at
 
     docs = load_table(spark, SMOKE_SF_DIR, "documents")
     kept_dir = str(tmp_path / "kept")
     index_dir = str(tmp_path / "index")
     for i in range(2):
         J.ingest_dedup_batch(
-            spark, docs.filter(F.col("doc_id") % 2 == i), i, kept_dir, index_dir
+            spark, docs.filter(F.col("doc_id") % 3 == i), i, kept_dir, index_dir
         )
 
     def snap(d):
+        spark.catalog.refreshByPath(d)
         df = J._read_prior_batches(spark, d, 10)
         return sorted(tuple(r) for r in df.collect())
 
+    root = Path(index_dir)
+    manifest = root / W.REWRITE_MANIFEST
+
+    def leftovers():
+        return [
+            p.name for p in root.iterdir()
+            if p.name.startswith((W.REWRITE_MANIFEST, W.REWRITE_STAGING))
+        ]
+
     baseline = snap(index_dir)
-    gen = Path(index_dir) / f"batch_id={COMPACTED_GEN}"
 
-    # --- crash (a): new generation fully in place, inputs NOT deleted.
-    # Run a real compaction, then resurrect its inputs + manifest as if the
-    # process had died right before the deletion step.
-    inputs = sorted(
-        str(p)
-        for sub in Path(index_dir).glob("batch_id=*")
-        for p in sub.glob("*.parquet")
-    )
-    saved = {f: Path(f).read_bytes() for f in inputs}
-    compact_batch_landings(spark, index_dir, 10)
+    # --- crash (a): new generation fully in place, inputs NOT unlinked;
+    # rows are on disk twice until the next pass rolls forward
+    with crash_at("before_unlink"):
+        W.compact_batch_landings(spark, index_dir, 10)
+    assert manifest.exists()
+    assert len(snap(index_dir)) == 2 * len(baseline)
+    W.compact_batch_landings(spark, index_dir, 10)
     assert snap(index_dir) == baseline
-    new_files = sorted(p.name for p in gen.glob("compact-*.parquet"))
-    for f, blob in saved.items():  # resurrect the "undeleted" inputs
-        Path(f).parent.mkdir(parents=True, exist_ok=True)
-        Path(f).write_bytes(blob)
-    (gen / "_compact-deadbeef.manifest.json").write_text(
-        json.dumps({"new_files": new_files, "inputs": list(saved)})
-    )
-    # rows currently double-counted (crash window) — next pass must repair,
-    # not merge both copies
-    compact_batch_landings(spark, index_dir, 10)
-    assert snap(index_dir) == baseline
-    assert not list(gen.glob("_compact-*.manifest.json"))
+    assert not leftovers()
 
-    # --- crash (b): manifest committed but renames incomplete -> roll back.
-    partial = gen / "compact-cafe0000-00000.parquet"
-    shutil.copyfile(next(iter(gen.glob("compact-*.parquet"))), partial)
-    (gen / "_compact-cafe0000.manifest.json").write_text(
+    # --- crash (b): one staged file moved in, the rest still staged.  A
+    # small byte target makes the fold stage several files.
+    J.ingest_dedup_batch(
+        spark, docs.filter(F.col("doc_id") % 3 == 2), 2, kept_dir, index_dir
+    )
+    baseline = snap(index_dir)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(W, "_FOLD_BYTES", 2048)
+        with crash_at("mid_move"):
+            W.compact_batch_landings(spark, index_dir, 10)
+        staged = json.loads(manifest.read_text())["staged"]
+        assert len(staged) >= 2
+        assert len(list((root / W.REWRITE_STAGING).rglob("*.parquet"))) == (
+            len(staged) - 1
+        )
+        W.compact_batch_landings(spark, index_dir, 10)
+    assert snap(index_dir) == baseline
+    assert not leftovers()
+    assert not [d for d in root.iterdir() if d.name != "batch_id=-1"]
+
+    # --- crash (c): TORN manifest beside complete-looking staging.  It was
+    # never committed, so nothing of it may be applied.
+    gen = root / "batch_id=-1"
+    junk = root / W.REWRITE_STAGING / "batch_id=-1" / "part-0.parquet"
+    junk.parent.mkdir(parents=True)
+    junk.write_bytes(next(gen.glob("*.parquet")).read_bytes())
+    manifest.write_text('{"staged": [')
+    W.compact_batch_landings(spark, index_dir, 10)
+    assert not leftovers()
+    assert snap(index_dir) == baseline
+
+    # --- crash (d): a committed manifest whose staged file is gone from
+    # staging and destination alike.  Applying it would unlink every
+    # input with no replacement: the pass must raise and unlink nothing.
+    survivors = sorted(gen.glob("*.parquet"))
+    manifest.write_text(
         json.dumps(
             {
-                "new_files": [partial.name, "compact-cafe0000-00001.parquet"],
-                "inputs": [],
+                "staged": [["batch_id=-1/part-0.parquet",
+                            "batch_id=-1/compact-gone-00000.parquet"]],
+                "inputs": [str(p.relative_to(root)) for p in survivors],
             }
         )
     )
-    compact_batch_landings(spark, index_dir, 10)
-    assert not partial.exists()  # rolled back
-    assert snap(index_dir) == baseline
-
-    # --- crash (c): TORN manifest (content never made it to disk).  The
-    # fsync-before-rename discipline means nothing after the commit ran —
-    # inputs are whole — so the repair must roll BACK: delete the stamp's
-    # candidate files, keep everything else.  The old keep-the-candidates
-    # behavior duplicated every input row on the next fold.
-    torn_candidate = gen / "compact-beef0001-00000.parquet"
-    shutil.copyfile(next(iter(gen.glob("compact-*.parquet"))), torn_candidate)
-    (gen / "_compact-beef0001.manifest.json").write_text('{"new_files": [')
-    compact_batch_landings(spark, index_dir, 10)
-    assert not torn_candidate.exists()  # rolled back, not kept
-    assert not list(gen.glob("_compact-*.manifest.json"))
-    assert snap(index_dir) == baseline
-
-    # --- crash (d): parseable manifest with an EMPTY new_files list is
-    # invalid by construction (the fold always stages >=1 file).  all([])
-    # is True, so the old code rolled FORWARD and deleted every listed
-    # input with no replacement — data loss.  Must roll back instead.
-    survivors = sorted(str(p) for p in gen.glob("compact-*.parquet"))
-    assert survivors
-    (gen / "_compact-beef0002.manifest.json").write_text(
-        json.dumps({"new_files": [], "inputs": survivors})
-    )
-    # a roll-forward here would delete every survivor with no replacement
-    # (all([]) is True) — the subsequent fold would then see zero inputs
-    # and the landing table's rows would be gone
-    compact_batch_landings(spark, index_dir, 10)
-    assert not list(gen.glob("_compact-*.manifest.json"))
+    with pytest.raises(RuntimeError, match=W.REWRITE_MANIFEST):
+        W.compact_batch_landings(spark, index_dir, 10)
+    assert all(p.exists() for p in survivors)
+    manifest.unlink()
     assert snap(index_dir) == baseline
 
 
