@@ -96,12 +96,12 @@ FROM sums
 
 
 def lsh_ranked_duck_cte(vec_table: str = "embeddings") -> str:
-    """The SRP-LSH candidate + exact-cosine rank CTE prefix shared by
-    ann_lsh_topk's SQL oracle AND the recall audit's LSH leg (one source
-    for the candidate rule, so the audit can never drift from the
-    operator it audits): exposes ``lsh_ranked`` (vec_id, cosine, rn) —
-    bucket-collision candidates of the vec_id=0 query, exact-decimal
-    cosine, (cosine desc, vec_id) row numbers."""
+    """The SRP-LSH candidate + exact-cosine rank CTE prefix of the recall
+    audit's LSH leg (the DuckDB twin of ``ann_lsh_topk``'s candidate rule,
+    so the audit can never drift from the operator it audits): exposes
+    ``lsh_ranked`` (vec_id, cosine, rn) — bucket-collision candidates of
+    the vec_id=0 query, exact-decimal cosine, (cosine desc, vec_id) row
+    numbers."""
     return f"""
 WITH buckets AS ({srp_buckets_duck_sql(vec_table)}),
 qb AS (SELECT tbl, bucket FROM buckets WHERE vec_id = 0),

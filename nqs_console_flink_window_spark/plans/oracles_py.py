@@ -14,7 +14,7 @@ pytest-gated (recall/determinism), not cross-checked here.  Everything the
 Spark ENGINE adds on top is recomputed independently and verified exactly:
 parquet loading, the Arrow assignment/encode kernels, probe-cell routing,
 the JVM element_at ADC gathers, the DECIMAL(30,15) cosine path, ordering
-and limits.  Same standard as ann_lsh_topk's SQL twin (which shares the
+and limits.  Same standard as ann_topk's SQL twin (which shares the
 md5-sign SPEC with the engine by construction).
 
 Cross-engine float discipline:
@@ -286,8 +286,8 @@ def ann_recall_audit_oracle(con, sf_dir: str) -> pd.DataFrame:
         "ORDER BY cosine DESC, vec_id LIMIT 10"
     )
     exact = {int(v) for (v,) in con.execute(exact_sql).fetchall()}
-    # the SRP-LSH set via the same deterministic SQL twin ann_lsh_topk
-    # trusts (bucket equi-join candidates, exact-cosine re-rank)
+    # the SRP-LSH set via the deterministic SQL twin of ann_lsh_topk
+    # (bucket equi-join candidates, exact-cosine re-rank)
     lsh_sql = f"""
 {SIM.lsh_ranked_duck_cte('embeddings')}
 SELECT vec_id FROM lsh_ranked WHERE rn <= 10

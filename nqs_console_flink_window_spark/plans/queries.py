@@ -13,14 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import FIXED_NOW_EPOCH
 from ..functions.score import (
     dispatch_score_rank_sql,
     dispatch_score_sql,
     record_score_rank_sql,
     record_score_sql,
 )
-from ..functions.timebuckets import add_time_buckets
 from ..operators import parse as P
 from ..operators.enrich import geo_chain, municipality_norm_sql
 from ..operators.windows import (
@@ -138,38 +136,13 @@ SELECT l_orderkey, l_linenumber, {_PING_SQL} AS score
 FROM lineitem
 """,
     doc="Q1-Q4 — PING criteria piecewise-linear weighted score "
-    "(operator driver-gated via score_all_protocols/score_dispatch)",
+    "(operator driver-gated via score_all_protocols)",
     headline=True,
     tier=2,
 )
 def score_ping(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return li.select("l_orderkey", "l_linenumber", F.expr(_PING_SQL_ENGINE).alias("score"))
-
-
-_HTTP_MAP = {
-    "dns_cost": "l_quantity",
-    "conn_cost": "l_extendedprice / 500.0",
-    "text_cost": "l_extendedprice / 50.0",
-    "avg_speed": "l_extendedprice / 100.0",
-}
-_HTTP_SQL = record_score_sql("HTTP", _HTTP_MAP)
-_HTTP_SQL_ENGINE = record_score_rank_sql("HTTP", _HTTP_MAP)
-
-
-@register(
-    "score_http",
-    sql=f"""
-SELECT l_orderkey, l_linenumber, {_HTTP_SQL} AS score
-FROM lineitem
-""",
-    doc="Q1-Q4 — HTTP criteria (4 metrics incl. direction=down; "
-    "operator driver-gated via score_all_protocols)",
-    tier=2,
-)
-def score_http(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.select("l_orderkey", "l_linenumber", F.expr(_HTTP_SQL_ENGINE).alias("score"))
 
 
 # Protocol dispatch over a stream-shaped table, with outlier coverage
@@ -189,28 +162,8 @@ _DISPATCH_SQL = dispatch_score_sql(PROTO_EXPR, _DISPATCH_MAPS)
 _DISPATCH_SQL_ENGINE = dispatch_score_rank_sql(PROTO_EXPR, _DISPATCH_MAPS)
 
 
-@register(
-    "score_dispatch",
-    sql=f"""
-SELECT event_id, {PROTO_EXPR} AS protocol, {_DISPATCH_SQL} AS score
-FROM events
-""",
-    doc="Q1-Q4 + R3 — per-record protocol dispatch incl. outlier zeroing, "
-    "SPEED hard-zero, unknown-protocol zero; driver-gated via "
-    "score_all_protocols (all 13 configs incl. this dispatch CASE)",
-    tier=2,
-)
-def score_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.expr(PROTO_EXPR).alias("protocol"),
-        F.expr(_DISPATCH_SQL_ENGINE).alias("score"),
-    )
-
-
 # --------------------------------------------------------------------------
-# Parse / validate / repair (P1-P5)
+# Parse / validate (P1/P2/P4)
 # --------------------------------------------------------------------------
 
 
@@ -229,52 +182,6 @@ def parse_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = P.parse_props(P.validate(ev, ["event_type", "user_id"]))
     return parsed.filter(F.col("props_s.k").isNotNull()).select(
         "event_id", F.col("props_s.k").alias("k")
-    )
-
-
-@register(
-    "clock_repair",
-    sql=f"""
-SELECT event_id,
-  {P.clock_repair_sql("CAST(floor(epoch(ts)) AS BIGINT)")} AS test_time
-FROM events
-""",
-    doc="P5 — clock-skew repair (|now-t| > 108000 s -> now), deterministic "
-    "now; driver-gated via event_scalar_transforms",
-    tier=2,
-)
-def clock_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        P.clock_repair_expr(F.unix_timestamp(F.col("ts"))).alias("test_time"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Time buckets (T1)
-# --------------------------------------------------------------------------
-
-
-@register(
-    "time_buckets",
-    sql="""
-SELECT event_id,
-  date_trunc('hour', ts)  AS ts_h,
-  date_trunc('day', ts)   AS ts_d,
-  date_trunc('week', ts)  AS ts_w,
-  date_trunc('month', ts) AS ts_m,
-  CAST(ts AS DATE)        AS ts_d_date
-FROM events
-""",
-    doc="T1 — hour/day/Monday-week/month bucket columns + date partition "
-    "stamp; driver-gated via event_scalar_transforms",
-    tier=2,
-)
-def time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return add_time_buckets(ev, "ts", "ts").select(
-        "event_id", "ts_h", "ts_d", "ts_w", "ts_m", "ts_d_date"
     )
 
 
@@ -316,26 +223,8 @@ def tumbling_window_10s(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Snapshot / dedup (A4/A5)
+# Last-write-wins dedup (A5)
 # --------------------------------------------------------------------------
-
-
-@register(
-    "latest_event_per_user",
-    sql="""
-SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value
-FROM events
-QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-""",
-    doc="A4 — latest-value snapshot per key (c_p_pinfo_real semantics; "
-    "window form — driver-gated via latest_event_per_user_agg)",
-    tier=2,
-)
-def latest_event_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return latest_per_key(
-        ev, ["user_id"], [F.col("ts").desc(), F.col("event_id").desc()]
-    ).select("user_id", "event_id", "ts", "event_type", "value")
 
 
 @register(

@@ -172,7 +172,8 @@ def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sql=DD.minhash_signatures_sql(X.DUCK),
     doc="Extension — MinHash signatures (8 perms over 8-char shingles); "
     "cross-engine-identical md5-derived hashes; driver-gated end-to-end "
-    "through minhash_lsh_pairs (its oracle recomputes the signatures)",
+    "through dedup_clusters and web_curate_pipeline (both build these "
+    "signatures engine-side and their oracles recompute them)",
     headline=True,
     tier=2,
 )
@@ -203,8 +204,9 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "simhash_fingerprints",
     sql=DD.simhash_sql(X.DUCK),
     doc="Extension — 60-bit SimHash over distinct tokens (one-pass 60-agg "
-    "signature, see operators/dedup_text.simhash_sql); driver-gated "
-    "end-to-end through simhash_hamming_hist (oracle recomputes fingerprints)",
+    "signature, see operators/dedup_text.simhash_sql); no tier-1 row runs "
+    "SimHash, so the gate is this row's oracle parity plus "
+    "test_simhash_banded_equals_all_pairs",
     tier=2,
 )
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -473,29 +475,10 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ann_lsh_topk_oracle_sql() -> str:
-    """Full-shape twin of _ann_topk_oracle_sql (same deterministic-SRP
-    bucket collision + exact-decimal cosine re-rank) carrying the operator's
-    complete output row (q_vec_id, vec_id, cosine, rn) — closes the round-4
-    'value-oracle ann_lsh_topk' item; the k-means ANN family stays rows-only
-    (no SQL twin for the quantizer)."""
-    return f"""
-{SIM.lsh_ranked_duck_cte("embeddings")}
-SELECT CAST(0 AS BIGINT) AS q_vec_id, vec_id, cosine, CAST(rn AS INT) AS rn
-FROM lsh_ranked WHERE rn <= 10
-"""
-
-
-@register(
-    "ann_lsh_topk",
-    sql=_ann_lsh_topk_oracle_sql(),
-    doc="Extension — multi-table random-hyperplane LSH ANN top-k "
-    "(pandas-UDF signatures, bucket equi-join, exact re-rank), value-oracled "
-    "end-to-end via the deterministic integer SRP family; driver-gated "
-    "via the merged ann_topk row",
-    tier=2,
-)
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SRP-LSH top-10 neighbours of vec_id 0 as full rows (q_vec_id, vec_id,
+    cosine, rn); the registered ``ann_topk`` row and ``ann_recall_audit``'s
+    LSH leg both read it."""
     emb = load_table(spark, sf_dir, "embeddings")
     with_b = SIM.with_lsh_buckets(emb)
     query = with_b.filter(F.col("vec_id") == 0)
@@ -1397,7 +1380,8 @@ FROM scored s CROSS JOIN n WHERE s.rnk <= 3
     doc="Extension — per-document top-3 keywords by idf-weighted frequency "
     "(rational tf/df form, ln-free for cross-engine bit-exactness): "
     "token counts, corpus document frequency, windowed top-k cut; "
-    "tier-2: token explode/agg/window families all driver-gated elsewhere",
+    "tier-2: gated by this row's oracle parity plus "
+    "test_tfidf_topk_shape_and_score",
     tier=2,
 )
 def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1574,8 +1558,8 @@ def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(md5-salted positions, mergeable per-word BIT_OR, all-K-bits probe): "
     "members must be all-positive (no false negatives), a disjoint key "
     "set measures the FP rate; the testable form of the runtime "
-    "bloom-join pruning the session enables; tier-2: semi-join pruning "
-    "driver-gated via semi_anti_joins",
+    "bloom-join pruning the session enables; tier-2: gated by this row's "
+    "oracle parity plus test_bloom_no_false_negatives_and_low_fp",
     tier=2,
 )
 def bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1839,7 +1823,7 @@ def incremental_audio_dedup_batches(spark: SparkSession, sf_dir: str) -> DataFra
     "architecture's whole point, demonstrated by a second audio "
     "fingerprint costing ~30 lines.  Production use: this gate rejects "
     "quantized-volume re-uploads the waveform gate misses "
-    "(test_audio_spectral contrast).  driver-gated via "
+    "(test_spectral_gate_rejects_half_volume_reupload).  driver-gated via "
     "audio_dup_clusters (tier-1, the banded audio machinery) + "
     "dedup_clusters; lifecycle verbs fuzz-pinned through the shared "
     "image core",
@@ -2793,7 +2777,7 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # audit class); reusing the ids as a literal IN-list avoids running
     # the brute-force pass once per audited method
     exact_ids = [int(r["vec_id"]) for r in exact10.collect()]
-    lsh10 = ann_lsh_topk(spark, sf_dir)  # THE registered operator, reused
+    lsh10 = ann_lsh_topk(spark, sf_dir)  # the operator ann_topk runs, reused
     parts = []
     for method, adf in (
         ("ivf", SIM.ivf_topk(corpus, qvec, k=10)),

@@ -1,7 +1,7 @@
-"""Registered queries — remaining SURVEY §2 surface: composite-delimiter
-parse (P3), deterministic ids (P7), null-default coercion (P9), session
-windows (W11 upgrade), dimension upsert / MERGE semantics (S5), and
-grouping sets (A6).
+"""Registered queries — remaining SURVEY §2 surface: session windows (W11
+upgrade), dimension upsert / MERGE semantics (S5), sliding windows, the
+parse family's merged driver rows (P3/P5/P7/P9, T1, the J4 ip key) and
+the JSON round-trip (P4/W6/W7/T9).
 """
 
 from __future__ import annotations
@@ -13,103 +13,6 @@ from ..operators import parse as P
 from ..operators.windows import latest_per_key
 from ..sources.batch import load_table, register_temp_views
 from .registry import register
-
-# --------------------------------------------------------------------------
-# P3 — composite '\x02'-delimited heartbeat payload: build the reference's
-# wire format from fixture columns, then parse it back (round-trip proof).
-# --------------------------------------------------------------------------
-
-
-@register(
-    "composite_parse",
-    sql="""
-WITH wire AS (
-  SELECT event_id,
-    props || chr(2) || ('10.0.' || CAST(user_id % 256 AS STRING)) || chr(2)
-          || CAST(CAST(floor(epoch(ts)) AS BIGINT) AS STRING) AS payload
-  FROM events
-)
-SELECT event_id,
-  CAST(string_split(payload, chr(2))[1]->>'$.k' AS BIGINT) AS k,
-  string_split(payload, chr(2))[2] AS internet_ip,
-  CAST(string_split(payload, chr(2))[3] AS BIGINT) AS recv_time
-FROM wire
-""",
-    doc="P3 — heartbeat composite payload `json \\x02 internet_ip \\x02 "
-    "recv_time` split + JSON parse (HeartBeatMessage.java:14-33); "
-    "driver-gated via parse_stage",
-    tier=2,
-)
-def composite_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    payload = F.concat(
-        F.col("props"),
-        F.lit("\x02"),
-        F.concat(F.lit("10.0."), (F.col("user_id") % 256).cast("string")),
-        F.lit("\x02"),
-        F.unix_timestamp("ts").cast("string"),
-    )
-    parts = F.split(payload, "\x02")
-    return ev.select(
-        "event_id",
-        F.get_json_object(parts.getItem(0), "$.k").cast("long").alias("k"),
-        parts.getItem(1).alias("internet_ip"),
-        parts.getItem(2).cast("long").alias("recv_time"),
-    )
-
-
-# --------------------------------------------------------------------------
-# P7 — deterministic record ids
-# --------------------------------------------------------------------------
-
-
-@register(
-    "deterministic_ids",
-    sql="""
-SELECT event_id,
-  sha256(CAST(event_id AS STRING) || chr(31) || CAST(user_id AS STRING)) AS id
-FROM events
-""",
-    doc="P7 — deterministic sha256 record id over identity columns (replaces "
-    "UUIDKit.java random short-uuids; SURVEY §7.4 risk 2); driver-gated via "
-    "parse_stage",
-    tier=2,
-)
-def deterministic_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return P.with_deterministic_id(ev, ["event_id", "user_id"]).select("event_id", "id")
-
-
-# --------------------------------------------------------------------------
-# P9 — null-default coercion
-# --------------------------------------------------------------------------
-
-
-@register(
-    "null_defaults",
-    sql="""
-SELECT event_id,
-  COALESCE(NULLIF(event_type, 'error'), '') AS event_type_nn,
-  COALESCE(CASE WHEN user_id % 7 = 0 THEN NULL ELSE value END, 0.0) AS value_nn
-FROM events
-""",
-    doc="P9 — null->''/0 coercion for sink compatibility (util/ValKit.java:16-63); "
-    "driver-gated via parse_stage",
-    tier=2,
-)
-def null_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.coalesce(F.nullif("event_type", F.lit("error")), F.lit("")).alias(
-            "event_type_nn"
-        ),
-        F.coalesce(
-            F.when(F.col("user_id") % 7 == 0, None).otherwise(F.col("value")),
-            F.lit(0.0),
-        ).alias("value_nn"),
-    )
-
 
 # --------------------------------------------------------------------------
 # W11 — session windows (the event-time upgrade the reference lacks)
@@ -282,29 +185,6 @@ def dim_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# A6 — grouping sets
-# --------------------------------------------------------------------------
-
-_GS_SQL = """
-SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-"""
-
-
-@register(
-    "grouping_sets",
-    sql=_GS_SQL,
-    doc="A6 — explicit grouping sets (the general form behind rollup/cube); "
-    "driver-gated via grouping_analytics",
-    tier=2,
-)
-def grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_temp_views(spark, sf_dir, ("lineitem",))
-    return spark.sql(_GS_SQL)
-
-
-# --------------------------------------------------------------------------
 # W1 sliding variant — 30 s windows sliding by 10 s
 # --------------------------------------------------------------------------
 
@@ -341,37 +221,9 @@ def sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# J4 complement — dotted-quad IP -> int (the ipdb range-key derivation)
-# --------------------------------------------------------------------------
-
+# J4 complement — the dotted-quad IP whose uint32 key feeds the ipdb
+# range lookup; event_scalar_transforms derives both.
 _IP_STR = "'10.' || CAST(user_id % 200 AS STRING) || '.' || CAST(event_id % 256 AS STRING) || '.7'"
-
-
-@register(
-    "ip_to_int",
-    sql=f"""
-SELECT event_id,
-  {_IP_STR} AS ip,
-  ((10 * 256 + user_id % 200) * 256 + event_id % 256) * 256 + 7 AS ip_int
-FROM events
-""",
-    doc="J4 — dotted-quad -> uint32 key derivation feeding the ip-range "
-    "lookup (IPIPUtil.java:85-112); pure integer arithmetic both engines; "
-    "driver-gated via event_scalar_transforms",
-    tier=2,
-)
-def ip_to_int(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.expr(_IP_STR).alias("ip"),
-        (
-            ((F.lit(10) * 256 + F.col("user_id") % 200) * 256 + F.col("event_id") % 256)
-            * 256
-            + 7
-        ).alias("ip_int"),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -391,8 +243,8 @@ QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC)
     "every duplicate (27% faster at 10M rows locally, more at cluster "
     "scale).  Rotated tier-2 round 8: driver-gated via "
     "dedup_last_write_wins + session_windows (the latest-per-key and "
-    "event-time window semantics stay tier-1); the window-form sibling "
-    "latest_event_per_user is tier-2-parity-checked alongside",
+    "event-time window semantics stay tier-1); the max_by path itself is "
+    "gated by this row's oracle parity",
     tier=2,
 )
 def latest_event_per_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,8 +371,7 @@ def per_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Merged driver-surface queries: the driver's correctness gate checks only
 # the first 50 queries() entries, so same-grain per-event transforms are
 # verified through one multi-column query each (every column still
-# value-hashed); the single-operator forms above stay tier-2 and run through
-# tools/check_oracle.py + the pytest oracle gate.
+# value-hashed) and no single-operator form repeats a column of them.
 # --------------------------------------------------------------------------
 
 
@@ -540,8 +391,7 @@ FROM events
 """,
     doc="P5 + T1 + J4-key — per-event scalar transforms in one pass: "
     "clock-skew repair, hour/day/week/month/date buckets, dotted-quad -> "
-    "uint32 ip key (merged driver row for clock_repair / time_buckets / "
-    "ip_to_int)",
+    "uint32 ip key",
 )
 def event_scalar_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.timebuckets import add_time_buckets
@@ -585,8 +435,7 @@ FROM wire
 """,
     doc="P3 + P7 + P9 — full parse stage in one pass: composite \\x02 "
     "payload split + JSON field, deterministic sha256 id, null-default "
-    "coercion (merged driver row for composite_parse / deterministic_ids / "
-    "null_defaults)",
+    "coercion",
 )
 def parse_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -711,7 +560,7 @@ WHERE gap_s > {_HB_SILENCE_SECONDS}
     "heartbeat stream, flag silences over the threshold "
     "(the monitoring query WindowHeartbeatProcessFunction.java's heartbeat "
     "table exists to answer); key-partitioned window, one shuffle; "
-    "window-function family driver-gated via latest_event_per_user_agg",
+    "per-key LAG driver-gated via scd2_history",
     tier=2,
 )
 def heartbeat_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:

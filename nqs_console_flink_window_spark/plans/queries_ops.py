@@ -271,69 +271,9 @@ def array_hof_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# N1 — explode with parent-column inheritance
+# §2.10 relational surface: top-k, set ops, analytic windows, distinct
+# counts, range join
 # --------------------------------------------------------------------------
-
-
-@register(
-    "explode_tokens",
-    sql="""
-SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token
-FROM documents
-""",
-    doc="N1 — detail-array explode inheriting parent columns "
-    "(DetailAbstractDataParser.java:35-75 pattern); tier-2: N1 "
-    "driver-gated via detail_array_explode (explode + geo re-enrich)",
-    tier=2,
-)
-def explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id", "lang", F.explode(F.split(F.col("text"), " ")).alias("token")
-    )
-
-
-# --------------------------------------------------------------------------
-# §2.10 relational surface: rollup, top-k, set ops, analytic windows,
-# distinct counts, range join
-# --------------------------------------------------------------------------
-
-
-@register(
-    "rollup_agg",
-    sql=f"""
-SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt, {dsum("l_quantity", "sum_qty")}
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""",
-    doc="A6 — rollup aggregation (subtotals + grand total); driver-gated "
-    "via grouping_analytics",
-    tier=2,
-)
-def rollup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("cnt"), dsum_col("l_quantity").alias("sum_qty")
-    )
-
-
-@register(
-    "cube_agg",
-    sql=f"""
-SELECT o_orderstatus, o_orderpriority, COUNT(*) AS cnt,
-  {dsum("o_totalprice", "sum_price")}
-FROM orders
-GROUP BY CUBE (o_orderstatus, o_orderpriority)
-""",
-    doc="A6 — cube aggregation over two dims; driver-gated via "
-    "grouping_analytics",
-    tier=2,
-)
-def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("cnt"), dsum_col("o_totalprice").alias("sum_price")
-    )
 
 
 @register(
@@ -345,9 +285,9 @@ ORDER BY o_totalprice DESC, o_orderkey
 LIMIT 10
 """,
     doc="§2.10 — global sort + limit with deterministic tiebreak (Spark "
-    "TakeOrderedAndProject; no full sort materialized); driver-gated via "
-    "bm25_topk / cosine_topk (the same TakeOrdered cut on the driver "
-    "surface) and t:test_topk_avoids_global_sort",
+    "TakeOrderedAndProject; no full sort materialized); gated by this "
+    "row's oracle parity plus the plan-shape pytest "
+    "test_topk_avoids_global_sort",
     tier=2,
 )
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -378,10 +318,9 @@ SELECT 'except_all' AS op, nk FROM
   (SELECT s_nationkey AS nk FROM supplier EXCEPT ALL SELECT c_nationkey FROM customer)
 """,
     doc="§2.10 — INTERSECT / EXCEPT / UNION DISTINCT plus bag-semantics "
-    "INTERSECT ALL / EXCEPT ALL (one driver row for both set-op families).  "
-    "Rotated tier-2 round 8: driver-gated via grouping_analytics (the "
-    "distinct-aggregation machinery) with set_ops_all already "
-    "tier-2-parity-checked",
+    "INTERSECT ALL / EXCEPT ALL, one tagged branch each.  Rotated tier-2 "
+    "round 8; no tier-1 row runs INTERSECT or EXCEPT, so the gate is "
+    "this row's own oracle parity (test_tier2_oracle_parity)",
     tier=2,
 )
 def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -468,7 +407,9 @@ FROM events GROUP BY 1
     doc="A6 — approx_count_distinct (HLL) with its error contract value-"
     "oracled: exact distinct hash-checked, the estimate checked against "
     "the 4-sigma rsd bound (previously the registry's last rows-only "
-    "query); driver-gated alongside distinct_counts",
+    "query); exact COUNT(DISTINCT) driver-gated via decontaminate, the "
+    "HLL bound re-checked against distinct_counts by "
+    "test_approx_distinct_error_bound",
     tier=2,
 )
 def approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,7 +733,6 @@ def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SK.psi_drift_df(ev)
 
 
-
 _EXISTS_SQL = """
 SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders o
@@ -807,9 +747,10 @@ WHERE o_totalprice > (SELECT AVG(o2.o_totalprice) FROM orders o2
     "exists_subquery",
     sql=_EXISTS_SQL,
     doc="§2.10 — correlated scalar subquery + EXISTS semi-join "
-    "(decorrelated by Catalyst into aggregate + joins); driver-gated via "
-    "semi_anti-style EXISTS in exists_router and the per-key aggregate "
-    "family (latest_event_per_user_agg / histogram_quantiles)",
+    "(decorrelated by Catalyst into aggregate + joins); the decorrelation "
+    "is gated by this row's own oracle parity (test_tier2_oracle_parity); "
+    "the left-semi join it rewrites into is driver-gated via "
+    "incremental_embedding_dedup_batches",
     tier=2,
 )
 def exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -850,35 +791,6 @@ def pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "semi_anti_joins",
-    sql="""
-SELECT 'with_orders' AS cohort, COUNT(*) AS cnt FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-UNION ALL
-SELECT 'without_orders' AS cohort, COUNT(*) AS cnt FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-""",
-    doc="§2.10 — left-semi / left-anti joins (the R1 router primitives, "
-    "standalone); driver-gated via exists_router (the same semi/anti split "
-    "on the live streaming path)",
-    tier=2,
-)
-def semi_anti_joins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").select("o_custkey")
-    semi = c.join(o, c["c_custkey"] == o["o_custkey"], "left_semi")
-    anti = c.join(o, c["c_custkey"] == o["o_custkey"], "left_anti")
-    return (
-        semi.groupBy().agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.lit("with_orders").alias("cohort"), "cnt")
-        .unionByName(
-            anti.groupBy().agg(F.count(F.lit(1)).alias("cnt"))
-            .select(F.lit("without_orders").alias("cohort"), "cnt")
-        )
-    )
-
-
-@register(
     "geo_coalesce_precedence",
     sql="""
 SELECT e.event_id,
@@ -909,28 +821,6 @@ def geo_coalesce_precedence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(n["n_name"], c["c_mktsegment"], F.lit("unknown")).alias(
             "province_name"
         ),
-    )
-
-
-@register(
-    "set_ops_all",
-    sql="""
-SELECT 'intersect_all' AS op, nk FROM
-  (SELECT c_nationkey AS nk FROM customer INTERSECT ALL SELECT s_nationkey FROM supplier)
-UNION ALL
-SELECT 'except_all' AS op, nk FROM
-  (SELECT s_nationkey AS nk FROM supplier EXCEPT ALL SELECT c_nationkey FROM customer)
-""",
-    doc="§2.10 — bag-semantics set ops (INTERSECT ALL / EXCEPT ALL); "
-    "driver-gated via the merged set_ops branches",
-    tier=2,
-)
-def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nk"))
-    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nk"))
-    return (
-        c.intersectAll(s).select(F.lit("intersect_all").alias("op"), "nk")
-        .unionByName(s.exceptAll(c).select(F.lit("except_all").alias("op"), "nk"))
     )
 
 
@@ -986,8 +876,8 @@ def nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # A6 merged driver row — rollup + cube + grouping sets in one result
-# (driver checks only the first 50 queries; each family keeps its own
-# tier-2 query for local gating)
+# (driver checks only the first 50 queries, so the three families share
+# one row)
 # --------------------------------------------------------------------------
 
 
@@ -1007,8 +897,7 @@ SELECT 'gsets' AS mode, l_returnflag AS dim1, l_linestatus AS dim2,
 FROM lineitem GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 """,
     doc="A6 — rollup (lineitem) + cube (orders) + explicit grouping sets in "
-    "one tagged union (merged driver row for rollup_agg / cube_agg / "
-    "grouping_sets)",
+    "one tagged union",
 )
 def grouping_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
@@ -1082,7 +971,6 @@ FROM sums
 """
 
 
-
 @register(
     "stats_moments",
     sql=_stats_moments_sql(X.DUCK),
@@ -1111,8 +999,9 @@ FROM events GROUP BY 1
 """,
     doc="§2.10 — equal-width histogram binning (width_bucket semantics "
     "via pure arithmetic so both engines agree bit-for-bit; "
-    "floor-of-double-divide is IEEE-deterministic); tier-2: grouped "
-    "aggregation driver-gated elsewhere",
+    "floor-of-double-divide is IEEE-deterministic); tier-2: fixed-width "
+    "floor binning and per-bin aggregation driver-gated via "
+    "histogram_quantiles",
     tier=2,
 )
 def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,62 +21,6 @@ from .queries import _DISPATCH_SQL_ENGINE, _FACT_ORACLE
 from .registry import register
 
 # --------------------------------------------------------------------------
-# R1 — exists-based register/heartbeat routing
-# --------------------------------------------------------------------------
-
-
-@register(
-    "route_heartbeat",
-    sql="""
-SELECT e.event_id, e.user_id * 12 AS probe_id,
-  CAST(e.ts AS TIMESTAMP) AS heartbeat_time,
-  CASE WHEN e.event_type = 'error' THEN 20 ELSE 10 END AS status,
-  date_trunc('hour', CAST(e.ts AS TIMESTAMP)) AS heartbeat_time_h,
-  date_trunc('day', CAST(e.ts AS TIMESTAMP)) AS heartbeat_time_d
-FROM events e
-JOIN customer c ON e.user_id * 12 = c.c_custkey
-""",
-    doc="R1+W4 — known-probe branch of the exists-router with status "
-    "derivation and time buckets (ProbeExistProcess + "
-    "WindowHeartbeatProcessFunction); driver-gated via exists_router",
-    tier=2,
-)
-def route_heartbeat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer")
-    _, heartbeat = J.split_register_heartbeat(ev, cust)
-    return J.heartbeat_rows(heartbeat)
-
-
-@register(
-    "register_new_probes",
-    sql="""
-SELECT r.probe_id, MIN(CAST(r.ts AS TIMESTAMP)) AS first_seen,
-  MIN(r.user_id) AS user_id,
-  ANY_VALUE(n.n_name) || '-' || '临时' || '-' ||
-    substr(md5(CAST(r.probe_id AS STRING)), 1, 8) AS probe_alias
-FROM (
-  SELECT e.*, e.user_id * 12 AS probe_id FROM events e
-  LEFT JOIN customer c ON e.user_id * 12 = c.c_custkey
-  WHERE c.c_custkey IS NULL
-) r
-LEFT JOIN nation n ON r.probe_id % 25 = n.n_nationkey
-GROUP BY r.probe_id
-""",
-    doc="R1+W5 — unknown-probe registration: anti-join, first sighting, geo "
-    "enrich, synthesized alias (WindowRegisterProcessFunction.java:76-184); "
-    "driver-gated via exists_router",
-    tier=2,
-)
-def register_new_probes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer")
-    nat = load_table(spark, sf_dir, "nation")
-    reg, _ = J.split_register_heartbeat(ev, cust)
-    return J.register_rows(reg, nat)
-
-
-# --------------------------------------------------------------------------
 # R2 — content-based fan-out
 # --------------------------------------------------------------------------
 
@@ -138,31 +82,6 @@ def stream_fact_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir).select(
         "w_start", "protocol", "c_mktsegment", "cnt", "sum_score", "avg_score"
     )
-
-
-# --------------------------------------------------------------------------
-# J5 — default-port lookup: broadcast join against a *filtered* dimension
-# --------------------------------------------------------------------------
-
-
-@register(
-    "default_port_lookup",
-    sql="""
-SELECT e.event_id, c.c_mktsegment AS default_port_status
-FROM events e
-LEFT JOIN (SELECT * FROM customer WHERE c_custkey % 2 = 0) c
-  ON e.user_id = c.c_custkey
-""",
-    doc="J5 — access-type default-port lookup: broadcast left join against "
-    "the dim filtered to is_default rows (InfoLoader.java:61-85); "
-    "driver-gated via the default_port_status column of enrich_events",
-    tier=2,
-)
-def default_port_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_custkey") % 2 == 0)
-    j = ev.join(F.broadcast(cust), ev["user_id"] == cust["c_custkey"], "left")
-    return j.select("event_id", F.col("c_mktsegment").alias("default_port_status"))
 
 
 # --------------------------------------------------------------------------
@@ -248,8 +167,7 @@ GROUP BY r.probe_id
 """,
     doc="R1 — the full exists-router in one driver row: known probes take "
     "the heartbeat branch (status + hour bucket), unknown probes the "
-    "registration branch (anti-join, first sighting, synthesized alias); "
-    "merged driver row for route_heartbeat / register_new_probes",
+    "registration branch (anti-join, first sighting, synthesized alias)",
 )
 def exists_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")

@@ -466,7 +466,7 @@ FROM base b FULL OUTER JOIN chg c ON b.user_id = c.user_id
     "join on the merge key; at scale base and changelog bucket on "
     "user_id for a co-partitioned merge.  The batch form of what Delta "
     "MERGE/Paimon changelog compaction do natively; tier-2: join and "
-    "LWW families driver-gated via semi_anti_joins/dedup_last_write_wins",
+    "LWW families driver-gated via dim_upsert/dedup_last_write_wins",
     tier=2,
 )
 def cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

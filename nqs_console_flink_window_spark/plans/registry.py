@@ -52,9 +52,11 @@ class Query:
 # The driver's correctness gate checks only the FIRST 50 entries of
 # ``queries()`` (observed in round 1: exactly registry[:50] got rows, the
 # rest none).  So the registry is tiered: tier-1 is the driver surface and
-# MUST stay <= 50 entries; tier-2 queries are redundant *forms* of operators
-# whose semantics are already driver-gated through a tier-1 query — they
-# still run through tools/check_oracle.py and the pytest oracle gate.
+# MUST stay <= 50 entries; tier-2 queries run through tools/check_oracle.py
+# and the pytest oracle gate only.  A tier-2 query stays registered only
+# while it runs a code path no tier-1 row runs, or something outside the
+# registry (a tool, a test) uses it; its doc names the tier-1 query or
+# pytest that gates its operator (tests/test_registry_tiering.py).
 DRIVER_QUERY_CAP = 50
 
 REGISTRY: dict[str, Query] = {}

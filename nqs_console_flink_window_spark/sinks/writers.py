@@ -460,11 +460,18 @@ def delete_rows_partitioned(
     # a settle moves files behind Spark's FileIndex cache — refresh, or
     # the hit scan would plan against a stale listing
     spark.catalog.refreshByPath(str(root))
-    hits = _hits(spark.read.parquet(str(root))).select(*partition_cols)
-    dirs = [
-        root.joinpath(*(f"{c}={v}" for c, v in zip(partition_cols, r)))
-        for r in hits.distinct().collect()
-    ]
+    # each hit's partition dir is the parent of the file it was read from:
+    # rebuilding ``c=v`` from the typed value misses the dirs Spark names
+    # differently (NULL -> __HIVE_DEFAULT_PARTITION__, escaped ``=``/``:``)
+    hits = _hits(spark.read.parquet(str(root)).select(
+        key_col,
+        F.regexp_replace("_metadata.file_path", "/[^/]*$", "").alias("_dir"),
+    ))
+    base = Path(os.path.abspath(root))
+    dirs = sorted({
+        root / local_fs_path(r["_dir"]).relative_to(base)
+        for r in hits.select("_dir").distinct().collect()
+    })
     inputs = sorted(f for d in dirs for f in d.glob("*.parquet"))
     if not inputs:
         return (0, 0)

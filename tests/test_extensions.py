@@ -12,6 +12,7 @@ from nqs_console_flink_window_spark.functions import dialect as X
 from nqs_console_flink_window_spark.operators import multimodal as MM
 from nqs_console_flink_window_spark.operators import similarity as SIM
 from nqs_console_flink_window_spark.sources.batch import load_table
+from tests import bpe_reference as BPE_REF
 
 
 def test_dialect_md5_int_parity(spark) -> None:
@@ -1026,7 +1027,7 @@ def test_bpe_train_matches_python_reference(spark) -> None:
         for w in r["text"].lower().split(" "):
             if len(w) >= 2:
                 freqs[w] += 1
-    expected = SEL.bpe_train_reference(dict(freqs), n_merges=6)
+    expected = BPE_REF.bpe_train_reference(dict(freqs), n_merges=6)
     assert merges == expected
 
     # chained merges on a corpus built to force them: 'abab' dominates, so
@@ -1036,7 +1037,7 @@ def test_bpe_train_matches_python_reference(spark) -> None:
     )
     chained = SEL.bpe_train(spark, chain, n_merges=3)
     freqs2 = {"abab": 3, "ab": 1, "xy": 1}
-    assert chained == SEL.bpe_train_reference(freqs2, n_merges=3)
+    assert chained == BPE_REF.bpe_train_reference(freqs2, n_merges=3)
     assert any(len(a) > 1 or len(b) > 1 for a, b, _ in chained)
 
 
@@ -1246,7 +1247,7 @@ def test_bpe_encode_matches_reference(spark) -> None:
     assert merges
     got = {r["doc_id"]: r for r in SEL.bpe_encode(spark, docs, merges).collect()}
     for r in docs.select("doc_id", "text").collect():
-        want = SEL.bpe_encode_reference(r["text"], merges)
+        want = BPE_REF.bpe_encode_reference(r["text"], merges)
         g = got[r["doc_id"]]
         assert list(g["subwords"]) == want, r["doc_id"]
         assert g["n_subwords"] == len(want)
@@ -1321,9 +1322,9 @@ def test_bpe_fold_survives_sql_metacharacters(spark) -> None:
     text = r"a\b a\b a\b it's it's it's"
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
     merges = SEL.bpe_train(spark, docs, n_merges=3)
-    assert merges == SEL.bpe_train_reference({r"a\b": 3, "it's": 3}, n_merges=3)
+    assert merges == BPE_REF.bpe_train_reference({r"a\b": 3, "it's": 3}, n_merges=3)
     enc = SEL.bpe_encode(spark, docs, merges).collect()[0]
-    assert list(enc["subwords"]) == SEL.bpe_encode_reference(text, merges)
+    assert list(enc["subwords"]) == BPE_REF.bpe_encode_reference(text, merges)
 
 
 def test_pq_adc_recall_and_determinism(spark) -> None:
@@ -1847,7 +1848,7 @@ def test_bpe_train_batched_matches_reference_and_cuts_rounds(spark) -> None:
                 freqs[w] += 1
 
     got = SEL.bpe_train_batched(spark, docs, n_merges=8, batch=4)
-    assert got == SEL.bpe_train_batched_reference(dict(freqs), n_merges=8, batch=4)
+    assert got == BPE_REF.bpe_train_batched_reference(dict(freqs), n_merges=8, batch=4)
     assert len(got) == 8
     assert SEL.bpe_train_batched.last_rounds == 2  # 8 merges / batch 4
 
@@ -1863,7 +1864,7 @@ def test_bpe_train_batched_matches_reference_and_cuts_rounds(spark) -> None:
     )
     freqs2 = {"abab": 3, "ab": 1, "xy": 3}
     got2 = SEL.bpe_train_batched(spark, chain, n_merges=3, batch=3)
-    assert got2 == SEL.bpe_train_batched_reference(freqs2, n_merges=3, batch=3)
+    assert got2 == BPE_REF.bpe_train_batched_reference(freqs2, n_merges=3, batch=3)
     # the chained (ab,ab) merge conflicts with round 1's (a,b) winner, so
     # despite batch=3 covering all 3 merges a second round was required —
     # the conflict rule deferred it rather than fold it on a stale count
@@ -3337,6 +3338,24 @@ def test_delete_rows_accepts_string_keys(spark, tmp_path) -> None:
     assert sorted(r["k"] for r in spark.read.parquet(part).collect()) == [
         f"doc-{k}" for k in range(8) if k != 3
     ]
+
+
+def test_delete_rows_finds_null_and_escaped_partitions(spark, tmp_path) -> None:
+    """A hit in a partition whose dir name is not ``c=v`` of its typed
+    value (NULL -> ``__HIVE_DEFAULT_PARTITION__``, ``x=y`` -> ``x%3Dy``,
+    ``a:b`` -> ``a%3Ab``) is deleted, and its emptied partition counted."""
+    from nqs_console_flink_window_spark.sinks import writers as W
+
+    p = str(tmp_path / "escaped")
+    spark.createDataFrame(
+        [(1, None), (2, "x=y"), (3, "a:b"), (4, "ok"), (5, "ok")],
+        "k long, s string",
+    ).write.partitionBy("s").parquet(p)
+    assert W.delete_rows_partitioned(spark, p, "k", [1, 2, 3, 4], ["s"]) == (
+        4, 3
+    )
+    spark.catalog.refreshByPath(p)
+    assert [r["k"] for r in spark.read.parquet(p).collect()] == [5]
 
 
 def test_jpeg_post_sos_dht_does_not_poison_baseline_scan() -> None:

@@ -12,6 +12,7 @@ from hypothesis import strategies as st
 
 from nqs_console_flink_window_spark.functions import dialect as X
 from nqs_console_flink_window_spark.operators.packing import pack_assignment_sql
+from tests import bpe_reference as BPE_REF
 
 L = 256
 
@@ -85,4 +86,4 @@ def test_bpe_fold_matches_python_on_random_words(spark, words, n_merges) -> None
     from collections import Counter
 
     freqs = Counter(w for w in words if len(w) >= 2)
-    assert got == SEL.bpe_train_reference(dict(freqs), n_merges=n_merges)
+    assert got == BPE_REF.bpe_train_reference(dict(freqs), n_merges=n_merges)

@@ -49,8 +49,8 @@ def _dtype_problem(col: str, sc: pd.Series, dc: pd.Series) -> str | None:
         ):
             return f"col {col!r}: {side} returns Decimal objects (DecimalType output) — driver hash will differ from float64"
     # Spark DateType -> object of datetime.date, DuckDB DATE -> datetime64:
-    # the driver canonicalizer treats these as equal (time_buckets was
-    # hash-green in round 1), so they are value-compared, not dtype-flagged.
+    # the driver canonicalizer treats these as equal (event_scalar_transforms'
+    # ts_d_date is hash-green), so they are value-compared, not dtype-flagged.
     def _datelike(ser: pd.Series) -> bool:
         return ser.dtype.kind == "M" or (
             ser.dtype == object

@@ -3,7 +3,8 @@ and re-assert the fleet scale invariants on them (the same checks
 `tests/test_scale_patterns.py` enforces, but as a readable artifact).
 
 Usage: python tools/explain_audit.py [sf_dir]   (default sf0.01 — plans are
-scale-independent; AQE re-plans sizes at runtime).
+scale-independent; AQE re-plans sizes at runtime).  PLANS.md is a local
+artifact, listed in .gitignore: regenerate it rather than read an old copy.
 """
 
 from __future__ import annotations

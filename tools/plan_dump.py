@@ -4,9 +4,9 @@ Usage: python tools/plan_dump.py <tag> [query ...]
   tag   = "before" | "after" (file suffix)
   query = registry names; default = every headline query.
 
-The optimization-round evidence artifact: the judge checks plan claims in
-OPTIMIZATION_r<NN>.md against these files.  ROUND below names the current
-optimization round's dir; earlier rounds' dumps stay committed untouched.
+The plan evidence behind a claim in OPTIMIZATION_r<NN>.md.  ROUND below
+names the dir it writes; the dumps are regenerable, so plans/ is listed in
+.gitignore and not committed.
 """
 
 from __future__ import annotations
